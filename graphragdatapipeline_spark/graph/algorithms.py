@@ -1,9 +1,10 @@
 """Graph algorithms as iterative DataFrame programs (SURVEY §2.9).
 
 Design for scale: every iteration is a shuffled join on the edge
-table; lineage is cut with localCheckpoint() every iteration so a
-30-round fixpoint doesn't build a 30-deep plan (SURVEY §4 note 3).
-Convergence checks are cheap aggregates, not collects of the frame.
+table, and every loop runs through ``_iterate``, the one place that
+decides when a round is checkpointed, materialized and released
+(rules in its docstring). Convergence checks are cheap aggregates,
+not collects of the frame.
 
 The community-detection contract replaces the reference's driver-local
 Leiden (utils/neo4j_helpers.py:237-268, single-threaded C core over
@@ -15,27 +16,81 @@ but it scales to edge lists that never fit one machine.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable, Iterable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# Fixed-count loops materialize every _MATERIALIZE_EVERY rounds: the
+# bound on live superseded round tables (each |V|-sized), and long
+# enough that the ladders' 2-5-round LPA and Louvain levels still run
+# their whole chain in one materializing job.
+_MATERIALIZE_EVERY = 5
 
-def _free_checkpoint(df: DataFrame) -> None:
-    """Release a localCheckpoint's storage blocks NOW.
+
+def _free_checkpoint(df: DataFrame, reads: bool = False) -> None:
+    """Release a localCheckpoint's storage blocks NOW — ``df``'s own,
+    or with ``reads`` those of every checkpoint its plan reads (for a
+    frame derived from a loop's final state).
 
     ``DataFrame.unpersist()`` is a no-op for checkpoints (their blocks
     belong to an internal RDD the CacheManager doesn't track), and
     ContextCleaner GC is too lazy for tight iterative loops at scale —
     measured executor OOM on a 2×10⁸-row ER pair graph from superseded
-    per-round label tables that were awaiting collection. Reaches the
+    per-round label tables that were awaiting collection. Reaches each
     LogicalRDD's backing RDD id and unpersists it directly;
     best-effort (a non-checkpoint plan is left untouched)."""
     try:
         plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
-            sc = df.sparkSession.sparkContext
-            sc._jsc.sc().unpersistRDD(plan.rdd().id(), False)
+        leaves = plan.collectLeaves()
+        plans = [leaves.apply(i) for i in range(leaves.size())] if reads else [plan]
+        for p in plans:
+            if p.getClass().getSimpleName() == "LogicalRDD":
+                df.sparkSession.sparkContext._jsc.sc().unpersistRDD(p.rdd().id(), False)
     except Exception:  # pragma: no cover — py4j internals shifted
         pass
+
+
+def _iterate(
+    state: DataFrame,
+    step: Callable[[DataFrame, int], DataFrame],
+    rounds: int,
+    until: Callable[[DataFrame, int], bool] | None = None,
+    release: Iterable[DataFrame] = (),
+) -> tuple[DataFrame, bool]:
+    """Run ``state = step(state, r)`` for r in range(rounds) →
+    (final state, converged). The one owner of the loops' storage rules:
+
+    - every round's output gets a lazy localCheckpoint (flat plans);
+    - convergence loops pass ``until(state, r)``: its driver scalar is
+      the action that materializes the round, and True stops the loop;
+    - fixed-count loops materialize eagerly every _MATERIALIZE_EVERY
+      rounds and on the last round;
+    - each materialization frees the superseded rounds, the caller's
+      initial state included: a lazy checkpoint's blocks are its only
+      copy, so it may go only once a later round no longer needs it;
+    - once the final state is materialized, the loop invariants in
+      ``release`` are freed (never after zero rounds: the returned
+      initial state may read them)."""
+    superseded: list[DataFrame] = []
+    converged = False
+    for r in range(rounds):
+        eager = until is None and (
+            r == rounds - 1 or (r + 1) % _MATERIALIZE_EVERY == 0
+        )
+        superseded.append(state)
+        state = step(state, r).localCheckpoint(eager=eager)
+        converged = until is not None and until(state, r)
+        if eager or until is not None:
+            for old in superseded:
+                _free_checkpoint(old)
+            superseded = []
+        if converged:
+            break
+    if rounds > 0:
+        for df in release:
+            _free_checkpoint(df)
+    return state, converged
 
 
 def degrees(edges: DataFrame) -> DataFrame:
@@ -85,9 +140,7 @@ def two_hop(
     return a.join(b, "b").select("a", "b", "c")
 
 
-def transitive_closure(
-    edges: DataFrame, max_iter: int = 25, checkpoint_every: int = 1
-) -> DataFrame:
+def transitive_closure(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     """G11 — full transitive closure (node, ancestor) over a DAG by
     iterated doubling (reference: SPARQL `wdt:P279*` subclass-of
     closure at build_artist_index.py:54-57).
@@ -96,42 +149,28 @@ def transitive_closure(
     closure_{2k} = closure_k ⋈ closure_k, so depth-d hierarchies finish
     in ceil(log2 d) joins — at 100 TB the join count, not the row
     count, is the latency driver."""
-    closure = edges.select(F.col("src").alias("node"), F.col("dst").alias("anc")).distinct()
-    closure = closure.localCheckpoint(eager=True)
-    old_count = closure.count()
-    # The frame to free must be the last CHECKPOINTED one, not the loop
-    # variable: with checkpoint_every > 1 `closure` is a lazy
-    # union/distinct over the previous checkpoint on off rounds, so
-    # _free_checkpoint(closure) would be a silent no-op (not a
-    # LogicalRDD) and the superseded checkpoint would leak until GC.
-    prev_ckpt = closure
-    for i in range(max_iter):
+    closure = (
+        edges.select(F.col("src").alias("node"), F.col("dst").alias("anc"))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+    sizes = [closure.count()]
+
+    def step(closure: DataFrame, _: int) -> DataFrame:
         hop = (
             closure.alias("l")
             .join(closure.alias("r"), F.col("l.anc") == F.col("r.node"))
             .select(F.col("l.node").alias("node"), F.col("r.anc").alias("anc"))
         )
-        new_closure = closure.unionByName(hop).distinct()
-        checkpointed = (i + 1) % checkpoint_every == 0
-        if checkpointed:
-            # Lazy: the count below is the materializing action — one
-            # job per round instead of checkpoint-then-recount. The
-            # previous round's count is carried, not recomputed (the
-            # closure table is append-monotone, so the fixpoint test
-            # only needs this round's size against last round's).
-            new_closure = new_closure.localCheckpoint(eager=False)
-        new_count = new_closure.count()
-        if checkpointed:
-            # The closure table GROWS every round; superseded rounds'
-            # checkpoint blocks must be released, not left for GC
-            # (see _free_checkpoint — the components-loop lesson).
-            _free_checkpoint(prev_ckpt)
-            prev_ckpt = new_closure
-        closure = new_closure
-        if new_count == old_count:
-            break
-        old_count = new_count
-    return closure
+        return closure.unionByName(hop).distinct()
+
+    def fixpoint(closure: DataFrame, _: int) -> bool:
+        # The closure only grows, so an unchanged size is the fixpoint;
+        # last round's size is carried, not recounted.
+        sizes.append(closure.count())
+        return sizes[-1] == sizes[-2]
+
+    return _iterate(closure, step, max_iter, until=fixpoint)[0]
 
 
 def connected_components(
@@ -150,31 +189,23 @@ def connected_components(
     Hash-Min needs O(diameter) rounds — a 50-vertex chain (the shape
     entity-resolution size-bands produce) takes 50 shuffles; with the
     pointer jump the min label doubles its reach per round, giving
-    O(log diameter). localCheckpoint every round keeps plans flat.
+    O(log diameter).
     Raises if max_iter rounds exhaust before the fixpoint — a silently
     unconverged label is a wrong answer, not a slow one."""
     sym = edges.select("src", "dst").unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    # Checkpoint memory discipline (learned at the 100× fixture, where
-    # the symmetrized ER pair graph is ~2×10⁸ rows): every superseded
-    # loop checkpoint is UNPERSISTED as soon as its successor is
-    # materialized — otherwise the pre-repartition edge copy plus one
-    # label table per round accumulate in the unified pool and the
-    # executor heap dies mid-loop. The edge table (the big, loop-
-    # invariant operand) additionally pins MEMORY_AND_DISK explicitly:
-    # blocks the pool can't hold overflow to local disk instead of
-    # competing with the per-round join's execution memory.
+    # The edge table (the big, loop-invariant operand: ~2×10⁸ rows for
+    # the symmetrized ER pair graph at the 100× fixture) pins
+    # MEMORY_AND_DISK explicitly: blocks the pool can't hold overflow
+    # to local disk instead of competing with the per-round join's
+    # execution memory.
     from pyspark.storagelevel import StorageLevel
 
     sym0 = (
         sym.filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(
-            # Lazy: the sizing count below materializes it — one job.
-            eager=False,
-            storageLevel=StorageLevel.MEMORY_AND_DISK,
-        )
+        .distinct()  # lazy: the sizing count below materializes it
+        .localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
     )
     # Right-size the iterative loop's partitioning to the PAIR graph:
     # the per-round joins run O(log d) times, and on a small component
@@ -192,10 +223,10 @@ def connected_components(
         sym.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("component", F.col("id"))
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
-    prev_ckpt = labels  # the round's checkpointed frame, freed next round
-    for _ in range(max_iter):
+
+    def step(labels: DataFrame, _: int) -> DataFrame:
         nbr_min = (
             sym.join(labels, sym.dst == labels.id)
             .groupBy(F.col("src").alias("id"))
@@ -208,45 +239,35 @@ def connected_components(
                 F.col("component"), F.coalesce("nbr_component", F.col("component"))
             ).alias("component"),
         )
-        # Pointer jump: label <- label_of(label). Every label value is
-        # itself a vertex id, so the indirection is always defined;
-        # labels shrink monotonically, so parent ≤ component and
-        # correctness (min reachable id per component) is preserved —
-        # only propagation speed changes.
+        # Pointer jump: label <- label_of(label). Labels shrink
+        # monotonically, so parent ≤ component and correctness (min
+        # reachable id per component) is preserved — only propagation
+        # speed changes.
         parent = hashmin.select(
             F.col("id").alias("component"), F.col("component").alias("_parent")
         )
-        updated = (
-            hashmin.join(parent, "component", "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("component"), F.coalesce("_parent", F.col("component"))
-                ).alias("component"),
-                (
-                    F.least(
-                        F.col("component"),
-                        F.coalesce("_parent", F.col("component")),
-                    )
-                    < F.col("_prev")
-                ).cast("int").alias("_changed"),
-            )
-            # Lazy: the changed-count action right below is the
-            # materializing pass, so each round runs ONE job instead of
-            # an eager-checkpoint job followed by a re-scan for the sum
-            # (fixed-cost-per-round discipline; values untouched —
-            # the same rows are written either way).
-        ).localCheckpoint(eager=False)
-        changed = updated.agg(F.sum("_changed")).first()[0] or 0
-        _free_checkpoint(prev_ckpt)  # superseded round — release its blocks
-        prev_ckpt = updated
-        labels = updated.drop("_changed")
-        if changed == 0:
-            return labels
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds; "
-        "with pointer jumping this needs O(log diameter) — raise max_iter"
+        jumped = F.least(
+            F.col("component"), F.coalesce("_parent", F.col("component"))
+        )
+        return hashmin.join(parent, "component", "left").select(
+            "id",
+            jumped.alias("component"),
+            (jumped < F.col("_prev")).cast("int").alias("_changed"),
+        )
+
+    labels, converged = _iterate(
+        labels,
+        step,
+        max_iter,
+        until=lambda s, _: not (s.agg(F.sum("_changed")).first()[0] or 0),
+        release=(sym,),
     )
+    if not converged:
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} rounds; "
+            "with pointer jumping this needs O(log diameter) — raise max_iter"
+        )
+    return labels.drop("_changed")
 
 
 def label_propagation(
@@ -307,19 +328,8 @@ def label_propagation(
     # be orders of magnitude below defaultParallelism, where full-width
     # rounds are pure fixed-cost latency, and AQE cannot re-plan across
     # checkpointed iterations.
-    # Lazy: the sizing count below materializes the checkpoint — one
-    # job instead of checkpoint-then-recount.
     sym0 = sym.localCheckpoint(eager=False)
     par = max(2, min(par, sym0.count() // 100_000 + 1))
-    # Lazy edge/init/round checkpoints (r14): LPA has a FIXED round
-    # count — no per-round convergence scalar forces a driver sync —
-    # so the LAST round's single eager checkpoint materializes the
-    # repartitioned edges, the init labels, and every round in ONE job
-    # (the louvain_move fusion; each lazy checkpoint still truncates
-    # the logical plan and its blocks persist as computed). sym0 and
-    # superseded rounds are freed only after that job — freeing a lazy
-    # checkpoint's source or blocks pre-materialization would make it
-    # unrecomputable.
     sym = sym0.repartition(par, "dst").localCheckpoint(eager=False)
     ids = sym.select(F.col("src").alias("id")).distinct()
     if vertices is not None:
@@ -338,11 +348,10 @@ def label_propagation(
         16,
         10,
     ).cast("long")
-    labels = ids.withColumn("community", init).repartition(par, "id").localCheckpoint(
-        eager=(max_iter == 0)
-    )
-    superseded: list[DataFrame] = []
-    for r in range(max_iter):
+    labels = ids.withColumn("community", init).repartition(par, "id")
+    labels = labels.localCheckpoint(eager=False)
+
+    def step(labels: DataFrame, _: int) -> DataFrame:
         votes = (
             sym.join(labels, sym.dst == labels.id)
             .groupBy(F.col("src").alias("id"), F.col("community"))
@@ -358,23 +367,15 @@ def label_propagation(
                 "community", F.struct(F.col("votes"), F.bitwise_not(F.col("community")))
             ).alias("new_community")
         )
-        new_labels = (
+        return (
             labels.join(winner, "id", "left")
             .select(
                 "id", F.coalesce("new_community", F.col("community")).alias("community")
             )
             .coalesce(par)
-            .localCheckpoint(eager=(r == max_iter - 1))
         )
-        superseded.append(labels)
-        labels = new_labels
-    # superseded rounds are vertex-sized, but at 100 TB vertex tables
-    # are billions of rows — same accumulate-until-OOM hazard the
-    # components loop measured; safe to free only now (materialized)
-    for old in superseded:
-        _free_checkpoint(old)
-    _free_checkpoint(sym0)
-    return labels
+
+    return _iterate(labels, step, max_iter, release=(sym0, sym))[0]
 
 
 def _contract(edges: DataFrame, assignment: DataFrame) -> DataFrame:
@@ -590,20 +591,12 @@ def louvain_move(
     # Same edge-count-sized round width as detect_communities /
     # connected_components — the ladder's contracted levels are tiny,
     # and move rounds there were dominated by fixed per-round costs.
-    # Lazy: the sizing count below materializes the checkpoint — one
-    # job instead of checkpoint-then-recount. When the caller already
-    # knows the edge count (the multilevel loop counts each contracted
-    # graph as it persists it), 2·n_edges_hint upper-bounds the
-    # symmetrized row count and the sizing pass is skipped entirely —
-    # par is a layout knob, every per-round aggregate is
-    # order-independent, and at any count below the 100k round-width
-    # step both paths yield the identical par anyway.
-    # The repartitioned edge checkpoint is LAZY in both paths (r14):
-    # its first consumer is the `nodes` lineage feeding the 2m
-    # aggregate below, so that single job materializes sym AND nodes
-    # together — one job instead of eager-checkpoint-then-aggregate
-    # (guide §1.2; the rounds then read the cached blocks). Values
-    # untouched: the same rows land in the same layout either way.
+    # When the caller already knows the edge count (the multilevel loop
+    # counts each contracted graph as it persists it), 2·n_edges_hint
+    # upper-bounds the symmetrized row count and the sizing pass is
+    # skipped entirely — par is a layout knob, every per-round
+    # aggregate is order-independent, and at any count below the 100k
+    # round-width step both paths yield the identical par anyway.
     sym0 = None
     if n_edges_hint is not None:
         par = max(2, min(par, 2 * n_edges_hint // 100_000 + 1))
@@ -627,7 +620,7 @@ def louvain_move(
             (F.col("_k") + 2.0 * F.coalesce("_sw", F.lit(0.0))).alias("_k"),
         )
     # Lazy: the 2m aggregate right below is the materializing action —
-    # one job instead of checkpoint-then-rescan (values untouched).
+    # one job for sym and nodes instead of checkpoint-then-rescan.
     nodes = nodes.repartition(par, "id").localCheckpoint(eager=False)
     two_m = nodes.agg(F.sum("_k")).first()[0] or 1.0  # scalar graph stat
     if sym0 is not None:
@@ -636,25 +629,13 @@ def louvain_move(
         # dependent checkpoint exists would make it unrecomputable
         _free_checkpoint(sym0)
 
-    memb = nodes.select("id", F.col("id").alias("community"))
     # Renamed copy for strength lookups inside comm_K: `nodes` also
     # joins directly into the scoring plan below, and reusing the same
     # `_k` attribute in both subtrees makes the reference ambiguous
     # after Spark's self-join de-duplication.
     strength = nodes.select("id", F.col("_k").alias("_ck"))
-    # Per-round checkpoints are LAZY except the last (r14, guide §1.2):
-    # Louvain's move rounds have a FIXED count — unlike the CC/closure/
-    # pagerank loops there is no per-round convergence scalar forcing a
-    # driver sync — so the whole rounds chain can materialize in the
-    # final round's single eager checkpoint job (each lazy checkpoint
-    # still truncates the logical plan, so per-round plan size stays
-    # flat; the blocks of every round persist as they are computed,
-    # exactly as under eager). One job per move call instead of one per
-    # round. Superseded rounds are freed only AFTER that job: freeing a
-    # lazy checkpoint's blocks before it materializes would make it
-    # unrecomputable.
-    superseded: list[DataFrame] = []
-    for r in range(rounds):
+
+    def step(memb: DataFrame, r: int) -> DataFrame:
         comm_K = (
             memb.join(strength, "id")
             .groupBy("community")
@@ -715,14 +696,12 @@ def louvain_move(
         # (exactly one _c == _a candidate row exists per id, and _a is
         # constant per id), so the scored subtree — three joins deep —
         # is evaluated once per round instead of feeding a separate
-        # filter branch plus two reassembly joins (guide §2.4).
+        # filter branch plus two reassembly joins.
         # The explicit id repartition REPLACES the aggregation's
         # ENSURE_REQUIREMENTS exchange (HashPartitioning on the group
         # key satisfies the agg's distribution) AND pre-establishes the
-        # par-width id layout the round's checkpoint needs — the
-        # membership frame used to pay a SECOND full shuffle in the
-        # trailing repartition(par, "id") (the flagship_order_rollup
-        # exchange-merge, applied to the move loop). min_by/max are
+        # par-width id layout the round's checkpoint keeps, so the
+        # membership frame pays no second shuffle. min_by/max are
         # order-independent, so the regrouped layout moves no values.
         moved = scored.repartition(par, "id").groupBy("id").agg(
             F.min_by(
@@ -736,23 +715,22 @@ def louvain_move(
         )
         # parity gate: only one hash-class moves per round
         gate = (F.abs(F.hash(F.col("id"))) % 2) == F.lit(r % 2)
-        new_memb = (
-            moved.select(
-                "id",
-                F.when(
-                    gate & (F.col("_b._score") > F.col("_stay") + F.lit(1e-12)),
-                    F.col("_b._c"),
-                )
-                .otherwise(F.col("_a"))
-                .alias("community"),
+        return moved.select(
+            "id",
+            F.when(
+                gate & (F.col("_b._score") > F.col("_stay") + F.lit(1e-12)),
+                F.col("_b._c"),
             )
-            # id layout already established by the pre-agg repartition
-            .localCheckpoint(eager=(r == rounds - 1))
+            .otherwise(F.col("_a"))
+            .alias("community"),
         )
-        superseded.append(memb)
-        memb = new_memb
-    for old in superseded:  # superseded rounds' membership blocks
-        _free_checkpoint(old)
+
+    memb, _ = _iterate(
+        nodes.select("id", F.col("id").alias("community")),
+        step,
+        rounds,
+        release=(sym, nodes),
+    )
     # canonical labels: the minimum member vertex id
     canon = memb.groupBy("community").agg(F.min("id").alias("_label"))
     return memb.join(canon, "community").select(
@@ -829,17 +807,18 @@ def louvain_multilevel(
     # The convergence scalars and the level-composition checkpoint are
     # INDEPENDENT consumers of the same frames — overlap them from a
     # 2-thread pool so their jobs back-fill each other's stage tails
-    # instead of serializing on the driver (guide §2.6; the same
-    # pattern as the r13 louvain/pq pools). Each count is a pure
+    # instead of serializing on the driver. Each count is a pure
     # aggregate, so every label and every break decision is unchanged.
+    # Every submitted count binds its frame at submit time: the loop
+    # rebinds `mapping` while a worker may not have started yet.
     with ThreadPoolExecutor(max_workers=2) as pool:
         # prev_n isn't consulted until the first cycle's break check —
         # let it run while the first contraction materializes.
         f_prev_n = pool.submit(
-            lambda: mapping.select("community").distinct().count()
+            lambda m=mapping: m.select("community").distinct().count()
         )
         prev_n = None
-        for _ in range(max_cycles - 1):
+        for cycle in range(max_cycles - 1):
             g = _contract_weighted(cur_edges, level_memb, cur_w).persist()
             # materialize WITH stats (see detect_communities_louvain);
             # the count doubles as the next move's edge-sizing hint,
@@ -864,12 +843,20 @@ def louvain_multilevel(
                 .localCheckpoint(eager=True)
             )
             n = f_n.result()
-            _free_checkpoint(mapping)  # superseded level composition
-            mapping = new_mapping
-            cur_edges, cur_w, level_memb = g, "weight", sup
             if prev_n is None:
                 prev_n = f_prev_n.result()
-            if n >= prev_n * (1.0 - min_shrink):
+            done = n >= prev_n * (1.0 - min_shrink) or cycle == max_cycles - 2
+            # Superseded now that new_mapping and g are materialized:
+            # the previous composition, the level below's labels and its
+            # contracted graph. On the last cycle this level's are too.
+            for df in [mapping, level_memb] + ([sup] if done else []):
+                _free_checkpoint(df, reads=True)
+            for graph in [cur_edges] + ([g] if done else []):
+                if graph is not edges:
+                    graph.unpersist()
+            mapping = new_mapping
+            cur_edges, cur_w, level_memb = g, "weight", sup
+            if done:
                 break
             prev_n = n
     return mapping
@@ -938,6 +925,9 @@ def detect_communities_louvain(
     )
     g2 = _contract_weighted(g1, l1_super, weight_col="weight").persist()
     g2n = g2.count()
+    # Each contracted level is spent once the next one is cached and
+    # the level's labels are materialized checkpoints.
+    g1.unpersist()
     l2_super = louvain_multilevel(
         g2,
         gamma=resolutions[2],
@@ -946,7 +936,9 @@ def detect_communities_louvain(
         weight_col="weight",
         n_edges_hint=g2n,
     )
-    return (
+    g2.unpersist()
+    # One materialized answer instead of three live level-label tables.
+    out = (
         l1.alias("a")
         .join(
             l2_super.select(
@@ -961,7 +953,11 @@ def detect_communities_louvain(
             "community_L1",
             F.coalesce("_cl2", F.col("community_L1")).alias("community_L2"),
         )
+        .localCheckpoint(eager=True)
     )
+    for level in (l0, l1_super, l2_super):
+        _free_checkpoint(level, reads=True)
+    return out
 
 
 def rb_quality_agg(
@@ -1011,6 +1007,90 @@ def rb_quality_agg(
     )
 
 
+def _walk_graph(
+    edges: DataFrame, weight_col: str | None = None, extra_ids: DataFrame | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """Random-walk inputs of pagerank and personalized_pagerank →
+    verts (id, _dangling: no out-edge) over every endpoint plus
+    ``extra_ids``, and out_edges (src, dst, deg, _w) pre-partitioned by
+    src so supersteps shuffle only the |V|-row rank table.
+
+    Weight w is exactly equivalent to w parallel unit edges (pinned in
+    pytest). Non-positive weights are dropped up front: a w<=0 edge has
+    no random-walk meaning, and Σw = 0 would divide by zero and spread
+    NaN; a source left with no positive edge becomes dangling."""
+    ids = edges.select(F.col("src").alias("id")).unionByName(
+        edges.select(F.col("dst").alias("id"))
+    )
+    if extra_ids is not None:
+        ids = ids.unionByName(extra_ids)
+    w_expr = F.col(weight_col) if weight_col else F.lit(1.0)
+    if weight_col:
+        edges = edges.filter(F.col(weight_col) > 0)
+    deg = edges.groupBy("src").agg(F.sum(w_expr).alias("deg"))
+    has_out = deg.select(F.col("src").alias("id"), F.lit(False).alias("_has_out"))
+    verts = (
+        ids.distinct()
+        .join(has_out, "id", "left")
+        .select("id", F.col("_has_out").isNull().alias("_dangling"))
+        .localCheckpoint(eager=False)
+    )
+    out_edges = (
+        edges.withColumn("_w", w_expr)
+        .join(deg, "src")
+        .select("src", "dst", "deg", "_w")
+        .repartition("src")
+        .localCheckpoint(eager=False)
+    )
+    return verts, out_edges
+
+
+def _power_iteration(
+    verts: DataFrame,
+    out_edges: DataFrame,
+    init: Column,
+    iters: int,
+    damping: float,
+    restart: Column,
+    dangling_share: Column,
+) -> DataFrame:
+    """The superstep pagerank and personalized_pagerank share → (id,
+    rank) after ``iters`` rounds from rank = ``init``:
+    rank' = restart + d·(received + dangling_share), received =
+    Σ rank·w/deg over in-edges. ``dangling_share`` may read `_dm`, the
+    rank mass on dangling vertices, folded into the plan as a broadcast
+    one-row aggregate: no driver round trip, no re-read of the edges."""
+
+    def step(ranks: DataFrame, _: int) -> DataFrame:
+        dm = ranks.filter("_dangling").agg(
+            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm")
+        )
+        received = (
+            out_edges.join(ranks, out_edges.src == ranks.id)
+            .select("dst", (F.col("rank") * F.col("_w") / F.col("deg")).alias("c"))
+            .groupBy("dst")
+            .agg(F.sum("c").alias("received"))
+        )
+        return (
+            verts.join(received, verts.id == received.dst, "left")
+            .crossJoin(F.broadcast(dm))
+            .select(
+                "id",
+                "_dangling",
+                (
+                    restart
+                    + F.lit(damping)
+                    * (F.coalesce("received", F.lit(0.0)) + dangling_share)
+                ).alias("rank"),
+            )
+        )
+
+    ranks, _ = _iterate(
+        verts.withColumn("rank", init), step, iters, release=(verts, out_edges)
+    )
+    return ranks.select("id", "rank")
+
+
 def pagerank(
     edges: DataFrame,
     damping: float = 0.85,
@@ -1020,111 +1100,57 @@ def pagerank(
     """PageRank by power iteration over DataFrames → (id, rank).
 
     Per superstep: each vertex sends rank/out_degree along its out
-    edges; new rank = (1-d)/N + d·(received + dangling_mass/N). The
-    dangling-mass total is the only driver-side scalar (O(1) collect).
-    Shuffle budget per superstep: one join on src + one groupBy on dst
-    — the edge table is pre-partitioned by src once, so iterations
-    shuffle only the (|V|-row) rank table. localCheckpoint keeps the
-    plan flat. (Extension beyond the reference — its graph analytics
-    stop at Leiden communities; this rounds out the GraphX-style
-    surface next to LPA/components/closure.)"""
-    verts = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    edges; new rank = (1-d)/N + d·(received + dangling_mass/N). Shuffle
+    budget per superstep: one join on src + one groupBy on dst — the
+    edge table is pre-partitioned by src once, so iterations shuffle
+    only the (|V|-row) rank table. (Extension beyond the reference —
+    its graph analytics stop at Leiden communities; this rounds out
+    the GraphX-style surface next to LPA/components/closure.)"""
+    verts, out_edges = _walk_graph(edges, weight_col)
     n = verts.count()
-    # Weighted walks: each out-edge carries rank·w/Σw instead of
-    # rank/out_degree — weight w is exactly equivalent to w parallel
-    # unit edges (invariant pinned in pytest). deg below is Σw per
-    # source; the unweighted path is the constant-1 special case.
-    w_expr = F.col(weight_col) if weight_col else F.lit(1.0)
-    # Policy: non-positive weights are dropped up front (a w<=0 edge
-    # has no random-walk meaning, and a source whose Σw = 0 would
-    # divide by zero and propagate NaN through every iteration). A
-    # source left with no positive edges becomes dangling, which the
-    # dangling-mass redistribution below already handles.
-    if weight_col:
-        edges = edges.filter(F.col(weight_col) > 0)
-    deg = edges.groupBy("src").agg(F.sum(w_expr).alias("deg"))
-    out_edges = (
-        edges.withColumn("_w", w_expr)
-        .join(deg, "src")
-        .select("src", "dst", "deg", "_w")
-        .repartition("src")
-        .localCheckpoint(eager=True)
+    return _power_iteration(
+        verts,
+        out_edges,
+        F.lit(1.0 / n),
+        iters,
+        damping,
+        restart=F.lit((1.0 - damping) / n),
+        dangling_share=F.col("_dm") / F.lit(n),
     )
-    ranks = verts.withColumn("rank", F.lit(1.0 / n))
-    base = (1.0 - damping) / n
-    for _ in range(iters):
-        dangling = (
-            ranks.join(deg, ranks.id == deg.src, "left_anti")
-            .agg(F.sum("rank"))
-            .first()[0]
-            or 0.0
-        )
-        received = (
-            out_edges.join(ranks, out_edges.src == ranks.id)
-            .select("dst", (F.col("rank") * F.col("_w") / F.col("deg")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("received"))
-        )
-        new_ranks = (
-            verts.join(received, verts.id == received.dst, "left")
-            .select(
-                "id",
-                (
-                    F.lit(base)
-                    + F.lit(damping)
-                    * (F.coalesce("received", F.lit(0.0)) + F.lit(dangling / n))
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        _free_checkpoint(ranks)  # no-op on the derived initial frame
-        ranks = new_ranks
-    return ranks
 
 
 def bfs_distances(
     edges: DataFrame, sources: DataFrame, max_depth: int = 6
 ) -> DataFrame:
     """Unweighted shortest-path distances from a source set → (id,
-    dist), reachable-within-max_depth only. Frontier BFS: each round
-    joins the frontier to the edge table and anti-joins the visited
-    set — rows carried per round = |frontier|, not |V|.
+    dist), reachable-within-max_depth only. Frontier BFS: round r joins
+    the frontier (the visited rows at dist r) to the edge table and
+    anti-joins the visited set — join rows per round = |frontier|,
+    not |V|.
 
     GraphFrames.shortestPaths analog; bounded depth makes the result
     SQL-expressible (recursive CTE with the same bound), so unlike
     most iterative ops this one gets a full value-hash oracle."""
-    visited = sources.select(F.col("id")).distinct().withColumn("dist", F.lit(0))
-    visited = visited.localCheckpoint(eager=True)
-    frontier = visited
-    e = edges.select("src", "dst").distinct().repartition("src").localCheckpoint(eager=True)
-    for depth in range(1, max_depth + 1):
+    visited = sources.select("id").distinct().withColumn("dist", F.lit(0))
+    visited = visited.localCheckpoint(eager=False)
+    e = edges.select("src", "dst").distinct().repartition("src")
+    e = e.localCheckpoint(eager=False)
+
+    def step(visited: DataFrame, r: int) -> DataFrame:
+        frontier = visited.filter(F.col("dist") == r)
         nxt = (
             e.join(frontier, e.src == frontier.id)
             .select(F.col("dst").alias("id"))
             .distinct()
             .join(visited.select("id"), "id", "left_anti")
-            .withColumn("dist", F.lit(depth))
-            .localCheckpoint(eager=True)
+            .withColumn("dist", F.lit(r + 1))
         )
-        if nxt.isEmpty():
-            _free_checkpoint(nxt)
-            break
-        new_visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        _free_checkpoint(visited)  # superseded (and growing) round
-        if frontier is not visited:
-            # The per-depth frontier checkpoints are superseded too —
-            # without this, one frontier-sized checkpoint per level
-            # accumulates (round 1's frontier IS `visited`, already
-            # freed above, hence the identity guard).
-            _free_checkpoint(frontier)
-        visited = new_visited
-        frontier = nxt
-    return visited
+        return visited.unionByName(nxt)
+
+    def exhausted(visited: DataFrame, r: int) -> bool:  # no vertex at dist r+1
+        return visited.filter(F.col("dist") == r + 1).count() == 0
+
+    return _iterate(visited, step, max_depth, until=exhausted, release=(e,))[0]
 
 
 def triangle_count(edges: DataFrame, max_forward_degree: int | None = None) -> DataFrame:
@@ -1343,9 +1369,8 @@ def personalized_pagerank(
     instead of global hubs). Teleport vector p(v) = 1/|S| on sources,
     0 elsewhere; per superstep
     rank = (1−d)·p(v) + d·(received + dangling·p(v)) — dangling mass
-    returns to the sources, keeping Σrank = 1. Same shuffle budget as
-    pagerank: iterations shuffle only the |V|-row rank table against
-    the pre-partitioned edge table."""
+    returns to the sources, keeping Σrank = 1. Same superstep and
+    shuffle budget as pagerank."""
     if not source_ids:
         raise ValueError("personalized_pagerank: source_ids must be non-empty")
     s = float(len(source_ids))
@@ -1355,50 +1380,22 @@ def personalized_pagerank(
     src_verts = spark.createDataFrame(
         [(str(x),) for x in source_ids], schema="id string"
     )
-    verts = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .unionByName(src_verts.select(F.col("id").cast(edges.schema["src"].dataType)))
-        .distinct()
-        .localCheckpoint(eager=True)
+    verts, out_edges = _walk_graph(
+        edges,
+        extra_ids=src_verts.select(F.col("id").cast(edges.schema["src"].dataType)),
     )
     teleport = F.when(F.col("id").isin(source_ids), F.lit(1.0 / s)).otherwise(
         F.lit(0.0)
     )
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    out_edges = (
-        edges.join(deg, "src")
-        .select("src", "dst", "deg")
-        .repartition("src")
-        .localCheckpoint(eager=True)
+    return _power_iteration(
+        verts,
+        out_edges,
+        teleport,
+        iters,
+        damping,
+        restart=(1.0 - damping) * teleport,
+        dangling_share=F.col("_dm") * teleport,
     )
-    ranks = verts.withColumn("rank", teleport)
-    for _ in range(iters):
-        dangling = (
-            ranks.join(deg, ranks.id == deg.src, "left_anti")
-            .agg(F.sum("rank"))
-            .first()[0]
-            or 0.0
-        )
-        received = (
-            out_edges.join(ranks, out_edges.src == ranks.id)
-            .select("dst", (F.col("rank") / F.col("deg")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("received"))
-        )
-        ranks = (
-            verts.join(received, verts.id == received.dst, "left")
-            .select(
-                "id",
-                (
-                    (1.0 - damping) * teleport
-                    + F.lit(damping)
-                    * (F.coalesce("received", F.lit(0.0)) + F.lit(dangling) * teleport)
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return ranks
 
 
 def kcore(edges: DataFrame, k: int, max_iter: int | None = None) -> DataFrame:
@@ -1413,10 +1410,9 @@ def kcore(edges: DataFrame, k: int, max_iter: int | None = None) -> DataFrame:
     vertices of the k-core with their degree inside the core.
 
     Scale shape: each round is one degree aggregation plus two
-    semi-joins of the edge table against the survivor set — rows only
-    ever shrink, lineage is cut per round (localCheckpoint), and the
+    semi-joins of the edge table against the survivor set, and the
     fixpoint test is a cheap count, not a collect. Rows only ever
-    shrink, so the peel terminates in ≤ |V| rounds; by default it
+    shrink, so the peel terminates in ≤ |E| rounds; by default it
     runs to the guaranteed fixpoint (``max_iter=None``). Passing
     ``max_iter`` turns it into a hard guard: exhausting it before the
     fixpoint RAISES instead of silently returning a superset that may
@@ -1431,34 +1427,36 @@ def kcore(edges: DataFrame, k: int, max_iter: int | None = None) -> DataFrame:
         .filter(F.col("lo") != F.col("hi"))
         .distinct()
     )
-    sym = canon.select(F.col("lo").alias("src"), F.col("hi").alias("dst")).unionByName(
-        canon.select(F.col("hi").alias("src"), F.col("lo").alias("dst"))
+    alive = (
+        canon.select(F.col("lo").alias("src"), F.col("hi").alias("dst"))
+        .unionByName(canon.select(F.col("hi").alias("src"), F.col("lo").alias("dst")))
+        .localCheckpoint(eager=False)
     )
-    alive = sym.localCheckpoint(eager=True)
-    n_edges = alive.count()
-    rounds = 0
-    while True:
+    sizes = [alive.count()]
+
+    def step(alive: DataFrame, _: int) -> DataFrame:
         deg = alive.groupBy("src").agg(F.count(F.lit(1)).alias("_deg"))
         keep = deg.filter(F.col("_deg") >= k).select("src")
-        nxt = (
+        return (
             alive.join(keep, "src")
             .join(keep.select(F.col("src").alias("dst")), "dst")
             .select("src", "dst")
-            .localCheckpoint(eager=True)
         )
-        n_next = nxt.count()
-        _free_checkpoint(alive)  # superseded peel round
-        alive = nxt
-        if n_next == n_edges:  # fixpoint: nobody fell below k
-            break
-        n_edges = n_next
-        rounds += 1
-        if max_iter is not None and rounds >= max_iter:
-            raise RuntimeError(
-                f"kcore did not reach a fixpoint within max_iter={max_iter} "
-                f"peel rounds ({n_edges} directed edges still shrinking); "
-                "pass max_iter=None to peel to the guaranteed fixpoint"
-            )
+
+    def fixpoint(alive: DataFrame, _: int) -> bool:  # nobody fell below k
+        sizes.append(alive.count())
+        return sizes[-1] == sizes[-2]
+
+    # Each unconverged round drops ≥ 1 edge, so |E| + 1 rounds always
+    # reach the fixpoint; a max_iter guard still gets its one round.
+    rounds = sizes[0] + 1 if max_iter is None else max(max_iter, 1)
+    alive, converged = _iterate(alive, step, rounds, until=fixpoint)
+    if not converged:
+        raise RuntimeError(
+            f"kcore did not reach a fixpoint within max_iter={max_iter} "
+            f"peel rounds ({sizes[-1]} directed edges still shrinking); "
+            "pass max_iter=None to peel to the guaranteed fixpoint"
+        )
     return alive.groupBy(F.col("src").alias("id")).agg(
         F.count(F.lit(1)).alias("core_degree")
     )

@@ -187,6 +187,26 @@ def sample_per_group(
     )
 
 
+def _quality_rules(
+    min_tokens: int = 30,
+    max_mean_word_len: float = 5.0,
+    min_stopword_ratio: float = 0.02,
+) -> tuple[Column, Column]:
+    """The Gopher-style rule gate over ``quality_features`` columns →
+    (failed rule names as an array, keep flag) — the one definition
+    quality_filter and quality_classifier share."""
+    rules = [
+        ("too_short", F.col("n_tokens") < min_tokens),
+        ("long_words", F.col("mean_word_len") > max_mean_word_len),
+        ("low_stopword", F.col("stopword_ratio") < min_stopword_ratio),
+    ]
+    failed = F.filter(
+        F.array(*[F.when(cond, name) for name, cond in rules]),
+        lambda x: x.isNotNull(),
+    )
+    return failed, F.size(failed) == 0
+
+
 def quality_filter(
     df: DataFrame,
     id_col: str,
@@ -207,19 +227,11 @@ def quality_filter(
     from graphragdatapipeline_spark.text.analysis import quality_features
 
     feats = df.select(F.col(id_col), *quality_features(F.col(text_col)))
-    rules = [
-        ("too_short", F.col("n_tokens") < min_tokens),
-        ("long_words", F.col("mean_word_len") > max_mean_word_len),
-        ("low_stopword", F.col("stopword_ratio") < min_stopword_ratio),
-    ]
-    failed = F.filter(
-        F.array(*[F.when(cond, name) for name, cond in rules]),
-        lambda x: x.isNotNull(),
-    )
+    failed, keep = _quality_rules(min_tokens, max_mean_word_len, min_stopword_ratio)
     return feats.select(
         F.col(id_col),
         F.col("n_tokens"),
-        (F.size(failed) == 0).alias("keep"),
+        keep.alias("keep"),
         F.array_join(failed, ",").alias("fail_reasons"),
     )
 
@@ -572,22 +584,11 @@ def quality_classifier(
     def micro(c: Column) -> Column:
         return F.floor(c * F.lit(1_000_000.0) + F.lit(0.5)).cast("long")
 
-    # Single-pass features + gate (r14): the rule gate and the model
-    # features derive from the SAME quality_features columns, so compute
-    # them in one projection instead of two text scans reassembled by an
-    # id-keyed self-join (guide §2.4 — the join bought nothing but a
-    # shuffle of both branches; every output column is the identical
-    # expression either way). Rule names/thresholds mirror
-    # quality_filter's defaults — keep them in sync.
-    _failed = F.filter(
-        F.array(
-            F.when(F.col("n_tokens") < 30, "too_short"),
-            F.when(F.col("mean_word_len") > 5.0, "long_words"),
-            F.when(F.col("stopword_ratio") < 0.02, "low_stopword"),
-        ),
-        lambda x: x.isNotNull(),
-    )
-    _keep = F.size(_failed) == 0
+    # Single-pass features + gate: the rule gate and the model
+    # features derive from the SAME quality_features columns, so one
+    # projection computes both (the label is quality_filter's gate at
+    # its default thresholds).
+    _failed, _keep = _quality_rules()
     feats = (
         df.select(F.col(id_col), *quality_features(F.col(text_col)))
         .select(

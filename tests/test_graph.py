@@ -697,3 +697,125 @@ def test_two_hop_mid_wedge_guardrail(spark):
     assert capped == {t for t in exact if t[1] == 101}
     uncapped = {(r.a, r.b, r.c) for r in ga.two_hop(df, max_mid_wedges=25).collect()}
     assert uncapped == exact
+
+
+# -- _iterate storage rules ---------------------------------------------------
+# Persistent-RDD counts are deltas on the shared session; garbage collection
+# of other tests' frames can only lower them, so the bounds cannot flake red.
+
+
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_iterate_bounds_live_round_checkpoints(spark, monkeypatch):
+    """A 12-round label_propagation keeps at most _MATERIALIZE_EVERY + 1
+    round checkpoints alive: superseded rounds are freed at every
+    materialization, not when the loop ends."""
+    rows = [(i, (i + 1) % 30) for i in range(30)] + [(i, (i + 7) % 30) for i in range(30)]
+    edges = spark.createDataFrame(rows, "src int, dst int")
+    live = []
+    iterate = ga._iterate
+
+    def spy_iterate(state, step, rounds, until=None, release=()):
+        def spy(s, r):
+            live.append(_persistent_rdds(spark))
+            return step(s, r)
+
+        return iterate(state, spy, rounds, until, release)
+
+    monkeypatch.setattr(ga, "_iterate", spy_iterate)
+    ga.label_propagation(edges, max_iter=12).collect()
+    assert len(live) == 12
+    # at round 0 exactly one round checkpoint (the initial labels) is live
+    assert max(live) - live[0] + 1 <= ga._MATERIALIZE_EVERY + 1, live
+
+
+_LOOP_EDGES = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "e"), ("x", "y")]
+_LOOPS = {
+    "transitive_closure": lambda e, s: ga.transitive_closure(e),
+    "connected_components": lambda e, s: ga.connected_components(e),
+    "label_propagation": lambda e, s: ga.label_propagation(e, max_iter=7),
+    "louvain_move": lambda e, s: ga.louvain_move(e, rounds=7),
+    "pagerank": lambda e, s: ga.pagerank(e),
+    "personalized_pagerank": lambda e, s: ga.personalized_pagerank(e, ["a"]),
+    "bfs_distances": lambda e, s: ga.bfs_distances(e, s),
+    "kcore": lambda e, s: ga.kcore(e, k=2),
+}
+
+
+@pytest.mark.parametrize("loop", sorted(_LOOPS))
+def test_graph_loop_leaves_one_checkpoint(spark, loop):
+    """After the caller's action, each loop leaves at most the one
+    checkpoint behind its returned frame: superseded rounds and the
+    loop-invariant edge/vertex checkpoints are all released."""
+    edges = spark.createDataFrame(_LOOP_EDGES, "src string, dst string")
+    sources = spark.createDataFrame([("a",)], "id string")
+    before = _persistent_rdds(spark)
+    assert _LOOPS[loop](edges, sources).collect()
+    assert _persistent_rdds(spark) - before <= 1
+
+
+def test_louvain_ladder_releases_levels(spark):
+    """The Louvain ladder unpersists its contracted graphs and frees
+    every move, composition and level-label checkpoint once its answer
+    is materialized (the registry's graph_louvain_ladder at sf0.001
+    used to leave 23 persistent RDDs behind)."""
+    rows = [(1, 2), (2, 3), (1, 3), (10, 11), (11, 12), (10, 12), (3, 10)]
+    edges = spark.createDataFrame(rows, "src int, dst int")
+    verts = spark.createDataFrame([(i,) for i in (1, 2, 3, 10, 11, 12)], "id int")
+    before = _persistent_rdds(spark)
+    out = ga.detect_communities_louvain(verts, edges, rounds_per_level=(1, 1, 1))
+    assert len(out.collect()) == 6
+    assert _persistent_rdds(spark) - before <= 2
+
+
+def test_louvain_multilevel_counts_bind_at_submit(spark, monkeypatch):
+    """A late pool worker must not change the labels. The first
+    cycle's community count has to read the level-0 labels even when
+    its worker starts after the loop has rebound `mapping` (a
+    late-binding read counted the composed labels, so the shrink test
+    saw no shrink and stopped after one cycle), and their checkpoint
+    must not be freed before that count ran."""
+    import concurrent.futures
+    import threading
+    import time
+
+    # 8 triangles in a ring: the second move-and-contract cycle merges
+    # communities the first left apart, so an early stop changes labels
+    cl = [[f"c{j}_{i}" for i in range(3)] for j in range(8)]
+    rows = [(u, v) for nodes in cl for i, u in enumerate(nodes) for v in nodes[i + 1:]]
+    rows += [(cl[j][0], cl[(j + 1) % 8][1]) for j in range(8)]
+    edges = spark.createDataFrame(rows, "src string, dst string")
+
+    def labels():
+        return {
+            r.id: r.community
+            for r in ga.louvain_multilevel(edges, gamma=0.5, rounds=1, max_cycles=3).collect()
+        }
+
+    expected = labels()
+    second_done = threading.Event()
+
+    class LateFirstWorker(concurrent.futures.ThreadPoolExecutor):
+        """Holds the first submitted task until the second one has
+        finished (the point where the loop moves on), plus a margin."""
+
+        submitted = 0
+
+        def submit(self, fn, /, *args, **kwargs):
+            LateFirstWorker.submitted += 1
+            if LateFirstWorker.submitted == 1:
+                def late():
+                    second_done.wait(60)
+                    time.sleep(2)
+                    return fn(*args, **kwargs)
+
+                return super().submit(late)
+            fut = super().submit(fn, *args, **kwargs)
+            if LateFirstWorker.submitted == 2:
+                fut.add_done_callback(lambda _: second_done.set())
+            return fut
+
+    monkeypatch.setattr(concurrent.futures, "ThreadPoolExecutor", LateFirstWorker)
+    assert labels() == expected
