@@ -25,18 +25,30 @@ def normalize_text(col: Column) -> Column:
     return F.trim(c)
 
 
-def normalize_text_nfkc(col: Column) -> Column:
-    """F1 with NFKC repair — needs a Python kernel; import is
-    deferred so the native path has zero pandas dependency."""
+def _normalize_nfkc(col: Column, repair_fn=None) -> Column:
+    """The one NFKC kernel: an Arrow-batched pandas UDF that applies
+    ``repair_fn`` (str→str; skipped when None) and then NFKC to every
+    non-NULL value, followed by the native regex chain. The UDF import
+    is deferred so the native path has zero pandas dependency."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("string")
     def _nfkc(s):  # type: ignore[no-untyped-def]
         import unicodedata
 
-        return s.map(lambda x: unicodedata.normalize("NFKC", x) if x is not None else None)
+        def norm(x):
+            if x is None:
+                return None
+            return unicodedata.normalize("NFKC", x if repair_fn is None else repair_fn(x))
+
+        return s.map(norm)
 
     return normalize_text(_nfkc(col))
+
+
+def normalize_text_nfkc(col: Column) -> Column:
+    """F1 with NFKC repair — needs a Python kernel."""
+    return _normalize_nfkc(col)
 
 
 # Mojibake detection: a mis-decoded UTF-8 lead byte (U+00C2–U+00F4)
@@ -175,25 +187,11 @@ def normalize_text_full(col: Column, repair_fn=None) -> Column:
     even without ftfy installed.
     The repair runs inside ONE Arrow-batched pandas UDF together with
     NFKC (one Python boundary crossing, not two); the regex chain
-    stays JVM-native."""
+    stays JVM-native. With no repairer available the chain is
+    NFKC-only."""
     if repair_fn is None:
         repair_fn = mojibake_repair_default()
-    if repair_fn is None:
-        return normalize_text_nfkc(col)
-
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("string")
-    def _repair_nfkc(s):  # type: ignore[no-untyped-def]
-        import unicodedata
-
-        return s.map(
-            lambda x: unicodedata.normalize("NFKC", repair_fn(x))
-            if x is not None
-            else None
-        )
-
-    return normalize_text(_repair_nfkc(col))
+    return _normalize_nfkc(col, repair_fn)
 
 
 # ---------------------------------------------------------------------------

@@ -799,6 +799,8 @@ def louvain_multilevel(
     three-rung quality ladder in SCALE.md)."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.util import inheritable_thread_target
+
     memb = louvain_move(
         edges, gamma, rounds, vertices, weight_col, n_edges_hint=n_edges_hint
     )
@@ -810,13 +812,21 @@ def louvain_multilevel(
     # instead of serializing on the driver. Each count is a pure
     # aggregate, so every label and every break decision is unchanged.
     # Every submitted count binds its frame at submit time: the loop
-    # rebinds `mapping` while a worker may not have started yet.
+    # rebinds `mapping` while a worker may not have started yet. Each
+    # task also carries the caller's job group and local properties,
+    # which pinned-thread mode does not pass to a new Python thread.
     with ThreadPoolExecutor(max_workers=2) as pool:
+
+        def n_communities(frame: DataFrame):
+            return pool.submit(
+                inheritable_thread_target(frame.sparkSession)(
+                    lambda: frame.select("community").distinct().count()
+                )
+            )
+
         # prev_n isn't consulted until the first cycle's break check —
         # let it run while the first contraction materializes.
-        f_prev_n = pool.submit(
-            lambda m=mapping: m.select("community").distinct().count()
-        )
+        f_prev_n = n_communities(mapping)
         prev_n = None
         for cycle in range(max_cycles - 1):
             g = _contract_weighted(cur_edges, level_memb, cur_w).persist()
@@ -827,9 +837,7 @@ def louvain_multilevel(
             sup = louvain_move(
                 g, gamma, rounds, weight_col="weight", n_edges_hint=gn
             )
-            f_n = pool.submit(
-                lambda s=sup: s.select("community").distinct().count()
-            )
+            f_n = n_communities(sup)
             new_mapping = (
                 mapping.withColumnRenamed("community", "_lvl")
                 .join(

@@ -2,43 +2,68 @@
 (north-star extension — image/audio/video for LLM training data).
 
 Design: media is an opaque `binary` column with a media_type and a
-typed metadata struct (BLOB_SCHEMA). Decode / feature-extract /
-resize / frame-sample run as Arrow-batched kernels over mapInPandas —
-the Spark-side plumbing (schema, batching, partitioning) is real and
-tested. Codec status — all three modalities decode FOR REAL, stdlib
-only: `image/png` via the zlib/struct codec below (all five scanline
-filters, CRC-verified), `audio/wav` via the wave module (RIFF parse,
-mono PCM16), and `video/avi` via encode_avi/decode_avi (RIFF LIST
-walk, uncompressed 24-bit DIB frames). Exotic pixel/sample formats
-raise honest NotImplementedError gates, and `decode_media` provides a
+typed metadata struct (schemas.BLOB_SCHEMA). Every decode /
+feature-extract / resize / frame-extract kernel here is a per-row
+function handed to one Arrow-batched helper, `_map_rows` — the
+module's only mapInPandas call — which owns batching, slicing and the
+output schema. Codec status — all three modalities decode FOR REAL,
+stdlib only, and `decode_media` dispatches each: `image/png` via the
+zlib/struct codec below (all five scanline filters, CRC-verified),
+`audio/wav` via the wave module (RIFF parse, mono PCM16), and
+`video/avi` via encode_avi/decode_avi (RIFF LIST walk, uncompressed
+24-bit DIB frames). Exotic pixel/sample formats raise honest
+NotImplementedError gates, and `decode_media` provides a
 deterministic fake for `text/plain` payloads so the batch shape and
 schema contract are exercised end-to-end regardless.
 
 At 100 TB: blobs dominate bytes, so the table is written with the
 payload column LAST (parquet column pruning skips it for metadata
-queries), partitioned by media_type, and feature extraction bounds
-its working set by re-chunking each incoming Arrow batch to
-`batch_size` rows inside the kernel (plus the session-level
-`arrow.maxRecordsPerBatch` default in session.py — query bodies never
-mutate session conf). Kernel math is numpy over the Arrow batch, not
-per-row Python (VERDICT r2 #5).
+queries), partitioned by media_type, and `_map_rows` bounds every
+kernel's working set by slicing each incoming Arrow batch to a fixed
+number of rows (plus the session-level `arrow.maxRecordsPerBatch`
+default in session.py — query bodies never mutate session conf).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _rechunk(batches: Iterator, batch_size: int) -> Iterator:
-    """Slice incoming Arrow batches to ≤batch_size rows so a kernel's
-    per-batch working set (decoded payloads, feature matrices) stays
-    bounded regardless of the session's Arrow batch size."""
-    for pdf in batches:
-        for lo in range(0, len(pdf), batch_size):
-            yield pdf.iloc[lo : lo + batch_size]
+def _map_rows(
+    df: DataFrame,
+    out_ddl: str,
+    fn: Callable[..., Iterable[tuple]],
+    *cols: str,
+    rows: int = 256,
+) -> DataFrame:
+    """The one kernel shape of this module: `fn(*values)` is called on
+    each input row's `cols` and returns zero or more output tuples,
+    whose fields are the columns of `out_ddl` in order (None is NULL).
+    Runs as mapInPandas over `df.select(*cols)`: each incoming Arrow
+    batch is sliced to at most `rows` input rows, and each slice's
+    tuples become one output batch, so a kernel's working set
+    (decoded pixels, frames, features) stays bounded whatever the
+    session's Arrow batch size. Arrow-batched transfer, never a
+    row-at-a-time Python UDF in the plan."""
+    from pyspark.sql.types import StructType
+
+    names = StructType.fromDDL(out_ddl).fieldNames()
+
+    def kernel(batches: Iterator) -> Iterator:
+        import pandas as pd
+
+        for pdf in batches:
+            for lo in range(0, len(pdf), rows):
+                part = pdf.iloc[lo : lo + rows]
+                out = [t for vals in zip(*(part[c] for c in cols)) for t in fn(*vals)]
+                if out:
+                    yield pd.DataFrame.from_records(out, columns=names)
+
+    return df.select(*cols).mapInPandas(kernel, out_ddl)
+
 
 FEATURE_DDL = (
     "blob_id STRING, media_type STRING, n_bytes BIGINT, "
@@ -218,180 +243,134 @@ def decode_png(payload: bytes):
 
 
 def decode_media(payload: bytes, media_type: str):
-    """Codec dispatch. image/png decodes for real (stdlib zlib —
-    decode_png above); other media codecs are stubbed in this
-    environment."""
+    """Codec dispatch: text/plain (deterministic fake), image/png
+    (decode_png), audio/wav (decode_wav) and video/avi (decode_avi)
+    decode for real; any other media type is a plug point for an
+    external decoder."""
     if media_type == "text/plain":
         return payload.decode("utf-8")
     if media_type == "image/png":
         return decode_png(bytes(payload))
     if media_type == "audio/wav":
         return decode_wav(bytes(payload))
+    if media_type == "video/avi":
+        return decode_avi(bytes(payload))
     raise NotImplementedError(
         f"codec for {media_type} not available in this environment; "
         "plug a decoder (PIL/librosa/pyav) into this dispatch point"
     )
 
 
-def image_stats(blobs: DataFrame, batch_size: int = 256) -> DataFrame:
-    """Real image feature extraction over mapInPandas: decode each PNG
-    payload (decode_png — real bytes, real filters, CRC-checked) and
-    emit width/height/channels plus exact integer pixel statistics.
-    Same Arrow-batch kernel shape as blob_features; pixel_sum is
-    int64-exact so a SQL oracle can replay it."""
-    out_ddl = (
-        "blob_id STRING, width BIGINT, height BIGINT, channels BIGINT, "
-        "n_pixels BIGINT, pixel_sum BIGINT"
+_PIXEL_DDL = (
+    "blob_id STRING, width BIGINT, height BIGINT, channels BIGINT, "
+    "n_pixels BIGINT, pixel_sum BIGINT"
+)
+
+
+def _pixel_stats(decode: Callable) -> Callable:
+    """Row function for _PIXEL_DDL over (blob_id, payload, *rest):
+    `decode(payload, *rest)` gives an (H, W, C) uint8 array; pixel_sum
+    is int64-exact so a SQL oracle can replay it."""
+
+    def row(blob_id, payload, *rest):
+        import numpy as np
+
+        arr = decode(payload, *rest)
+        h, w, c = arr.shape
+        yield blob_id, w, h, c, w * h * c, int(arr.astype(np.int64).sum())
+
+    return row
+
+
+def image_stats(blobs: DataFrame) -> DataFrame:
+    """Real image feature extraction: decode each PNG payload
+    (decode_png — real bytes, real filters, CRC-checked) and emit
+    width/height/channels plus exact integer pixel statistics."""
+    return _map_rows(
+        blobs, _PIXEL_DDL, _pixel_stats(decode_media),
+        "blob_id", "payload", "media_type",
     )
 
-    def stats(batches: Iterator) -> Iterator:
+
+_SYNTHETIC_DDL = "blob_id STRING, media_type STRING, doc_id BIGINT, payload BINARY"
+
+
+def _synthetic_blobs(
+    documents: DataFrame, media_type: str, payload_of: Callable[[int], bytes]
+) -> DataFrame:
+    """Deterministic blob table from the documents fixture: doc k
+    becomes (doc-k, media_type, k, payload_of(k)). Each payload is a
+    closed form of k alone, so a SQL oracle replays its decoded
+    content without any codec."""
+
+    def row(k):
+        yield f"doc-{k}", media_type, k, payload_of(k)
+
+    return _map_rows(documents, _SYNTHETIC_DDL, row, "doc_id")
+
+
+def png_blob_table(documents: DataFrame) -> DataFrame:
+    """Doc k gets a (3 + k%11) × (4 + k%13) RGB image whose pixel at
+    (y, x, c) is (k + x + 7y + 13c) % 256. The bytes are REAL PNGs
+    (encode_png, filters cycling through all five types), so decoding
+    them is a genuine codec round-trip."""
+
+    def png(k: int) -> bytes:
         import numpy as np
-        import pandas as pd
 
-        for pdf in _rechunk(batches, batch_size):
-            ws, hs, chs, sums = [], [], [], []
-            for p, mt in zip(pdf["payload"], pdf["media_type"]):
-                arr = decode_media(bytes(p), mt)
-                h, w, c = arr.shape
-                ws.append(w)
-                hs.append(h)
-                chs.append(c)
-                sums.append(int(arr.astype(np.int64).sum()))
-            ws = np.asarray(ws, np.int64)
-            hs = np.asarray(hs, np.int64)
-            chs = np.asarray(chs, np.int64)
-            yield pd.DataFrame(
-                {
-                    "blob_id": pdf["blob_id"].to_numpy(),
-                    "width": ws,
-                    "height": hs,
-                    "channels": chs,
-                    "n_pixels": ws * hs * chs,
-                    "pixel_sum": np.asarray(sums, np.int64),
-                }
-            )
+        w, h = 4 + k % 13, 3 + k % 11
+        ys, xs, cs = np.meshgrid(
+            np.arange(h), np.arange(w), np.arange(3), indexing="ij"
+        )
+        return encode_png(((k + xs + 7 * ys + 13 * cs) % 256).astype(np.uint8))
 
-    return blobs.mapInPandas(stats, out_ddl)
+    return _synthetic_blobs(documents, "image/png", png)
 
 
-def png_blob_table(documents: DataFrame, batch_size: int = 256) -> DataFrame:
-    """Deterministic PNG blob table from the documents fixture: doc k
-    gets a (3 + k%11) × (4 + k%13) RGB image whose pixel at (y, x, c)
-    is (k + x + 7y + 13c) % 256 — a closed form a SQL oracle can
-    replay without any codec. The bytes are REAL PNGs (encode_png,
-    filters cycling through all five types), so decoding them is a
-    genuine codec round-trip."""
-    out_ddl = "blob_id STRING, media_type STRING, doc_id BIGINT, payload BINARY"
+def blob_features(blobs: DataFrame, feature_dim: int = 8) -> DataFrame:
+    """Feature extraction: emit each payload's byte count, md5 and
+    deterministic pseudo-features — a stable md5-seeded projection
+    (one md5 per dimension, [:8]-hex → uint32 → unit interval), a
+    faithful stand-in for an image/audio encoder's output shape."""
 
-    def make(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in _rechunk(batches, batch_size):
-            ids = pdf["doc_id"].to_numpy()
-            payloads = []
-            for k in ids:
-                k = int(k)
-                w, h = 4 + k % 13, 3 + k % 11
-                ys, xs, cs = np.meshgrid(
-                    np.arange(h), np.arange(w), np.arange(3), indexing="ij"
-                )
-                arr = ((k + xs + 7 * ys + 13 * cs) % 256).astype(np.uint8)
-                payloads.append(encode_png(arr))
-            yield pd.DataFrame(
-                {
-                    "blob_id": ["doc-" + str(int(k)) for k in ids],
-                    "media_type": ["image/png"] * len(ids),
-                    "doc_id": ids,
-                    "payload": payloads,
-                }
-            )
-
-    return documents.select("doc_id").mapInPandas(make, out_ddl)
-
-
-def blob_features(blobs: DataFrame, feature_dim: int = 8, batch_size: int = 256) -> DataFrame:
-    """Feature extraction over mapInPandas: per Arrow batch, decode
-    (stub) and emit (hash, deterministic pseudo-features). The
-    features for text/plain are a stable md5-seeded projection —
-    a faithful stand-in for an image/audio encoder's output shape."""
-
-    def extract(batches: Iterator) -> Iterator:
+    def row(blob_id, media_type, payload):
         import hashlib
 
         import numpy as np
-        import pandas as pd
 
-        for pdf in _rechunk(batches, batch_size):
-            payloads = [bytes(p) for p in pdf["payload"]]
-            digests = [hashlib.md5(p).hexdigest() for p in payloads]
-            # One md5 per (row, dim) is inherent to the deterministic
-            # fake; the [:8]-hex → uint32 → unit-interval projection is
-            # vectorized over the whole batch.
-            hex8 = np.array(
-                [
-                    hashlib.md5(f"{i}|{d}".encode()).hexdigest()[:8]
-                    for d in digests
-                    for i in range(feature_dim)
-                ]
-            )
-            feats = (
-                np.array([int(h, 16) for h in hex8], dtype=np.float64) / 2**32
-            ).reshape(len(payloads), feature_dim)
-            yield pd.DataFrame(
-                {
-                    "blob_id": pdf["blob_id"].to_numpy(),
-                    "media_type": pdf["media_type"].to_numpy(),
-                    "n_bytes": np.fromiter(
-                        (len(p) for p in payloads), np.int64, len(payloads)
-                    ),
-                    "content_hash": digests,
-                    "feature_dim": np.full(len(payloads), feature_dim, np.int32),
-                    "features": list(feats),
-                }
-            )
+        digest = hashlib.md5(payload).hexdigest()
+        hex8 = [
+            hashlib.md5(f"{i}|{digest}".encode()).hexdigest()[:8]
+            for i in range(feature_dim)
+        ]
+        feats = np.array([int(h, 16) for h in hex8], np.float64) / 2**32
+        yield blob_id, media_type, len(payload), digest, feature_dim, feats
 
-    return blobs.mapInPandas(extract, FEATURE_DDL)
+    return _map_rows(blobs, FEATURE_DDL, row, "blob_id", "media_type", "payload")
 
 
-def resize_media(blobs: DataFrame, target_bytes: int = 256, batch_size: int = 256) -> DataFrame:
-    """Resize/downsample plumbing over mapInPandas: per Arrow batch,
-    decode (stub dispatch), clip the payload to target_bytes, emit the
-    resized blob + its hash. For real images this is where
-    PIL.Image.resize plugs in; the deterministic byte-clip keeps the
-    schema/batching/hash contract testable without codecs."""
+def resize_media(blobs: DataFrame, target_bytes: int = 256) -> DataFrame:
+    """Resize/downsample plumbing: decode (codec dispatch), clip the
+    payload to target_bytes, emit the resized blob + its hash. For
+    real images this is where PIL.Image.resize plugs in; the
+    deterministic byte-clip keeps the schema/batching/hash contract
+    testable without codecs."""
     out_ddl = (
         "blob_id STRING, media_type STRING, orig_bytes BIGINT, "
         "resized_bytes BIGINT, resized_hash STRING, payload BINARY"
     )
 
-    def resize(batches: Iterator) -> Iterator:
+    def row(blob_id, media_type, payload):
         import hashlib
 
-        import numpy as np
-        import pandas as pd
+        decode_media(payload, media_type)  # codec dispatch point
+        clip = bytes(payload[:target_bytes])
+        yield (
+            blob_id, media_type, len(payload), len(clip),
+            hashlib.md5(clip).hexdigest(), clip,
+        )
 
-        for pdf in _rechunk(batches, batch_size):
-            payloads = [bytes(p) for p in pdf["payload"]]
-            for p, mt in zip(payloads, pdf["media_type"]):
-                decode_media(p, mt)  # codec dispatch point
-            resized = [p[:target_bytes] for p in payloads]
-            yield pd.DataFrame(
-                {
-                    "blob_id": pdf["blob_id"].to_numpy(),
-                    "media_type": pdf["media_type"].to_numpy(),
-                    "orig_bytes": np.fromiter(
-                        (len(p) for p in payloads), np.int64, len(payloads)
-                    ),
-                    "resized_bytes": np.fromiter(
-                        (len(r) for r in resized), np.int64, len(resized)
-                    ),
-                    "resized_hash": [hashlib.md5(r).hexdigest() for r in resized],
-                    "payload": resized,
-                }
-            )
-
-    return blobs.mapInPandas(resize, out_ddl)
+    return _map_rows(blobs, out_ddl, row, "blob_id", "media_type", "payload")
 
 
 def frame_sample_stub(blobs: DataFrame, every_ms: int = 1000) -> DataFrame:
@@ -407,52 +386,29 @@ def frame_sample_stub(blobs: DataFrame, every_ms: int = 1000) -> DataFrame:
     )
 
 
-def waveform_stats(blobs: DataFrame, batch_size: int = 256) -> DataFrame:
+def waveform_stats(blobs: DataFrame) -> DataFrame:
     """Audio-style numeric feature extraction plumbing: treat the
     payload as 8-bit samples and emit mean amplitude + RMS. Real
     audio decode (librosa/pyav) plugs into the same kernel; sums are
     computed in exact integer arithmetic so the oracle (ASCII codes in
-    SQL for text payloads) matches bit-for-bit."""
-    out_ddl = (
-        "blob_id STRING, n_samples BIGINT, mean_amp DOUBLE, rms_amp DOUBLE"
-    )
+    SQL for text payloads) matches bit-for-bit. An empty payload has
+    NULL (not NaN) mean and RMS."""
+    out_ddl = "blob_id STRING, n_samples BIGINT, mean_amp DOUBLE, rms_amp DOUBLE"
 
-    def stats(batches: Iterator) -> Iterator:
+    def row(blob_id, media_type, payload):
+        import math
+
         import numpy as np
-        import pandas as pd
 
-        for pdf in _rechunk(batches, batch_size):
-            payloads = [bytes(p) for p in pdf["payload"]]
-            for p, mt in zip(payloads, pdf["media_type"]):
-                decode_media(p, mt)  # codec dispatch point
-            n_rows = len(payloads)
-            lens = np.fromiter((len(p) for p in payloads), np.int64, n_rows)
-            # Segmented sums over ONE concatenated uint8 view of the
-            # whole batch — int64-exact, no per-byte Python loop.
-            concat = np.frombuffer(b"".join(payloads), np.uint8).astype(np.int64)
-            sums = np.zeros(n_rows, np.int64)
-            sqs = np.zeros(n_rows, np.int64)
-            nz = np.flatnonzero(lens)
-            if nz.size:
-                starts = np.concatenate(([0], np.cumsum(lens)))[nz]
-                sums[nz] = np.add.reduceat(concat, starts)
-                sqs[nz] = np.add.reduceat(concat * concat, starts)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                mean = np.where(lens > 0, sums / lens, np.nan)
-                rms = np.where(lens > 0, np.sqrt(sqs / lens), np.nan)
-            ok = lens > 0
-            yield pd.DataFrame(
-                {
-                    "blob_id": pdf["blob_id"].to_numpy(),
-                    "n_samples": lens,
-                    # NaN is a VALUE to Spark, not NULL — empty payloads
-                    # must surface as NULL like the scalar kernel did.
-                    "mean_amp": pd.Series(mean).where(ok, None),
-                    "rms_amp": pd.Series(rms).where(ok, None),
-                }
-            )
+        decode_media(payload, media_type)  # codec dispatch point
+        n = len(payload)
+        if not n:
+            yield blob_id, 0, None, None
+            return
+        x = np.frombuffer(payload, np.uint8).astype(np.int64)
+        yield blob_id, n, float(x.sum()) / n, math.sqrt(float((x * x).sum()) / n)
 
-    return blobs.mapInPandas(stats, out_ddl)
+    return _map_rows(blobs, out_ddl, row, "blob_id", "media_type", "payload")
 
 
 def encode_wav(samples, sample_rate: int = 8000) -> bytes:
@@ -495,77 +451,40 @@ def decode_wav(payload: bytes):
         return w.getframerate(), np.frombuffer(frames, dtype="<i2")
 
 
-def audio_stats(blobs: DataFrame, batch_size: int = 256) -> DataFrame:
-    """Real audio feature extraction over mapInPandas: decode each WAV
-    payload (decode_wav — real RIFF parsing, real PCM samples) and
-    emit exact integer sample statistics (int64 sums, so a SQL oracle
-    replays them bit-for-bit). Same Arrow-batch kernel shape as
-    image_stats."""
+def audio_stats(blobs: DataFrame) -> DataFrame:
+    """Real audio feature extraction: decode each WAV payload
+    (decode_wav — real RIFF parsing, real PCM samples) and emit exact
+    integer sample statistics (int64 sums, so a SQL oracle replays
+    them bit-for-bit)."""
     out_ddl = (
         "blob_id STRING, sample_rate BIGINT, n_samples BIGINT, "
         "sample_sum BIGINT, sample_min BIGINT, sample_max BIGINT"
     )
 
-    def stats(batches: Iterator) -> Iterator:
+    def row(blob_id, payload):
         import numpy as np
-        import pandas as pd
 
-        for pdf in _rechunk(batches, batch_size):
-            rates, ns, sums, mins, maxs = [], [], [], [], []
-            for p in pdf["payload"]:
-                rate, samples = decode_wav(bytes(p))
-                s64 = samples.astype(np.int64)
-                rates.append(rate)
-                ns.append(len(samples))
-                sums.append(int(s64.sum()))
-                mins.append(int(s64.min()) if len(samples) else 0)
-                maxs.append(int(s64.max()) if len(samples) else 0)
-            yield pd.DataFrame(
-                {
-                    "blob_id": pdf["blob_id"].to_numpy(),
-                    "sample_rate": np.asarray(rates, np.int64),
-                    "n_samples": np.asarray(ns, np.int64),
-                    "sample_sum": np.asarray(sums, np.int64),
-                    "sample_min": np.asarray(mins, np.int64),
-                    "sample_max": np.asarray(maxs, np.int64),
-                }
-            )
+        rate, samples = decode_wav(payload)
+        s = samples.astype(np.int64)
+        lo, hi = (int(s.min()), int(s.max())) if len(s) else (0, 0)
+        yield blob_id, rate, len(s), int(s.sum()), lo, hi
 
-    return blobs.mapInPandas(stats, out_ddl)
+    return _map_rows(blobs, out_ddl, row, "blob_id", "payload")
 
 
-def wav_blob_table(documents: DataFrame, batch_size: int = 256) -> DataFrame:
-    """Deterministic WAV blob table from the documents fixture: doc k
-    gets 50 + k%40 mono PCM16 samples with sample i =
-    ((7k + 13i) % 65536) − 32768 — a closed form a SQL oracle replays
-    without any codec. The bytes are REAL RIFF/WAVE containers
-    (encode_wav), so decoding them is a genuine codec round-trip —
-    the audio twin of png_blob_table."""
-    out_ddl = "blob_id STRING, media_type STRING, doc_id BIGINT, payload BINARY"
+def wav_blob_table(documents: DataFrame) -> DataFrame:
+    """Doc k gets 50 + k%40 mono PCM16 samples with sample i =
+    ((7k + 13i) % 65536) − 32768. The bytes are REAL RIFF/WAVE
+    containers (encode_wav), so decoding them is a genuine codec
+    round-trip — the audio twin of png_blob_table."""
 
-    def make(batches: Iterator) -> Iterator:
+    def wav(k: int) -> bytes:
         import numpy as np
-        import pandas as pd
 
-        for pdf in _rechunk(batches, batch_size):
-            ids = pdf["doc_id"].to_numpy()
-            payloads = []
-            for k in ids:
-                k = int(k)
-                n = 50 + k % 40
-                i = np.arange(n, dtype=np.int64)
-                samples = ((7 * k + 13 * i) % 65536) - 32768
-                payloads.append(encode_wav(samples.astype(np.int16)))
-            yield pd.DataFrame(
-                {
-                    "blob_id": ["doc-" + str(int(k)) for k in ids],
-                    "media_type": ["audio/wav"] * len(ids),
-                    "doc_id": ids,
-                    "payload": payloads,
-                }
-            )
+        i = np.arange(50 + k % 40, dtype=np.int64)
+        return encode_wav((((7 * k + 13 * i) % 65536) - 32768).astype(np.int16))
 
-    return documents.select("doc_id").mapInPandas(make, out_ddl)
+    return _synthetic_blobs(documents, "audio/wav", wav)
 
 
 def resize_png_half(payload: bytes) -> bytes:
@@ -578,43 +497,16 @@ def resize_png_half(payload: bytes) -> bytes:
     return encode_png(arr[::2, ::2, :])
 
 
-def image_resize_stats(blobs: DataFrame, batch_size: int = 256) -> DataFrame:
+def image_resize_stats(blobs: DataFrame) -> DataFrame:
     """Decode → 2× downsample → re-encode → decode AGAIN and emit the
     resized image's exact statistics. Round-tripping the transformed
     bytes through the decoder proves the re-encode is faithful, not
     just the in-memory array."""
-    out_ddl = (
-        "blob_id STRING, width BIGINT, height BIGINT, channels BIGINT, "
-        "n_pixels BIGINT, pixel_sum BIGINT"
+    return _map_rows(
+        blobs, _PIXEL_DDL,
+        _pixel_stats(lambda payload: decode_png(resize_png_half(payload))),
+        "blob_id", "payload",
     )
-
-    def stats(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in _rechunk(batches, batch_size):
-            ws, hs, chs, sums = [], [], [], []
-            for p in pdf["payload"]:
-                arr = decode_png(resize_png_half(bytes(p)))
-                h, w, c = arr.shape
-                ws.append(w)
-                hs.append(h)
-                chs.append(c)
-                sums.append(int(arr.astype(np.int64).sum()))
-            yield pd.DataFrame(
-                {
-                    "blob_id": pdf["blob_id"].to_numpy(),
-                    "width": np.asarray(ws, np.int64),
-                    "height": np.asarray(hs, np.int64),
-                    "channels": np.asarray(chs, np.int64),
-                    "n_pixels": np.asarray(ws, np.int64)
-                    * np.asarray(hs, np.int64)
-                    * np.asarray(chs, np.int64),
-                    "pixel_sum": np.asarray(sums, np.int64),
-                }
-            )
-
-    return blobs.mapInPandas(stats, out_ddl)
 
 
 def encode_avi(frames, fps: int = 10) -> bytes:
@@ -754,83 +646,44 @@ def decode_avi(payload: bytes):
     return fps, frames
 
 
-def avi_blob_table(documents: DataFrame, batch_size: int = 256) -> DataFrame:
-    """Deterministic AVI blob table from the documents fixture: doc k
-    gets 2 + k%4 frames of (4 + k%5) × (2 + k%3) RGB pixels with
-    pixel(f, y, x, c) = (11k + 17f + 7y + 3x + 5c) % 256 — a closed
-    form a SQL oracle replays without any codec. The bytes are REAL
-    RIFF/AVI containers (encode_avi), completing the modality set next
-    to png_blob_table and wav_blob_table."""
-    out_ddl = "blob_id STRING, media_type STRING, doc_id BIGINT, payload BINARY"
+def avi_blob_table(documents: DataFrame) -> DataFrame:
+    """Doc k gets 2 + k%4 frames of (4 + k%5) × (2 + k%3) RGB pixels
+    with pixel(f, y, x, c) = (11k + 17f + 7y + 3x + 5c) % 256. The
+    bytes are REAL RIFF/AVI containers (encode_avi), completing the
+    modality set next to png_blob_table and wav_blob_table."""
 
-    def make(batches: Iterator) -> Iterator:
+    def avi(k: int) -> bytes:
         import numpy as np
-        import pandas as pd
 
-        for pdf in _rechunk(batches, batch_size):
-            ids = pdf["doc_id"].to_numpy()
-            payloads = []
-            for k in ids:
-                k = int(k)
-                nf, w, h = 2 + k % 4, 4 + k % 5, 2 + k % 3
-                y, x, c = np.ogrid[0:h, 0:w, 0:3]
-                frames = [
-                    ((11 * k + 17 * f + 7 * y + 3 * x + 5 * c) % 256).astype(
-                        np.uint8
-                    )
-                    for f in range(nf)
-                ]
-                payloads.append(encode_avi(frames, fps=10))
-            yield pd.DataFrame(
-                {
-                    "blob_id": ["doc-" + str(int(k)) for k in ids],
-                    "media_type": ["video/avi"] * len(ids),
-                    "doc_id": ids,
-                    "payload": payloads,
-                }
-            )
+        y, x, c = np.ogrid[0 : 2 + k % 3, 0 : 4 + k % 5, 0:3]
+        frames = [
+            ((11 * k + 17 * f + 7 * y + 3 * x + 5 * c) % 256).astype(np.uint8)
+            for f in range(2 + k % 4)
+        ]
+        return encode_avi(frames, fps=10)
 
-    return documents.select("doc_id").mapInPandas(make, out_ddl)
+    return _synthetic_blobs(documents, "video/avi", avi)
 
 
-def video_frame_stats(blobs: DataFrame, batch_size: int = 64) -> DataFrame:
+def video_frame_stats(blobs: DataFrame) -> DataFrame:
     """REAL video frame extraction (the step frame_sample_stub left
     stubbed): demux each AVI payload (decode_avi — real RIFF walk,
     real DIB pixel decode), one output row per FRAME with exact
     integer pixel statistics, so a SQL oracle verifies every frame of
-    every video bit-for-bit. Same Arrow-batch kernel shape as
-    image_stats/audio_stats; smaller default batch because each row
-    fans out to n_frames rows of decoded pixels."""
+    every video bit-for-bit. Smaller slices than the other kernels,
+    because each input row fans out to n_frames rows of decoded
+    pixels."""
     out_ddl = (
         "blob_id STRING, frame_idx BIGINT, fps BIGINT, width BIGINT, "
         "height BIGINT, pixel_sum BIGINT"
     )
 
-    def stats(batches: Iterator) -> Iterator:
+    def row(blob_id, payload):
         import numpy as np
-        import pandas as pd
 
-        for pdf in _rechunk(batches, batch_size):
-            out = {k: [] for k in
-                   ("blob_id", "frame_idx", "fps", "width", "height", "pixel_sum")}
-            for blob_id, p in zip(pdf["blob_id"], pdf["payload"]):
-                fps, frames = decode_avi(bytes(p))
-                for i, fr in enumerate(frames):
-                    out["blob_id"].append(blob_id)
-                    out["frame_idx"].append(i)
-                    out["fps"].append(fps)
-                    out["height"].append(fr.shape[0])
-                    out["width"].append(fr.shape[1])
-                    out["pixel_sum"].append(int(fr.astype(np.int64).sum()))
-            yield pd.DataFrame(
-                {
-                    "blob_id": out["blob_id"],
-                    "frame_idx": np.asarray(out["frame_idx"], np.int64),
-                    "fps": np.asarray(out["fps"], np.int64),
-                    "width": np.asarray(out["width"], np.int64),
-                    "height": np.asarray(out["height"], np.int64),
-                    "pixel_sum": np.asarray(out["pixel_sum"], np.int64),
-                }
-            )
+        fps, frames = decode_avi(payload)
+        for i, fr in enumerate(frames):
+            h, w = fr.shape[:2]
+            yield blob_id, i, fps, w, h, int(fr.astype(np.int64).sum())
 
-    return blobs.mapInPandas(stats, out_ddl)
+    return _map_rows(blobs, out_ddl, row, "blob_id", "payload", rows=64)

@@ -875,8 +875,12 @@ def curation_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct benchmark shingles while the fit runs, and the final
     # action then broadcasts the already-computed checkpoint instead of
     # deriving the shingle subtree inline. Same rows broadcast either
-    # way, so the flagged set is unchanged.
+    # way, so the flagged set is unchanged. The task carries the
+    # caller's job group and local properties, which pinned-thread mode
+    # does not pass to a new Python thread.
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
 
     bench = d.filter(F.col("doc_id") % 97 == 0)
     bench_sh = (
@@ -886,7 +890,9 @@ def curation_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     with ThreadPoolExecutor(max_workers=1) as pool:
         f_bench_sh = pool.submit(
-            lambda: bench_sh.localCheckpoint(eager=True)
+            inheritable_thread_target(spark)(
+                lambda: bench_sh.localCheckpoint(eager=True)
+            )
         )
         clf = cu.quality_classifier(d3, "doc_id", "text", iters=25, lr=1.0)
         bench_sh_ck = f_bench_sh.result()

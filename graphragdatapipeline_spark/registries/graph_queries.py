@@ -928,17 +928,21 @@ def graph_louvain_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # are INDEPENDENT iterative programs whose per-round jobs otherwise
     # serialize on the driver — overlap them from a small thread pool
     # (guide §2.6: concurrent jobs back-fill each other's stage tails;
-    # each loop is deterministic, so every label is unchanged).
+    # each loop is deterministic, so every label is unchanged). Each
+    # task carries the caller's job group and local properties, which
+    # pinned-thread mode does not pass to a new Python thread.
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.util import inheritable_thread_target
+
     with ThreadPoolExecutor(max_workers=3) as pool:
-        f_m1 = pool.submit(
-            ga.louvain_move, g.edges, 1.0, 4, g.vertices
-        )
-        f_m2 = pool.submit(
-            ga.louvain_move, g.edges, 1.0, 4, g.vertices
-        )
-        f_lpa = pool.submit(
+
+        def submit(fn, *args, **kwargs):
+            return pool.submit(inheritable_thread_target(spark)(fn), *args, **kwargs)
+
+        f_m1 = submit(ga.louvain_move, g.edges, 1.0, 4, g.vertices)
+        f_m2 = submit(ga.louvain_move, g.edges, 1.0, 4, g.vertices)
+        f_lpa = submit(
             ga.label_propagation, g.edges, vertices=g.vertices, max_iter=5
         )
         m1, m2, lpa = f_m1.result(), f_m2.result(), f_lpa.result()

@@ -736,11 +736,20 @@ def pq_train(
     # so their per-iteration jobs overlap instead of serializing
     # (guide §2.6: concurrent driver threads back-fill the tail of each
     # other's stages; results are per-subspace deterministic, so the
-    # codebooks are identical to the sequential loop's).
+    # codebooks are identical to the sequential loop's). Each task
+    # carries the caller's job group and local properties, which
+    # pinned-thread mode does not pass to a new Python thread.
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.util import inheritable_thread_target
+
+    spark = embeddings.sparkSession
     with ThreadPoolExecutor(max_workers=min(m, 4)) as pool:
-        books = list(pool.map(_train_sub, range(m)))
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(_train_sub), mi)
+            for mi in range(m)
+        ]
+        books = [f.result() for f in futures]
     return books
 
 

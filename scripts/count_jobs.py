@@ -85,9 +85,10 @@ def main() -> None:
     # one untimed pass (JIT/codegen), then the counted+timed pass.
     # Counting method: job ids are globally monotonic, so two sentinel
     # jobs in a private group bracket the run — the delta counts every
-    # job in between, INCLUDING jobs submitted from the engine's own
-    # pool threads (a job group would miss those: pinned-thread mode
-    # does not inherit local properties into new Python threads).
+    # job in between, including jobs submitted from the engine's own
+    # pool threads. (The engine's pools wrap each task with
+    # inheritable_thread_target, so a job group set by the caller now
+    # covers those jobs too; the id bracket needs no group on the run.)
     run()
     group = f"jobcount-{name}-{time.time_ns()}"
     sc = spark.sparkContext

@@ -6,6 +6,7 @@ throw, when fed zero rows."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -221,13 +222,57 @@ def test_lsh_probe_topk_empty_corpus(spark):
     assert vs.lsh_probe_topk(corpus, planes, [0.5, 0.5], k=8).count() == 0
 
 
-def test_image_stats_empty_blobs(spark):
-    from graphragdatapipeline_spark.multimodal.blob import image_stats
+_PIXELS = (
+    "blob_id STRING, width BIGINT, height BIGINT, channels BIGINT, "
+    "n_pixels BIGINT, pixel_sum BIGINT"
+)
+_BLOBS = "blob_id STRING, media_type STRING, doc_id BIGINT, payload BINARY"
+_DOCS = "doc_id BIGINT, text STRING"
+# kernel → (input schema, declared output schema)
+_BLOB_KERNELS = {
+    "image_stats": (_BLOBS, _PIXELS),
+    "image_resize_stats": (_BLOBS, _PIXELS),
+    "audio_stats": (
+        _BLOBS,
+        "blob_id STRING, sample_rate BIGINT, n_samples BIGINT, "
+        "sample_sum BIGINT, sample_min BIGINT, sample_max BIGINT",
+    ),
+    "video_frame_stats": (
+        _BLOBS,
+        "blob_id STRING, frame_idx BIGINT, fps BIGINT, width BIGINT, "
+        "height BIGINT, pixel_sum BIGINT",
+    ),
+    "blob_features": (
+        _BLOBS,
+        "blob_id STRING, media_type STRING, n_bytes BIGINT, "
+        "content_hash STRING, feature_dim INT, features ARRAY<FLOAT>",
+    ),
+    "resize_media": (
+        _BLOBS,
+        "blob_id STRING, media_type STRING, orig_bytes BIGINT, "
+        "resized_bytes BIGINT, resized_hash STRING, payload BINARY",
+    ),
+    "waveform_stats": (
+        _BLOBS, "blob_id STRING, n_samples BIGINT, mean_amp DOUBLE, rms_amp DOUBLE"
+    ),
+    "png_blob_table": (_DOCS, _BLOBS),
+    "wav_blob_table": (_DOCS, _BLOBS),
+    "avi_blob_table": (_DOCS, _BLOBS),
+}
 
-    blobs = spark.createDataFrame(
-        [], "blob_id STRING, media_type STRING, doc_id LONG, payload BINARY"
-    )
-    assert image_stats(blobs).count() == 0
+
+@pytest.mark.parametrize("kernel", list(_BLOB_KERNELS))
+def test_image_stats_empty_blobs(spark, kernel):
+    """Every blob kernel maps an empty input to zero rows of its
+    declared schema."""
+    from pyspark.sql.types import StructType
+
+    from graphragdatapipeline_spark.multimodal import blob
+
+    input_ddl, out_ddl = _BLOB_KERNELS[kernel]
+    out = getattr(blob, kernel)(_empty(spark, input_ddl))
+    assert out.count() == 0
+    assert out.schema.simpleString() == StructType.fromDDL(out_ddl).simpleString()
 
 
 def test_louvain_move_empty(spark):

@@ -819,3 +819,25 @@ def test_louvain_multilevel_counts_bind_at_submit(spark, monkeypatch):
 
     monkeypatch.setattr(concurrent.futures, "ThreadPoolExecutor", LateFirstWorker)
     assert labels() == expected
+
+
+def test_louvain_multilevel_pool_jobs_keep_job_group(spark):
+    """The jobs louvain_multilevel submits from its thread pool run
+    under the caller's job group. Pinned-thread mode does not pass
+    local properties to a new Python thread, so an unwrapped pool
+    task's jobs would carry no group at all."""
+    cl = [[f"t{j}_{i}" for i in range(3)] for j in range(3)]
+    rows = [(u, v) for nodes in cl for i, u in enumerate(nodes) for v in nodes[i + 1:]]
+    rows += [(cl[j][0], cl[(j + 1) % 3][1]) for j in range(3)]
+    edges = spark.createDataFrame(rows, "src string, dst string")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("louvain-pool", "pool jobs keep the caller's group")
+    try:
+        ga.louvain_multilevel(edges, gamma=0.5, rounds=1, max_cycles=3).collect()
+    finally:
+        for key in ("jobGroup.id", "job.description", "job.interruptOnCancel"):
+            sc.setLocalProperty(f"spark.{key}", None)
+    assert tracker.getJobIdsForGroup("louvain-pool")
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped_before == set()

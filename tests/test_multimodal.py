@@ -55,6 +55,13 @@ def test_decode_media_dispatches_png():
     assert decode_media(b"hi", "text/plain") == "hi"
     with pytest.raises(NotImplementedError):
         decode_media(b"\x00", "video/mp4")
+    # video/avi dispatches to the real demuxer too
+    from graphragdatapipeline_spark.multimodal.blob import encode_avi
+
+    frames = [arr, arr[::-1]]
+    fps, got = decode_media(encode_avi(frames, fps=5), "video/avi")
+    assert fps == 5 and len(got) == 2
+    assert all((a == b).all() for a, b in zip(frames, got))
 
 
 def test_image_stats_kernel_over_generated_blobs(spark, sf_dir):
@@ -241,14 +248,12 @@ def test_blob_features_and_waveform_kernels(spark):
         waveform_stats,
     )
 
-    docs = spark.createDataFrame(
-        [(1, "abc"), (2, "Hello, world!"), (3, "x")],
-        "doc_id LONG, text STRING",
-    )
+    # doc 4 is non-ASCII (bytes ≠ characters); doc 5 is an empty payload
+    texts = {1: "abc", 2: "Hello, world!", 3: "x", 4: "héllo ✓ 日本", 5: ""}
+    docs = spark.createDataFrame(list(texts.items()), "doc_id LONG, text STRING")
     blobs = blob_table_from_documents(docs)
 
     feats = {r.blob_id: r for r in blob_features(blobs, feature_dim=4).collect()}
-    texts = {1: "abc", 2: "Hello, world!", 3: "x"}
     for i, t in texts.items():
         r = feats[f"doc-{i}"]
         assert r.n_bytes == len(t.encode())
@@ -256,7 +261,12 @@ def test_blob_features_and_waveform_kernels(spark):
         assert len(r.features) == 4
 
     wave = {r.blob_id: r for r in waveform_stats(blobs).collect()}
+    empty = wave.pop("doc-5")
+    # an empty payload has no amplitude: NULL, not NaN
+    assert (empty.n_samples, empty.mean_amp, empty.rms_amp) == (0, None, None)
     for i, t in texts.items():
+        if not t:
+            continue
         bs = t.encode()
         r = wave[f"doc-{i}"]
         assert r.n_samples == len(bs)
