@@ -40,84 +40,19 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _ROOT)
+sys.path.insert(0, os.path.join(_ROOT, "scripts"))
+
+from make_scale_fixture import replicate  # noqa: E402
 
 from graphragdatapipeline_spark.registry import REGISTRY  # noqa: E402
 from graphragdatapipeline_spark.session import get_session  # noqa: E402
 
-# table -> key columns shifted per replica (scripts/make_scale_fixture
-# uniform methodology; keep in sync). Empty list = dimension table,
-# copied once, never replicated.
-_SHIFT_COLS: dict[str, list[str]] = {
-    "customer": ["c_custkey"],
-    "orders": ["o_orderkey", "o_custkey"],
-    "lineitem": ["l_orderkey", "l_partkey", "l_suppkey"],
-    "supplier": ["s_suppkey"],
-    "part": ["p_partkey"],
-    "events": ["event_id", "user_id"],
-    "documents": ["doc_id"],
-    "embeddings": ["vec_id"],
-    "nation": [],
-    "region": [],
-}
-# shared key domains shift by the SAME base everywhere or joins break
-_KEY_DOMAIN = {
-    "c_custkey": "custkey",
-    "o_custkey": "custkey",
-    "o_orderkey": "orderkey",
-    "l_orderkey": "orderkey",
-    "l_partkey": "partkey",
-    "p_partkey": "partkey",
-    "l_suppkey": "suppkey",
-    "s_suppkey": "suppkey",
-}
 # replicated tables are written as this many files (= splittable row
 # groups): real tables have far more row groups than executor slots,
 # the single-row-group fixtures had exactly one
 _BENCH_FILES = 32
-
-
-def _build_bench_input(spark, sf_dir: str, factor: int) -> str:
-    """FACTOR× disjoint key-shifted replication of the fixture tables,
-    multi-row-group layout, under a fresh temp dir (untimed setup; see
-    module docstring). Deterministic: shift bases are per-domain max+1,
-    replication is a plan-level union, and the round-robin repartition
-    is retry-stable (sortBeforeRepartition). Deleted on exit."""
-    from pyspark.sql import functions as F
-
-    from graphragdatapipeline_spark.io import read_table
-
-    dst = tempfile.mkdtemp(prefix="graft_bench_input_")
-    bases: dict[str, int] = {}
-    for table, cols in _SHIFT_COLS.items():
-        if not cols:
-            continue
-        maxes = read_table(spark, sf_dir, table).agg(
-            *[F.max(c).alias(c) for c in cols]
-        ).first()
-        for c in cols:
-            domain = _KEY_DOMAIN.get(c, c)
-            bases[domain] = max(bases.get(domain, 0), int(maxes[c]) + 1)
-    for table, cols in _SHIFT_COLS.items():
-        df = read_table(spark, sf_dir, table)
-        out = os.path.join(dst, table)
-        if not cols:
-            df.write.mode("overwrite").parquet(out)
-            continue
-        parts = []
-        for i in range(factor):
-            rep = df
-            for c in cols:
-                base = bases[_KEY_DOMAIN.get(c, c)]
-                rep = rep.withColumn(
-                    c, (F.col(c) + i * base).cast(df.schema[c].dataType)
-                )
-            parts.append(rep)
-        whole = parts[0]
-        for p in parts[1:]:
-            whole = whole.unionByName(p)
-        whole.repartition(_BENCH_FILES).write.mode("overwrite").parquet(out)
-    return dst
 
 
 def main() -> None:
@@ -138,7 +73,8 @@ def main() -> None:
 
     # Untimed: replicated multi-row-group input (measurement fix, see
     # module docstring). Recomputed from the parquet inputs every run.
-    bench_dir = _build_bench_input(spark, sf_dir, factor)
+    bench_dir = tempfile.mkdtemp(prefix="graft_bench_input_")
+    replicate(spark, sf_dir, bench_dir, factor, files=_BENCH_FILES)
 
     headline = {n: q for n, q in REGISTRY.items() if q.headline}
 

@@ -7,16 +7,103 @@ all", per-asset runs — README.md:735). The Spark engine's equivalent:
     python -m graphragdatapipeline_spark list
     python -m graphragdatapipeline_spark checks [--sf-dir DIR]
     python -m graphragdatapipeline_spark bench
+    python -m graphragdatapipeline_spark profile <name>... | --all [--sf-dir DIR] [--repeat 3]
 
 `query` runs any registered query and shows rows; `checks` runs the
 data-quality gates (reference defs/checks.py) and exits non-zero on
-failure — the CI shape of Dagster's asset checks.
+failure — the CI shape of Dagster's asset checks. `profile` times
+queries and prints one JSON record per query with the Spark work of
+its last timed pass, read from Spark's status store.
 """
 
 from __future__ import annotations
 
 import argparse
+import json
+import os
 import sys
+import time
+import traceback
+
+
+def _spark_work(sc, since: tuple[int, int]) -> tuple[dict, tuple[int, int]]:
+    """The jobs, stages and stage totals (ms, bytes) that Spark's status
+    store holds with ids above ``since`` (job id, stage id), read once
+    the listener bus is drained, and the newest ids. Ids are monotonic,
+    so the jobs the engine submits from its own thread pools count too."""
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store, gw = jsc.statusStore(), sc._gateway
+    jobs = store.jobsList(None)  # newest first, like stageList
+    stages = store.stageList(None, False, False, gw.new_array(gw.jvm.double, 0), None)
+    work = dict.fromkeys(
+        "jobs stages tasks executor_ms gc_ms shuffle_read_bytes "
+        "shuffle_write_bytes spill_bytes".split(), 0
+    )
+    while work["jobs"] < jobs.size() and jobs.apply(work["jobs"]).jobId() > since[0]:
+        work["jobs"] += 1
+    for st in (stages.apply(i) for i in range(stages.size())):
+        if st.stageId() <= since[1]:
+            break
+        work["stages"] += 1
+        work["tasks"] += st.numCompleteTasks()
+        work["executor_ms"] += st.executorRunTime()
+        work["gc_ms"] += st.jvmGcTime()
+        work["shuffle_read_bytes"] += st.shuffleReadBytes()
+        work["shuffle_write_bytes"] += st.shuffleWriteBytes()
+        work["spill_bytes"] += st.memoryBytesSpilled() + st.diskBytesSpilled()
+    newest = (
+        jobs.apply(0).jobId() if work["jobs"] else since[0],
+        stages.apply(0).stageId() if work["stages"] else since[1],
+    )
+    return work, newest
+
+
+def _profile(names: list[str], sf_dir: str, repeat: int) -> int:
+    """One untimed noop-sink pass and ``repeat`` timed ones per query;
+    prints the best wall, the Spark work of the last timed pass and the
+    persistent RDDs it left behind. A query that raises prints its
+    error and the run goes on (exit 1)."""
+    from graphragdatapipeline_spark.io import read_table
+    from graphragdatapipeline_spark.registry import REGISTRY
+    from graphragdatapipeline_spark.session import get_session
+
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    spark = get_session(
+        "graphragdatapipeline-profile",
+        master=f"local[{cpus}]",
+        shuffle_partitions=int(cpus),
+        # keep every job and stage of a pass in the status store (one
+        # graph_louvain_ladder call submits ~540 jobs)
+        extra_conf={
+            "spark.ui.retainedJobs": "1000000",
+            "spark.ui.retainedStages": "1000000",
+        },
+    )
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
+    read_table(spark, sf_dir, "documents").count()  # warm-up
+    _, ids = _spark_work(sc, (-1, -1))
+    failed = False
+    for name in names:
+        try:
+            walls = []
+            for _ in range(1 + repeat):  # the first pass is untimed
+                rdds = sc._jsc.getPersistentRDDs().size()
+                t0 = time.perf_counter()
+                df = REGISTRY[name].fn(spark, sf_dir)
+                df.write.format("noop").mode("overwrite").save()
+                walls.append(time.perf_counter() - t0)
+                work, ids = _spark_work(sc, ids)
+                left = sc._jsc.getPersistentRDDs().size() - rdds
+            rec = {"query": name, "sf_dir": sf_dir, "wall_s": round(min(walls[1:]), 3)}
+            rec.update(work, persisted_rdds_left=left)
+        except Exception as exc:  # noqa: BLE001 — the run must finish
+            traceback.print_exc()
+            failed = True
+            rec = {"query": name, "error": str(exc)}
+        print(json.dumps(rec), flush=True)
+    return 1 if failed else 0
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -34,6 +121,14 @@ def main(argv: list[str] | None = None) -> int:
     c.add_argument("--sf-dir", default="/root/testdata/sf0.01")
 
     sub.add_parser("bench", help="run the benchmark (one JSON line)")
+
+    pr = sub.add_parser(
+        "profile", help="time queries and count their Spark work (JSON lines)"
+    )
+    pr.add_argument("names", nargs="*", metavar="name")
+    pr.add_argument("--all", action="store_true", help="every registered query")
+    pr.add_argument("--sf-dir", default=q.get_default("sf_dir"))
+    pr.add_argument("--repeat", type=int, default=3, help="timed passes; best kept")
 
     comp = sub.add_parser(
         "compact", help="compact small parquet files (optional clustering)"
@@ -103,6 +198,16 @@ def main(argv: list[str] | None = None) -> int:
             star = " *" if qd.headline else ""
             print(f"{name}  [{kind}]{star}")
         return 0
+
+    if args.cmd == "profile":
+        if bool(args.names) == args.all or args.repeat < 1:
+            pr.error("give query names or --all, and --repeat >= 1")
+        names = sorted(REGISTRY) if args.all else args.names
+        unknown = [n for n in names if n not in REGISTRY]
+        if unknown:
+            print(f"unknown query: {' '.join(unknown)}", file=sys.stderr)
+            return 2
+        return _profile(names, args.sf_dir, args.repeat)
 
     from graphragdatapipeline_spark.session import get_session
 

@@ -31,8 +31,9 @@ _DEFAULTS = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Bound the rows per Arrow batch reaching Python kernels (blob
-    # payloads can be MBs each); kernels additionally re-chunk to their
-    # own batch_size internally instead of mutating session conf.
+    # payloads can be MBs each); the multimodal row kernels slice each
+    # batch further (multimodal.blob._map_rows' ``rows``) instead of
+    # mutating session conf.
     "spark.sql.execution.arrow.maxRecordsPerBatch": "1024",
     # 96 MiB input splits: big enough to amortize task overhead locally,
     # small enough that a 100 TB table still yields ~1M tasks, not 10M.

@@ -1075,7 +1075,10 @@ def vector_index_probe(
     exist is a caller error (a wrong path or a probe racing ahead of
     its bootstrap) that silently returning an empty top-k would bury."""
     from graphragdatapipeline_spark.session import ensure_parallelism
-    from graphragdatapipeline_spark.vector.similarity import cosine_topk
+    from graphragdatapipeline_spark.vector.similarity import (
+        _ranked_cells,
+        cosine_topk,
+    )
 
     cells = _ranked_cells(centroids, query_vec, nprobe)
     cand = _probe_candidates(spark, index_dir, cells, id_col)
@@ -1088,22 +1091,6 @@ def vector_index_probe(
     return cosine_topk(
         ensure_parallelism(cand), query_vec, k, id_col, vec_col, score_path
     )
-
-
-def _ranked_cells(
-    centroids: list[list[float]], query_vec: list[float], nprobe: int
-) -> list[int]:
-    """The query's nprobe nearest cells, ranked driver-side over the
-    k-row centroid metadata (same squared distance as the ingest
-    assignment, ties to the lowest cell id)."""
-    ranked = sorted(
-        range(len(centroids)),
-        key=lambda i: (
-            sum((a - b) * (a - b) for a, b in zip(query_vec, centroids[i])),
-            i,
-        ),
-    )
-    return ranked[: max(1, nprobe)]
 
 
 def _probe_candidates(
@@ -1158,6 +1145,7 @@ def vector_index_probe_adc(
     than silently re-encoding per query."""
     from graphragdatapipeline_spark.session import ensure_parallelism
     from graphragdatapipeline_spark.vector.similarity import (
+        _ranked_cells,
         cosine_topk,
         ivfpq_adc_score_col,
     )

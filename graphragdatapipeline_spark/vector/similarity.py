@@ -19,8 +19,26 @@ production, but correctness gates need determinism (SURVEY §7.3).
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def _q6(x: float) -> float:
+    """Round to 6 dp the portable way (floor(x·10⁶ + 0.5) / 10⁶), as the
+    k-means centroid update and its DuckDB replay both do."""
+    return math.floor(x * 1_000_000 + 0.5) / 1_000_000
+
+
+def _sq_dist(a: list[float], b: list[float]) -> float:
+    """Driver-side squared L2 distance as a plain left fold, the op
+    order of the engine's fold expressions and of the DuckDB oracle
+    (builtin sum() compensates its rounding from Python 3.12 on)."""
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc += (x - y) * (x - y)
+    return acc
 
 
 def dot_product(a: Column, b: Column) -> Column:
@@ -607,6 +625,41 @@ def nearest_centroid_col(cents: list[list[float]], vec_col: Column) -> Column:
     return (F.array_position(darr, F.array_min(darr)) - 1).cast("int")
 
 
+def _argmin_l2(x, cmat, cnorm):
+    """Nearest row of ``cmat`` for each row of ``x`` in numpy: argmin
+    over ||x−c||² = ||x||² − 2·x·c + ||c||² (``cnorm`` = ||c||²; the
+    ||x||² term is constant per row and dropped). np.argmin takes the
+    first minimum, so ties go to the lowest id like the fold's
+    array_position."""
+    import numpy as np
+
+    return np.argmin(cnorm[None, :] - 2.0 * (x @ cmat.T), axis=1)
+
+
+def _nearest_centroid_rows(vecs, cmat, cnorm):
+    """The arrow paths' NULL-aware nearest-centroid kernel over a
+    pandas Series of vectors: (positions of the non-NULL rows, their
+    float64 matrix, each one's nearest centroid). NULL rows get no
+    cell, as the fold gives them a NULL one."""
+    import numpy as np
+
+    pos = np.flatnonzero(vecs.notna().to_numpy())
+    if not len(pos):
+        return pos, None, pos
+    x = np.vstack(vecs.iloc[pos].to_numpy()).astype(np.float64)
+    return pos, x, _argmin_l2(x, cmat, cnorm)
+
+
+def _ranked_cells(
+    cents: list[list[float]], query_vec: list[float], nprobe: int
+) -> list[int]:
+    """The query's ``nprobe`` nearest IVF cells, ranked driver-side over
+    the centroid metadata (same squared distance as the ingest
+    assignment, ties to the lowest cell id)."""
+    ranked = sorted(range(len(cents)), key=lambda i: (_sq_dist(query_vec, cents[i]), i))
+    return ranked[: max(1, nprobe)]
+
+
 def residual_col(
     cents: list[list[float]], vec_col: Column, cell_col: Column | None = None
 ) -> Column:
@@ -693,11 +746,6 @@ def pq_train(
     # with the row pick — so collecting the k lowest-id FULL rows once
     # and slicing driver-side yields bit-identical seeds while replacing
     # m init jobs (plus the raw path's dim-probing first()) with one.
-    import math as _math
-
-    def _q6(x: float) -> float:
-        return _math.floor(x * 1_000_000 + 0.5) / 1_000_000
-
     init_rows = (
         embeddings.orderBy(id_col)
         .limit(k)
@@ -799,12 +847,7 @@ def pq_adc_topk(
     score: Column | None = None
     for mi, book in enumerate(books):
         qsub = query_vec[mi * subdim : (mi + 1) * subdim]
-        table = []
-        for c in book:
-            acc = 0.0
-            for a, b in zip(qsub, c):
-                acc += (a - b) * (a - b)  # same left fold as the oracle
-            table.append(acc)
+        table = [_sq_dist(qsub, c) for c in book]
         code = (
             F.col(code_cols[mi])
             if code_cols is not None
@@ -881,14 +924,7 @@ def ivfpq_residual_topk(
     codes stored at write time — at scale the scan reads m+1 small
     ints per row and prunes to the probed cells' partitions, never
     touching vectors until the rerank)."""
-    ranked = sorted(
-        range(len(cents)),
-        key=lambda i: (
-            sum((a - b) * (a - b) for a, b in zip(query_vec, cents[i])),
-            i,
-        ),
-    )
-    cells = ranked[: max(1, nprobe)]
+    cells = _ranked_cells(cents, query_vec, nprobe)
     cell = (
         F.col(cell_col)
         if cell_col is not None
@@ -937,12 +973,7 @@ def ivfpq_adc_score_col(
         for c in cells:
             qres = [q - cc for q, cc in zip(query_vec, cents[c])]
             qsub = qres[mi * subdim : (mi + 1) * subdim]
-            table = []
-            for cent in book:
-                acc = 0.0
-                for a, b in zip(qsub, cent):
-                    acc += (a - b) * (a - b)
-                table.append(acc)
+            table = [_sq_dist(qsub, cent) for cent in book]
             arr = F.array(*[F.lit(float(x)) for x in table])
             table_by_cell = (
                 F.when(cell_col == c, arr)
@@ -997,30 +1028,19 @@ def ivfpq_encode_udf(
 
     @pandas_udf(ddl)
     def _enc(vecs):  # type: ignore[no-untyped-def]
-        import numpy as _np
         import pandas as _pd
 
         n = len(vecs)
         out = {f.split()[0]: [None] * n for f in fields}
-        mask = vecs.notna()
-        idxs = [i for i, m in enumerate(mask) if m]
-        if idxs:
-            x = _np.asarray(
-                [_np.asarray(vecs.iloc[i], dtype=_np.float64) for i in idxs]
-            )
-            # argmin over ||x−c||² = ||x||² − 2·x·c + ||c||²; ||x||²
-            # is constant per row and dropped (first-min ties to the
-            # lowest id, like the fold's array_position)
-            cells = _np.argmin(cnorm[None, :] - 2.0 * (x @ cmat.T), axis=1)
-            for pos, c in zip(idxs, cells):
-                out["cell"][pos] = int(c)
-            if bmats is not None:
-                r = x - cmat[cells]
-                for mi, (bm, bn) in enumerate(zip(bmats, bnorms)):
-                    rs = r[:, mi * subdim : (mi + 1) * subdim]
-                    codes = _np.argmin(bn[None, :] - 2.0 * (rs @ bm.T), axis=1)
-                    for pos, cd in zip(idxs, codes):
-                        out[f"pq_{mi}"][pos] = int(cd)
+        idxs, x, cells = _nearest_centroid_rows(vecs, cmat, cnorm)
+        for pos, c in zip(idxs, cells):
+            out["cell"][pos] = int(c)
+        if bmats is not None and len(idxs):
+            r = x - cmat[cells]
+            for mi, (bm, bn) in enumerate(zip(bmats, bnorms)):
+                rs = r[:, mi * subdim : (mi + 1) * subdim]
+                for pos, cd in zip(idxs, _argmin_l2(rs, bm, bn)):
+                    out[f"pq_{mi}"][pos] = int(cd)
         return _pd.DataFrame(out)
 
     return _enc
@@ -1137,12 +1157,7 @@ def kmeans_cells(
       oracle-checked registration, which all train k=4), ``"arrow"``
       above: the interpreted cost and the literal-array expression
       size both grow linearly in k."""
-    import math
-
     ed = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-
-    def q6(x: float) -> float:
-        return math.floor(x * 1_000_000 + 0.5) / 1_000_000
 
     if init_centroids is not None:
         # Caller-provided seeds (r14): pq_train's m subspace trainings
@@ -1161,7 +1176,7 @@ def kmeans_cells(
             )
             .collect()
         )
-        cents = [[q6(float(x)) for x in r["v"]] for r in init_rows]
+        cents = [[_q6(float(x)) for x in r["v"]] for r in init_rows]
     if not cents:
         raise ValueError("kmeans_cells: embeddings corpus is empty")
     # Corpus smaller than k: train with the clusters we can seed (the
@@ -1182,29 +1197,15 @@ def kmeans_cells(
 
             @pandas_udf("int")
             def _nearest(vecs):  # type: ignore[no-untyped-def]
-                import numpy as _np
                 import pandas as _pd
 
-                x = _np.asarray(
-                    [_np.asarray(v, dtype=_np.float64) for v in vecs]
-                )
-                if len(x) == 0:
-                    return _pd.Series([], dtype="int32")
-                # argmin over ||x-c||² = ||x||² - 2·x·c + ||c||²; the
-                # ||x||² term is constant per row and dropped
-                d = cnorm[None, :] - 2.0 * (x @ cmat.T)
-                return _pd.Series(_np.argmin(d, axis=1).astype("int32"))
+                out = _pd.Series([None] * len(vecs), dtype="Int32")
+                pos, _, cells = _nearest_centroid_rows(vecs, cmat, cnorm)
+                out.iloc[pos] = cells
+                return out
 
             return _nearest(F.col(vec_col))
-        dists = []
-        for c in cents_now:
-            ca = F.array(*[F.lit(float(x)) for x in c])
-            diff = F.zip_with(ed, ca, lambda a, b: (a - b) * (a - b))
-            dists.append(F.aggregate(diff, F.lit(0.0), lambda acc, x: acc + x))
-        darr = F.array(*dists)
-        # array_position returns the FIRST index of the min → ties
-        # break toward the lowest cell id, deterministically
-        return (F.array_position(darr, F.array_min(darr)) - 1).cast("int")
+        return nearest_centroid_col(cents_now, F.col(vec_col))
 
     for _ in range(iters):
         assigned = embeddings.select(
@@ -1233,7 +1234,7 @@ def kmeans_cells(
                 dims = by_cell[ci]
                 new_cents.append(
                     [
-                        q6(dims[d][0] / (dims[d][1] * 1_000_000))
+                        _q6(dims[d][0] / (dims[d][1] * 1_000_000))
                         for d in sorted(dims)
                     ]
                 )

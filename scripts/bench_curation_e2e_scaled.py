@@ -52,16 +52,8 @@ def build_docs(spark, src: str, dst: str, factor: int) -> None:
     """documents-only MUTATE-mode replication (the full fixture script
     replicates every table; the composed pipeline reads only docs)."""
     d = read_table(spark, src, "documents")
-    base = d.agg(F.max("doc_id")).first()[0] + 1
-    parts = []
-    for i in range(factor):
-        rep = d.withColumn(
-            "doc_id", (F.col("doc_id") + i * base).cast("long")
-        )
-        parts.append(msf._apply_mutation("documents", rep, i))
-    whole = parts[0]
-    for p in parts[1:]:
-        whole = whole.unionByName(p)
+    base = {"doc_id": d.agg(F.max("doc_id")).first()[0] + 1}
+    whole = msf.replicate_table("documents", d, factor, base, "mutate")
     whole.write.mode("overwrite").parquet(os.path.join(dst, "documents"))
 
 

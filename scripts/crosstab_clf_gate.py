@@ -44,18 +44,9 @@ from graphragdatapipeline_spark.session import (  # noqa: E402
 
 def build_docs(spark, src: str, dst: str, factor: int, mode: str) -> None:
     d = read_table(spark, src, "documents")
-    base = d.agg(F.max("doc_id")).first()[0] + 1
-    parts = []
-    for i in range(factor):
-        rep = d.withColumn("doc_id", (F.col("doc_id") + i * base).cast("long"))
-        if mode == "zipf":
-            rep = msf._apply_zipf_skew("documents", rep)
-        else:
-            rep = msf._apply_mutation("documents", rep, i)
-        parts.append(rep)
-    whole = parts[0]
-    for p in parts[1:]:
-        whole = whole.unionByName(p)
+    base = {"doc_id": d.agg(F.max("doc_id")).first()[0] + 1}
+    mode = mode if mode == "zipf" else "mutate"
+    whole = msf.replicate_table("documents", d, factor, base, mode)
     whole.write.mode("overwrite").parquet(os.path.join(dst, "documents"))
 
 

@@ -271,7 +271,20 @@ def main() -> None:
         "scale-fixture", master=f"local[{cpus}]", shuffle_partitions=int(cpus)
     )
     spark.sparkContext.setLogLevel("ERROR")
+    replicate(spark, src, dst, factor, mode)
+    for table, cols in SHIFT_COLS.items():
+        if cols:
+            print(f"{table}: {factor}x -> {os.path.join(dst, table)}")
+    spark.stop()
 
+
+def replicate(spark, src: str, dst: str, factor: int, mode: str = "uniform",
+              files: int | None = None) -> None:
+    """FACTOR× disjoint key-shifted replication of every SHIFT_COLS
+    table of SRC into DST/<table> (MODE uniform, zipf or mutate; see
+    the module docstring). ``files`` round-robin repartitions each
+    replicated table into that many files first (retry-stable,
+    sortBeforeRepartition), the multi-row-group layout bench.py times."""
     # one pass to learn every shared key-domain base
     bases: dict[str, int] = {}
     for table, cols in SHIFT_COLS.items():
@@ -289,23 +302,31 @@ def main() -> None:
         if not cols:
             df.write.mode("overwrite").parquet(out)
             continue
-        parts = []
-        for i in range(factor):
-            rep = df
-            for c in cols:
-                base = bases[KEY_DOMAIN.get(c, c)]
-                rep = rep.withColumn(c, (F.col(c) + i * base).cast(df.schema[c].dataType))
-            if mode == "zipf":
-                rep = _apply_zipf_skew(table, rep)
-            elif mode == "mutate":
-                rep = _apply_mutation(table, rep, i)
-            parts.append(rep)
-        whole = parts[0]
-        for p in parts[1:]:
-            whole = whole.unionByName(p)
+        whole = replicate_table(table, df, factor, bases, mode)
+        if files is not None:
+            whole = whole.repartition(files)
         whole.write.mode("overwrite").parquet(out)
-        print(f"{table}: {factor}x -> {out}")
-    spark.stop()
+
+
+def replicate_table(table: str, df, factor: int, bases: dict[str, int], mode: str):
+    """Union of FACTOR copies of one SHIFT_COLS table: copy i shifts
+    each key column by i × its domain's base (``bases``, keyed by
+    KEY_DOMAIN name or column), then gets MODE's transform."""
+    parts = []
+    for i in range(factor):
+        rep = df
+        for c in SHIFT_COLS[table]:
+            base = bases[KEY_DOMAIN.get(c, c)]
+            rep = rep.withColumn(c, (F.col(c) + i * base).cast(df.schema[c].dataType))
+        if mode == "zipf":
+            rep = _apply_zipf_skew(table, rep)
+        elif mode == "mutate":
+            rep = _apply_mutation(table, rep, i)
+        parts.append(rep)
+    whole = parts[0]
+    for p in parts[1:]:
+        whole = whole.unionByName(p)
+    return whole
 
 
 if __name__ == "__main__":

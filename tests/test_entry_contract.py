@@ -107,6 +107,46 @@ def test_cli_list_query_skew_compact(spark, sf_dir, tmp_path, capsys):
     assert len(spark.read.parquet(dst).inputFiles()) == 1
 
 
+def test_cli_profile_records_match_status_tracker(spark, sf_dir, capsys):
+    """`profile` prints one JSON record per query whose job count is
+    the status tracker's count for one more pass of the same query
+    (job ids are contiguous, so it is also their id delta); an unknown
+    name exits 2 like `query`."""
+    from graphragdatapipeline_spark.__main__ import main
+
+    names = ["pricing_summary", "graph_connected_components"]
+    sc = spark.sparkContext
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        argv = ["profile", *names, "--sf-dir", sf_dir, "--repeat", "1"]
+        assert main(argv) == 0
+        lines = capsys.readouterr().out.splitlines()
+        recs = [json.loads(line) for line in lines if line.startswith("{")]
+        assert [r["query"] for r in recs] == names
+        for r in recs:
+            assert set(r) == {
+                "query", "sf_dir", "wall_s", "jobs", "stages", "tasks",
+                "executor_ms", "gc_ms", "shuffle_read_bytes",
+                "shuffle_write_bytes", "spill_bytes", "persisted_rdds_left",
+            }
+            assert r["jobs"] > 0 and r["sf_dir"] == sf_dir
+            group = f"profile-test-{r['query']}"
+            sc.setJobGroup(group, group)
+            try:
+                REGISTRY[r["query"]].fn(spark, sf_dir).write.format(
+                    "noop"
+                ).mode("overwrite").save()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            ids = sorted(sc.statusTracker().getJobIdsForGroup(group))
+            assert r["jobs"] == len(ids) == ids[-1] - ids[0] + 1
+    finally:
+        # profile sizes shuffle partitions to its own cores; the test
+        # session is shared
+        spark.conf.set("spark.sql.shuffle.partitions", parts)
+    assert main(["profile", "no_such_query"]) == 2
+
+
 def test_registry_submodules_import_directly():
     """Regression for the r10 circular-import hazard: importing a
     registries submodule DIRECTLY (before the registry package) used

@@ -661,12 +661,8 @@ def test_jaccard_candidate_keyed_equals_filtered_full_join(spark, docs, pair_see
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
 
-def test_zipf_fixture_transforms_deterministic_and_shaped(spark):
-    """The zipf skew transforms behind the SCALE.md skew tables must be
-    (a) deterministic — same input, same output, no RNG — and (b)
-    shaped as documented: ~50% of events on 32 hot users with rank-1
-    the most frequent, ~20% of parts on Brand#HOT, ~5% of docs on
-    template texts with a per-doc unique token (near-dups, not exact)."""
+def _scale_fixture_script():
+    """scripts/make_scale_fixture.py, loaded as a module."""
     import importlib.util
     import os
 
@@ -676,6 +672,47 @@ def test_zipf_fixture_transforms_deterministic_and_shaped(spark):
     )
     msf = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(msf)
+    return msf
+
+
+def test_uniform_replicate_scales_facts_not_dims(spark, sf_dir, tmp_path):
+    """Uniform replication (the bench.py input): fact tables hold
+    FACTOR× rows in ``files`` files, dims are copied once, and the
+    key shift keeps joins inside a replica, so orders ⋈ customer has
+    exactly FACTOR× the rows."""
+    import os
+
+    msf = _scale_fixture_script()
+    dst = str(tmp_path / "x2")
+    msf.replicate(spark, sf_dir, dst, 2, files=4)
+
+    from graphragdatapipeline_spark.io import read_table
+
+    for table, cols in msf.SHIFT_COLS.items():
+        got = spark.read.parquet(os.path.join(dst, table)).count()
+        assert got == (2 if cols else 1) * read_table(spark, sf_dir, table).count()
+        if cols:
+            files = os.listdir(os.path.join(dst, table))
+            assert sum(f.endswith(".parquet") for f in files) == 4, table
+
+    def joined(orders, customer):
+        return orders.join(customer, orders.o_custkey == customer.c_custkey).count()
+
+    src = joined(read_table(spark, sf_dir, "orders"), read_table(spark, sf_dir, "customer"))
+    rep = joined(
+        spark.read.parquet(os.path.join(dst, "orders")),
+        spark.read.parquet(os.path.join(dst, "customer")),
+    )
+    assert src > 0 and rep == 2 * src
+
+
+def test_zipf_fixture_transforms_deterministic_and_shaped(spark):
+    """The zipf skew transforms behind the SCALE.md skew tables must be
+    (a) deterministic — same input, same output, no RNG — and (b)
+    shaped as documented: ~50% of events on 32 hot users with rank-1
+    the most frequent, ~20% of parts on Brand#HOT, ~5% of docs on
+    template texts with a per-doc unique token (near-dups, not exact)."""
+    msf = _scale_fixture_script()
 
     from pyspark.sql import functions as F
 

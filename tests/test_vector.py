@@ -130,21 +130,32 @@ def test_kmeans_cells_deterministic_and_separates(spark):
 
 def test_kmeans_arrow_assignment_matches_fold(spark, sf_dir):
     """The Arrow-vectorized nearest-centroid path (the 100 TB shape,
-    auto-selected for k > 16) must produce the same training run as
+    auto-selected for k > 8) must produce the same training run as
     the oracle-exact fold expression on real fixture embeddings —
     same assignments AND same final centroids. Continuous embeddings
     have no equidistant boundary ties, so ulp-level distance
-    differences cannot flip an argmin here."""
+    differences cannot flip an argmin here. A NULL embedding gets a
+    NULL cell on both paths."""
+    from pyspark.sql import functions as F
+
     from graphragdatapipeline_spark.io import read_table
     from graphragdatapipeline_spark.vector import similarity as vs
 
     e = read_table(spark, sf_dir, "embeddings")
+    null_id = e.agg(F.max("vec_id")).first()[0] + 1
+    e = e.unionByName(
+        e.limit(1).select(
+            F.lit(null_id).alias("vec_id"),
+            F.lit(None).cast(e.schema["embedding"].dataType).alias("embedding"),
+            "label",
+        )
+    )
     a_fold, c_fold = vs.kmeans_cells(e, k=8, iters=3, assign_path="fold")
     a_arrow, c_arrow = vs.kmeans_cells(e, k=8, iters=3, assign_path="arrow")
     assert c_fold == c_arrow
-    assert sorted(map(tuple, a_fold.collect())) == sorted(
-        map(tuple, a_arrow.collect())
-    )
+    fold_rows = sorted(map(tuple, a_fold.collect()))
+    assert fold_rows == sorted(map(tuple, a_arrow.collect()))
+    assert (null_id, None) in fold_rows
 
 
 def test_lsh_probe_topk_gapped_hyperplane_ids(spark):
