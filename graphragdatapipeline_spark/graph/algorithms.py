@@ -21,34 +21,13 @@ from collections.abc import Callable, Iterable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from graphragdatapipeline_spark.session import _free_checkpoint
+
 # Fixed-count loops materialize every _MATERIALIZE_EVERY rounds: the
 # bound on live superseded round tables (each |V|-sized), and long
 # enough that the ladders' 2-5-round LPA and Louvain levels still run
 # their whole chain in one materializing job.
 _MATERIALIZE_EVERY = 5
-
-
-def _free_checkpoint(df: DataFrame, reads: bool = False) -> None:
-    """Release a localCheckpoint's storage blocks NOW — ``df``'s own,
-    or with ``reads`` those of every checkpoint its plan reads (for a
-    frame derived from a loop's final state).
-
-    ``DataFrame.unpersist()`` is a no-op for checkpoints (their blocks
-    belong to an internal RDD the CacheManager doesn't track), and
-    ContextCleaner GC is too lazy for tight iterative loops at scale —
-    measured executor OOM on a 2×10⁸-row ER pair graph from superseded
-    per-round label tables that were awaiting collection. Reaches each
-    LogicalRDD's backing RDD id and unpersists it directly;
-    best-effort (a non-checkpoint plan is left untouched)."""
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        leaves = plan.collectLeaves()
-        plans = [leaves.apply(i) for i in range(leaves.size())] if reads else [plan]
-        for p in plans:
-            if p.getClass().getSimpleName() == "LogicalRDD":
-                df.sparkSession.sparkContext._jsc.sc().unpersistRDD(p.rdd().id(), False)
-    except Exception:  # pragma: no cover — py4j internals shifted
-        pass
 
 
 def _iterate(

@@ -76,39 +76,6 @@ def shingle_table(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> Data
     )
 
 
-def minhash_signatures(
-    shingles: DataFrame, id_col: str, num_hashes: int = 16
-) -> DataFrame:
-    """MinHash signature per doc from an exploded (id, shingle) table.
-    Kept for inverted-index callers that already pay the explode; the
-    zero-shuffle path is minhash_signatures_rowwise below.
-
-    Hash family: each salted md5 yields FOUR signature components —
-    its non-overlapping 8-hex-char windows (32 bits each) — so
-    num_hashes=16 costs 4 md5 calls per shingle, not 16 (md5 dominates
-    the scan cost at scale; the windows of a strong hash are
-    independent). Components stay fixed-width hex strings:
-    lexicographic min == numeric min, no conversion.
-
-    The md5s are projected BEFORE the groupBy so each is computed once
-    per shingle row (separate aggregate expressions would defeat
-    common-subexpression elimination); map-side partial agg keeps the
-    shuffle at docs × num_hashes rows."""
-    n_salts = (num_hashes + 3) // 4
-    with_md5 = shingles.select(
-        F.col(id_col),
-        *[
-            F.md5(F.concat(F.lit(f"{g}|"), F.col("shingle"))).alias(f"m{g}")
-            for g in range(n_salts)
-        ],
-    )
-    aggs = [
-        F.min(F.substring(F.col(f"m{i // 4}"), 1 + 8 * (i % 4), 8)).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    return with_md5.groupBy(id_col).agg(*aggs)
-
-
 def minhash_signatures_rowwise(
     df: DataFrame, id_col: str, text_col: str, k: int = 3, num_hashes: int = 16
 ) -> DataFrame:
@@ -118,8 +85,11 @@ def minhash_signatures_rowwise(
     map-side. At 100 TB this is the difference between an
     embarrassingly-parallel scan and shuffling (docs × shingles) rows.
 
-    Same hash family as minhash_signatures (salted md5, 8-hex windows),
-    so both paths and the DuckDB oracle agree bit-for-bit. The md5
+    Hash family: each salted md5 yields FOUR signature components —
+    its non-overlapping 8-hex-char windows (32 bits each) — so
+    num_hashes=16 costs 4 md5 calls per shingle, not 16. Components
+    stay fixed-width hex strings (lexicographic min == numeric min),
+    and the DuckDB oracle agrees bit-for-bit. The md5
     arrays are materialized as real columns first: a lambda that
     references an unmaterialized expression re-evaluates it per
     element (see word_shingles)."""
@@ -259,7 +229,6 @@ def minhash_dedup_pairs(
     k: int = 3,
     num_hashes: int = 16,
     bands: int = 4,
-    reuse_bands: bool = True,
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Full MinHash-LSH pipeline: shingle → sign → band → bucket-join.
@@ -277,9 +246,7 @@ def minhash_dedup_pairs(
     sig = minhash_signatures_rowwise(
         ensure_parallelism(df), id_col, text_col, k, num_hashes
     )
-    b = lsh_bands(sig, id_col, num_hashes, bands)
-    if reuse_bands:
-        b = b.localCheckpoint(eager=False)
+    b = lsh_bands(sig, id_col, num_hashes, bands).localCheckpoint(eager=False)
     return lsh_candidate_pairs(b, id_col, max_bucket=max_bucket)
 
 
@@ -288,7 +255,6 @@ def jaccard_pairs(
     id_col: str,
     threshold: float,
     candidates: DataFrame | None = None,
-    reuse_shingles: bool = True,
     max_posting: int | None = None,
 ) -> DataFrame:
     """n-gram Jaccard similarity pairs ≥ threshold.
@@ -323,8 +289,7 @@ def jaccard_pairs(
     standard stop-word cut — capped Jaccard lower-bounds exact, equal
     whenever no shared shingle exceeds the cap). The uncapped exact
     flow stays available (max_posting=None) as the pytest baseline."""
-    if reuse_shingles:
-        shingles = shingles.localCheckpoint(eager=False)
+    shingles = shingles.localCheckpoint(eager=False)
     sizes = shingles.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
     if max_posting is None:
         joined = shingles
@@ -520,7 +485,6 @@ def simhash_near_dups(
     max_hamming: int = 2,
     bits: int = 16,
     max_bucket: int | None = None,
-    reuse_fps: bool = True,
 ) -> DataFrame:
     """Near-dup pairs by Hamming distance over SimHash fingerprints.
     Bucketing: split the fingerprint into (max_hamming+1) segments —
@@ -533,8 +497,7 @@ def simhash_near_dups(
     projections × 2 join sides — recomputing the bit-vote aggregation
     per branch. The lazy checkpoint computes it once (measured sf0.1:
     2.46 s → 1.64 s)."""
-    if reuse_fps:
-        fps = fps.localCheckpoint(eager=False)
+    fps = fps.localCheckpoint(eager=False)
     segs = max_hamming + 1
     seg_bits = bits // segs
     parts = []

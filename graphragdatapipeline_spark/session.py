@@ -163,3 +163,27 @@ def ensure_parallelism(df):
     if df.rdd.getNumPartitions() < max(2, slots // 2):
         return df.repartition(slots)
     return df
+
+
+def _free_checkpoint(df, reads: bool = False) -> None:
+    """Release a localCheckpoint's storage blocks NOW — ``df``'s own,
+    or with ``reads`` those of every checkpoint its plan reads (a frame
+    derived from a graph loop's final state, or a sink batch's output).
+
+    ``DataFrame.unpersist()`` is a no-op for checkpoints (their blocks
+    belong to an internal RDD the CacheManager doesn't track), and
+    ContextCleaner GC is too lazy for tight iterative loops at scale —
+    measured executor OOM on a 2×10⁸-row ER pair graph from superseded
+    per-round label tables that were awaiting collection — and leaves
+    a long-lived streaming session holding per-batch blocks. Reaches each
+    LogicalRDD's backing RDD id and unpersists it directly;
+    best-effort (a non-checkpoint plan is left untouched)."""
+    try:
+        plan = df._jdf.queryExecution().analyzed()
+        leaves = plan.collectLeaves()
+        plans = [leaves.apply(i) for i in range(leaves.size())] if reads else [plan]
+        for p in plans:
+            if p.getClass().getSimpleName() == "LogicalRDD":
+                df.sparkSession.sparkContext._jsc.sc().unpersistRDD(p.rdd().id(), False)
+    except Exception:  # pragma: no cover — py4j internals shifted
+        pass

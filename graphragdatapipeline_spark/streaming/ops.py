@@ -12,14 +12,58 @@ runs in batch mode (driver correctness checks, backfills) and in
 streaming mode (readStream input) — the Structured Streaming
 unification. Window keys are emitted as epoch seconds: timezone-proof
 across engines and serialization boundaries.
+
+Index sinks. The five foreachBatch index sinks (exact dedup, near-dup,
+vector, co-occurrence, substring) share one exactly-once protocol
+without a transactional table format. Each index is declared once
+(``_Index``: its tables, their merge rules, its commit dir, whether it
+owns its markers); one commit path (``_index_sink``), one compaction
+path (``_compact``) and one read (``_read``) serve all five.
+
+- Layout: a micro-batch lands each table at ``<table>/epoch=N`` and a
+  marker at ``<commits>/N``. Compaction writes
+  ``<table>/_compacted/upto=M`` and its marker ``<table>/_compactions/M``.
+- Commit point: the batch overwrites each table's ``epoch=N``
+  (foreachBatch retries reuse the epoch id, so the rewrite is
+  idempotent), then lands the marker. Readers see only marked epochs:
+  the compacted generation at the watermark plus the epochs after it.
+  A batch that reads its own index reads committed epochs only, so a
+  retry of a half-committed epoch recomputes the same rows and
+  converges — no drops, no duplicates. Once the marker lands, the
+  localCheckpoints the batch's frames read are released.
+- Merge rules: additive (groupBy keys, sum — shingle df, co-occurrence
+  counts), identity (set-valued: bands, fingerprints, guard ids), or a
+  fold (the vector index's latest-wins). Compaction and the additive
+  reads apply the same declared rule.
+- Compaction: one marker listing pins the epoch set and every
+  compactable table folds exactly that set to one shared watermark.
+  The inline cadence (``auto_compact_every``) never gc's; an explicit
+  quiesced ``gc=True`` run (CLI ``compact-index --gc``) reclaims what the
+  generation supersedes.
+- Marker ownership: markers at or below the watermark are deleted only
+  after every table sharing them has compacted, and only if the index
+  owns them (vector, co-occurrence, substring). The dedup sinks commit
+  under the corpus's markers; the corpus is never compacted, so those
+  markers are never deleted.
+- Missing data: a marked epoch above the watermark without its data
+  dir is lost data and reads raise — except for the substring guard's
+  ``_ids`` sidecar, which can be enabled mid-life (``allow_missing``).
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from graphragdatapipeline_spark.registry import dsum
+from graphragdatapipeline_spark.session import _free_checkpoint
+
+# file-size target of a coalesced compacted generation, and AQE's
+# advisory partition size for a partitioned one
+_TARGET_FILE_BYTES = 128 * 1024 * 1024
 
 EVENTS_DDL = (
     "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, "
@@ -140,21 +184,17 @@ def dedup_keep_first(
     )
 
 
-def write_foreach_batch(
-    stream_df: DataFrame,
-    batch_fn,
-    checkpoint_dir: str,
-    trigger_available_now: bool = True,
-):
+def write_foreach_batch(stream_df: DataFrame, batch_fn, checkpoint_dir: str):
     """foreachBatch sink — the streaming mirror of the reference's
     batched upsert sinks (ingest_vector_db.py:181-204): each
-    micro-batch DataFrame is handed to `batch_fn(df, epoch_id)`."""
-    writer = stream_df.writeStream.foreachBatch(batch_fn).option(
-        "checkpointLocation", checkpoint_dir
+    micro-batch DataFrame is handed to `batch_fn(df, epoch_id)` and
+    the query drains what is available now, then stops."""
+    return (
+        stream_df.writeStream.foreachBatch(batch_fn)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def _hadoop_fs(spark, d: str):
@@ -166,22 +206,23 @@ def _hadoop_fs(spark, d: str):
     return path.getFileSystem(spark._jsc.hadoopConfiguration()), jvm, path
 
 
+def _delete(spark, p: str) -> None:
+    fs, _, path = _hadoop_fs(spark, p)
+    fs.delete(path, True)
+
+
 def committed_epochs(spark, commits_dir: str) -> list[int]:
     """Epoch ids with a commit marker, ascending."""
     fs, _, path = _hadoop_fs(spark, commits_dir)
     if not fs.exists(path):
         return []
-    out = []
-    for st in fs.listStatus(path):
-        name = st.getPath().getName()
-        if name.isdigit():
-            out.append(int(name))
-    return sorted(out)
+    names = [st.getPath().getName() for st in fs.listStatus(path)]
+    return sorted(int(n) for n in names if n.isdigit())
 
 
 def _mark_committed(spark, commits_dir: str, epoch: int) -> None:
-    fs, jvm, _ = _hadoop_fs(spark, commits_dir)
-    fs.create(jvm.org.apache.hadoop.fs.Path(f"{commits_dir}/{epoch}"), True).close()
+    fs, _, path = _hadoop_fs(spark, f"{commits_dir}/{epoch}")
+    fs.create(path, True).close()
 
 
 def compacted_upto(spark, data_dir: str) -> int | None:
@@ -189,45 +230,38 @@ def compacted_upto(spark, data_dir: str) -> int | None:
     never compacted): the max marker in `<data_dir>/_compactions`,
     meaning epochs ≤ that id are superseded by
     `<data_dir>/_compacted/upto=<id>`."""
-    fs, _, path = _hadoop_fs(spark, f"{data_dir}/_compactions")
-    if not fs.exists(path):
-        return None
-    ms = [
-        int(st.getPath().getName())
-        for st in fs.listStatus(path)
-        if st.getPath().getName().isdigit()
-    ]
-    return max(ms) if ms else None
+    return max(committed_epochs(spark, f"{data_dir}/_compactions"), default=None)
 
 
 def _committed_parts(
-    spark, data_dir: str, commits_dir: str, allow_missing: bool = False
-) -> tuple[DataFrame | None, DataFrame | None, int | None]:
-    """The two physical halves of a sink's consistent view, separately:
+    spark,
+    data_dir: str,
+    commits_dir: str,
+    allow_missing: bool = False,
+    epochs: list[int] | None = None,
+) -> tuple[DataFrame | None, DataFrame | None]:
+    """The two physical halves of a table's consistent view, separately:
     (compacted generation or None, committed post-watermark tail or
-    None, watermark or None). Factored out of read_committed_epochs in
-    r13 because the vector probe's tail-bounded winner resolution
-    needs the halves individually (the compacted generation has unique
-    ids by construction; the tail does not), and because a compacted
-    generation written with partitionBy() carries hive partition
-    columns the raw epoch dirs store as data columns — one combined
-    spark.read.parquet over both layouts would mis-discover the
-    partition schema, so each half gets its own scan.
+    None), the tail over ``epochs`` if given, else over a fresh marker
+    listing. The vector probe's tail-bounded winner resolution needs
+    the halves individually (the compacted generation has unique ids by
+    construction; the tail does not), and a generation written with
+    partitionBy() carries hive partition columns the raw epoch dirs
+    store as data columns — one combined spark.read.parquet over both
+    layouts would mis-discover the partition schema, so each half gets
+    its own scan.
 
     A committed epoch ABOVE the watermark whose directory is absent is
-    LOST DATA for a primary index (GC only ever deletes epochs ≤ the
-    watermark, which the watermark check already excludes) — so the
-    default is to raise rather than return a silently smaller view
-    (r11 advice: the old skip-silently behavior replaced a loud read
-    failure with quiet data loss). ``allow_missing=True`` opts back
-    into skipping, ONLY for sidecar directories that legitimately
-    start mid-life (the substring sink's `_ids` redelivery-guard dir
-    shares the primary's commit markers, so epochs committed before
-    the guard was enabled have markers but no `_ids` data)."""
+    LOST DATA for a primary table (gc only ever deletes epochs ≤ the
+    watermark), so the default is to raise rather than return a
+    silently smaller view. ``allow_missing=True`` skips it, ONLY for a
+    sidecar that legitimately starts mid-life (module docstring)."""
     upto = compacted_upto(spark, data_dir)
+    if epochs is None:
+        epochs = committed_epochs(spark, commits_dir)
     fs, jvm, _ = _hadoop_fs(spark, data_dir)
     dirs = []
-    for e in committed_epochs(spark, commits_dir):
+    for e in sorted(epochs):
         if upto is not None and e <= upto:
             continue
         p = f"{data_dir}/epoch={e}"
@@ -241,7 +275,7 @@ def _committed_parts(
             )
     comp = _read_generation(spark, fs, jvm, data_dir, upto)
     tail = spark.read.parquet(*dirs) if dirs else None
-    return comp, tail, upto
+    return comp, tail
 
 
 def _read_generation(spark, fs, jvm, data_dir: str, upto: int | None):
@@ -263,19 +297,16 @@ def _read_generation(spark, fs, jvm, data_dir: str, upto: int | None):
 def read_committed_epochs(
     spark, data_dir: str, commits_dir: str, allow_missing: bool = False
 ):
-    """Union of the data directory's COMMITTED epoch partitions (None
-    when no epoch has committed yet). Readers that go through this
-    helper never observe a half-written batch: an epoch directory
-    becomes visible only after its commit marker lands.
-
-    Compaction-aware: if a compaction watermark M exists (see
-    compact_index_epochs), the view is `_compacted/upto=M` plus only
-    the committed epochs AFTER M — so read cost is bounded by the
-    compaction cadence instead of growing with the sink's lifetime.
+    """Union of the table's COMMITTED epoch partitions (None when no
+    epoch has committed yet): the compacted generation at the
+    watermark, if any, plus only the committed epochs after it.
+    Readers never observe a half-written batch, and read cost is
+    bounded by the compaction cadence instead of the sink's lifetime.
     Missing-dir strictness is documented on _committed_parts."""
-    comp, tail, _ = _committed_parts(
-        spark, data_dir, commits_dir, allow_missing=allow_missing
-    )
+    return _union(*_committed_parts(spark, data_dir, commits_dir, allow_missing))
+
+
+def _union(comp: DataFrame | None, tail: DataFrame | None):
     if tail is None:
         return comp
     if comp is None:
@@ -285,6 +316,121 @@ def read_committed_epochs(
     return tail.unionByName(comp)
 
 
+@dataclass(frozen=True)
+class _Table:
+    """One epoch-partitioned table of an index and its merge rule:
+    additive (``keys`` + ``sums``: groupBy-sum), a ``fold`` (written
+    hive-partitioned by ``partition_by``), or identity (neither).
+    ``compact=False`` keeps a table out of compaction (the dedup
+    corpora); ``allow_missing`` marks a sidecar that may start
+    mid-life."""
+
+    path: str
+    keys: tuple[str, ...] = ()
+    sums: tuple[str, ...] = ()
+    fold: Callable[[DataFrame], DataFrame] | None = None
+    partition_by: tuple[str, ...] = ()
+    allow_missing: bool = False
+    compact: bool = True
+
+
+@dataclass(frozen=True)
+class _Index:
+    """The tables one sink commits together under the markers in
+    ``commits``. The first compactable table is the primary: its
+    watermark is the index's. Compaction may gc the markers only if
+    the index ``owns_markers``."""
+
+    commits: str
+    tables: dict[str, _Table]
+    owns_markers: bool = True
+
+
+def _index_sink(
+    stream_df: DataFrame,
+    index: _Index,
+    compute,
+    checkpoint_dir: str,
+    auto_compact_every: int | None = None,
+):
+    """The one commit path. ``compute(df, epoch_id)`` returns the
+    batch's {table name: frame}; each frame overwrites its table's
+    `epoch=N`, the marker lands, the checkpoints the frames read are
+    released, and the index is compacted inline (gc=False) once
+    ``auto_compact_every`` epochs sit above its watermark."""
+
+    def batch_fn(df: DataFrame, epoch_id: int) -> None:
+        spark = df.sparkSession
+        frames = compute(df, epoch_id)
+        for name, frame in frames.items():
+            frame.write.mode("overwrite").parquet(
+                f"{index.tables[name].path}/epoch={epoch_id}"
+            )
+        _mark_committed(spark, index.commits, epoch_id)
+        for frame in frames.values():
+            _free_checkpoint(frame, reads=True)
+        if _auto_compact_due(spark, index, auto_compact_every):
+            _compact(spark, index)
+
+    return write_foreach_batch(stream_df, batch_fn, checkpoint_dir)
+
+
+def _auto_compact_due(spark, index: _Index, every: int | None) -> bool:
+    """True when ``every`` committed epochs sit above the primary's
+    watermark."""
+    if not every:
+        return False
+    first = next(t for t in index.tables.values() if t.compact)
+    upto = compacted_upto(spark, first.path)
+    tail = [
+        e for e in committed_epochs(spark, index.commits) if upto is None or e > upto
+    ]
+    return len(tail) >= every
+
+
+def _compact(spark, index: _Index, gc: bool = False) -> int | None:
+    """The one compaction path: ONE marker listing pins the epoch set,
+    every compactable table folds exactly that set to one shared
+    watermark, and only then — if ``gc`` and the index owns its
+    markers — the markers ≤ the watermark are deleted. Returns the
+    primary's watermark."""
+    pinned = committed_epochs(spark, index.commits)
+    uptos = [
+        compact_index_epochs(
+            spark,
+            t.path,
+            index.commits,
+            t.keys,
+            t.sums,
+            gc=gc,
+            epochs=pinned,
+            allow_missing=t.allow_missing,
+            fold=t.fold,
+            partition_by=t.partition_by,
+        )
+        for t in index.tables.values()
+        if t.compact
+    ]
+    if gc and index.owns_markers and uptos[0] is not None:
+        for e in pinned:
+            if e <= uptos[0]:
+                _delete(spark, f"{index.commits}/{e}")
+    return uptos[0]
+
+
+def _read(spark, index: _Index, name: str):
+    """The committed view of one table under its merge rule (additive
+    tables summed per key; identity tables as stored); None before the
+    first commit."""
+    t = index.tables[name]
+    df = read_committed_epochs(spark, t.path, index.commits, t.allow_missing)
+    return df if df is None or not t.sums else _sum_by(df, t.keys, t.sums)
+
+
+def _sum_by(df: DataFrame, keys, sums) -> DataFrame:
+    return df.groupBy(*keys).agg(*[F.sum(c).alias(c) for c in sums])
+
+
 def compact_index_epochs(
     spark,
     data_dir: str,
@@ -292,373 +438,120 @@ def compact_index_epochs(
     group_cols: list[str] | None = None,
     sum_cols: list[str] | None = None,
     gc: bool = False,
-    target_bytes_per_file: int = 128 * 1024 * 1024,
     epochs: list[int] | None = None,
     allow_missing: bool = False,
     fold=None,
-    cluster_by: list[str] | None = None,
     partition_by: list[str] | None = None,
-    gc_markers: bool = False,
 ) -> int | None:
-    """Epoch compaction for the additive index sinks — the LSM-style
-    maintenance job the round-10 verdict called for: committed epoch
-    partitions grow unboundedly and every read re-aggregates ALL of
-    them; this folds everything up to the current max epoch into one
-    pre-aggregated partition, after which reads touch the compacted
-    partition plus only the post-compaction tail.
+    """Fold one table's committed epochs (the prior generation plus
+    every epoch above it) into `_compacted/upto=M`, M the highest
+    epoch folded, then land `_compactions/M` — the atomic commit point;
+    a torn write without its marker is invisible and the next run
+    overwrites it. Returns the new watermark (the old one if nothing
+    new committed).
 
-    Protocol (crash-safe, additive-consistent):
-    1. read the CURRENT consistent view (prior compaction + tail),
-    2. pre-aggregate: groupBy(group_cols).sum(sum_cols) when sum_cols
-       is given (count-valued indexes: shingle-df, co-occurrence), or
-       an identity rewrite (set-valued indexes: band/fingerprint/id
-       epochs — small-file consolidation only),
-    3. write it to `<data_dir>/_compacted/upto=<M>` (M = max committed
-       epoch), sized from actual input bytes like io.compact_parquet,
-    4. land the marker `<data_dir>/_compactions/<M>` — the ATOMIC
-       commit point; a torn step-3 write without its marker is
-       invisible and the next run overwrites it idempotently.
-    Readers through read_committed_epochs switch views atomically at
-    step 4. Because the indexes are additive, ANY watermark yields the
-    same merged totals — a reader racing the marker sees either view,
-    both complete. Returns the new watermark (or the old one if no new
-    epochs had committed).
+    The merge rule is ``fold`` (any watermark-safe rewrite: applied to
+    an epoch prefix, its output merged with the remaining tail under
+    the read rule equals the read over raw epochs), else
+    groupBy(group_cols).sum(sum_cols), else identity. ``partition_by``
+    hive-partitions the generation (range-repartitioned first, files
+    sized by AQE from the post-fold bytes); otherwise it is coalesced
+    to one file per _TARGET_FILE_BYTES of input.
 
-    Safe to run concurrently with the live sink: new epochs land at
-    ids > M and stay visible through the tail. The compaction input is
-    built from PINNED paths — the prior `_compacted/upto=<prior>` dir
-    plus exactly the epoch dirs in the `todo` set fixed by ONE commit
-    listing — never by re-listing commits (r12, closing the r11-advice
-    double-count race: an epoch committing between two listings would
-    be folded into the compacted generation while staying visible as a
-    tail epoch, permanently double-counting its additive counts).
-    `gc=True` additionally deletes the superseded epoch dirs and every
-    lower-numbered compacted generation — even when there is nothing
-    new to fold, so the quiesced maintenance run reclaims the history
-    an inline (always gc=False) auto-compaction cadence leaves behind.
-    Run gc only quiesced (the compact_parquet maintenance-window
-    contract): a reader that listed epochs just before GC could race
-    the deletes.
-
-    ``epochs`` pins the committed-epoch set externally so multi-table
-    indexes (compact_cooccurrence_index) compact every table to ONE
-    shared watermark from a single listing. ``allow_missing`` is the
-    sidecar escape hatch (see read_committed_epochs): a pinned epoch
-    whose data dir is absent raises by default — above-watermark
-    missing data is loss, not noise.
-
-    ``fold`` replaces the groupBy/sum pre-aggregation with an
-    arbitrary DataFrame→DataFrame rewrite for indexes whose merge rule
-    is not additive (the vector sink's latest-wins upsert). The fold
-    must be WATERMARK-SAFE: applied to any epoch prefix, its output
-    merged with the remaining tail under the index's read rule must
-    equal the read over raw epochs (latest-wins qualifies because
-    folded rows keep their `_epoch` — a row the fold discarded was
-    superseded inside the prefix and could never win against the
-    tail).
-
-    ``cluster_by`` range-clusters the compacted generation on the
-    given columns (repartitionByRange + in-partition sort — the
-    io.compact_parquet contract: disjoint per-file key ranges)
-    instead of coalescing whatever partitioning the fold produced.
-    Plain coalesce concatenates parent partitions — for the vector
-    index those are id-hash window partitions, so one output file
-    would interleave many short cell-sorted runs, the parquet
-    row-group min/max would widen to near-full range, and the probe's
-    row-group skipping would stop working on exactly the generation
-    where most reads land.
-
-    ``partition_by`` (r13) hive-partitions the generation on the given
-    columns (`<dir>/upto=M/cell=K/…`) — the cluster-scale layout the
-    vector sink's docstring promised: a probe's cell filter becomes
-    DIRECTORY pruning (the scan never lists non-matching cells'
-    files), strictly stronger than row-group skipping. Rows are
-    range-repartitioned on the same columns first so each partition
-    directory is written by the few tasks owning its key range rather
-    than every task appending a sliver to every directory.
-
-    File sizing: the coalesce path sizes from raw input bytes (an
-    additive identity rewrite keeps its volume). The cluster_by /
-    partition_by paths are used with ``fold``, whose output can be far
-    smaller than its input (a heavily-upserted/deleted index folds
-    away superseded rows — r12 bench: 90.6 MB in → 28 MB out), so they
-    size from POST-fold bytes instead: the range shuffle runs without
-    an explicit partition count and AQE coalesces it to
-    ``target_bytes_per_file`` from the actual shuffle sizes (r13
-    advice — pre-fold sizing produced many undersized files).
-
-    ``gc_markers`` additionally deletes the commit markers of epochs
-    ≤ the watermark during gc, bounding the marker listing every
-    read/probe/compaction performs (r13 advice). ONLY safe when this
-    data dir's commits_dir is not shared with a table that still needs
-    those markers: multi-table orchestrators (substring's `_ids`
-    sidecar, co-occurrence's three tables) must gc markers themselves
-    AFTER every table has compacted to the watermark — a crash between
-    one table's marker gc and a sibling's compaction would silently
-    hide the sibling's committed tail; and the near-dup band index
-    must never gc markers at all (they are the corpus's, and the
-    corpus is never compacted)."""
+    ``epochs`` pins the committed set: the input is built from that
+    one listing, never by re-listing, so an epoch that commits
+    mid-compaction stays in the tail and is never counted twice.
+    ``allow_missing`` is the sidecar escape hatch (a pinned epoch with
+    no data dir otherwise raises). Safe to run beside the live sink;
+    `gc=True` additionally deletes everything the generation
+    supersedes — even when nothing new was folded — and must run
+    quiesced, since a reader that listed epochs just before could race
+    the deletes. Commit markers are never touched here (_compact)."""
     import math
 
     if epochs is None:
         epochs = committed_epochs(spark, commits_dir)
-    prior = compacted_upto(spark, data_dir)
+    prior = upto = compacted_upto(spark, data_dir)
     todo = [e for e in epochs if prior is None or e > prior]
-    fs, jvm, _ = _hadoop_fs(spark, data_dir)
-    if not todo:
-        # Nothing new to fold — but a quiesced gc run must still
-        # reclaim epoch dirs the CURRENT generation superseded (the
-        # inline auto-compaction cadence never gc's, so an index that
-        # was last compacted inline has its whole history on disk and
-        # the explicit `compact-index --gc` maintenance run is exactly
-        # the operation that is supposed to reclaim it).
-        if gc and prior is not None:
-            _gc_superseded(
-                fs,
-                jvm,
-                data_dir,
-                epochs,
-                prior,
-                commits_dir=commits_dir if gc_markers else None,
-            )
-        return prior
-    upto = max(todo)
-    dirs = []
-    for e in sorted(todo):
-        p = f"{data_dir}/epoch={e}"
-        if fs.exists(jvm.org.apache.hadoop.fs.Path(p)):
-            dirs.append(p)
-        elif not allow_missing:
-            raise FileNotFoundError(
-                f"pinned committed epoch {e} has no data directory at {p} — "
-                f"refusing to compact past lost data "
-                f"(allow_missing=True is for mid-life sidecar dirs only)"
-            )
-    # Prior generation read SEPARATELY from the epoch dirs: a
-    # partitionBy-written generation stores its partition columns as
-    # directories, and one combined read over both layouts would
-    # mis-discover the partition schema (same split as
-    # _committed_parts).
-    cur = spark.read.parquet(*dirs) if dirs else None
-    prior_gen = _read_generation(spark, fs, jvm, data_dir, prior)
-    if cur is None:
-        cur = prior_gen
-    elif prior_gen is not None:
-        cur = cur.unionByName(prior_gen)
-    if cur is None:
-        return prior
-
-    def _len(p: str) -> int:
-        hp = jvm.org.apache.hadoop.fs.Path(p)
-        return fs.getContentSummary(hp).getLength() if fs.exists(hp) else 0
-
-    total = sum(_len(f"{data_dir}/epoch={e}") for e in todo)
-    if prior is not None:
-        total += _len(f"{data_dir}/_compacted/upto={prior}")
-    n_files = max(1, math.ceil(total / target_bytes_per_file))
-    if fold is not None:
-        out = fold(cur)
-    elif sum_cols:
-        out = cur.groupBy(*(group_cols or [])).agg(
-            *[F.sum(c).alias(c) for c in sum_cols]
+    if todo:
+        cur = _union(
+            *_committed_parts(spark, data_dir, commits_dir, allow_missing, todo)
         )
-    else:
-        out = cur
-    target = f"{data_dir}/_compacted/upto={upto}"
-    if cluster_by or partition_by:
-        # POST-fold file sizing (see docstring): no explicit partition
-        # count on the range shuffle, AQE coalesces its partitions to
-        # the file-size target from the actual post-fold bytes. Scoped
-        # conf flip: the advisory size is session-global, restore it
-        # after the (eager) write.
-        cols = list(partition_by or cluster_by)
-        key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-        prev = spark.conf.get(key, None)
-        spark.conf.set(key, str(target_bytes_per_file))
-        try:
-            shaped = out.repartitionByRange(*cols)
-            if cluster_by:
-                shaped = shaped.sortWithinPartitions(*cluster_by)
-            writer = shaped.write.mode("overwrite")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(target)
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
-    else:
-        # coalesce never splits: merges the agg/epoch partitions
-        # without a second shuffle; an input already at/below target
-        # passes through
-        out.coalesce(n_files).write.mode("overwrite").parquet(target)
-    _mark_committed(spark, f"{data_dir}/_compactions", upto)
-    if gc:
-        _gc_superseded(
-            fs,
-            jvm,
-            data_dir,
-            epochs,
-            upto,
-            commits_dir=commits_dir if gc_markers else None,
-        )
+        if cur is None:
+            return prior
+        if fold is not None:
+            out = fold(cur)
+        elif sum_cols:
+            out = _sum_by(cur, group_cols or [], sum_cols)
+        else:
+            out = cur
+        upto = max(todo)
+        target = f"{data_dir}/_compacted/upto={upto}"
+        if partition_by:
+            # the advisory size is session-global: restore it after the
+            # (eager) write
+            key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+            prev = spark.conf.get(key, None)
+            spark.conf.set(key, str(_TARGET_FILE_BYTES))
+            try:
+                out.repartitionByRange(*partition_by).write.mode(
+                    "overwrite"
+                ).partitionBy(*partition_by).parquet(target)
+            finally:
+                if prev is None:
+                    spark.conf.unset(key)
+                else:
+                    spark.conf.set(key, prev)
+        else:
+            fs, jvm, _ = _hadoop_fs(spark, data_dir)
+
+            def _len(p: str) -> int:
+                hp = jvm.org.apache.hadoop.fs.Path(p)
+                return fs.getContentSummary(hp).getLength() if fs.exists(hp) else 0
+
+            total = sum(_len(f"{data_dir}/epoch={e}") for e in todo)
+            if prior is not None:
+                total += _len(f"{data_dir}/_compacted/upto={prior}")
+            # coalesce never splits: an input at/below target passes through
+            n_files = max(1, math.ceil(total / _TARGET_FILE_BYTES))
+            out.coalesce(n_files).write.mode("overwrite").parquet(target)
+        _mark_committed(spark, f"{data_dir}/_compactions", upto)
+    if gc and upto is not None:
+        # reclaim what the generation supersedes: epoch dirs ≤ the
+        # watermark (also those an earlier gc=False run folded) and
+        # every older generation with its marker
+        for e in epochs:
+            if e <= upto:
+                _delete(spark, f"{data_dir}/epoch={e}")
+        for m in committed_epochs(spark, f"{data_dir}/_compactions"):
+            if m < upto:
+                _delete(spark, f"{data_dir}/_compacted/upto={m}")
+                _delete(spark, f"{data_dir}/_compactions/{m}")
     return upto
-
-
-def _gc_superseded(
-    fs, jvm, data_dir: str, epochs, watermark: int, commits_dir: str | None = None
-) -> None:
-    """Reclaim everything the generation at ``watermark`` supersedes:
-    committed epoch dirs ≤ the watermark (including epochs an earlier
-    gc=False compaction folded in but left behind) AND every
-    lower-numbered generation with its marker — inline auto-compaction
-    runs gc=False each time, so a cadence-maintained index accumulates
-    one generation per fire until the explicit quiesced gc run sweeps
-    them. Run only quiesced (the compact_parquet maintenance-window
-    contract). ``commits_dir``, when given, additionally gc's the
-    commit markers ≤ the watermark (see compact_index_epochs
-    ``gc_markers`` for when that is safe)."""
-    for e in epochs:
-        if e > watermark:
-            continue
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{data_dir}/epoch={e}"), True)
-    marks = jvm.org.apache.hadoop.fs.Path(f"{data_dir}/_compactions")
-    if fs.exists(marks):
-        for st in fs.listStatus(marks):
-            nm = st.getPath().getName()
-            if nm.isdigit() and int(nm) < watermark:
-                fs.delete(
-                    jvm.org.apache.hadoop.fs.Path(
-                        f"{data_dir}/_compacted/upto={nm}"
-                    ),
-                    True,
-                )
-                fs.delete(st.getPath(), False)
-    if commits_dir is not None:
-        _gc_commit_markers(fs, jvm, commits_dir, watermark)
-
-
-def _gc_commit_markers(fs, jvm, commits_dir: str, watermark: int) -> None:
-    """Delete commit markers for epochs ≤ the compaction watermark —
-    every read/probe/compaction lists this directory and already skips
-    epochs ≤ the watermark, so without marker gc the listing grows
-    unboundedly over the sink's lifetime (r13 advice). Callers must
-    ensure EVERY table sharing this commits dir has compacted to (at
-    least) the watermark first."""
-    p = jvm.org.apache.hadoop.fs.Path(commits_dir)
-    if not fs.exists(p):
-        return
-    for st in fs.listStatus(p):
-        nm = st.getPath().getName()
-        if nm.isdigit() and int(nm) <= watermark:
-            fs.delete(st.getPath(), False)
-
-
-def _auto_compact_due(spark, watermark_dir: str, commits_dir: str, every) -> bool:
-    """True when the post-watermark committed tail has reached the
-    auto-compaction cadence. Called from inside a sink's batch_fn
-    right after its commit marker lands — micro-batches run
-    sequentially on the driver, so the inline compaction never races
-    its own sink (and gc stays False inline: external readers COULD
-    race deletes; superseded epochs are reclaimed by an explicit
-    quiesced `compact-index --gc` maintenance run)."""
-    if not every:
-        return False
-    upto = compacted_upto(spark, watermark_dir)
-    tail = [
-        e for e in committed_epochs(spark, commits_dir) if upto is None or e > upto
-    ]
-    return len(tail) >= every
 
 
 def compact_substring_index(spark, index_dir: str, gc: bool = False) -> int | None:
-    """Compact the substring_index_sink's shingle-df epochs into one
-    pre-summed partition (shingle → Σnd). Scoring reads through
-    read_substring_index drop from O(epochs) re-aggregation to the
-    compacted partition + tail."""
-    commits = index_dir + "/_commits"
-    # ONE commit listing pins the epoch set for the primary AND the
-    # sidecar — both tables land on the same watermark even if a new
-    # epoch commits mid-sequence (r11 advice).
-    pinned = committed_epochs(spark, commits)
-    upto = compact_index_epochs(
-        spark, index_dir, commits, ["shingle"], ["nd"], gc=gc, epochs=pinned
-    )
-    # sidecar redelivery-guard ids (if the sink ran with the guard):
-    # identity consolidation, same watermark discipline. allow_missing
-    # because the guard can be enabled mid-life — pre-guard epochs
-    # have commit markers but no _ids data (the one legitimate case).
-    fs, jvm, _ = _hadoop_fs(spark, f"{index_dir}/_ids")
-    if fs.exists(jvm.org.apache.hadoop.fs.Path(f"{index_dir}/_ids")):
-        compact_index_epochs(
-            spark,
-            f"{index_dir}/_ids",
-            commits,
-            gc=gc,
-            epochs=pinned,
-            allow_missing=True,
-        )
-    # Marker gc LAST, once primary AND sidecar sit at the watermark —
-    # never inline in the per-table calls: a crash between one table's
-    # marker gc and the other's compaction would hide committed tail
-    # epochs from the survivor (see compact_index_epochs gc_markers).
-    if gc and upto is not None:
-        _gc_commit_markers(fs, jvm, commits, upto)
-    return upto
+    """Compact the substring_index_sink's index: shingle counts
+    pre-summed, the `_ids` guard sidecar consolidated."""
+    return _compact(spark, _substring_index(index_dir), gc)
 
 
 def compact_cooccurrence_index(
     spark, index_dir: str, gc: bool = False
 ) -> int | None:
     """Compact the cooccurrence_index_sink's three additive tables
-    (edges/tf/ndocs) to their pre-summed forms. The committed-epoch
-    set is listed ONCE and pinned across all three table compactions
-    (r12, from the r11 advice): reads were always total-consistent by
-    additivity, but independent listings let a commit landing
-    mid-sequence give the tables different watermarks, making the
-    returned `upto` misleading as a whole-index statement. With the
-    pinned set every table folds exactly the same epochs and the
-    returned watermark describes all three."""
-    commits = index_dir + "/_commits"
-    pinned = committed_epochs(spark, commits)
-    upto = compact_index_epochs(
-        spark,
-        f"{index_dir}/edges",
-        commits,
-        ["src", "dst"],
-        ["cooccur"],
-        gc=gc,
-        epochs=pinned,
-    )
-    compact_index_epochs(
-        spark, f"{index_dir}/tf", commits, ["term"], ["df"], gc=gc, epochs=pinned
-    )
-    compact_index_epochs(
-        spark, f"{index_dir}/ndocs", commits, [], ["n"], gc=gc, epochs=pinned
-    )
-    # Marker gc only after ALL THREE tables compacted to the shared
-    # watermark (see compact_substring_index for the crash rationale).
-    if gc and upto is not None:
-        fs, jvm, _ = _hadoop_fs(spark, commits)
-        _gc_commit_markers(fs, jvm, commits, upto)
-    return upto
+    (edges/tf/ndocs) to one shared watermark."""
+    return _compact(spark, _cooccurrence_index(index_dir), gc)
 
 
 def compact_neardup_band_index(
     spark, band_index_dir: str, corpus_dir: str, gc: bool = False
 ) -> int | None:
     """Consolidate the incremental_neardup_sink's band-index epochs
-    (set-valued, one row per kept doc band — identity rewrite, no
-    aggregation): bounds the file count the per-batch anti-join against
-    the accumulated index has to list. NEVER gc's commit markers: the
-    markers belong to the CORPUS (the sink commits corpus + band epochs
-    under one marker) and the corpus is never compacted — deleting
-    markers ≤ the band watermark would hide committed corpus epochs
-    from every read."""
-    return compact_index_epochs(
-        spark, band_index_dir, corpus_dir + "/_commits", gc=gc
-    )
+    (identity rewrite), bounding the file count the per-batch anti-join
+    lists. The corpus is never compacted and owns the commit markers,
+    so they are never gc'd here."""
+    return _compact(spark, _neardup_index(corpus_dir, band_index_dir), gc)
 
 
 def incremental_dedup_sink(
@@ -670,48 +563,50 @@ def incremental_dedup_sink(
     text_col: str = "text",
 ):
     """Streaming corpus maintenance: every micro-batch of documents is
-    exact-deduped against the ACCUMULATED fingerprint index
+    exact-deduped against the COMMITTED fingerprint index
     (operators.dedup.exact_dedup_incremental), survivors landed in the
-    corpus, their fingerprints in the index. Micro-batches run
-    sequentially, so each sees every prior batch's index rows — the
-    streaming form of the per-ingest maintenance job.
-
-    Exactly-once without a transactional table format, poor-man's
-    Delta (r7, replacing the r6 fail-safe-ordering scheme that could
-    still LOSE a batch's corpus rows on a crash between the two
-    appends): each epoch OVERWRITES its own partition directory
-    (`<dir>/epoch=N` — foreachBatch retries reuse the epoch id, so
-    the rewrite is idempotent), and a commit marker
-    (`corpus_dir/_commits/N`, written only after both directories
-    landed) makes the epoch visible. The batch dedupes against
-    COMMITTED index epochs only, so a retry of a half-committed epoch
-    re-admits its own docs instead of dropping them, recomputes the
-    same survivors, overwrites both partial directories, and commits —
-    convergence to the exact no-crash corpus, no drops, no
-    duplicates (pinned in tests). Read the corpus/index through
-    read_committed_epochs for the consistent view; a plain
-    spark.read.parquet(corpus_dir) also works once all markers are in
-    (the `_commits` dir is `_`-prefixed, so Spark's listing skips
-    it)."""
+    corpus, their fingerprints in the index, under the corpus's
+    markers. Micro-batches run sequentially, so each sees every prior
+    batch's index rows; a retry of a half-committed epoch re-admits its
+    own docs, recomputes the same survivors and overwrites both
+    directories — convergence to the exact no-crash corpus (pinned in
+    tests). A plain spark.read.parquet(corpus_dir) also works once all
+    markers are in (`_commits` is `_`-prefixed, so Spark skips it)."""
     from graphragdatapipeline_spark.operators.dedup import (
         exact_dedup_incremental,
         fingerprint,
     )
 
-    commits_dir = corpus_dir + "/_commits"
+    index = _Index(
+        corpus_dir + "/_commits",
+        {
+            "fp": _Table(index_dir, compact=False),
+            "corpus": _Table(corpus_dir, compact=False),
+        },
+        owns_markers=False,
+    )
 
-    def batch_fn(df: DataFrame, epoch_id: int) -> None:
-        spark = df.sparkSession
-        idx = read_committed_epochs(spark, index_dir, commits_dir)
+    def compute(df: DataFrame, epoch_id: int) -> dict[str, DataFrame]:
+        idx = _read(df.sparkSession, index, "fp")
         clean, _delta = exact_dedup_incremental(df, idx, id_col, text_col)
         clean = clean.localCheckpoint()  # one computation feeds both writes
-        clean.select(fingerprint(F.col(text_col)).alias("fp")).write.mode(
-            "overwrite"
-        ).parquet(f"{index_dir}/epoch={epoch_id}")
-        clean.write.mode("overwrite").parquet(f"{corpus_dir}/epoch={epoch_id}")
-        _mark_committed(spark, commits_dir, epoch_id)
+        return {
+            "fp": clean.select(fingerprint(F.col(text_col)).alias("fp")),
+            "corpus": clean,
+        }
 
-    return write_foreach_batch(stream_df, batch_fn, checkpoint_dir)
+    return _index_sink(stream_df, index, compute, checkpoint_dir)
+
+
+def _neardup_index(corpus_dir: str, band_index_dir: str) -> _Index:
+    return _Index(
+        corpus_dir + "/_commits",
+        {
+            "bands": _Table(band_index_dir),
+            "corpus": _Table(corpus_dir, compact=False),
+        },
+        owns_markers=False,
+    )
 
 
 def incremental_neardup_sink(
@@ -725,35 +620,26 @@ def incremental_neardup_sink(
 ):
     """Near-duplicate streaming corpus maintenance — the MinHash twin
     of incremental_dedup_sink: each micro-batch computes its band
-    table map-side, drops docs whose bands hit the ACCUMULATED index
+    table map-side, drops docs whose bands hit the committed band index
     (a kept near-duplicate already represents them), LSH-dedups the
     survivors within the batch, then lands survivors in the corpus
-    and their bands in the index. Same epoch-partitioned
-    overwrite-and-commit transaction scheme as the exact sink: a
-    retry of a half-committed epoch dedupes against committed epochs
-    only, idempotently rewrites `epoch=N` in both directories, then
-    commits the marker — convergence, not drops."""
+    and their bands in the index, under the corpus's markers."""
     from graphragdatapipeline_spark.operators.dedup import minhash_dedup_incremental
 
-    commits_dir = corpus_dir + "/_commits"
+    index = _neardup_index(corpus_dir, band_index_dir)
 
-    def batch_fn(df: DataFrame, epoch_id: int) -> None:
-        spark = df.sparkSession
-        idx = read_committed_epochs(spark, band_index_dir, commits_dir)
-        clean, band_delta = minhash_dedup_incremental(df, idx, id_col, text_col)
-        clean = clean.localCheckpoint()
-        band_delta = band_delta.localCheckpoint()
-        band_delta.write.mode("overwrite").parquet(
-            f"{band_index_dir}/epoch={epoch_id}"
-        )
-        clean.write.mode("overwrite").parquet(f"{corpus_dir}/epoch={epoch_id}")
-        _mark_committed(spark, commits_dir, epoch_id)
-        if _auto_compact_due(
-            spark, band_index_dir, commits_dir, auto_compact_every
-        ):
-            compact_neardup_band_index(spark, band_index_dir, corpus_dir)
+    def compute(df: DataFrame, epoch_id: int) -> dict[str, DataFrame]:
+        idx = _read(df.sparkSession, index, "bands")
+        clean, bands = minhash_dedup_incremental(df, idx, id_col, text_col)
+        out = {"corpus": clean.localCheckpoint(), "bands": bands.localCheckpoint()}
+        # both outputs now hold their own blocks: drop the batch's
+        # signature-band checkpoint they were computed from
+        _free_checkpoint(bands, reads=True)
+        return out
 
-    return write_foreach_batch(stream_df, batch_fn, checkpoint_dir)
+    return _index_sink(
+        stream_df, index, compute, checkpoint_dir, auto_compact_every
+    )
 
 
 def vector_index_sink(
@@ -792,10 +678,7 @@ def vector_index_sink(
        non-matching row groups without paying a per-batch shuffle; at
        cluster scale you would repartition by cell too, trading one
        map-shuffle per batch for file-level pruning),
-    4. atomic commit marker — the same overwrite-and-commit
-       transaction scheme as every other sink here: a retry of a
-       half-committed epoch idempotently rewrites ``epoch=N`` and
-       re-commits.
+    4. the commit marker (module docstring).
 
     UPSERT semantics are latest-wins at read: data rows carry their
     epoch and read_vector_index keeps each id's highest-epoch row.
@@ -842,15 +725,14 @@ def vector_index_sink(
         residual_col,
     )
 
-    commits_dir = index_dir + "/_commits"
+    index = _vector_index(index_dir, id_col, vec_col)
     if encode_path not in ("fold", "arrow"):
         raise ValueError(f"encode_path must be fold|arrow, got {encode_path!r}")
     arrow_enc = (
         ivfpq_encode_udf(centroids, pq_books) if encode_path == "arrow" else None
     )
 
-    def batch_fn(df: DataFrame, epoch_id: int) -> None:
-        spark = df.sparkSession
+    def compute(df: DataFrame, epoch_id: int) -> dict[str, DataFrame]:
         # deterministic within-batch pick; desc puts NULL keys last, so
         # a same-batch upsert+tombstone conflict resolves to the upsert
         w = Window.partitionBy(id_col).orderBy(
@@ -868,44 +750,27 @@ def vector_index_sink(
         if arrow_enc is not None:
             # one UDF evaluation per row (the struct is a single
             # column; field extraction below reads it, not re-runs it)
-            enc = picked.withColumn("_enc", arrow_enc(F.col(vec_col)))
-            cols = [
-                F.col(id_col),
-                F.col(vec_col),
-                F.col("_enc.cell").alias("cell"),
-                F.lit(epoch_id).cast("bigint").alias("_epoch"),
-            ]
-            if pq_books is not None:
-                cols += [
-                    F.col(f"_enc.pq_{i}").alias(f"pq_{i}")
-                    for i in range(len(pq_books))
-                ]
-            batch = enc.select(*cols)
+            picked = picked.withColumn("_enc", arrow_enc(F.col(vec_col)))
+            cell = F.col("_enc.cell")
+            codes = [F.col(f"_enc.pq_{i}") for i in range(len(pq_books or []))]
         else:
             cell = F.when(live, nearest_centroid_col(centroids, F.col(vec_col)))
-            cols = [
-                F.col(id_col),
-                F.col(vec_col),
-                cell.alias("cell"),
-                F.lit(epoch_id).cast("bigint").alias("_epoch"),
-            ]
+            codes = []
             if pq_books is not None:
                 res = residual_col(centroids, F.col(vec_col), cell)
-                cols += [
-                    F.when(live, c).alias(f"pq_{i}")
-                    for i, c in enumerate(pq_encode_cols(pq_books, res))
-                ]
-            batch = picked.select(*cols)
-        batch.sortWithinPartitions("cell").write.mode("overwrite").parquet(
-            f"{index_dir}/epoch={epoch_id}"
+                codes = [F.when(live, c) for c in pq_encode_cols(pq_books, res)]
+        batch = picked.select(
+            F.col(id_col),
+            F.col(vec_col),
+            cell.alias("cell"),
+            F.lit(epoch_id).cast("bigint").alias("_epoch"),
+            *[c.alias(f"pq_{i}") for i, c in enumerate(codes)],
         )
-        _mark_committed(spark, commits_dir, epoch_id)
-        if _auto_compact_due(spark, index_dir, commits_dir, auto_compact_every):
-            compact_vector_index(
-                spark, index_dir, id_col=id_col, vec_col=vec_col
-            )
+        return {"vectors": batch.sortWithinPartitions("cell")}
 
-    return write_foreach_batch(stream_df, batch_fn, checkpoint_dir)
+    return _index_sink(
+        stream_df, index, compute, checkpoint_dir, auto_compact_every
+    )
 
 
 def latest_wins(df: DataFrame, id_col: str, epoch_col: str = "_epoch") -> DataFrame:
@@ -942,7 +807,7 @@ def read_vector_index(
     window over all committed epochs is the honest remaining shape.
     Equivalence argument and pins are the probe's (cross-cell upserts,
     tombstones, re-inserts — same tests snapshot this view)."""
-    comp, tail, _upto = _committed_parts(
+    comp, tail = _committed_parts(
         spark, index_dir, index_dir + "/_commits"
     )
     if comp is None and tail is None:
@@ -971,6 +836,25 @@ def tail_bounded_view(
     return kept.unionByName(live_tail)
 
 
+def _vector_index(index_dir: str, id_col: str, vec_col: str) -> _Index:
+    """One table whose merge rule is latest-wins with tombstones
+    dropped — the SAME latest_wins expression the read path runs —
+    hive-partitioned by cell, so a probe's cell filter is directory
+    pruning on the generation where most reads land."""
+    return _Index(
+        index_dir + "/_commits",
+        {
+            "vectors": _Table(
+                index_dir,
+                fold=lambda df: latest_wins(df, id_col).filter(
+                    F.col(vec_col).isNotNull()
+                ),
+                partition_by=("cell",),
+            )
+        },
+    )
+
+
 def compact_vector_index(
     spark,
     index_dir: str,
@@ -986,37 +870,11 @@ def compact_vector_index(
     resurrect the id; a re-insert after the delete lands at a higher
     epoch and stays visible through the tail — with gc=True the
     deleted vector's bytes are actually reclaimed, the
-    right-to-be-forgotten endpoint). NOT an additive fold, but
-    watermark-safe all the same (the compact_index_epochs ``fold``
-    contract): folded rows keep their ``_epoch``, so
-    read_vector_index's window over compacted generation + tail picks
-    exactly the row it would have picked over raw epochs — a row the
-    fold discarded was already superseded (or deleted) at or below
-    the watermark and could never win against the tail. Winner
-    resolution goes through the SAME latest_wins expression as the
-    read path (one production rule, not two copies that can drift),
-    and the generation is hive-partitioned by cell (partition_by —
-    r13, executing the cluster-scale layout the sink docstring
-    promised): a probe's cell filter is DIRECTORY pruning on the
-    generation where most reads land, the scan never even lists
-    non-matching cells' files. The fold's own output partitioning is
-    id-hash from the window; the range repartition inside
-    compact_index_epochs regroups it by cell before the partitioned
-    write. With gc=True the commit markers ≤ the watermark are also
-    reclaimed (gc_markers — this commits dir is exclusively the
-    vector index's, the one topology where inline marker gc is
-    safe)."""
-    return compact_index_epochs(
-        spark,
-        index_dir,
-        index_dir + "/_commits",
-        gc=gc,
-        fold=lambda df: latest_wins(df, id_col).filter(
-            F.col(vec_col).isNotNull()
-        ),
-        partition_by=["cell"],
-        gc_markers=True,
-    )
+    right-to-be-forgotten endpoint). Watermark-safe: folded rows keep
+    their ``_epoch``, so a row the fold discarded was already
+    superseded (or deleted) at or below the watermark and could never
+    win against the tail."""
+    return _compact(spark, _vector_index(index_dir, id_col, vec_col), gc)
 
 
 def vector_index_probe(
@@ -1100,7 +958,7 @@ def _probe_candidates(
     the shared read core of vector_index_probe and
     vector_index_probe_adc (see the probe docstring for the plan
     rationale and the empty-index contract)."""
-    comp, tail, _upto = _committed_parts(
+    comp, tail = _committed_parts(
         spark, index_dir, index_dir + "/_commits"
     )
     if comp is None and tail is None:
@@ -1257,6 +1115,17 @@ def windowed_percentile(
     )
 
 
+def _cooccurrence_index(index_dir: str) -> _Index:
+    return _Index(
+        index_dir + "/_commits",
+        {
+            "edges": _Table(f"{index_dir}/edges", ("src", "dst"), ("cooccur",)),
+            "tf": _Table(f"{index_dir}/tf", ("term",), ("df",)),
+            "ndocs": _Table(f"{index_dir}/ndocs", (), ("n",)),
+        },
+    )
+
+
 def cooccurrence_index_sink(
     stream_df: DataFrame,
     index_dir: str,
@@ -1269,35 +1138,23 @@ def cooccurrence_index_sink(
     """Streaming text→graph maintenance: each micro-batch of documents
     lands its ADDITIVE co-occurrence count deltas
     (graph.build.cooccurrence_index_delta — edge co-counts, term doc
-    frequencies, doc count) as epoch partitions under
-    `index_dir/{edges,tf,ndocs}/epoch=N`; PMI is computed on read from
-    the summed counts (pmi_from_index), never stored. Exactly-once by
-    the same epoch-overwrite + commit-marker scheme as the dedup
-    sinks — and strictly simpler: counts are additive, so the batch
-    never reads the accumulated index at all; a foreachBatch retry
-    recomputes the identical delta from its replayed source slice and
-    idempotently overwrites its own epoch directories before the
-    marker lands. Read through read_cooccurrence_index for the
-    consistent (committed-epochs-only) view."""
+    frequencies, doc count) under `index_dir/{edges,tf,ndocs}`; PMI is
+    computed on read from the summed counts (pmi_from_index), never
+    stored. Counts are additive, so the batch never reads the
+    accumulated index. Read through read_cooccurrence_index."""
     from graphragdatapipeline_spark.graph.build import cooccurrence_index_delta
 
-    commits_dir = index_dir + "/_commits"
+    index = _cooccurrence_index(index_dir)
 
-    def batch_fn(df: DataFrame, epoch_id: int) -> None:
-        spark = df.sparkSession
-        edges, tf, n = cooccurrence_index_delta(
+    def compute(df: DataFrame, epoch_id: int) -> dict[str, DataFrame]:
+        deltas = cooccurrence_index_delta(
             df, id_col, text_col, max_doc_terms=max_doc_terms
         )
-        edges.write.mode("overwrite").parquet(f"{index_dir}/edges/epoch={epoch_id}")
-        tf.write.mode("overwrite").parquet(f"{index_dir}/tf/epoch={epoch_id}")
-        n.write.mode("overwrite").parquet(f"{index_dir}/ndocs/epoch={epoch_id}")
-        _mark_committed(spark, commits_dir, epoch_id)
-        if _auto_compact_due(
-            spark, f"{index_dir}/edges", commits_dir, auto_compact_every
-        ):
-            compact_cooccurrence_index(spark, index_dir)
+        return dict(zip(("edges", "tf", "ndocs"), deltas))
 
-    return write_foreach_batch(stream_df, batch_fn, checkpoint_dir)
+    return _index_sink(
+        stream_df, index, compute, checkpoint_dir, auto_compact_every
+    )
 
 
 def read_cooccurrence_index(spark, index_dir: str):
@@ -1305,16 +1162,20 @@ def read_cooccurrence_index(spark, index_dir: str):
     consistent read half of cooccurrence_index_sink; returns None
     before the first commit. Feed the result to
     graph.build.pmi_from_index for scored edges."""
-    commits_dir = index_dir + "/_commits"
-    edges = read_committed_epochs(spark, f"{index_dir}/edges", commits_dir)
-    tf = read_committed_epochs(spark, f"{index_dir}/tf", commits_dir)
-    n = read_committed_epochs(spark, f"{index_dir}/ndocs", commits_dir)
+    index = _cooccurrence_index(index_dir)
+    edges = _read(spark, index, "edges")
     if edges is None:
         return None
-    return (
-        edges.groupBy("src", "dst").agg(F.sum("cooccur").alias("cooccur")),
-        tf.groupBy("term").agg(F.sum("df").alias("df")),
-        n.agg(F.sum("n").alias("n")),
+    return edges, _read(spark, index, "tf"), _read(spark, index, "ndocs")
+
+
+def _substring_index(index_dir: str) -> _Index:
+    return _Index(
+        index_dir + "/_commits",
+        {
+            "shingles": _Table(index_dir, ("shingle",), ("nd",)),
+            "ids": _Table(f"{index_dir}/_ids", allow_missing=True),
+        },
     )
 
 
@@ -1331,64 +1192,44 @@ def substring_index_sink(
     """Streaming exact-substring index maintenance: each micro-batch
     of documents lands its ADDITIVE shingle-df delta
     (operators.dedup.shingle_df_delta — per-batch distinct-doc word
-    k-gram counts) as an epoch partition under `index_dir/epoch=N`.
-    Span removal / decontamination is computed on read by scoring any
-    document set against the summed index
-    (operators.dedup.remove_spans_against_index); the cleaned text is
-    never stored, so late-arriving duplicates retroactively affect
-    re-scores without rewriting history. Counts are additive, so —
-    like cooccurrence_index_sink and unlike the dedup corpus sinks —
-    the batch never reads the accumulated index: a foreachBatch retry
-    recomputes the identical delta from its replayed source slice and
-    idempotently overwrites its own epoch directory before the commit
-    marker lands.
+    k-gram counts) under `index_dir`. Span removal / decontamination is
+    computed on read by scoring any document set against the summed
+    index (operators.dedup.remove_spans_against_index); the cleaned
+    text is never stored, so late-arriving duplicates retroactively
+    affect re-scores without rewriting history.
 
-    Exactly-once contract (round-10 advice, now enforced at the sink):
-    additivity assumes each doc_id arrives in exactly ONE batch — a
+    Additivity assumes each doc_id arrives in exactly ONE batch — a
     SOURCE-level redelivery (the same doc in two different epochs,
     which checkpointed foreachBatch retries never produce but upstream
     at-least-once feeds can) would double-count its shingles' nd and
-    can silently over-remove unique spans at read time. Structured
-    Streaming's replay makes per-epoch writes idempotent but cannot
-    see cross-epoch duplicates. `guard_redelivery=True` closes the
-    hole at the cost of one committed-ids anti-join per batch (the
-    exact_dedup_incremental pattern): batch ids land beside the index
-    under `_ids/epoch=N` (same commit marker), and each batch drops
-    ids already committed. Leave False only when the upstream is
-    exactly-once by construction."""
+    can silently over-remove unique spans at read time.
+    `guard_redelivery=True` closes the hole at the cost of one
+    committed-ids anti-join per batch: batch ids land in the `_ids`
+    sidecar under the same marker, and each batch drops ids already
+    committed. Leave False only when the upstream is exactly-once by
+    construction."""
     from graphragdatapipeline_spark.operators.dedup import shingle_df_delta
 
-    commits_dir = index_dir + "/_commits"
+    index = _substring_index(index_dir)
 
-    def batch_fn(df: DataFrame, epoch_id: int) -> None:
-        spark = df.sparkSession
+    def compute(df: DataFrame, epoch_id: int) -> dict[str, DataFrame]:
+        out = {}
         if guard_redelivery:
-            # allow_missing: the guard may have been enabled mid-life,
-            # so epochs committed before it have markers but no _ids
-            seen = read_committed_epochs(
-                spark, f"{index_dir}/_ids", commits_dir, allow_missing=True
-            )
+            seen = _read(df.sparkSession, index, "ids")
             if seen is not None:
                 df = df.join(seen, [id_col], "left_anti")
             df = df.localCheckpoint()  # one computation feeds ids + delta
-            df.select(id_col).write.mode("overwrite").parquet(
-                f"{index_dir}/_ids/epoch={epoch_id}"
-            )
-        delta = shingle_df_delta(df, id_col, text_col, k)
-        delta.write.mode("overwrite").parquet(f"{index_dir}/epoch={epoch_id}")
-        _mark_committed(spark, commits_dir, epoch_id)
-        if _auto_compact_due(spark, index_dir, commits_dir, auto_compact_every):
-            compact_substring_index(spark, index_dir)
+            out["ids"] = df.select(id_col)
+        out["shingles"] = shingle_df_delta(df, id_col, text_col, k)
+        return out
 
-    return write_foreach_batch(stream_df, batch_fn, checkpoint_dir)
+    return _index_sink(
+        stream_df, index, compute, checkpoint_dir, auto_compact_every
+    )
 
 
 def read_substring_index(spark, index_dir: str):
     """Merged (shingle, nd) over COMMITTED epochs — the consistent
     read half of substring_index_sink; returns None before the first
     commit. Feed the result to remove_spans_against_index."""
-    commits_dir = index_dir + "/_commits"
-    idx = read_committed_epochs(spark, index_dir, commits_dir)
-    if idx is None:
-        return None
-    return idx.groupBy("shingle").agg(F.sum("nd").alias("nd"))
+    return _read(spark, _substring_index(index_dir), "shingles")

@@ -37,6 +37,10 @@ def _run_stream_to_memory(spark, stream_df, name, tmp_dir, output_mode="append")
     return spark.table(name)
 
 
+def _persistent_rdd_ids(spark):
+    return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+
 def test_tumbling_stream_equals_batch(spark, sf_dir, events_stream_dir, tmp_path):
     stream = so.read_events_stream(spark, events_stream_dir)
     agg = so.tumbling_window_agg(so.with_watermark(stream, "10 minutes"))
@@ -307,10 +311,13 @@ def test_incremental_dedup_sink_equals_batch_dedup(spark, sf_dir, tmp_path):
     )
     corpus_dir = str(tmp_path / "corpus")
     index_dir = str(tmp_path / "index")
+    rdds_before = _persistent_rdd_ids(spark)
     q = so.incremental_dedup_sink(
         stream, corpus_dir, index_dir, str(tmp_path / "ckpt")
     )
     q.awaitTermination(120)
+    # each batch's checkpoint is released once its epoch commits
+    assert not _persistent_rdd_ids(spark) - rdds_before
 
     got = {r.doc_id for r in spark.read.parquet(corpus_dir).collect()}
     want = {r.doc_id for r in exact_dedup(d, "doc_id", "text").collect()}
@@ -384,10 +391,13 @@ def test_incremental_neardup_sink_equals_sequential_batches(spark, sf_dir, tmp_p
         .parquet(in_dir + "/slice=*")
     )
     corpus_dir = str(tmp_path / "corpus")
+    rdds_before = _persistent_rdd_ids(spark)
     q = so.incremental_neardup_sink(
         stream, corpus_dir, str(tmp_path / "bands"), str(tmp_path / "ckpt")
     )
     q.awaitTermination(180)
+    # each batch's checkpoints are released once its epoch commits
+    assert not _persistent_rdd_ids(spark) - rdds_before
     got = {r.doc_id for r in spark.read.parquet(corpus_dir).collect()}
 
     idx = None
@@ -978,10 +988,13 @@ def test_substring_sink_redelivery_guard(spark, sf_dir, tmp_path):
         .parquet(in_dir + "/slice=*")
     )
     index_dir = str(tmp_path / "shidx")
+    rdds_before = _persistent_rdd_ids(spark)
     q = so.substring_index_sink(
         stream, index_dir, str(tmp_path / "ckpt"), guard_redelivery=True
     )
     q.awaitTermination(180)
+    # the guard's per-batch checkpoint is released once its epoch commits
+    assert not _persistent_rdd_ids(spark) - rdds_before
 
     got = {
         tuple(r) for r in so.read_substring_index(spark, index_dir).collect()
@@ -1103,6 +1116,64 @@ def test_read_committed_epochs_raises_on_lost_primary_dir(spark, tmp_path):
     assert upto == 1
     strict = so.read_committed_epochs(spark, data_dir, commits)
     assert {tuple(r) for r in strict.collect()} == {("a", 1)}
+
+
+def test_compact_index_cli_substring_cooccurrence_neardup(spark, tmp_path):
+    """`compact-index` on hand-built committed epochs (no stream) for
+    the substring, cooccurrence and neardup kinds: each exits 0 and
+    advances the compaction watermark; neardup without --corpus-dir is
+    refused with exit 2 and compacts nothing."""
+    from graphragdatapipeline_spark.__main__ import main as cli_main
+
+    def land(commits, tables):
+        for e in range(2):
+            for table_dir, rows, ddl in tables:
+                spark.createDataFrame(rows(e), ddl).write.mode("overwrite").parquet(
+                    f"{table_dir}/epoch={e}"
+                )
+            so._mark_committed(spark, commits, e)
+
+    sub = str(tmp_path / "sub")
+    land(
+        sub + "/_commits",
+        [(sub, lambda e: [("a b c", 1 + e)], "shingle string, nd long")],
+    )
+    assert cli_main(["compact-index", "substring", sub]) == 0
+    assert so.compacted_upto(spark, sub) == 1
+
+    co = str(tmp_path / "co")
+    land(
+        co + "/_commits",
+        [
+            (
+                f"{co}/edges",
+                lambda e: [("a", "b", 1 + e)],
+                "src string, dst string, cooccur long",
+            ),
+            (f"{co}/tf", lambda e: [("a", 1), ("b", 1)], "term string, df long"),
+            (f"{co}/ndocs", lambda e: [(1,)], "n long"),
+        ],
+    )
+    assert cli_main(["compact-index", "cooccurrence", co]) == 0
+    for t in ("edges", "tf", "ndocs"):
+        assert so.compacted_upto(spark, f"{co}/{t}") == 1
+
+    corpus, bands = str(tmp_path / "corpus"), str(tmp_path / "bands")
+    land(
+        corpus + "/_commits",
+        [
+            (corpus, lambda e: [(e, f"doc {e}")], "doc_id long, text string"),
+            (
+                bands,
+                lambda e: [(e, 0, f"h{e}")],
+                "doc_id long, band_idx int, band_hash string",
+            ),
+        ],
+    )
+    assert cli_main(["compact-index", "neardup", bands]) == 2
+    assert so.compacted_upto(spark, bands) is None
+    assert cli_main(["compact-index", "neardup", bands, "--corpus-dir", corpus]) == 0
+    assert so.compacted_upto(spark, bands) == 1
 
 
 def test_substring_sink_auto_compaction_mid_stream(spark, sf_dir, tmp_path):
@@ -1570,7 +1641,7 @@ def test_vector_index_custom_columns_auto_compact(spark, tmp_path):
     compact_vector_index without forwarding vec_col, so a sink
     configured with non-default column names crashed (or mis-filtered
     tombstones) at the cadence — and the compacted generation must
-    keep DISJOINT per-file cell ranges (cluster_by), not coalesced
+    keep DISJOINT per-file cell ranges (partition_by), not coalesced
     id-hash runs, so probe row-group skipping survives compaction."""
     import time
 
