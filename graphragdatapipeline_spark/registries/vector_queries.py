@@ -436,7 +436,7 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kmeans_unroll_parts(
-    prefix: str, emb_cte: str, k: int, iters: int, dim: int
+    prefix: str, emb_cte: str, k: int | str, iters: int, dim: int
 ) -> list[str]:
     """The reusable Lloyd's-replay CTE chain: per iteration one
     assignment CTE (fold-of-squared-diffs distance, ties to the lowest
@@ -444,7 +444,8 @@ def _kmeans_unroll_parts(
     sums → one double division → 6-dp rounding — the order-independent
     arithmetic that makes k-means cross-engine exact). `prefix` names
     the CTEs so several independent trainings (PQ subspaces) can share
-    one WITH clause."""
+    one WITH clause. `k`, the seed count, is an int or a scalar SQL
+    subquery."""
     q6 = lambda e: f"floor(({e}) * 1000000 + 0.5) / 1000000"  # noqa: E731
     parts = [
         f"{prefix}c0 AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell, "
@@ -478,7 +479,7 @@ def _kmeans_unroll_parts(
     return parts
 
 
-def _kmeans_oracle(k: int = 4, iters: int = 3, dim: int = 64) -> str:
+def _kmeans_oracle(k: int | str = 4, iters: int = 3, dim: int = 64) -> str:
     """Unrolled Lloyd's-iteration replay (same scheme as the pagerank
     oracles) over the full embedding space."""
     q6 = lambda e: f"floor(({e}) * 1000000 + 0.5) / 1000000"  # noqa: E731
@@ -642,7 +643,7 @@ def vector_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays BOTH subspace trainings, the encoding, the distance
     tables, and the ADC ranking in one SQL statement.
 
-    Codebook size: the r10 sweep (SCALE.md, ann_recall_pq_codebook.py)
+    Codebook size: the r10 sweep (SCALE.md, `git show 6183020:scripts/ann_recall_pq_codebook.py`)
     measured recall@8 = 0.27 (k=16) → 0.36 (k=64) → 0.56 (k=256) at
     IDENTICAL scan cost on a clustered corpus — the production default
     is k=256 (the standard 1-byte PQ code). This registers k=16, the
@@ -821,11 +822,12 @@ def vector_ivfpq_residual_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("vec_id", dround(F.col("sim"), 6).alias("sim"))
 
 
-def _semantic_dedup_oracle(k: int = 4, iters: int = 3, tau: float = 0.3) -> str:
+def _semantic_dedup_oracle(iters: int = 3, tau: float = 0.3) -> str:
     """SemDeDup replay: the full k-means training unroll (shared with
-    _kmeans_oracle), then intra-cell cosine pairs over the FINAL
-    assignment, then the min-id-survivor anti-join."""
-    base = _kmeans_oracle(k, iters)
+    _kmeans_oracle) seeded with the query's k = max(4, n // 128) cells,
+    then intra-cell cosine pairs over the FINAL assignment, then the
+    min-id-survivor anti-join."""
+    base = _kmeans_oracle("(SELECT greatest(4, count(*) // 128) FROM emb)", iters)
     with_body = base[: base.index("\nSELECT a.cell")]
     return (
         with_body

@@ -1,32 +1,59 @@
-"""Driver-contract simulation (the /verify drive recipe as a script):
-vanilla session, entry() smoke check, every queries()[name] at sf0.01
-hash-compared against oracle_sql()[name] via DuckDB."""
+"""Driver-contract oracle check: a vanilla local[8] session (none of the
+engine's confs) hash-compares registry queries against their DuckDB
+oracles.
+
+Usage: python scripts/driver_sim.py [--sf DIR] [NAME ...]
+
+With no NAME it replays the driver: the entry() smoke check, then every
+queries()[name] against oracle_sql()[name]. With names it checks those
+registry queries. --sf sets the fixture (default sf0.01). A query with
+no oracle (rows-only contract) must run; its row count is printed.
+Prints TOTAL_MISMATCHES: N and exits 1 if N > 0; an unknown name exits 2.
+"""
+import os
 import sys
-sys.path.insert(0, '/root/repo'); sys.path.insert(0, '/root/repo/tests')
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO); sys.path.insert(0, os.path.join(REPO, "tests"))
 from pyspark.sql import SparkSession
 
-def main():
+def main(argv=None):
+    args = sys.argv[1:] if argv is None else list(argv)
+    sf_dir = "/root/testdata/sf0.01"
+    if args[:1] == ["--sf"]:
+        sf_dir, args = args[1], args[2:]
+    import __spark_entry__ as e
+    from graphragdatapipeline_spark.registry import REGISTRY
+    from oracle_utils import compare, duckdb_conn
+    unknown = [n for n in args if n not in REGISTRY]
+    if unknown:
+        print(f"unknown query: {' '.join(unknown)}", file=sys.stderr)
+        return 2
     spark = (SparkSession.builder.master("local[8]").appName("driver-sim")
              .config("spark.sql.session.timeZone", "UTC")
              .config("spark.ui.enabled", "false").getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
-    import __spark_entry__ as e
-    from oracle_utils import compare, duckdb_conn
-    con = duckdb_conn('/root/testdata/sf0.01')
-    df = e.entry(spark)
-    assert len(df.collect()) > 0
-    qs, osql = e.queries(), e.oracle_sql()
+    if args:
+        checks = [(n, REGISTRY[n].fn, REGISTRY[n].oracle) for n in args]
+    else:
+        assert len(e.entry(spark).collect()) > 0
+        osql = e.oracle_sql()
+        checks = [(n, fn, osql.get(n)) for n, fn in sorted(e.queries().items())]
+    con = duckdb_conn(sf_dir)
     bad = 0
-    for name, fn in sorted(qs.items()):
-        sdf = fn(spark, '/root/testdata/sf0.01')
-        if name in osql:
-            p = compare(sdf, con.sql(osql[name]))
-            if p:
-                bad += 1
-                print("MISMATCH", name, p[:2], flush=True)
+    for name, fn, oracle in checks:
+        sdf = fn(spark, sf_dir)
+        if oracle is None:
+            print(f"{name}: no oracle, rows={sdf.count()}", flush=True)
+            continue
+        p = compare(sdf, con.sql(oracle))
+        if p:
+            bad += 1
+            print(f"{name}: MISMATCH {p[:3]}", flush=True)
         else:
-            sdf.count()
+            print(f"{name}: OK", flush=True)
     print("TOTAL_MISMATCHES:", bad, flush=True)
+    return 1 if bad else 0
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

@@ -147,6 +147,33 @@ def test_cli_profile_records_match_status_tracker(spark, sf_dir, capsys):
     assert main(["profile", "no_such_query"]) == 2
 
 
+def test_driver_sim_named_oracle_check(spark, sf_dir, capsys, monkeypatch):
+    """`scripts/driver_sim.py --sf DIR NAME...` checks the named registry
+    queries against their oracles: 0 when green, 1 when an oracle
+    disagrees, 2 on an unknown name (like `profile`). It reuses the
+    shared session via getOrCreate and leaves it running."""
+    import dataclasses
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "driver_sim", os.path.join(REPO, "scripts", "driver_sim.py")
+    )
+    driver_sim = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(driver_sim)
+
+    name = "pricing_summary"
+    assert driver_sim.main(["--sf", sf_dir, name]) == 0
+    assert "TOTAL_MISMATCHES: 0" in capsys.readouterr().out
+
+    wrong = dataclasses.replace(REGISTRY[name], oracle="SELECT 1 AS x")
+    monkeypatch.setitem(REGISTRY, name, wrong)
+    assert driver_sim.main(["--sf", sf_dir, name]) == 1
+    assert "TOTAL_MISMATCHES: 1" in capsys.readouterr().out
+
+    assert driver_sim.main(["--sf", sf_dir, "no_such_query"]) == 2
+    assert spark.range(1).count() == 1
+
+
 def test_registry_submodules_import_directly():
     """Regression for the r10 circular-import hazard: importing a
     registries submodule DIRECTLY (before the registry package) used

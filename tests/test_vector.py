@@ -847,3 +847,18 @@ def test_cosine_topk_score_path_guards(spark, sf_dir):
     assert sorted((r.q_id, r.rank, r.doc) for r in arrow) == sorted(
         (r.q_id, r.rank, r.doc) for r in fold
     )
+
+
+def test_semantic_dedup_matches_oracle_at_sf01(spark, sf_dir):
+    """dedup_semantic_kmeans trains k = max(4, n // 128) cells: 4 at
+    sf0.01's 500 vectors, 15 at sf0.1's 2000. The oracle's k-means
+    replay must seed the same k, so the contract is checked at sf0.1,
+    where the two scales part."""
+    import os
+
+    from graphragdatapipeline_spark.registry import REGISTRY
+    from tests.oracle_utils import compare, duckdb_conn
+
+    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.1")
+    qd = REGISTRY["dedup_semantic_kmeans"]
+    assert compare(qd.fn(spark, sf01), duckdb_conn(sf01).sql(qd.oracle)) == []
