@@ -13,7 +13,8 @@ all", per-asset runs — README.md:735). The Spark engine's equivalent:
 data-quality gates (reference defs/checks.py) and exits non-zero on
 failure — the CI shape of Dagster's asset checks. `profile` times
 queries and prints one JSON record per query with the Spark work of
-its last timed pass, read from Spark's status store.
+its last timed pass, read from Spark's status store, and the generated
+classes that pass compiled.
 """
 
 from __future__ import annotations
@@ -59,11 +60,21 @@ def _spark_work(sc, since: tuple[int, int]) -> tuple[dict, tuple[int, int]]:
     return work, newest
 
 
+def _codegen(jvm) -> tuple[int, int]:
+    """Janino compiles so far in this JVM (``CodegenMetrics``' compile
+    time histogram counts one per class the codegen cache missed) and
+    their summed nanoseconds (``CodeGenerator.compileTime``; the
+    histogram itself keeps only a sample)."""
+    hist = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    gen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    return hist.getCount(), gen.compileTime()
+
+
 def _profile(names: list[str], sf_dir: str, repeat: int) -> int:
     """One untimed noop-sink pass and ``repeat`` timed ones per query;
-    prints the best wall, the Spark work of the last timed pass and the
-    persistent RDDs it left behind. A query that raises prints its
-    error and the run goes on (exit 1)."""
+    prints the best wall, the Spark work of the last timed pass, the
+    classes it compiled and the persistent RDDs it left behind. A query
+    that raises prints its error and the run goes on (exit 1)."""
     from graphragdatapipeline_spark.io import read_table
     from graphragdatapipeline_spark.registry import REGISTRY
     from graphragdatapipeline_spark.session import get_session
@@ -90,14 +101,21 @@ def _profile(names: list[str], sf_dir: str, repeat: int) -> int:
             walls = []
             for _ in range(1 + repeat):  # the first pass is untimed
                 rdds = sc._jsc.getPersistentRDDs().size()
+                cg = _codegen(sc._jvm)
                 t0 = time.perf_counter()
                 df = REGISTRY[name].fn(spark, sf_dir)
                 df.write.format("noop").mode("overwrite").save()
                 walls.append(time.perf_counter() - t0)
                 work, ids = _spark_work(sc, ids)
                 left = sc._jsc.getPersistentRDDs().size() - rdds
+                compiles, ns = (b - a for a, b in zip(cg, _codegen(sc._jvm)))
             rec = {"query": name, "sf_dir": sf_dir, "wall_s": round(min(walls[1:]), 3)}
-            rec.update(work, persisted_rdds_left=left)
+            rec.update(
+                work,
+                codegen_compiles=compiles,
+                codegen_ms=round(ns / 1e6, 1),
+                persisted_rdds_left=left,
+            )
         except Exception as exc:  # noqa: BLE001 — the run must finish
             traceback.print_exc()
             failed = True

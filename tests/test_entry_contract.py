@@ -123,11 +123,14 @@ def test_cli_profile_records_match_status_tracker(spark, sf_dir, capsys):
         lines = capsys.readouterr().out.splitlines()
         recs = [json.loads(line) for line in lines if line.startswith("{")]
         assert [r["query"] for r in recs] == names
+        # the timed pass follows an untimed one that compiled its classes
+        assert recs[0]["codegen_compiles"] == 0
         for r in recs:
             assert set(r) == {
                 "query", "sf_dir", "wall_s", "jobs", "stages", "tasks",
                 "executor_ms", "gc_ms", "shuffle_read_bytes",
                 "shuffle_write_bytes", "spill_bytes", "persisted_rdds_left",
+                "codegen_compiles", "codegen_ms",
             }
             assert r["jobs"] > 0 and r["sf_dir"] == sf_dir
             group = f"profile-test-{r['query']}"
