@@ -6,6 +6,17 @@ decides when a round is checkpointed, materialized and released
 (rules in its docstring). Convergence checks are cheap aggregates,
 not collects of the frame.
 
+Undirected input contract. connected_components, label_propagation,
+louvain_move, rb_quality_agg, triangle_count, triangle_count_estimate,
+link_prediction_scores and kcore read ``edges`` (src, dst) as an
+undirected simple graph: a pair listed twice or in both directions is
+one edge, and self-loops are dropped. With a weight column
+(label_propagation, louvain_move) a pair's weight is the sum over its
+rows, rows with w ≤ 0 are no edge, and only louvain_move reads
+self-loop weight (as vertex strength). ``_canonical_pairs`` is the one
+place that applies this contract; ``_loop_edges`` is the one place
+that builds and sizes a loop's edge table from it.
+
 The community-detection contract replaces the reference's driver-local
 Leiden (utils/neo4j_helpers.py:237-268, single-threaded C core over
 ~99k nodes) with a distributed, deterministic label-propagation
@@ -70,6 +81,77 @@ def _iterate(
         for df in release:
             _free_checkpoint(df)
     return state, converged
+
+
+def _canonical_pairs(
+    edges: DataFrame,
+    weight_col: str | None = None,
+    max_forward_degree: int | None = None,
+) -> DataFrame:
+    """The undirected simple graph of ``edges`` (module docstring) →
+    (lo, hi) with lo < hi, one row per pair; with ``weight_col`` also
+    ``_w``, the pair's summed positive weight.
+
+    ``max_forward_degree`` is the triangle operators' mega-hub
+    guardrail: wedge volume grows with fwd_deg(v)², so pairs whose LOW
+    endpoint has more forward pairs than the cap are dropped (one
+    linear degree pass), bounding the wedge joins at pairs × cap."""
+    w = [] if weight_col is None else [F.col(weight_col).cast("double").alias("_w")]
+    pairs = edges.select(
+        F.least("src", "dst").alias("lo"), F.greatest("src", "dst").alias("hi"), *w
+    ).filter(F.col("lo") != F.col("hi"))
+    if weight_col is None:
+        canon = pairs.distinct()
+    else:
+        canon = (
+            pairs.filter(F.col("_w") > 0)
+            .groupBy("lo", "hi")
+            .agg(F.sum("_w").alias("_w"))
+        )
+    if max_forward_degree is not None:
+        fwd = canon.groupBy("lo").agg(F.count(F.lit(1)).alias("_fd"))
+        keep = fwd.filter(F.col("_fd") <= max_forward_degree).select("lo")
+        canon = canon.join(F.broadcast(keep), "lo")
+    return canon
+
+
+def _loop_edges(
+    edges: DataFrame, weight_col: str | None = None, n_pairs: int | None = None
+) -> tuple[DataFrame, DataFrame, int]:
+    """The loop-invariant edge table of the undirected loops → (sym,
+    pairs, width). ``sym`` is (src, dst, _w): both directions of every
+    canonical pair, _w = 1.0 unweighted, hash-partitioned by dst at
+    ``width`` under a lazy localCheckpoint, so each round's join on dst
+    shuffles only the |V|-row side. ``pairs`` is the lazily
+    checkpointed ``_canonical_pairs`` table it is built from; read the
+    vertex set from it, not from ``sym``: once counted it has no
+    shuffle in its lineage, while reading ``sym`` made each job of the
+    first round list sym's exchange again. The caller frees both with
+    its loop's ``release``, once the final round no longer reads them.
+
+    Width: one partition per 100k directed edges, between 2 and
+    defaultParallelism. Contracted and filtered graphs are orders of
+    magnitude below the cluster, where a full-width round is pure
+    fixed cost, and AQE cannot re-plan across checkpointed rounds.
+    defaultParallelism, not shuffle.partitions: under an untuned
+    session (200) every round's checkpoint would write 200 tiny block
+    files, enough to exhaust the process FD limit. The pair count comes
+    from a count of the checkpointed pairs, or from ``n_pairs`` when
+    the caller already knows it (an upper bound only moves the width)."""
+    pairs = _canonical_pairs(edges, weight_col).localCheckpoint(eager=False)
+    if n_pairs is None:
+        n_pairs = pairs.count()
+    slots = edges.sparkSession.sparkContext.defaultParallelism
+    width = max(2, min(slots, 2 * n_pairs // 100_000 + 1))
+    w = F.col("_w") if weight_col is not None else F.lit(1.0).alias("_w")
+    lo, hi = F.col("lo"), F.col("hi")
+    sym = (
+        pairs.select(lo.alias("src"), hi.alias("dst"), w)
+        .unionByName(pairs.select(hi.alias("src"), lo.alias("dst"), w))
+        .repartition(width, "dst")
+        .localCheckpoint(eager=False)
+    )
+    return sym, pairs, width
 
 
 def degrees(edges: DataFrame) -> DataFrame:
@@ -156,8 +238,8 @@ def connected_components(
     edges: DataFrame, max_iter: int = 50
 ) -> DataFrame:
     """Connected components by min-id propagation WITH pointer jumping
-    (undirected). Returns (id, component) where component is the
-    smallest vertex id in the component.
+    → (id, component), where component is the smallest vertex id in
+    the component.
 
     Each round does two label-shrinking steps: (1) Hash-Min —
     component = min(own, min over neighbors) (Rastogi et al., "Finding
@@ -171,35 +253,10 @@ def connected_components(
     O(log diameter).
     Raises if max_iter rounds exhaust before the fixpoint — a silently
     unconverged label is a wrong answer, not a slow one."""
-    sym = edges.select("src", "dst").unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    # The edge table (the big, loop-invariant operand: ~2×10⁸ rows for
-    # the symmetrized ER pair graph at the 100× fixture) pins
-    # MEMORY_AND_DISK explicitly: blocks the pool can't hold overflow
-    # to local disk instead of competing with the per-round join's
-    # execution memory.
-    from pyspark.storagelevel import StorageLevel
-
-    sym0 = (
-        sym.filter(F.col("src") != F.col("dst"))
-        .distinct()  # lazy: the sizing count below materializes it
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
-    )
-    # Right-size the iterative loop's partitioning to the PAIR graph:
-    # the per-round joins run O(log d) times, and on a small component
-    # graph (dedup/ER pair sets are orders of magnitude below the
-    # corpus) default shuffle width is pure fixed-cost latency. AQE
-    # can't help — each round is a separate checkpointed job.
-    n_edges = sym0.count()
-    default_parts = sym0.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    parts = max(2, min(int(default_parts), n_edges // 100_000 + 1))
-    sym = sym0.repartition(parts, "dst").localCheckpoint(
-        eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
-    )
-    _free_checkpoint(sym0)
+    sym, pairs, _ = _loop_edges(edges)
     labels = (
-        sym.select(F.col("src").alias("id"))
+        pairs.select(F.col("lo").alias("id"))
+        .unionByName(pairs.select(F.col("hi").alias("id")))
         .distinct()
         .withColumn("component", F.col("id"))
         .localCheckpoint(eager=False)
@@ -239,7 +296,7 @@ def connected_components(
         step,
         max_iter,
         until=lambda s, _: not (s.agg(F.sum("_changed")).first()[0] or 0),
-        release=(sym,),
+        release=(pairs, sym),
     )
     if not converged:
         raise RuntimeError(
@@ -263,54 +320,14 @@ def label_propagation(
     leidenalg's seed (settings.py:137). Update: adopt the most frequent
     neighbor label; ties break on (count desc, label asc), making every
     round a pure function of the previous one — same input, same
-    communities, on any cluster layout."""
-    # Partition the (big) edge table by the join key ONCE — every
-    # iteration's join then shuffles only the (small) label table.
-    # localCheckpoint preserves the physical partitioning.
-    # Partition count pinned to cluster parallelism, NOT the session's
-    # shuffle.partitions: under an untuned session (200 default) every
-    # localCheckpoint would write 200 tiny files per iteration, and the
-    # accumulated open block files can exhaust the process FD limit
-    # before the fixture-scale run finishes.
-    par = max(edges.sparkSession.sparkContext.defaultParallelism, 2)
-    if weight_col is None:
-        # unweighted: parallel edges collapse (distinct), each
-        # neighbor casts one vote
-        sym = edges.select("src", "dst").unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        sym = (
-            sym.filter(F.col("src") != F.col("dst"))
-            .distinct()
-            .withColumn("_w", F.lit(1.0))
-        )
-    else:
-        # weighted: neighbor votes carry edge weight; parallel edges
-        # sum (a weight-w edge == w votes). Same non-positive-weight
-        # policy as pagerank: w<=0 is not a vote — drop it rather than
-        # let a zero/negative tally corrupt the argmax.
-        edges = edges.filter(F.col(weight_col) > 0)
-        sym = edges.select("src", "dst", F.col(weight_col).alias("_w")).unionByName(
-            edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst"),
-                F.col(weight_col).alias("_w"),
-            )
-        )
-        sym = (
-            sym.filter(F.col("src") != F.col("dst"))
-            .groupBy("src", "dst")
-            .agg(F.sum("_w").alias("_w"))
-        )
-    # Materialize once at input partitioning, then right-size the
-    # per-round shuffle width to the symmetrized edge count (the
-    # connected_components sizing rule): contracted/filtered graphs can
-    # be orders of magnitude below defaultParallelism, where full-width
-    # rounds are pure fixed-cost latency, and AQE cannot re-plan across
-    # checkpointed iterations.
-    sym0 = sym.localCheckpoint(eager=False)
-    par = max(2, min(par, sym0.count() // 100_000 + 1))
-    sym = sym0.repartition(par, "dst").localCheckpoint(eager=False)
-    ids = sym.select(F.col("src").alias("id")).distinct()
+    communities, on any cluster layout. Each neighbor casts one vote,
+    or with ``weight_col`` its pair's weight in votes."""
+    sym, pairs, par = _loop_edges(edges, weight_col)
+    ids = (
+        pairs.select(F.col("lo").alias("id"))
+        .unionByName(pairs.select(F.col("hi").alias("id")))
+        .distinct()
+    )
     if vertices is not None:
         ids = ids.unionByName(vertices.select("id")).distinct()
     # Engine-portable seeded init: first 15 md5 nibbles of "id:seed"
@@ -354,21 +371,7 @@ def label_propagation(
             .coalesce(par)
         )
 
-    return _iterate(labels, step, max_iter, release=(sym0, sym))[0]
-
-
-def _contract(edges: DataFrame, assignment: DataFrame) -> DataFrame:
-    """Collapse communities into super-vertices (Leiden-style graph
-    aggregation step)."""
-    a_src = assignment.select(F.col("id").alias("src"), F.col("community").alias("csrc"))
-    a_dst = assignment.select(F.col("id").alias("dst"), F.col("community").alias("cdst"))
-    return (
-        edges.join(a_src, "src")
-        .join(a_dst, "dst")
-        .select(F.col("csrc").alias("src"), F.col("cdst").alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
+    return _iterate(labels, step, max_iter, release=(pairs, sym))[0]
 
 
 def detect_communities(
@@ -390,7 +393,7 @@ def detect_communities(
     base = edges.select("src", "dst")
     l0 = label_propagation(base, vertices=vertices, max_iter=iters_per_level[0], seed=seed)
 
-    g1 = _contract(base, l0)
+    g1 = _contract_weighted(base, l0)
     l1_super = label_propagation(g1, max_iter=iters_per_level[1], seed=seed + 1)
     l1 = (
         l0.alias("a")
@@ -408,7 +411,7 @@ def detect_communities(
         )
     )
 
-    g2 = _contract(
+    g2 = _contract_weighted(
         base,
         l1.select("id", F.col("community_L1").alias("community")),
     )
@@ -534,56 +537,24 @@ def louvain_move(
 
     ``weight_col`` turns on weighted semantics — required for running
     on a CONTRACTED graph, where parallel-edge multiplicities become
-    weights and intra-community weight becomes self-loops: parallel
-    edges sum, w ≤ 0 is dropped (the pagerank/LPA policy), and a
-    self-loop edge contributes 2·w to its vertex's strength (it moves
-    with the vertex, so it never enters a gain term — exactly
-    graph/leiden.py's treatment) while staying out of the neighbor-
-    community sums. Unweighted mode keeps the simple-graph reading:
-    parallel edges collapse, self-loops are ignored entirely.
+    weights and intra-community weight becomes self-loops: a self-loop
+    edge contributes 2·w to its vertex's strength (it moves with the
+    vertex, so it never enters a gain term — exactly graph/leiden.py's
+    treatment) while staying out of the neighbor-community sums.
+    ``n_edges_hint`` (the row count of ``edges``, which the multilevel
+    loop knows from persisting each contracted graph) skips the edge
+    table's sizing job; every per-round aggregate is order-independent,
+    so it moves no label.
     """
-    par = max(edges.sparkSession.sparkContext.defaultParallelism, 2)
-    if weight_col is None:
-        e = edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct()
-        sym = e.unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).withColumn("_w", F.lit(1.0))
-        self_w = None
-    else:
-        we = edges.select(
-            "src", "dst", F.col(weight_col).cast("double").alias("_w")
-        ).filter(F.col("_w") > 0)
-        loops = we.filter(F.col("src") == F.col("dst"))
-        self_w = loops.groupBy(F.col("src").alias("id")).agg(
-            F.sum("_w").alias("_sw")
+    sym, pairs, par = _loop_edges(edges, weight_col, n_edges_hint)
+    self_w = None
+    if weight_col is not None:
+        w = F.col(weight_col).cast("double")
+        self_w = (
+            edges.filter((F.col("src") == F.col("dst")) & (w > 0))
+            .groupBy(F.col("src").alias("id"))
+            .agg(F.sum(w).alias("_sw"))
         )
-        ns = we.filter(F.col("src") != F.col("dst"))
-        sym = (
-            ns.unionByName(
-                ns.select(
-                    F.col("dst").alias("src"), F.col("src").alias("dst"), "_w"
-                )
-            )
-            .groupBy("src", "dst")
-            .agg(F.sum("_w").alias("_w"))
-        )
-    # Same edge-count-sized round width as detect_communities /
-    # connected_components — the ladder's contracted levels are tiny,
-    # and move rounds there were dominated by fixed per-round costs.
-    # When the caller already knows the edge count (the multilevel loop
-    # counts each contracted graph as it persists it), 2·n_edges_hint
-    # upper-bounds the symmetrized row count and the sizing pass is
-    # skipped entirely — par is a layout knob, every per-round
-    # aggregate is order-independent, and at any count below the 100k
-    # round-width step both paths yield the identical par anyway.
-    sym0 = None
-    if n_edges_hint is not None:
-        par = max(2, min(par, 2 * n_edges_hint // 100_000 + 1))
-        sym = sym.repartition(par, "dst").localCheckpoint(eager=False)
-    else:
-        sym0 = sym.localCheckpoint(eager=False)
-        par = max(2, min(par, sym0.count() // 100_000 + 1))
-        sym = sym0.repartition(par, "dst").localCheckpoint(eager=False)
     deg = sym.groupBy(F.col("src").alias("id")).agg(F.sum("_w").alias("_k"))
     ids = sym.select(F.col("src").alias("id")).distinct()
     if vertices is not None:
@@ -602,11 +573,6 @@ def louvain_move(
     # one job for sym and nodes instead of checkpoint-then-rescan.
     nodes = nodes.repartition(par, "id").localCheckpoint(eager=False)
     two_m = nodes.agg(F.sum("_k")).first()[0] or 1.0  # scalar graph stat
-    if sym0 is not None:
-        # safe to drop only now: sym (lazy) materialized inside the 2m
-        # job above, and freeing a lazy checkpoint's SOURCE before the
-        # dependent checkpoint exists would make it unrecomputable
-        _free_checkpoint(sym0)
 
     # Renamed copy for strength lookups inside comm_K: `nodes` also
     # joins directly into the scoring plan below, and reusing the same
@@ -708,7 +674,7 @@ def louvain_move(
         nodes.select("id", F.col("id").alias("community")),
         step,
         rounds,
-        release=(sym, nodes),
+        release=(pairs, sym, nodes),
     )
     # canonical labels: the minimum member vertex id
     canon = memb.groupBy("community").agg(F.min("id").alias("_label"))
@@ -720,14 +686,14 @@ def louvain_move(
 def _contract_weighted(
     edges: DataFrame, assignment: DataFrame, weight_col: str | None = None
 ) -> DataFrame:
-    """Weight-preserving graph aggregation for the Louvain ladder →
-    (src, dst, weight): communities collapse to super-vertices,
-    parallel inter-community edges SUM (unlike ``_contract``'s
-    distinct, which is right for LPA votes but loses modularity mass),
-    and intra-community weight lands on a self-loop row (src = dst) —
-    the strength bookkeeping louvain_move's weighted mode expects.
-    Total edge weight is conserved level-to-level, so 2m — and
-    therefore the meaning of γ — is identical at every level."""
+    """Graph aggregation for both ladders → (src, dst, weight):
+    communities collapse to super-vertices, parallel inter-community
+    edges SUM, and intra-community weight lands on a self-loop row
+    (src = dst) — the strength bookkeeping louvain_move's weighted mode
+    expects. Total edge weight is conserved level-to-level, so 2m — and
+    therefore the meaning of γ — is identical at every level. The LPA
+    ladder reads the result unweighted, which keeps only the distinct
+    inter-community pairs."""
     w = (
         F.col(weight_col).cast("double")
         if weight_col is not None
@@ -954,15 +920,8 @@ def rb_quality_agg(
     DataFrame (column ``quality``) — the same objective the vendored
     Leiden maximizes (graph/leiden.py:rb_quality), computed with joins
     and aggregates so partition quality is measurable on a graph that
-    never fits a driver: Q(γ) = Σ_c e_c − γ · Σ_c K_c² / 2m over the
-    canonicalized undirected simple graph."""
-    canon = (
-        edges.select(
-            F.least("src", "dst").alias("lo"), F.greatest("src", "dst").alias("hi")
-        )
-        .filter(F.col("lo") != F.col("hi"))
-        .distinct()
-    )
+    never fits a driver: Q(γ) = Σ_c e_c − γ · Σ_c K_c² / 2m."""
+    canon = _canonical_pairs(edges)
     m_lo = membership.select(F.col("id").alias("lo"), F.col("community").alias("_cl"))
     m_hi = membership.select(F.col("id").alias("hi"), F.col("community").alias("_ch"))
     intra = (
@@ -1141,25 +1100,20 @@ def bfs_distances(
 
 
 def triangle_count(edges: DataFrame, max_forward_degree: int | None = None) -> DataFrame:
-    """Triangle counting on an undirected edge list (columns src, dst)
-    — the classic clustering/community-density primitive Spark lacks
-    natively. Uses the degree-ordering trick that makes the join
+    """Triangle counting → one row (a, b, c) per triangle — the classic
+    clustering/community-density primitive Spark lacks natively. Uses
+    the degree-ordering trick that makes the join
     tractable at scale: every edge is oriented low-id → high-id, so
     each triangle {a,b,c} (a<b<c) is found EXACTLY once as
     (a,b)+(b,c)+(a,c) — no 6× duplicate enumeration, and the wedge
     join (a,b)⋈(b,c) fans out only on each vertex's FORWARD degree,
     which ordering keeps far below total degree on skewed graphs.
-    Returns one row per triangle; count() or a groupBy on a vertex
-    yields the aggregate forms.
+    count() or a groupBy on a vertex yields the aggregate forms.
 
     ``max_forward_degree`` is the mega-hub guardrail (same philosophy
-    as the dedup layer's max_bucket/max_block): wedge volume grows
-    with fwd_deg(v)², so ONE celebrity vertex can dominate the whole
-    job. With the cap, every canonical edge whose LOW endpoint has
-    forward degree above it is dropped before the joins — triangles
-    involving those hub fan-outs are undercounted (the standard
-    approximate-triangle trade) and the wedge cost bound becomes
-    edges × cap.
+    as the dedup layer's max_bucket/max_block; see _canonical_pairs):
+    triangles involving the dropped hub fan-outs are undercounted, the
+    standard approximate-triangle trade.
 
     Build-side memory bound: the shuffle_hash hints below force
     ShuffledHashJoinExec, whose build-side hash map does NOT spill —
@@ -1173,17 +1127,7 @@ def triangle_count(edges: DataFrame, max_forward_degree: int | None = None) -> D
     to sort-merge, which spills. Uncapped callers (e.g.
     graph_clustering_coefficient, which invokes this without
     max_forward_degree) inherit the same bound."""
-    canon = (
-        edges.select(
-            F.least("src", "dst").alias("lo"), F.greatest("src", "dst").alias("hi")
-        )
-        .filter(F.col("lo") != F.col("hi"))
-        .distinct()
-    )
-    if max_forward_degree is not None:
-        fwd = canon.groupBy("lo").agg(F.count(F.lit(1)).alias("_fd"))
-        keep = fwd.filter(F.col("_fd") <= max_forward_degree).select("lo")
-        canon = canon.join(F.broadcast(keep), "lo")
+    canon = _canonical_pairs(edges, max_forward_degree=max_forward_degree)
     ab = canon.select(F.col("lo").alias("a"), F.col("hi").alias("b"))
     # Shuffled-hash, not sort-merge, on both wedge joins (guide §3.1):
     # the build side of each is the canonical EDGE table while the
@@ -1238,17 +1182,7 @@ def triangle_count_estimate(
     count."""
     if not (0.0 < p <= 1.0):
         raise ValueError(f"triangle_count_estimate: p must be in (0, 1], got {p}")
-    canon = (
-        edges.select(
-            F.least("src", "dst").alias("lo"), F.greatest("src", "dst").alias("hi")
-        )
-        .filter(F.col("lo") != F.col("hi"))
-        .distinct()
-    )
-    if max_forward_degree is not None:
-        fwd = canon.groupBy("lo").agg(F.count(F.lit(1)).alias("_fd"))
-        keep = fwd.filter(F.col("_fd") <= max_forward_degree).select("lo")
-        canon = canon.join(F.broadcast(keep), "lo")
+    canon = _canonical_pairs(edges, max_forward_degree=max_forward_degree)
     # deterministic per-edge coin in [0,1): xxhash64 → non-negative →
     # 53-bit mantissa-exact division (2^53 buckets ≫ any useful p)
     coin = F.pmod(F.xxhash64("lo", "hi", F.lit(seed)), F.lit(2**53)) / F.lit(
@@ -1284,8 +1218,8 @@ def triangle_count_estimate(
 def link_prediction_scores(
     edges: DataFrame, max_center_degree: int | None = None
 ) -> DataFrame:
-    """Common-neighbors + Adamic-Adar link prediction over an
-    undirected edge list (columns src, dst) → one row per NON-adjacent
+    """Common-neighbors + Adamic-Adar link prediction → one row per
+    NON-adjacent
     vertex pair (u < w) that shares ≥1 neighbor, with
     ``common_neighbors`` and ``adamic_adar`` = Σ_z 1/ln(deg(z)) over
     shared neighbors z — the standard missing-edge ranking primitive
@@ -1302,13 +1236,7 @@ def link_prediction_scores(
     micro-units before the sum (floor(1e6/ln(deg)+0.5) summed in
     int64) — order-independent accumulation, cross-engine exact, same
     discipline as the LM/k-means oracles."""
-    canon = (
-        edges.select(
-            F.least("src", "dst").alias("lo"), F.greatest("src", "dst").alias("hi")
-        )
-        .filter(F.col("lo") != F.col("hi"))
-        .distinct()
-    )
+    canon = _canonical_pairs(edges)
     adj = canon.select(F.col("lo").alias("z"), F.col("hi").alias("n")).unionByName(
         canon.select(F.col("hi").alias("z"), F.col("lo").alias("n"))
     )
@@ -1391,10 +1319,8 @@ def kcore(edges: DataFrame, k: int, max_iter: int | None = None) -> DataFrame:
     the standard density filter for graph curation (drop barely-
     connected entities before community detection / GNN sampling).
 
-    Input is an undirected edge list (src, dst); it is canonicalized
-    and symmetrized internally, so each undirected edge contributes 1
-    to both endpoints' degrees. Returns (id, core_degree): the
-    vertices of the k-core with their degree inside the core.
+    Returns (id, core_degree): the vertices of the k-core with their
+    degree inside the core.
 
     Scale shape: each round is one degree aggregation plus two
     semi-joins of the edge table against the survivor set, and the
@@ -1407,13 +1333,7 @@ def kcore(edges: DataFrame, k: int, max_iter: int | None = None) -> DataFrame:
     are no-ops, a fixed-unroll SQL replay of ≥ fixpoint depth is
     value-identical (how the oracle checks it).
     """
-    canon = (
-        edges.select(
-            F.least("src", "dst").alias("lo"), F.greatest("src", "dst").alias("hi")
-        )
-        .filter(F.col("lo") != F.col("hi"))
-        .distinct()
-    )
+    canon = _canonical_pairs(edges)
     alive = (
         canon.select(F.col("lo").alias("src"), F.col("hi").alias("dst"))
         .unionByName(canon.select(F.col("hi").alias("src"), F.col("lo").alias("dst")))

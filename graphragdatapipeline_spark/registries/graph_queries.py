@@ -552,13 +552,7 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("v")
         .agg(F.count(F.lit(1)).alias("n_tri"))
     )
-    canon = (
-        edges.select(
-            F.least("src", "dst").alias("lo"), F.greatest("src", "dst").alias("hi")
-        )
-        .filter(F.col("lo") != F.col("hi"))
-        .distinct()
-    )
+    canon = ga._canonical_pairs(edges)
     deg = ga.degrees(canon.select(F.col("lo").alias("src"), F.col("hi").alias("dst")))
     from graphragdatapipeline_spark.registry import dround
 

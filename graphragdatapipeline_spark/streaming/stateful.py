@@ -191,21 +191,13 @@ def state_history_stream(
     as a final interval with valid_to NULL — every event still lands
     in exactly one emitted interval. A later event for an evicted user
     starts a fresh run."""
-    if state_ttl_seconds is None:
-        return events_stream.groupBy("user_id").applyInPandasWithState(
-            _update_state_history,
-            outputStructType=HISTORY_OUTPUT_DDL,
-            stateStructType=HISTORY_STATE_DDL,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    ttl_ms = state_ttl_seconds * 1000
+    ttl_ms = None if state_ttl_seconds is None else state_ttl_seconds * 1000
     cols = ["user_id", "state", "valid_from", "valid_to", "n_events"]
 
-    def update_ttl(
+    def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
+        if ttl_ms is not None and state.hasTimedOut:
             cur, vf_us, n = state.get
             out = []
             if cur is not None:
@@ -213,16 +205,20 @@ def state_history_stream(
             state.remove()
             yield pd.DataFrame(out, columns=cols)
             return
-        for frame in _update_state_history(key, pdfs, state):
-            yield frame
-        state.setTimeoutDuration(ttl_ms)
+        yield from _update_state_history(key, pdfs, state)
+        if ttl_ms is not None:
+            state.setTimeoutDuration(ttl_ms)
 
     return events_stream.groupBy("user_id").applyInPandasWithState(
-        update_ttl,
+        update,
         outputStructType=HISTORY_OUTPUT_DDL,
         stateStructType=HISTORY_STATE_DDL,
         outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+        timeoutConf=(
+            GroupStateTimeout.NoTimeout
+            if ttl_ms is None
+            else GroupStateTimeout.ProcessingTimeTimeout
+        ),
     )
 
 

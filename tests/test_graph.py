@@ -756,6 +756,36 @@ def test_graph_loop_leaves_one_checkpoint(spark, loop):
     assert _persistent_rdds(spark) - before <= 1
 
 
+# A path a-…-f beside a triangle x-y-z, and the same graph with
+# reversed, duplicated and self-loop rows added.
+_SIMPLE = [("a", "b"), ("b", "c"), ("c", "d"), ("d", "e"), ("e", "f"),
+           ("x", "y"), ("y", "z"), ("z", "x")]
+_NOISE = [("c", "b"), ("d", "c"), ("a", "b"), ("e", "d"), ("f", "f"), ("c", "c")]
+_UNDIRECTED = {
+    **{
+        n: _LOOPS[n]
+        for n in ("connected_components", "label_propagation", "louvain_move", "kcore")
+    },
+    "triangle_count": lambda e, m: ga.triangle_count(e),
+    "rb_quality_agg": lambda e, m: ga.rb_quality_agg(e, m, 1.0),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_UNDIRECTED))
+def test_undirected_ops_read_a_simple_graph(spark, op):
+    """Noise rows change no undirected answer (the module's input
+    contract). louvain_move used to deduplicate directed rows before
+    symmetrizing, so c→b and d→c made b–c and c–d weight-2 edges and
+    moved labels."""
+    ddl = "src string, dst string"
+    memb = spark.createDataFrame(
+        [(v, v in "abc") for v in "abcdefxyz"], "id string, community boolean"
+    )
+    simple = _UNDIRECTED[op](spark.createDataFrame(_SIMPLE, ddl), memb)
+    noisy = _UNDIRECTED[op](spark.createDataFrame(_SIMPLE + _NOISE, ddl), memb)
+    assert sorted(map(tuple, noisy.collect())) == sorted(map(tuple, simple.collect()))
+
+
 def test_louvain_ladder_releases_levels(spark):
     """The Louvain ladder unpersists its contracted graphs and frees
     every move, composition and level-label checkpoint once its answer
