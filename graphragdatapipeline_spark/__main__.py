@@ -28,10 +28,12 @@ import traceback
 
 
 def _spark_work(sc, since: tuple[int, int]) -> tuple[dict, tuple[int, int]]:
-    """The jobs, stages and stage totals (ms, bytes) that Spark's status
-    store holds with ids above ``since`` (job id, stage id), read once
-    the listener bus is drained, and the newest ids. Ids are monotonic,
-    so the jobs the engine submits from its own thread pools count too."""
+    """The jobs, the stages that ran and their totals (ms, bytes) that
+    Spark's status store holds with ids above ``since`` (job id, stage
+    id), read once the listener bus is drained, and the newest ids. Ids
+    are monotonic, so the jobs the engine submits from its own thread
+    pools count too. A stage a job lists but never runs (SKIPPED: its
+    shuffle output already exists; PENDING) is not counted."""
     jsc = sc._jsc.sc()
     jsc.listenerBus().waitUntilEmpty()
     store, gw = jsc.statusStore(), sc._gateway
@@ -46,6 +48,8 @@ def _spark_work(sc, since: tuple[int, int]) -> tuple[dict, tuple[int, int]]:
     for st in (stages.apply(i) for i in range(stages.size())):
         if st.stageId() <= since[1]:
             break
+        if st.status().toString() in ("SKIPPED", "PENDING"):
+            continue
         work["stages"] += 1
         work["tasks"] += st.numCompleteTasks()
         work["executor_ms"] += st.executorRunTime()
@@ -55,7 +59,7 @@ def _spark_work(sc, since: tuple[int, int]) -> tuple[dict, tuple[int, int]]:
         work["spill_bytes"] += st.memoryBytesSpilled() + st.diskBytesSpilled()
     newest = (
         jobs.apply(0).jobId() if work["jobs"] else since[0],
-        stages.apply(0).stageId() if work["stages"] else since[1],
+        max(since[1], stages.apply(0).stageId()) if stages.size() else since[1],
     )
     return work, newest
 

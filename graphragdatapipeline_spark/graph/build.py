@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from graphragdatapipeline_spark.graph.model import PropertyGraph
 from graphragdatapipeline_spark.io import read_table
+from graphragdatapipeline_spark.text.analysis import tokens_ws
 
 
 # --- Domain derivations (artist/genre/country/release tables) -------------
@@ -207,11 +208,7 @@ def cooccurrence_graph(
     frequencies stay pre-cap exact so PMI is unbiased."""
     terms = docs.select(
         F.col(id_col).alias("_d"),
-        F.explode(
-            F.array_distinct(
-                F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != "")
-            )
-        ).alias("term"),
+        F.explode(F.array_distinct(tokens_ws(F.col(text_col)))).alias("term"),
     )
     terms = terms.localCheckpoint(eager=False)
     n_docs = docs.select(F.countDistinct(id_col).alias("n"))
@@ -268,11 +265,7 @@ def cooccurrence_index_delta(
     why the persisted state is counts."""
     terms = docs.select(
         F.col(id_col).alias("_d"),
-        F.explode(
-            F.array_distinct(
-                F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != "")
-            )
-        ).alias("term"),
+        F.explode(F.array_distinct(tokens_ws(F.col(text_col)))).alias("term"),
     ).localCheckpoint(eager=False)
     tf = terms.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n = docs.select(F.countDistinct(id_col).alias("n"))

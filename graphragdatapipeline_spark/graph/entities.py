@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graphragdatapipeline_spark.text.analysis import tokens_ws
+
 
 def candidate_pairs(
     records: DataFrame,
@@ -200,12 +202,7 @@ def resolve_entities(
     grows under a FIXED blocking cardinality."""
     from graphragdatapipeline_spark.operators.dedup import dup_cluster_assignments
 
-    toks = records.withColumn(
-        "_ts",
-        F.array_distinct(
-            F.filter(F.split(F.lower(F.col(name_col)), r"\s+"), lambda t: t != "")
-        ),
-    )
+    toks = records.withColumn("_ts", F.array_distinct(tokens_ws(F.col(name_col))))
     narrowed = toks.select(id_col, block_col, "_ts", *([size_col] if size_col else []))
     prefix_col = None
     threshold_micro = int(name_jaccard * 1_000_000)

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from graphragdatapipeline_spark.text.analysis import tokens_ws
+
 
 def fingerprint(text: Column) -> Column:
     """Normalized exact-dup fingerprint: md5 of lowercased,
@@ -65,12 +67,7 @@ def shingle_table(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> Data
     from graphragdatapipeline_spark.session import ensure_parallelism
 
     df = ensure_parallelism(df)
-    toks = df.select(
-        F.col(id_col),
-        F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != "").alias(
-            "_toks"
-        ),
-    )
+    toks = df.select(F.col(id_col), tokens_ws(F.col(text_col)).alias("_toks"))
     return toks.select(
         F.col(id_col), F.explode(word_shingles(F.col("_toks"), k)).alias("shingle")
     )
@@ -94,7 +91,7 @@ def minhash_signatures_rowwise(
     references an unmaterialized expression re-evaluates it per
     element (see word_shingles)."""
     n_salts = (num_hashes + 3) // 4
-    toks = F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != "")
+    toks = tokens_ws(F.col(text_col))
 
     # Arity matters: a 2-arg lambda is F.transform's (element, index)
     # form, so closures must come from factories, not default args.
@@ -456,12 +453,7 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 16) -> DataFr
     if bits > 60:
         raise ValueError(f"simhash: bits must be <= 60, got {bits}")
     df = ensure_parallelism(df)
-    toks = df.select(
-        F.col(id_col),
-        F.explode(
-            F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != "")
-        ).alias("tok"),
-    )
+    toks = df.select(F.col(id_col), F.explode(tokens_ws(F.col(text_col))).alias("tok"))
     nibbles = (bits + 3) // 4
     h = F.conv(F.substring(F.md5(F.col("tok")), 1, nibbles), 16, 10).cast("long")
     toks = toks.withColumn("h", h)
@@ -687,9 +679,7 @@ def positioned_shingles(
         F.filter(
             F.split(F.col(text_col), r"\s+"), lambda t: t != ""
         ).alias("_w"),
-        F.filter(
-            F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != ""
-        ).alias("_lw"),
+        tokens_ws(F.col(text_col)).alias("_lw"),
     ).withColumn("n_tokens", F.size("_lw"))
     n = F.col("n_tokens")
     lw = F.col("_lw")

@@ -11,47 +11,53 @@ from pyspark.sql import functions as F
 from graphragdatapipeline_spark import llm
 from graphragdatapipeline_spark.io import read_table
 from graphragdatapipeline_spark.operators import relational as rel
-from graphragdatapipeline_spark.registry import register
+from graphragdatapipeline_spark.registry import register, with_ctes
 
 
-# Shared by community_metadata_rollup (verbatim) and
-# graphrag_global_search (as a CTE prefix)
-_ROLLUP_ORACLE = """
-WITH members AS (
+# Shared by community_metadata_rollup and, as a CTE prefix, by the
+# community-report oracles below.
+_ROLLUP_CTES = [
+    ("members", """
   SELECT n.n_name AS community, c.c_custkey AS member_id,
          c.c_mktsegment AS segment, c.c_acctbal AS bal
   FROM customer c JOIN nation n ON c.c_nationkey = n.n_nationkey
-), seg_counts AS (
-  SELECT community, segment, count(*) AS cnt FROM members GROUP BY 1, 2
-), seg_ranked AS (
+"""),
+    ("seg_counts", "SELECT community, segment, count(*) AS cnt FROM members GROUP BY 1, 2"),
+    ("seg_ranked", """
   SELECT community, segment,
          row_number() OVER (PARTITION BY community ORDER BY cnt DESC, segment ASC) AS rn
   FROM seg_counts
-), top_segments AS (
+"""),
+    ("top_segments", """
   SELECT community, string_agg(segment, ',' ORDER BY rn) AS top_segments
   FROM seg_ranked WHERE rn <= 2 GROUP BY community
-), rep_ranked AS (
+"""),
+    ("rep_ranked", """
   SELECT community, member_id,
          row_number() OVER (PARTITION BY community ORDER BY bal DESC, member_id ASC) AS rn
   FROM members
-), reps AS (
+"""),
+    ("reps", """
   SELECT community, string_agg(CAST(member_id AS VARCHAR), ',' ORDER BY rn) AS representatives
   FROM rep_ranked WHERE rn <= 5 GROUP BY community
-), rollup_base AS (
+"""),
+    ("rollup_base", """
   SELECT community, count(*) AS member_count,
          array_to_string(list_sort(list(member_id))[1:50], ',') AS member_ids
   FROM members GROUP BY community
-)
-SELECT r.community, r.member_count, t.top_segments, p.representatives, r.member_ids
-FROM rollup_base r
-JOIN top_segments t ON r.community = t.community
-JOIN reps p ON r.community = p.community
-"""
+"""),
+]
 
 
 @register(
     "community_metadata_rollup",
-    oracle=_ROLLUP_ORACLE,
+    oracle=with_ctes(
+        _ROLLUP_CTES,
+        """SELECT r.community, r.member_count, t.top_segments, p.representatives, r.member_ids
+FROM rollup_base r
+JOIN top_segments t ON r.community = t.community
+JOIN reps p ON r.community = p.community""",
+    ),
     headline=True,
 )
 def community_metadata_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -215,39 +221,40 @@ def _scored_reports(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rollup → keyword-scored reports → ranked context blocks; the shared
 # prefix of graphrag_global_search (top-5 map stage) and
 # graphrag_context_pack (token-budgeted reduce-stage packing).
-_REPORT_CTES = (
-    _ROLLUP_ORACLE.rstrip()[: _ROLLUP_ORACLE.rstrip().rindex("SELECT r.community")]
-    + """, rollup AS (
+_REPORT_CTES = _ROLLUP_CTES + [
+    ("rollup", """
   SELECT r.community, r.member_count, t.top_segments, p.representatives
   FROM rollup_base r
   JOIN top_segments t ON r.community = t.community
   JOIN reps p ON r.community = p.community
-), scored AS (
+"""),
+    ("scored", """
   SELECT community, member_count, top_segments, representatives,
          CAST((CASE WHEN top_segments LIKE '%BUILDING%' THEN 1 ELSE 0 END)
             + (CASE WHEN top_segments LIKE '%AUTOMOBILE%' THEN 1 ELSE 0 END)
             + (CASE WHEN top_segments LIKE '%MACHINERY%' THEN 1 ELSE 0 END) AS BIGINT)
            AS relevance
   FROM rollup
-), ranked AS (
+"""),
+    ("ranked", """
   SELECT community, member_count, top_segments, relevance,
          relevance * 1000000 + member_count AS score,
          printf('Community report: %s (%d members; segments %s). Representatives: %s.',
                 community, member_count, top_segments, representatives) AS context_block
   FROM scored WHERE relevance > 0
-)"""
-)
+"""),
+]
 
 
 @register(
     "graphrag_global_search",
-    oracle=_REPORT_CTES
-    + """
-SELECT community, member_count, top_segments, relevance, context_block,
+    oracle=with_ctes(
+        _REPORT_CTES,
+        """SELECT community, member_count, top_segments, relevance, context_block,
        CAST(row_number() OVER (ORDER BY score DESC, community ASC) AS INT) AS position
 FROM ranked
-ORDER BY score DESC, community ASC LIMIT 5
-""",
+ORDER BY score DESC, community ASC LIMIT 5""",
+    ),
 )
 def graphrag_global_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GraphRAG GLOBAL search, the community-level counterpart of
@@ -284,13 +291,15 @@ def graphrag_global_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graphrag_context_pack",
-    oracle=_REPORT_CTES
-    + """, pack AS (
+    oracle=with_ctes(
+        _REPORT_CTES + [
+            ("pack", """
   SELECT community, member_count, relevance, score,
          CAST(len(list_filter(string_split(context_block, ' '), x -> x <> ''))
               AS BIGINT) AS n_tokens
   FROM ranked
-), cum AS (
+"""),
+            ("cum", """
   SELECT community, member_count, relevance, n_tokens,
          CAST(sum(n_tokens) OVER (ORDER BY score DESC, community ASC
               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
@@ -298,10 +307,11 @@ def graphrag_global_search(spark: SparkSession, sf_dir: str) -> DataFrame:
          CAST(row_number() OVER (ORDER BY score DESC, community ASC) AS INT)
            AS position
   FROM pack
-)
-SELECT community, member_count, relevance, n_tokens, cum_tokens, position
-FROM cum WHERE cum_tokens <= 100
-""",
+"""),
+        ],
+        """SELECT community, member_count, relevance, n_tokens, cum_tokens, position
+FROM cum WHERE cum_tokens <= 100""",
+    ),
 )
 def graphrag_context_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GraphRAG REDUCE-stage context assembly: the ranked community
@@ -339,48 +349,29 @@ def _graphrag_e2e_oracle() -> str:
     (recursive min-label closure) → canonical co-purchase graph →
     unrolled seeded-LPA CTEs (shared _lpa_sql builder) → community
     report rollup → keyword scoring → token-budget pack."""
-    from graphragdatapipeline_spark.registries.graph_queries import _lpa_sql
+    from graphragdatapipeline_spark.registries.graph_queries import (
+        _entity_resolution_ctes,
+        _lpa_sql,
+    )
 
     parts = [
-        # ---- stage 1: entity resolution (same replay as the
-        # graph_entity_resolution oracle: blocking on p_brand, integer
-        # Jaccard >= 0.5 + size gap <= 1, recursive min-label closure)
-        r"""recs AS (
-  SELECT p_partkey, p_brand, p_size,
-         list_distinct(list_filter(string_split_regex(lower(p_name), '\s+'),
-                                   x -> x <> '')) AS ts
-  FROM part)""",
-        """matched AS (
-  SELECT a.p_partkey AS a, b.p_partkey AS b
-  FROM recs a JOIN recs b
-    ON a.p_brand = b.p_brand AND a.p_partkey < b.p_partkey
-  WHERE len(list_intersect(a.ts, b.ts)) * 1000000
-          >= 500000 * len(list_distinct(list_concat(a.ts, b.ts)))
-    AND abs(a.p_size - b.p_size) <= 1)""",
-        "uedges AS (SELECT a AS src, b AS dst FROM matched UNION SELECT b, a FROM matched)",
-        """walk(id, label) AS (
-  SELECT src, src FROM uedges
-  UNION
-  SELECT e.dst, w.label FROM walk w JOIN uedges e ON e.src = w.id)""",
-        "comp AS (SELECT id, min(label) AS cluster_id FROM walk GROUP BY id)",
-        """allc AS (
-  SELECT p.p_partkey, coalesce(c.cluster_id, p.p_partkey) AS canonical_id
-  FROM part p LEFT JOIN comp c ON p.p_partkey = c.id)""",
-        """csize AS (SELECT canonical_id, CAST(count(*) AS BIGINT) AS cluster_size
-  FROM allc GROUP BY canonical_id)""",
-        """canon AS (
+        # ---- stage 1: entity resolution (the graph_entity_resolution
+        # oracle's replay, without its mega-block cap)
+        *_entity_resolution_ctes(),
+        ("canon", """
   SELECT s.canonical_id, cn.p_name AS canonical_name, cn.p_brand AS brand,
          s.cluster_size
-  FROM csize s JOIN part cn ON cn.p_partkey = s.canonical_id)""",
+  FROM csize s JOIN part cn ON cn.p_partkey = s.canonical_id
+"""),
         # ---- stage 2: co-purchase graph on CANONICAL ids (order =
         # basket; 64-entity mega-basket cap; min co-occurrence 2)
-        """baskets AS (SELECT DISTINCT l.l_orderkey AS ord, a.canonical_id AS ent
-  FROM lineitem l JOIN allc a ON l.l_partkey = a.p_partkey)""",
-        "kept AS (SELECT ord FROM baskets GROUP BY ord HAVING count(*) <= 64)",
-        "bk AS (SELECT b.ord, b.ent FROM baskets b JOIN kept USING (ord))",
-        """ce AS (SELECT a.ent AS src, b.ent AS dst, count(*) AS cooccur
+        ("baskets", """SELECT DISTINCT l.l_orderkey AS ord, a.canonical_id AS ent
+  FROM lineitem l JOIN allc a ON l.l_partkey = a.p_partkey"""),
+        ("kept", "SELECT ord FROM baskets GROUP BY ord HAVING count(*) <= 64"),
+        ("bk", "SELECT b.ord, b.ent FROM baskets b JOIN kept USING (ord)"),
+        ("ce", """SELECT a.ent AS src, b.ent AS dst, count(*) AS cooccur
   FROM bk a JOIN bk b USING (ord) WHERE a.ent < b.ent
-  GROUP BY 1, 2 HAVING count(*) >= 2)""",
+  GROUP BY 1, 2 HAVING count(*) >= 2"""),
     ]
     # ---- stage 3: seeded LPA, 3 supersteps, all canonical entities
     # labeled (isolated ones keep their seeded init = singletons)
@@ -389,57 +380,57 @@ def _graphrag_e2e_oracle() -> str:
     )
     parts += [
         # ---- stage 4: community reports
-        f"""members AS (SELECT l.community, c.canonical_id, c.canonical_name,
+        ("members", f"""SELECT l.community, c.canonical_id, c.canonical_name,
          c.brand, c.cluster_size
-  FROM {final} l JOIN canon c ON l.id = c.canonical_id)""",
-        "brandc AS (SELECT community, brand, count(*) AS cnt FROM members GROUP BY 1, 2)",
-        """brand_ranked AS (SELECT community, brand,
+  FROM {final} l JOIN canon c ON l.id = c.canonical_id"""),
+        ("brandc", "SELECT community, brand, count(*) AS cnt FROM members GROUP BY 1, 2"),
+        ("brand_ranked", """SELECT community, brand,
    row_number() OVER (PARTITION BY community ORDER BY cnt DESC, brand ASC) AS rn
-  FROM brandc)""",
-        """top_brands AS (SELECT community, string_agg(brand, ',' ORDER BY rn) AS top_brands
-  FROM brand_ranked WHERE rn <= 2 GROUP BY community)""",
-        """rep_ranked AS (SELECT community, canonical_name,
+  FROM brandc"""),
+        ("top_brands", """SELECT community, string_agg(brand, ',' ORDER BY rn) AS top_brands
+  FROM brand_ranked WHERE rn <= 2 GROUP BY community"""),
+        ("rep_ranked", """SELECT community, canonical_name,
    row_number() OVER (PARTITION BY community
                       ORDER BY cluster_size DESC, canonical_id ASC) AS rn
-  FROM members)""",
-        """reps AS (SELECT community, string_agg(canonical_name, ', ' ORDER BY rn)
+  FROM members"""),
+        ("reps", """SELECT community, string_agg(canonical_name, ', ' ORDER BY rn)
           AS representatives
-  FROM rep_ranked WHERE rn <= 3 GROUP BY community)""",
-        """base AS (SELECT community, CAST(count(*) AS BIGINT) AS member_count,
-   CAST(sum(cluster_size) AS BIGINT) AS mention_count FROM members GROUP BY community)""",
-        """report AS (SELECT b.community, b.member_count, b.mention_count,
+  FROM rep_ranked WHERE rn <= 3 GROUP BY community"""),
+        ("base", """SELECT community, CAST(count(*) AS BIGINT) AS member_count,
+   CAST(sum(cluster_size) AS BIGINT) AS mention_count FROM members GROUP BY community"""),
+        ("report", """SELECT b.community, b.member_count, b.mention_count,
          t.top_brands, r.representatives
-  FROM base b JOIN top_brands t USING (community) JOIN reps r USING (community))""",
+  FROM base b JOIN top_brands t USING (community) JOIN reps r USING (community)"""),
         # ---- stage 5: global search (keyword relevance over the
         # representative part names)
-        """scored AS (SELECT *,
+        ("scored", """SELECT *,
    CAST((CASE WHEN representatives LIKE '%green%' THEN 1 ELSE 0 END)
       + (CASE WHEN representatives LIKE '%blue%' THEN 1 ELSE 0 END)
       + (CASE WHEN representatives LIKE '%ivory%' THEN 1 ELSE 0 END) AS BIGINT)
      AS relevance
-  FROM report)""",
-        """ranked AS (SELECT community, member_count, mention_count, relevance,
+  FROM report"""),
+        ("ranked", """SELECT community, member_count, mention_count, relevance,
    relevance * 1000000 + mention_count AS score,
    printf('Community %d: %d entities (%d mentions; brands %s). Key parts: %s.',
           community, member_count, mention_count, top_brands, representatives)
      AS context_block
-  FROM scored WHERE relevance > 0)""",
+  FROM scored WHERE relevance > 0"""),
         # ---- stage 6: token-budgeted context pack
-        """pack AS (SELECT *,
+        ("pack", """SELECT *,
    CAST(len(list_filter(string_split(context_block, ' '), x -> x <> '')) AS BIGINT)
      AS n_tokens
-  FROM ranked)""",
-        """cum AS (SELECT community, member_count, mention_count, relevance, n_tokens,
+  FROM ranked"""),
+        ("cum", """SELECT community, member_count, mention_count, relevance, n_tokens,
    context_block,
    CAST(sum(n_tokens) OVER (ORDER BY score DESC, community ASC
         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tokens,
    CAST(row_number() OVER (ORDER BY score DESC, community ASC) AS INT) AS position
-  FROM pack)""",
+  FROM pack"""),
     ]
-    return (
-        "WITH RECURSIVE " + ",\n".join(parts)
-        + "\nSELECT community, member_count, mention_count, relevance, n_tokens,"
-        " cum_tokens, position, context_block FROM cum WHERE cum_tokens <= 400"
+    return with_ctes(
+        parts,
+        "SELECT community, member_count, mention_count, relevance, n_tokens,"
+        " cum_tokens, position, context_block FROM cum WHERE cum_tokens <= 400",
     )
 
 

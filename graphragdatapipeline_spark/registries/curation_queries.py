@@ -13,7 +13,20 @@ from pyspark.sql import functions as F
 
 from graphragdatapipeline_spark.io import read_table
 from graphragdatapipeline_spark.operators import curation as cu
-from graphragdatapipeline_spark.registry import osql_round, register
+from graphragdatapipeline_spark.registry import osql_round, register, with_ctes
+from graphragdatapipeline_spark.registries.dedup_oracles import (
+    BANDS,
+    MAX_BUCKET,
+    MEGA_DROPS,
+    NUM_HASHES,
+    SUBSTRING_SELECT,
+    WORD_SHINGLES,
+    _shingle_ctes,
+    _substring_ctes,
+    _unigram_lm_ctes,
+    _verified_flow_ctes,
+    ws_tokens,
+)
 from graphragdatapipeline_spark.text import analysis as ta
 
 # DuckDB twin of curation.hash_bucket: first 8 md5 nibbles of the
@@ -125,29 +138,20 @@ def curation_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "curation_decontaminate",
-    oracle=r"""
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS w
-  FROM documents
-), sh AS (
-  SELECT doc_id, unnest(list_distinct(
-    CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
-         ELSE list_transform(generate_series(1, len(w) - 2),
-              i -> concat_ws(' ', w[i], w[i+1], w[i+2])) END)) AS shingle
-  FROM toks
-), bench AS (
-  SELECT DISTINCT shingle FROM sh WHERE doc_id % 97 = 0
-), shared AS (
+    oracle=with_ctes(
+        _shingle_ctes() + [
+            ("bench", "SELECT DISTINCT shingle FROM sh WHERE doc_id % 97 = 0"),
+            ("shared", """
   SELECT s.doc_id, count(DISTINCT s.shingle) AS shared_shingles
   FROM sh s JOIN bench USING (shingle)
   GROUP BY 1
-)
-SELECT d.doc_id,
+"""),
+        ],
+        """SELECT d.doc_id,
        COALESCE(x.shared_shingles, 0) AS shared_shingles,
        COALESCE(x.shared_shingles, 0) >= 2 AS contaminated
-FROM documents d LEFT JOIN shared x USING (doc_id)
-""",
+FROM documents d LEFT JOIN shared x USING (doc_id)""",
+    ),
 )
 def curation_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flag documents sharing >=2 distinct 3-gram shingles with a
@@ -163,28 +167,28 @@ def curation_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_REP_ORACLE = f"""
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '') AS w
-  FROM documents
-), tc AS (
+_REP_ORACLE = with_ctes(
+    [
+        ("toks", f"SELECT doc_id, {ws_tokens()} AS w FROM documents"),
+        ("tc", """
   SELECT doc_id, t, count(*) AS c
   FROM (SELECT doc_id, unnest(w) AS t FROM toks) GROUP BY 1, 2
-), ts AS (
+"""),
+        ("ts", """
   SELECT doc_id, sum(c) AS n_tokens, count(*) AS n_distinct_tokens,
          max(c) AS top_token_count
   FROM tc GROUP BY 1
-), bc AS (
+"""),
+        ("bc", """
   SELECT doc_id, b, count(*) AS c
   FROM (SELECT doc_id,
                unnest(list_transform(generate_series(1, len(w) - 1),
                       i -> w[i] || ' ' || w[i+1])) AS b
         FROM toks) GROUP BY 1, 2
-), bs AS (
-  SELECT doc_id, max(c) AS top_bigram_count FROM bc GROUP BY 1
-)
-SELECT d.doc_id,
+"""),
+        ("bs", "SELECT doc_id, max(c) AS top_bigram_count FROM bc GROUP BY 1"),
+    ],
+    f"""SELECT d.doc_id,
        CAST(COALESCE(ts.n_tokens, 0) AS BIGINT) AS n_tokens,
        CAST(COALESCE(ts.n_distinct_tokens, 0) AS BIGINT) AS n_distinct_tokens,
        {osql_round('COALESCE(ts.n_distinct_tokens, 0) / greatest(COALESCE(ts.n_tokens, 1), 1)', 4)} AS distinct_frac,
@@ -192,8 +196,8 @@ SELECT d.doc_id,
        {osql_round('COALESCE(bs.top_bigram_count, 0) / greatest(COALESCE(ts.n_tokens, 1) - 1, 1)', 4)} AS top_bigram_frac
 FROM documents d
 LEFT JOIN ts ON d.doc_id = ts.doc_id
-LEFT JOIN bs ON d.doc_id = bs.doc_id
-"""
+LEFT JOIN bs ON d.doc_id = bs.doc_id""",
+)
 
 
 @register("curation_repetition_stats", oracle=_REP_ORACLE)
@@ -276,47 +280,12 @@ def curation_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _qf_oracle(src: str = "documents") -> str:
-    """Gopher rule-gate oracle over table/CTE `src` — source is a
-    parameter so the composed-pipeline oracle can re-source it without
-    post-hoc string replacement (round-10 advice)."""
-    return rf"""
-WITH f AS (
-  SELECT doc_id,
-    len(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> ''))
-      AS n_tokens,
-    length(regexp_replace(text, '\s', '', 'g')) /
-      greatest(len(list_filter(string_split_regex(lower(text), '\s+'),
-                               x -> x <> '')), 1) AS mean_word_len,
-    len(list_filter(string_split_regex(lower(text), '\s+'),
-        x -> list_contains(['the','a','and','of','to','in','is'], x))) /
-      greatest(len(list_filter(string_split_regex(lower(text), '\s+'),
-                               x -> x <> '')), 1) AS stopword_ratio
-  FROM {src}
-), r AS (
-  SELECT doc_id, n_tokens,
-         list_filter([
-           CASE WHEN n_tokens < 30 THEN 'too_short' END,
-           CASE WHEN mean_word_len > 5.0 THEN 'long_words' END,
-           CASE WHEN stopword_ratio < 0.02 THEN 'low_stopword' END
-         ], x -> x IS NOT NULL) AS failed
-  FROM f
-)
-SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
-       len(failed) = 0 AS keep,
-       COALESCE(array_to_string(failed, ','), '') AS fail_reasons
-FROM r
-"""
-
-
-_QF_ORACLE = _qf_oracle()
-
-
-def _clf_oracle(
+def _clf_ctes(
     iters: int = 25, lr: float = 1.0, src: str = "documents"
-) -> str:
+) -> list[tuple[str, str]]:
     """Unrolled SQL replay of curation.quality_classifier's full-batch
-    quantized gradient descent: features centered on exact-integer
+    quantized gradient descent over table/CTE `src` (_CLF_SELECT reads
+    it): the Gopher rule-gate features, centered on exact-integer
     corpus means, per-iteration sigmoid 6-dp quantized, every per-row
     gradient term floored to int64 micro-units and summed exactly
     (order-independent), each weight one double update re-quantized to
@@ -335,23 +304,15 @@ def _clf_oracle(
         return dr(f"1.0 / (1.0 + exp(-({z})))")
 
     xs = ["1.0", "x1", "x2", "x3"]
-    head = (
-        r"""
-WITH f AS (
-  SELECT doc_id,
-    len(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> ''))
-      AS n_tokens,
-    length(regexp_replace(text, '\s', '', 'g')) /
-      greatest(len(list_filter(string_split_regex(lower(text), '\s+'),
-                               x -> x <> '')), 1) AS mean_word_len,
-    len(list_filter(string_split_regex(lower(text), '\s+'),
-        x -> list_contains(['the','a','and','of','to','in','is'], x))) /
-      greatest(len(list_filter(string_split_regex(lower(text), '\s+'),
-                               x -> x <> '')), 1) AS stopword_ratio
-  FROM """
-        + src
-        + r"""
-), r AS (
+    ctes = [
+        ("f", rf"""
+  SELECT doc_id, len(w) AS n_tokens,
+    length(regexp_replace(text, '\s', '', 'g')) / greatest(len(w), 1) AS mean_word_len,
+    len(list_filter(w, x -> list_contains(['the','a','and','of','to','in','is'], x))) /
+      greatest(len(w), 1) AS stopword_ratio
+  FROM (SELECT doc_id, text, {ws_tokens()} AS w FROM {src})
+"""),
+        ("r", """
   SELECT doc_id, n_tokens, mean_word_len, stopword_ratio,
          list_filter([
            CASE WHEN n_tokens < 30 THEN 'too_short' END,
@@ -359,81 +320,66 @@ WITH f AS (
            CASE WHEN stopword_ratio < 0.02 THEN 'low_stopword' END
          ], x -> x IS NOT NULL) AS failed
   FROM f
-), feats0 AS MATERIALIZED (
+"""),
+        ("feats0", f"""
   SELECT doc_id,
          CAST(n_tokens AS BIGINT) AS n_tokens,
          len(failed) = 0 AS keep,
          COALESCE(array_to_string(failed, ','), '') AS fail_reasons,
          n_tokens / 100.0 AS r1,
-         """
-        + dr("mean_word_len")
-        + """ AS r2,
-         """
-        + dr("stopword_ratio")
-        + """ AS r3,
+         {dr("mean_word_len")} AS r2,
+         {dr("stopword_ratio")} AS r3,
          CASE WHEN len(failed) = 0 THEN 1.0 ELSE 0.0 END AS y
   FROM r
-), m AS MATERIALIZED (
+"""),
+        ("m", """
   SELECT CAST(count(*) AS BIGINT) AS n,
          CAST(sum(CAST(floor(r1 * 1000000.0 + 0.5) AS BIGINT)) AS BIGINT) AS s1,
          CAST(sum(CAST(floor(r2 * 1000000.0 + 0.5) AS BIGINT)) AS BIGINT) AS s2,
          CAST(sum(CAST(floor(r3 * 1000000.0 + 0.5) AS BIGINT)) AS BIGINT) AS s3
   FROM feats0
-), feats AS MATERIALIZED (
+"""),
+        ("feats", f"""
   SELECT f0.doc_id, f0.n_tokens, f0.keep, f0.fail_reasons, f0.y,
-         f0.r1 - ("""
-        + dr("m.s1 / (m.n * 1000000.0)")
-        + """) AS x1,
-         f0.r2 - ("""
-        + dr("m.s2 / (m.n * 1000000.0)")
-        + """) AS x2,
-         f0.r3 - ("""
-        + dr("m.s3 / (m.n * 1000000.0)")
-        + """) AS x3
+         f0.r1 - ({dr("m.s1 / (m.n * 1000000.0)")}) AS x1,
+         f0.r2 - ({dr("m.s2 / (m.n * 1000000.0)")}) AS x2,
+         f0.r3 - ({dr("m.s3 / (m.n * 1000000.0)")}) AS x3
   FROM feats0 f0 CROSS JOIN m
-), w0c AS MATERIALIZED (
-  SELECT 0.0 AS w0, 0.0 AS w1, 0.0 AS w2, 0.0 AS w3
-)"""
-    )
-    parts = [head]
+"""),
+        ("w0c", "SELECT 0.0 AS w0, 0.0 AS w1, 0.0 AS w2, 0.0 AS w3"),
+    ]
     for t in range(1, iters + 1):
         gs = ",\n         ".join(
-            "CAST(sum(CAST(floor((s - y) * "
-            + x
-            + f" * 1000000.0 + 0.5) AS BIGINT)) AS BIGINT) AS g{j}"
+            f"CAST(sum(CAST(floor((s - y) * {x} * 1000000.0 + 0.5) AS BIGINT)) AS BIGINT) AS g{j}"
             for j, x in enumerate(xs)
         )
         ws = ",\n         ".join(
-            dr(f"w{t-1}c.w{j} - {lr} * it{t}.g{j} / (it{t}.n * 1000000.0)")
-            + f" AS w{j}"
+            dr(f"w{t-1}c.w{j} - {lr} * it{t}.g{j} / (it{t}.n * 1000000.0)") + f" AS w{j}"
             for j in range(4)
         )
-        parts.append(
-            f""", it{t} AS MATERIALIZED (
+        ctes.append((f"it{t}", f"""
   SELECT CAST(count(*) AS BIGINT) AS n,
          {gs}
   FROM (SELECT y, x1, x2, x3, {sig(f'w{t-1}c')} AS s
         FROM feats CROSS JOIN w{t-1}c)
-), w{t}c AS MATERIALIZED (
-  SELECT {ws}
-  FROM w{t-1}c CROSS JOIN it{t}
-)"""
-        )
-    parts.append(
-        f""", scored AS MATERIALIZED (
+"""))
+        ctes.append((f"w{t}c", f"\n  SELECT {ws}\n  FROM w{t-1}c CROSS JOIN it{t}\n"))
+    ctes.append(("scored", f"""
   SELECT feats.*,
          CAST(floor(({sig(f'w{iters}c')}) * 1000000.0 + 0.5) AS BIGINT) AS sm
   FROM feats CROSS JOIN w{iters}c
-), tot AS MATERIALIZED (
+"""))
+    ctes.append(("tot", """
   SELECT CAST(sum(sm) AS BIGINT) AS t, CAST(count(*) AS BIGINT) AS c
   FROM scored
-)
-SELECT doc_id, n_tokens, keep, fail_reasons,
+"""))
+    return ctes
+
+
+_CLF_SELECT = """SELECT doc_id, n_tokens, keep, fail_reasons,
        sm / 1000000.0 AS clf_score,
        sm * c >= t AS clf_keep
 FROM scored CROSS JOIN tot"""
-    )
-    return "".join(parts)
 
 
 # RETIRED round 10 (rotation budget): `curation_quality_filter` — its
@@ -442,11 +388,13 @@ FROM scored CROSS JOIN tot"""
 # re-emits those columns bit-identically and adds the trained score,
 # so the swap loses zero evidence (the dedup_substring_duprate →
 # dedup_substring_removal rule). The quality_filter OPERATOR stays —
-# it is a stage of curation_end_to_end and keeps its oracle text
-# (_QF_ORACLE) spliced there, plus tests/test_curation.py coverage.
+# it is a stage of curation_end_to_end, whose oracle replays it inside
+# _clf_ctes, plus tests/test_curation.py coverage.
 
 
-@register("curation_quality_classifier", oracle=_clf_oracle())
+@register(
+    "curation_quality_classifier", oracle=with_ctes(_clf_ctes(), _CLF_SELECT)
+)
 def curation_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRAINED quality gate (the fastText-style rung above rule
     gates): logistic regression over corpus-mean-centered Gopher
@@ -543,43 +491,45 @@ _DSIR_NIB = (
 
 @register(
     "curation_dsir_weights",
-    oracle=rf"""
-WITH toks AS (
-  SELECT doc_id, lang,
-         list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS w
-  FROM documents
-), feats AS (
+    oracle=with_ctes(
+        [
+            ("toks", f"SELECT doc_id, lang, {ws_tokens()} AS w\n  FROM documents"),
+            ("feats", """
   SELECT doc_id, (lang = 'en') AS tgt,
          unnest(w || list_transform(generate_series(1, len(w) - 1),
                                     i -> concat_ws(' ', w[i], w[i+1]))) AS f
   FROM toks
-), cells AS (
+"""),
+            ("cells", f"""
   SELECT doc_id, tgt, ({_DSIR_NIB}) % 64 AS cell
   FROM (SELECT doc_id, tgt, md5(f) AS h FROM feats)
-), model AS (
+"""),
+            ("model", """
   SELECT cell,
          CAST(sum(CASE WHEN tgt THEN 1 ELSE 0 END) AS BIGINT) AS ct,
          CAST(count(*) AS BIGINT) AS cr
   FROM cells GROUP BY cell
-), tot AS (
-  SELECT CAST(sum(ct) AS BIGINT) AS Nt, CAST(sum(cr) AS BIGINT) AS Nr FROM model
-), llr AS (
+"""),
+            ("tot", "SELECT CAST(sum(ct) AS BIGINT) AS Nt, CAST(sum(cr) AS BIGINT) AS Nr FROM model"),
+            ("llr", """
   SELECT m.cell,
          CAST(floor((ln(2 * m.ct + 1) - ln(2 * t.Nt + 64)
                      - ln(2 * m.cr + 1) + ln(2 * t.Nr + 64)) * 1000000 + 0.5)
               AS BIGINT) AS lq
   FROM model m CROSS JOIN tot t
-), per AS (
+"""),
+            ("per", """
   SELECT c.doc_id, CAST(count(*) AS BIGINT) AS n_features,
          CAST(sum(l.lq) AS BIGINT) AS s
   FROM cells c JOIN llr l USING (cell)
   GROUP BY c.doc_id
-)
-SELECT doc_id, n_features,
+"""),
+        ],
+        """SELECT doc_id, n_features,
        floor((s / 1000000.0) * 1000000 + 0.5) / 1000000.0 AS log_ratio,
        (s > 0) AS target_like
-FROM per
-""",
+FROM per""",
+    ),
 )
 def curation_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR importance weighting (Xie et al. 2023): hashed
@@ -597,45 +547,30 @@ def curation_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "curation_perplexity_buckets",
-    oracle=r"""
-WITH toks AS (
-  SELECT doc_id,
-         unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS tok
-  FROM documents
-), cnt AS (
-  SELECT tok, count(*) AS c FROM toks GROUP BY tok
-), corpus AS (
-  SELECT CAST(sum(c) AS BIGINT) AS N, CAST(count(*) AS BIGINT) AS V FROM cnt
-), tl AS (
-  SELECT t.doc_id,
-         CAST(floor((ln(2 * c.c + 1) - ln(2 * corpus.N + corpus.V)) * 1000000 + 0.5)
-              AS BIGINT) AS lq
-  FROM toks t JOIN cnt c USING (tok) CROSS JOIN corpus
-), per AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-         CAST(sum(lq) AS BIGINT) AS sum_lq
-  FROM tl GROUP BY doc_id
-), ce AS (
+    oracle=with_ctes(
+        _unigram_lm_ctes() + [
+            ("ce", """
   SELECT doc_id,
          floor((-sum_lq / (n_tokens * 1000000.0)) * 1000000 + 0.5) / 1000000.0
            AS cross_entropy
   FROM per
-), th AS (
-  SELECT quantile_cont(cross_entropy, [1.0/3, 2.0/3]) AS t FROM ce
-), b AS (
+"""),
+            ("th", "SELECT quantile_cont(cross_entropy, [1.0/3, 2.0/3]) AS t FROM ce"),
+            ("b", """
   SELECT c.doc_id, c.cross_entropy,
          CASE WHEN c.cross_entropy <= th.t[1] THEN 'head'
               WHEN c.cross_entropy <= th.t[2] THEN 'middle'
               ELSE 'tail' END AS bucket,
          (('0x' || substr(md5(concat('ppl|', CAST(c.doc_id AS VARCHAR))), 1, 8))::BIGINT % 10000) AS h
   FROM ce c CROSS JOIN th
-)
-SELECT doc_id, bucket, cross_entropy
+"""),
+        ],
+        """SELECT doc_id, bucket, cross_entropy
 FROM b
 WHERE bucket = 'head'
    OR (bucket = 'middle' AND h < 5000)
-   OR (bucket = 'tail' AND h < 1000)
-""",
+   OR (bucket = 'tail' AND h < 1000)""",
+    ),
 )
 def curation_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet perplexity bucketing end-to-end (Wenzek et al. 2020): the
@@ -665,23 +600,24 @@ def curation_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "curation_temperature_sampling",
-    oracle="""
-WITH cnt AS (
-  SELECT lang, CAST(count(*) AS BIGINT) AS n FROM documents GROUP BY lang
-), sq AS (
+    oracle=with_ctes(
+        [
+            ("cnt", "SELECT lang, CAST(count(*) AS BIGINT) AS n FROM documents GROUP BY lang"),
+            ("sq", """
   SELECT lang, n,
          CAST(floor(power(CAST(n AS DOUBLE), 0.7) * 1000000 + 0.5) AS BIGINT) AS s
   FROM cnt
-), tot AS (
-  SELECT CAST(sum(s) AS BIGINT) AS stot FROM sq
-), thr AS (
+"""),
+            ("tot", "SELECT CAST(sum(s) AS BIGINT) AS stot FROM sq"),
+            ("thr", """
   SELECT lang, least(CAST(10000 AS BIGINT), (2500000 * s) // (stot * n)) AS thr
   FROM sq CROSS JOIN tot
-)
-SELECT d.doc_id, d.lang
+"""),
+        ],
+        """SELECT d.doc_id, d.lang
 FROM documents d JOIN thr t ON d.lang = t.lang
-WHERE (('0x' || substr(md5(concat('temp|', CAST(d.doc_id AS VARCHAR))), 1, 8))::BIGINT % 10000) < t.thr
-""",
+WHERE (('0x' || substr(md5(concat('temp|', CAST(d.doc_id AS VARCHAR))), 1, 8))::BIGINT % 10000) < t.thr""",
+    ),
 )
 def curation_temperature_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-based language rebalancing (XLM-R / mT5 sampling,
@@ -715,18 +651,11 @@ def _e2e_oracle() -> str:
     → hash split → offset packing by cleaned-char budget. Every
     fragment is the already-green per-stage oracle builder called
     with src=<survivor CTE> (no post-hoc string replacement — the
-    round-10 advice); only the stage wiring is new."""
-    from graphragdatapipeline_spark.registries.dedup_oracles import (
-        MAX_BUCKET,
-        _substring_oracle,
-        _verified_flow_ctes,
-    )
-
-    neardup = _verified_flow_ctes(0.2, MAX_BUCKET, src="d1")
-    sub_stmt = _substring_oracle(src="d2")
-    clf_stmt = _clf_oracle(25, 1.0, src="d3")
-    return rf"""
-WITH exact_keep AS (
+    round-10 advice), its CTEs spliced into one WITH clause; only the
+    stage wiring is new."""
+    return with_ctes(
+        [
+            ("exact_keep", r"""
   SELECT doc_id FROM (
     SELECT doc_id,
            row_number() OVER (
@@ -735,70 +664,54 @@ WITH exact_keep AS (
            ) AS rn
     FROM documents
   ) WHERE rn = 1
-), d1 AS (
-  SELECT d.* FROM documents d JOIN exact_keep USING (doc_id)
-), {neardup}, mega_drops AS (
-  SELECT DISTINCT b.doc_id
-  FROM bands_all b
-  JOIN (
-    SELECT band_idx, band_hash, min(doc_id) AS rep
-    FROM bands_all GROUP BY 1, 2 HAVING count(*) > {MAX_BUCKET}
-  ) m USING (band_idx, band_hash)
-  WHERE b.doc_id <> m.rep
-), d2 AS (
+"""),
+            ("d1", "SELECT d.* FROM documents d JOIN exact_keep USING (doc_id)"),
+            *_verified_flow_ctes(src="d1"),
+            ("mega_drops", MEGA_DROPS),
+            ("d2", """
   SELECT d.* FROM d1 d
   WHERE NOT EXISTS (SELECT 1 FROM verified v WHERE v.b = d.doc_id)
     AND NOT EXISTS (SELECT 1 FROM mega_drops md WHERE md.doc_id = d.doc_id)
-), subq AS (
-  {sub_stmt}
-), d3 AS (
+"""),
+            *_substring_ctes(src="d2"),
+            ("subq", SUBSTRING_SELECT),
+            ("d3", """
   SELECT d.doc_id, d.lang, s.cleaned_text AS text
   FROM d2 d JOIN subq s USING (doc_id)
-), clfq AS (
-  {clf_stmt}
-), d4 AS (
+"""),
+            *_clf_ctes(25, 1.0, src="d3"),
+            ("clfq", _CLF_SELECT),
+            ("d4", """
   SELECT d.doc_id, d.lang, d.text, c.n_tokens, c.clf_score
   FROM d3 d JOIN clfq c USING (doc_id)
   WHERE c.clf_keep
-), btoks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS w
-  FROM documents WHERE doc_id % 97 = 0
-), bench AS (
-  SELECT DISTINCT unnest(list_distinct(
-    CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
-         ELSE list_transform(generate_series(1, len(w) - 2),
-              i -> concat_ws(' ', w[i], w[i+1], w[i+2])) END)) AS shingle
-  FROM btoks
-), dtoks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS w
-  FROM d4
-), dsh AS (
-  SELECT doc_id, unnest(list_distinct(
-    CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
-         ELSE list_transform(generate_series(1, len(w) - 2),
-              i -> concat_ws(' ', w[i], w[i+1], w[i+2])) END)) AS shingle
-  FROM dtoks
-), shared AS (
+"""),
+            ("btoks", f"SELECT doc_id, {ws_tokens()} AS w\n  FROM documents WHERE doc_id % 97 = 0"),
+            ("bench", f"SELECT DISTINCT unnest({WORD_SHINGLES}) AS shingle\n  FROM btoks"),
+            ("dtoks", f"SELECT doc_id, {ws_tokens()} AS w FROM d4"),
+            ("dsh", f"SELECT doc_id, unnest({WORD_SHINGLES}) AS shingle\n  FROM dtoks"),
+            ("shared", """
   SELECT s.doc_id, count(DISTINCT s.shingle) AS shared_shingles
   FROM dsh s
   JOIN bench b USING (shingle)
   GROUP BY 1
-), d5 AS (
+"""),
+            ("d5", """
   SELECT d.* FROM d4 d LEFT JOIN shared x USING (doc_id)
   WHERE coalesce(x.shared_shingles, 0) < 2
-), d6 AS (
+"""),
+            ("d6", f"""
   SELECT d.*,
          CASE WHEN {_BUCKET_SQL} < 1000 THEN 'test' ELSE 'train' END AS split
   FROM d5 d
-)
-SELECT doc_id, lang, split, n_tokens, clf_score,
+"""),
+        ],
+        """SELECT doc_id, lang, split, n_tokens, clf_score,
        CAST(floor((sum(length(text)) OVER w - length(text)) / 4000.0) AS BIGINT) AS seq_index,
        CAST((sum(length(text)) OVER w - length(text)) % 4000 AS BIGINT) AS seq_offset
 FROM d6
-WINDOW w AS (PARTITION BY lang ORDER BY doc_id ROWS UNBOUNDED PRECEDING)
-"""
+WINDOW w AS (PARTITION BY lang ORDER BY doc_id ROWS UNBOUNDED PRECEDING)""",
+    )
 
 
 @register("curation_end_to_end", oracle=_e2e_oracle())
@@ -837,11 +750,6 @@ def curation_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the final pack, and without the cut Catalyst re-derives the
     exact+neardup+substring subtree per consumer."""
     from graphragdatapipeline_spark.operators import dedup as dd
-    from graphragdatapipeline_spark.registries.dedup_oracles import (
-        BANDS,
-        MAX_BUCKET,
-        NUM_HASHES,
-    )
     from graphragdatapipeline_spark.session import ensure_parallelism
 
     d = read_table(spark, sf_dir, "documents")

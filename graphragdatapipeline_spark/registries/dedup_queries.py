@@ -10,22 +10,27 @@ from pyspark.sql import functions as F
 
 from graphragdatapipeline_spark.io import read_table
 from graphragdatapipeline_spark.operators import dedup as dd
-from graphragdatapipeline_spark.registry import register
-from graphragdatapipeline_spark.registries.dedup_oracles import (  # noqa: F401
+from graphragdatapipeline_spark.registry import register, with_ctes
+from graphragdatapipeline_spark.registries.dedup_oracles import (
     BANDS,
     MAX_BUCKET,
+    MEGA_DROPS,
+    MINHASH_PAIRS,
     NUM_HASHES,
-    _ROWS,
-    _SHINGLES_CTE,
-    _minhash_oracle,
-    _substring_oracle,
+    SUBSTRING_SELECT,
+    _components_ctes,
+    _minhash_ctes,
+    _shingle_ctes,
+    _substring_ctes,
+    _unigram_lm_ctes,
     _verified_flow_ctes,
+    ws_tokens,
 )
 from graphragdatapipeline_spark.session import ensure_parallelism
 
 
-def _simhash_oracle(bits: int = 16) -> str:
-    """Fingerprint replay at any width ≤ 60: decode the first
+def _simhash_ctes(bits: int = 16) -> list[tuple[str, str]]:
+    """Fingerprint replay (`fps`) at any width ≤ 60: decode the first
     ⌈bits/4⌉ md5 hex chars to a BIGINT exactly like the engine's
     conv(substring(md5, 1, n), 16, 10) — per-nibble strpos decode,
     place values as exact integer literals (16^14 < 2^63)."""
@@ -41,21 +46,13 @@ def _simhash_oracle(bits: int = 16) -> str:
         for b in range(bits)
     )
     fp = " + ".join(f"(CASE WHEN v{b} > 0 THEN {2**b} ELSE 0 END)" for b in range(bits))
-    return rf"""
-WITH tok AS (
-  SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS t
-  FROM documents
-), hashed AS (
-  SELECT doc_id, md5(t) AS h FROM tok
-), hv AS (
-  SELECT doc_id, {nib} AS hv FROM hashed
-), voted AS (
-  SELECT doc_id,
-         {votes}
-  FROM hv GROUP BY doc_id
-)
-SELECT doc_id, CAST({fp} AS BIGINT) AS simhash FROM voted
-"""
+    return [
+        ("tok", f"SELECT doc_id, unnest({ws_tokens()}) AS t\n  FROM documents"),
+        ("hashed", "SELECT doc_id, md5(t) AS h FROM tok"),
+        ("hv", f"SELECT doc_id, {nib} AS hv FROM hashed"),
+        ("voted", f"SELECT doc_id,\n         {votes}\n  FROM hv GROUP BY doc_id"),
+        ("fps", f"SELECT doc_id, CAST({fp} AS BIGINT) AS simhash FROM voted"),
+    ]
 
 
 @register(
@@ -77,7 +74,9 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.exact_dedup(d, "doc_id", "text").select("doc_id", "lang")
 
 
-@register("dedup_minhash_lsh", oracle=_minhash_oracle(), headline=True)
+@register(
+    "dedup_minhash_lsh", oracle=with_ctes(_minhash_ctes(), MINHASH_PAIRS), headline=True
+)
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup candidate pairs: shingle → 16 md5 minhashes
     → 4 bands → bucket join. The oracle replays the identical pipeline
@@ -89,29 +88,32 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "dedup_ngram_jaccard",
-    oracle=f"""
-WITH {_SHINGLES_CTE},
-sizes AS (
-  SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id
-), keep_sh AS (
-  SELECT shingle FROM sh GROUP BY shingle HAVING count(*) <= 32
-), shc AS (
-  SELECT sh.doc_id, sh.shingle FROM sh JOIN keep_sh USING (shingle)
-), common AS (
+# Shingle-sharing pairs under the max_posting=32 stop-shingle cap,
+# with pre-cap shingle-set sizes: the ngram_jaccard/containment input.
+_PAIR_CTES = _shingle_ctes() + [
+    ("sizes", "SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id"),
+    ("keep_sh", "SELECT shingle FROM sh GROUP BY shingle HAVING count(*) <= 32"),
+    ("shc", "SELECT sh.doc_id, sh.shingle FROM sh JOIN keep_sh USING (shingle)"),
+    ("common", """
   SELECT a.doc_id AS a, b.doc_id AS b, count(*) AS common
   FROM shc a JOIN shc b USING (shingle)
   WHERE a.doc_id < b.doc_id
   GROUP BY 1, 2
-)
-SELECT c.a, c.b,
+"""),
+]
+
+
+@register(
+    "dedup_ngram_jaccard",
+    oracle=with_ctes(
+        _PAIR_CTES,
+        """SELECT c.a, c.b,
        floor((c.common / (sa.sz + sb.sz - c.common)) * 1000000 + 0.5) / 1000000 AS jaccard
 FROM common c
 JOIN sizes sa ON c.a = sa.doc_id
 JOIN sizes sb ON c.b = sb.doc_id
-WHERE c.common / (sa.sz + sb.sz - c.common) >= 0.08
-""",
+WHERE c.common / (sa.sz + sb.sz - c.common) >= 0.08""",
+    ),
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """n-gram Jaccard similarity pairs via inverted-index self-join
@@ -138,32 +140,23 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_containment",
-    oracle=f"""
-WITH {_SHINGLES_CTE},
-sizes AS (
-  SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id
-), keep_sh AS (
-  SELECT shingle FROM sh GROUP BY shingle HAVING count(*) <= 32
-), shc AS (
-  SELECT sh.doc_id, sh.shingle FROM sh JOIN keep_sh USING (shingle)
-), common AS (
-  SELECT a.doc_id AS a, b.doc_id AS b, count(*) AS common
-  FROM shc a JOIN shc b USING (shingle)
-  WHERE a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), both_sides AS (
+    oracle=with_ctes(
+        _PAIR_CTES + [
+            ("both_sides", """
   SELECT c.a, c.b, c.common, sa.sz AS sz_a, sb.sz AS sz_b
   FROM common c
   JOIN sizes sa ON c.a = sa.doc_id
   JOIN sizes sb ON c.b = sb.doc_id
-), directed AS (
+"""),
+            ("directed", """
   SELECT a AS src, b AS dst, common / sz_a AS containment FROM both_sides
   UNION ALL
   SELECT b AS src, a AS dst, common / sz_b AS containment FROM both_sides
-)
-SELECT src, dst, floor(containment * 1000000 + 0.5) / 1000000 AS containment
-FROM directed WHERE containment >= 0.15
-""",
+"""),
+        ],
+        """SELECT src, dst, floor(containment * 1000000 + 0.5) / 1000000 AS containment
+FROM directed WHERE containment >= 0.15""",
+    ),
 )
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Directed n-gram CONTAINMENT pairs (|S(src)∩S(dst)|/|S(src)| ≥
@@ -195,13 +188,13 @@ def _simhash_pairs_oracle(max_hamming: int = 3, bits: int = 16) -> str:
     directly with xor + bit_count over the replayed fingerprints. The
     oracle self-join is quadratic but sf0.01 is 500 docs; the ENGINE
     side stays bucketed."""
-    return f"""
-WITH fps AS ({_simhash_oracle(bits)})
-SELECT a.doc_id AS a, b.doc_id AS b,
+    return with_ctes(
+        _simhash_ctes(bits),
+        f"""SELECT a.doc_id AS a, b.doc_id AS b,
        CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
 FROM fps a JOIN fps b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.simhash, b.simhash)) <= {max_hamming}
-"""
+WHERE bit_count(xor(a.simhash, b.simhash)) <= {max_hamming}""",
+    )
 
 
 @register("dedup_simhash_pairs", oracle=_simhash_pairs_oracle(bits=60))
@@ -228,38 +221,14 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.simhash_near_dups(fps, "doc_id", max_hamming=3, bits=60)
 
 
-def _dedup_corpus_verified_oracle(
-    threshold: float = 0.2, max_bucket: int | None = None
-) -> str:
-    """The full production near-dup flow in SQL: LSH candidate pairs
-    (buckets ≤ max_bucket) → exact-Jaccard verification (joined on
-    candidates only) → drop every doc that is the larger id of any
-    verified pair; buckets ABOVE the cap are duplicate clusters and
-    resolve by keeping the min-id representative per bucket."""
-    mega = (
-        "SELECT doc_id FROM documents WHERE 1 = 0"
-        if max_bucket is None
-        else f"""SELECT DISTINCT b.doc_id
-  FROM bands_all b
-  JOIN (
-    SELECT band_idx, band_hash, min(doc_id) AS rep
-    FROM bands_all GROUP BY 1, 2 HAVING count(*) > {max_bucket}
-  ) m USING (band_idx, band_hash)
-  WHERE b.doc_id <> m.rep"""
-    )
-    return f"""
-WITH {_verified_flow_ctes(threshold, max_bucket)}, mega_drops AS (
-  {mega}
-)
-SELECT d.doc_id, d.lang FROM documents d
-WHERE NOT EXISTS (SELECT 1 FROM verified v WHERE v.b = d.doc_id)
-  AND NOT EXISTS (SELECT 1 FROM mega_drops md WHERE md.doc_id = d.doc_id)
-"""
-
-
 @register(
     "dedup_corpus_verified",
-    oracle=_dedup_corpus_verified_oracle(max_bucket=MAX_BUCKET),
+    oracle=with_ctes(
+        _verified_flow_ctes() + [("mega_drops", MEGA_DROPS)],
+        """SELECT d.doc_id, d.lang FROM documents d
+WHERE NOT EXISTS (SELECT 1 FROM verified v WHERE v.b = d.doc_id)
+  AND NOT EXISTS (SELECT 1 FROM mega_drops md WHERE md.doc_id = d.doc_id)""",
+    ),
 )
 def dedup_corpus_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production dedup flow end-to-end: MinHash-LSH candidate
@@ -303,32 +272,26 @@ def _verified_pairs_df(spark: SparkSession, sf_dir: str):
     return d, dd.jaccard_pairs(sh, "doc_id", threshold=0.2, candidates=cands)
 
 
-_CLUSTER_CTES = f"""{_verified_flow_ctes(0.2, 8)},
-uedges AS (
-  SELECT a AS src, b AS dst FROM verified
-  UNION SELECT b, a FROM verified
-), walk(id, label) AS (
-  SELECT src, src FROM uedges
-  UNION
-  SELECT e.dst, w.label FROM walk w JOIN uedges e ON e.src = w.id
-), comp AS (
-  SELECT id, min(label) AS cluster_id FROM walk GROUP BY id
-), allc AS (
+_CLUSTER_CTES = _verified_flow_ctes() + [
+    *_components_ctes("verified", "a", "b", "cluster_id"),
+    ("allc", """
   SELECT d.doc_id, coalesce(c.cluster_id, d.doc_id) AS cluster_id
   FROM documents d LEFT JOIN comp c ON d.doc_id = c.id
-), csize AS (
+"""),
+    ("csize", """
   SELECT cluster_id, CAST(count(*) AS BIGINT) AS cluster_size
   FROM allc GROUP BY cluster_id
-)"""
+"""),
+]
 
 
 @register(
     "dedup_cluster_assignments",
-    oracle=f"""
-WITH RECURSIVE {_CLUSTER_CTES}
-SELECT a.doc_id, a.cluster_id, s.cluster_size
-FROM allc a JOIN csize s USING (cluster_id)
-""",
+    oracle=with_ctes(
+        _CLUSTER_CTES,
+        """SELECT a.doc_id, a.cluster_id, s.cluster_size
+FROM allc a JOIN csize s USING (cluster_id)""",
+    ),
 )
 def dedup_cluster_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster assignments over the verified near-dup pair
@@ -347,26 +310,10 @@ def dedup_cluster_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_keep_best_by_quality",
-    oracle=f"""
-WITH RECURSIVE {_CLUSTER_CTES},
-ltoks AS (
-  SELECT doc_id,
-         unnest(list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')) AS tok
-  FROM documents
-), lcnt AS (
-  SELECT tok, count(*) AS c FROM ltoks GROUP BY tok
-), lcorpus AS (
-  SELECT CAST(sum(c) AS BIGINT) AS N, CAST(count(*) AS BIGINT) AS V FROM lcnt
-), ltl AS (
-  SELECT t.doc_id,
-         CAST(floor((ln(2 * c.c + 1) - ln(2 * lcorpus.N + lcorpus.V)) * 1000000 + 0.5)
-              AS BIGINT) AS lq
-  FROM ltoks t JOIN lcnt c USING (tok) CROSS JOIN lcorpus
-), lper AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-         CAST(sum(lq) AS BIGINT) AS sum_lq
-  FROM ltl GROUP BY doc_id
-), ranked AS (
+    oracle=with_ctes(
+        _CLUSTER_CTES + [
+            *_unigram_lm_ctes("l"),
+            ("ranked", """
   SELECT a.doc_id, a.cluster_id, s.cluster_size,
          row_number() OVER (
            PARTITION BY a.cluster_id
@@ -375,9 +322,10 @@ ltoks AS (
   FROM allc a
   JOIN csize s USING (cluster_id)
   LEFT JOIN lper p ON p.doc_id = a.doc_id
-)
-SELECT doc_id, cluster_id, cluster_size FROM ranked WHERE rn = 1
-""",
+"""),
+        ],
+        "SELECT doc_id, cluster_id, cluster_size FROM ranked WHERE rn = 1",
+    ),
 )
 def dedup_keep_best_by_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The REAL production survivor rule: keep the HIGHEST-QUALITY
@@ -422,7 +370,9 @@ def dedup_keep_best_by_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ranked.select("doc_id", "cluster_id", "cluster_size")
 
 
-@register("dedup_substring_removal", oracle=_substring_oracle())
+@register(
+    "dedup_substring_removal", oracle=with_ctes(_substring_ctes(), SUBSTRING_SELECT)
+)
 def dedup_substring_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-substring dedup with span REMOVAL (Lee et al. 2022,
     'Deduplicating Training Data Makes Language Models Better'):

@@ -9,7 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graphragdatapipeline_spark.io import read_table
-from graphragdatapipeline_spark.registry import davg, register
+from graphragdatapipeline_spark.registry import davg, register, with_ctes
 from graphragdatapipeline_spark.streaming import ops as so
 
 
@@ -257,24 +257,28 @@ def events_range_join_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_funnel_analysis",
-    oracle="""
-WITH v AS (
+    oracle=with_ctes(
+        [
+            ("v", """
   SELECT user_id, min(ts) AS t1 FROM events WHERE event_type = 'view' GROUP BY 1
-), c AS (
+"""),
+            ("c", """
   SELECT e.user_id, min(e.ts) AS t2
   FROM events e JOIN v ON e.user_id = v.user_id
     AND e.ts > v.t1 AND e.ts <= v.t1 + INTERVAL 24 HOUR
   WHERE e.event_type = 'click' GROUP BY 1
-), p AS (
+"""),
+            ("p", """
   SELECT e.user_id, min(e.ts) AS t3
   FROM events e JOIN c ON e.user_id = c.user_id
     AND e.ts > c.t2 AND e.ts <= c.t2 + INTERVAL 24 HOUR
   WHERE e.event_type = 'purchase' GROUP BY 1
-)
-SELECT 'view' AS stage, CAST(1 AS BIGINT) AS stage_idx, count(*) AS n_users FROM v
+"""),
+        ],
+        """SELECT 'view' AS stage, CAST(1 AS BIGINT) AS stage_idx, count(*) AS n_users FROM v
 UNION ALL SELECT 'click', 2, count(*) FROM c
-UNION ALL SELECT 'purchase', 3, count(*) FROM p
-""",
+UNION ALL SELECT 'purchase', 3, count(*) FROM p""",
+    ),
 )
 def events_funnel_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered funnel view -> click -> purchase: users reaching each

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from graphragdatapipeline_spark import functions as ef
 from graphragdatapipeline_spark.io import read_table
 from graphragdatapipeline_spark.operators import relational as rel
-from graphragdatapipeline_spark.registry import dround, dsum, register
+from graphragdatapipeline_spark.registry import dround, dsum, register, with_ctes
 
 
 @register(
@@ -224,19 +224,22 @@ def join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "scd2_customer_segments",
-    oracle="""
-WITH cur AS (
+    oracle=with_ctes(
+        [
+            ("cur", """
   SELECT c_custkey AS custkey, c_mktsegment AS segment,
          TIMESTAMP '1992-01-01 00:00:00' AS valid_from,
          CAST(NULL AS TIMESTAMP) AS valid_to
   FROM customer
-), upd AS (
+"""),
+            ("upd", """
   SELECT o_custkey AS custkey,
          split_part(o_orderpriority, '-', 2) AS segment,
          o_orderdate AS eff
   FROM orders
   QUALIFY row_number() OVER (PARTITION BY o_custkey ORDER BY o_orderdate DESC, o_orderkey DESC) = 1
-), merged AS (
+"""),
+            ("merged", """
   SELECT c.custkey, c.segment, c.valid_from, c.valid_to
   FROM cur c LEFT JOIN upd u ON c.custkey = u.custkey
   WHERE u.custkey IS NULL OR NOT (c.segment IS DISTINCT FROM u.segment)
@@ -248,12 +251,13 @@ WITH cur AS (
   SELECT u.custkey, u.segment, u.eff AS valid_from, CAST(NULL AS TIMESTAMP) AS valid_to
   FROM upd u LEFT JOIN cur c ON u.custkey = c.custkey
   WHERE c.custkey IS NULL OR c.segment IS DISTINCT FROM u.segment
-)
-SELECT custkey, segment,
+"""),
+        ],
+        """SELECT custkey, segment,
        CAST(floor(epoch(valid_from)) AS BIGINT) AS valid_from,
        CAST(floor(epoch(valid_to)) AS BIGINT) AS valid_to
-FROM merged
-""",
+FROM merged""",
+    ),
 )
 def scd2_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Type-2 SCD merge (extension): the customer dimension is the

@@ -8,29 +8,62 @@ from pyspark.sql import functions as F
 from graphragdatapipeline_spark.graph import algorithms as ga
 from graphragdatapipeline_spark.graph.build import build_tpch_graph
 from graphragdatapipeline_spark.io import read_table
-from graphragdatapipeline_spark.registry import register
+from graphragdatapipeline_spark.registry import register, with_ctes
+from graphragdatapipeline_spark.registries.dedup_oracles import (
+    _components_ctes,
+    ws_tokens,
+)
 
-
-@register(
-    "graph_degree_profile",
-    oracle="""
-WITH edges AS (
+# build_tpch_graph's directed edges (customer/supplier -> nation -> region).
+_TPCH_EDGES = """
   SELECT concat('C', c_custkey) AS src, concat('N', c_nationkey) AS dst FROM customer
   UNION ALL
   SELECT concat('S', s_suppkey), concat('N', s_nationkey) FROM supplier
   UNION ALL
   SELECT concat('N', n_nationkey), concat('R', n_regionkey) FROM nation
-), all_ids AS (
-  SELECT src AS id FROM edges UNION ALL SELECT dst FROM edges
-)
-SELECT id, count(*) AS degree FROM all_ids GROUP BY id HAVING count(*) >= 5
+"""
+
+
+def _copurchase_pairs(max_part: int | None = None) -> str:
+    """Canonical (lo < hi) pairs of parts that share an order, over
+    the parts below `max_part` if given."""
+    where = (
+        ""
+        if max_part is None
+        else f"\n  WHERE a.l_partkey < {max_part} AND b.l_partkey < {max_part}"
+    )
+    return f"""
+  SELECT DISTINCT least(a.l_partkey, b.l_partkey) AS lo,
+         greatest(a.l_partkey, b.l_partkey) AS hi
+  FROM lineitem a JOIN lineitem b
+    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey{where}
+"""
+
+
+# Each triangle of the canonical `pairs` once, as a < b < c.
+_TRIANGLES = """
+  SELECT ab.lo AS a, ab.hi AS b, bc.hi AS c
+  FROM pairs ab
+  JOIN pairs bc ON ab.hi = bc.lo
+  JOIN pairs ac ON ac.lo = ab.lo AND ac.hi = bc.hi
+"""
+
+
+@register(
+    "graph_degree_profile",
+    oracle=with_ctes(
+        [
+            ("edges", _TPCH_EDGES),
+            ("all_ids", "SELECT src AS id FROM edges UNION ALL SELECT dst FROM edges"),
+        ],
+        """SELECT id, count(*) AS degree FROM all_ids GROUP BY id HAVING count(*) >= 5
 UNION ALL
 SELECT 'type:IN_NATION', count(*) FROM customer
 UNION ALL
 SELECT 'type:LOCATED_IN', count(*) FROM supplier
 UNION ALL
-SELECT 'type:IN_REGION', count(*) FROM nation
-""",
+SELECT 'type:IN_REGION', count(*) FROM nation""",
+    ),
 )
 def graph_degree_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G9 + G1/A14 in one validation profile: exact vertex degree
@@ -72,20 +105,23 @@ def graph_two_hop_motif(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_transitive_closure",
-    oracle="""
-WITH RECURSIVE edges AS (
+    oracle=with_ctes(
+        [
+            ("edges", """
   SELECT p_partkey AS node, CAST(floor(p_partkey / 4) AS BIGINT) AS parent
   FROM part
   WHERE CAST(floor(p_partkey / 4) AS BIGINT) >= 1
     AND CAST(floor(p_partkey / 4) AS BIGINT) <> p_partkey
-), anc AS (
+"""),
+            ("anc", """
   SELECT node, parent AS anc FROM edges
   UNION
   SELECT a.node, e.parent AS anc
   FROM anc a JOIN edges e ON a.anc = e.node
-)
-SELECT node, anc FROM anc
-""",
+"""),
+        ],
+        "SELECT node, anc FROM anc",
+    ),
 )
 def graph_transitive_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G11 — transitive closure by iterated doubling (reference SPARQL
@@ -104,30 +140,14 @@ def graph_transitive_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_connected_components",
-    oracle="""
-WITH RECURSIVE dedges AS (
-  -- build_tpch_graph edges (customer/supplier -> nation -> region)
-  SELECT concat('C', c_custkey) AS src, concat('N', c_nationkey) AS dst FROM customer
-  UNION ALL
-  SELECT concat('S', s_suppkey), concat('N', s_nationkey) FROM supplier
-  UNION ALL
-  SELECT concat('N', n_nationkey), concat('R', n_regionkey) FROM nation
-), uedges AS (
-  SELECT src, dst FROM dedges UNION SELECT dst, src FROM dedges
-), walk(id, label) AS (
-  -- min-label propagation: label set saturates (UNION dedups over a
-  -- finite (id, label) universe), so recursion terminates at the
-  -- component closure; min(label) == smallest reachable vertex id
-  SELECT src, src FROM uedges
-  UNION
-  SELECT e.dst, w.label FROM walk w JOIN uedges e ON e.src = w.id
-), comp AS (
-  SELECT id, min(label) AS component FROM walk GROUP BY id
-), sizes AS (
-  SELECT component, count(*) AS size FROM comp GROUP BY component
-)
-SELECT size, count(*) AS n_components FROM sizes GROUP BY size
-""",
+    oracle=with_ctes(
+        [
+            ("dedges", _TPCH_EDGES),
+            *_components_ctes("dedges", "src", "dst", "component"),
+            ("sizes", "SELECT component, count(*) AS size FROM comp GROUP BY component"),
+        ],
+        "SELECT size, count(*) AS n_components FROM sizes GROUP BY size",
+    ),
 )
 def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components (Hash-Min fixpoint) over the fixture graph.
@@ -144,37 +164,40 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lpa_sql(parts: list[str], p: str, raw_edges: str, iters: int, seed: int,
-             ids_extra: str | None = None) -> str:
-    """Append the CTEs for one unrolled label-propagation run (same
-    superstep-per-CTE scheme as _pagerank_oracle) and return the name
-    of the final label CTE. Tie-break parity: the engine's
+def _lpa_sql(parts: list[tuple[str, str]], p: str, raw_edges: str, iters: int,
+             seed: int, ids_extra: str | None = None) -> str:
+    """Append the CTEs for one unrolled label-propagation run (one CTE
+    per superstep, as in _pagerank_oracle) and return the name of the
+    final label CTE. Tie-break parity: the engine's
     max_by(community, struct(votes, ~community)) is exactly
     ORDER BY votes DESC, community ASC."""
-    parts.append(
-        f"{p}sym AS MATERIALIZED (SELECT DISTINCT src, dst FROM ("
+    parts.append((
+        f"{p}sym",
+        f"SELECT DISTINCT src, dst FROM ("
         f"SELECT src, dst FROM {raw_edges} WHERE src <> dst "
-        f"UNION ALL SELECT dst AS src, src AS dst FROM {raw_edges} WHERE src <> dst))"
-    )
+        f"UNION ALL SELECT dst AS src, src AS dst FROM {raw_edges} WHERE src <> dst)",
+    ))
     ids = f"SELECT DISTINCT src AS id FROM {p}sym"
     if ids_extra:
         ids = f"SELECT DISTINCT id FROM ({ids} UNION ALL {ids_extra})"
-    parts.append(f"{p}ids AS MATERIALIZED ({ids})")
+    parts.append((f"{p}ids", ids))
     init = f"('0x' || substr(md5(CAST(id AS VARCHAR) || ':{seed}'), 1, 15))::BIGINT"
-    parts.append(f"{p}s0 AS MATERIALIZED (SELECT id, {init} AS community FROM {p}ids)")
+    parts.append((f"{p}s0", f"SELECT id, {init} AS community FROM {p}ids"))
     for i in range(iters):
         prev, nxt = f"{p}s{i}", f"{p}s{i + 1}"
-        parts.append(
-            f"{p}w{i} AS MATERIALIZED (SELECT id, community AS nc FROM ("
+        parts.append((
+            f"{p}w{i}",
+            f"SELECT id, community AS nc FROM ("
             f"SELECT e.src AS id, l.community, count(*) AS votes "
             f"FROM {p}sym e JOIN {prev} l ON e.dst = l.id GROUP BY 1, 2) "
             f"QUALIFY row_number() OVER (PARTITION BY id "
-            f"ORDER BY votes DESC, community ASC) = 1)"
-        )
-        parts.append(
-            f"{nxt} AS MATERIALIZED (SELECT l.id, COALESCE(w.nc, l.community) AS community "
-            f"FROM {prev} l LEFT JOIN {p}w{i} w USING (id))"
-        )
+            f"ORDER BY votes DESC, community ASC) = 1",
+        ))
+        parts.append((
+            nxt,
+            f"SELECT l.id, COALESCE(w.nc, l.community) AS community "
+            f"FROM {prev} l LEFT JOIN {p}w{i} w USING (id)",
+        ))
     return f"{p}s{iters}"
 
 
@@ -186,46 +209,47 @@ def _detect_communities_oracle(iters=(2, 3, 4), seed: int = 42) -> str:
     engine-portable by construction, which is what makes this exact
     replay possible."""
     parts = [
-        "dedges AS MATERIALIZED ("
-        "SELECT concat('C', c_custkey) AS src, concat('N', c_nationkey) AS dst FROM customer "
-        "UNION ALL SELECT concat('S', s_suppkey), concat('N', s_nationkey) FROM supplier "
-        "UNION ALL SELECT concat('N', n_nationkey), concat('R', n_regionkey) FROM nation)",
-        "allverts AS MATERIALIZED ("
-        "SELECT concat('C', c_custkey) AS id FROM customer "
-        "UNION ALL SELECT concat('S', s_suppkey) FROM supplier "
-        "UNION ALL SELECT concat('N', n_nationkey) FROM nation "
-        "UNION ALL SELECT concat('R', r_regionkey) FROM region)",
+        ("dedges", _TPCH_EDGES),
+        ("allverts", (
+            "SELECT concat('C', c_custkey) AS id FROM customer "
+            "UNION ALL SELECT concat('S', s_suppkey) FROM supplier "
+            "UNION ALL SELECT concat('N', n_nationkey) FROM nation "
+            "UNION ALL SELECT concat('R', r_regionkey) FROM region"
+        )),
     ]
     l0 = _lpa_sql(parts, "a", "dedges", iters[0], seed,
                   ids_extra="SELECT id FROM allverts")
-    parts.append(
-        f"g1 AS MATERIALIZED (SELECT DISTINCT x.community AS src, y.community AS dst "
+    parts.append((
+        "g1",
+        f"SELECT DISTINCT x.community AS src, y.community AS dst "
         f"FROM dedges e JOIN {l0} x ON e.src = x.id JOIN {l0} y ON e.dst = y.id "
-        f"WHERE x.community <> y.community)"
-    )
+        f"WHERE x.community <> y.community",
+    ))
     l1s = _lpa_sql(parts, "b", "g1", iters[1], seed + 1)
-    parts.append(
-        f"m1 AS MATERIALIZED (SELECT l.id, l.community AS c0, "
+    parts.append((
+        "m1",
+        f"SELECT l.id, l.community AS c0, "
         f"COALESCE(s.community, l.community) AS c1 "
-        f"FROM {l0} l LEFT JOIN {l1s} s ON l.community = s.id)"
-    )
-    parts.append(
-        "g2 AS MATERIALIZED (SELECT DISTINCT x.c1 AS src, y.c1 AS dst "
+        f"FROM {l0} l LEFT JOIN {l1s} s ON l.community = s.id",
+    ))
+    parts.append((
+        "g2",
+        "SELECT DISTINCT x.c1 AS src, y.c1 AS dst "
         "FROM dedges e JOIN m1 x ON e.src = x.id JOIN m1 y ON e.dst = y.id "
-        "WHERE x.c1 <> y.c1)"
-    )
+        "WHERE x.c1 <> y.c1",
+    ))
     l2s = _lpa_sql(parts, "c", "g2", iters[2], seed + 2)
-    parts.append(
-        f"m2 AS MATERIALIZED (SELECT m.id, m.c0, m.c1, COALESCE(s.community, m.c1) AS c2 "
-        f"FROM m1 m LEFT JOIN {l2s} s ON m.c1 = s.id)"
-    )
-    sep = ",\n"
-    return (
-        f"WITH {sep.join(parts)}\n"
+    parts.append((
+        "m2",
+        f"SELECT m.id, m.c0, m.c1, COALESCE(s.community, m.c1) AS c2 "
+        f"FROM m1 m LEFT JOIN {l2s} s ON m.c1 = s.id",
+    ))
+    return with_ctes(
+        parts,
         "SELECT CAST(count(DISTINCT c0) AS BIGINT) AS n_l0, "
         "CAST(count(DISTINCT c1) AS BIGINT) AS n_l1, "
         "CAST(count(DISTINCT c2) AS BIGINT) AS n_l2, "
-        "CAST(count(*) AS BIGINT) AS n_vertices FROM m2"
+        "CAST(count(*) AS BIGINT) AS n_vertices FROM m2",
     )
 
 
@@ -343,30 +367,26 @@ def graph_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ga.bfs_distances(rev, sources, max_depth=6)
 
 
+# The forward-degree-capped (<= 160) canonical co-purchase graph and
+# its triangles: graph_triangle_count's registered guardrail.
+_GUARDED_TRIANGLES = [
+    ("pairs0", _copurchase_pairs()),
+    ("fwd", "SELECT lo FROM pairs0 GROUP BY lo HAVING count(*) <= 160"),
+    ("pairs", "SELECT p.lo, p.hi FROM pairs0 p JOIN fwd f ON p.lo = f.lo"),
+    ("tri", _TRIANGLES),
+]
+
+
 @register(
     "graph_triangle_count",
-    oracle="""
-WITH pairs0 AS (
-  SELECT DISTINCT least(a.l_partkey, b.l_partkey) AS lo,
-         greatest(a.l_partkey, b.l_partkey) AS hi
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-), fwd AS (
-  SELECT lo FROM pairs0 GROUP BY lo HAVING count(*) <= 160
-), pairs AS (
-  SELECT p.lo, p.hi FROM pairs0 p JOIN fwd f ON p.lo = f.lo
-), tri AS (
-  SELECT ab.lo AS a, ab.hi AS b, bc.hi AS c
-  FROM pairs ab
-  JOIN pairs bc ON ab.hi = bc.lo
-  JOIN pairs ac ON ac.lo = ab.lo AND ac.hi = bc.hi
-)
-SELECT count(*) AS n_triangles,
+    oracle=with_ctes(
+        _GUARDED_TRIANGLES,
+        """SELECT count(*) AS n_triangles,
        count(DISTINCT a) AS n_a_vertices,
        CAST(min(a + b + c) AS BIGINT) AS min_key_sum,
        CAST(max(a + b + c) AS BIGINT) AS max_key_sum
-FROM tri
-""",
+FROM tri""",
+    ),
 )
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle counting over the co-purchase graph (parts that share
@@ -426,25 +446,10 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_triangle_estimate",
-    oracle="""
-WITH pairs0 AS (
-  SELECT DISTINCT least(a.l_partkey, b.l_partkey) AS lo,
-         greatest(a.l_partkey, b.l_partkey) AS hi
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-), fwd AS (
-  SELECT lo FROM pairs0 GROUP BY lo HAVING count(*) <= 160
-), pairs AS (
-  SELECT p.lo, p.hi FROM pairs0 p JOIN fwd f ON p.lo = f.lo
-), tri AS (
-  SELECT ab.lo AS a, ab.hi AS b, bc.hi AS c
-  FROM pairs ab
-  JOIN pairs bc ON ab.hi = bc.lo
-  JOIN pairs ac ON ac.lo = ab.lo AND ac.hi = bc.hi
-)
-SELECT CAST(count(*) AS BIGINT) AS exact_triangles, true AS within_10pct
-FROM tri
-""",
+    oracle=with_ctes(
+        _GUARDED_TRIANGLES,
+        "SELECT CAST(count(*) AS BIGINT) AS exact_triangles, true AS within_10pct\nFROM tri",
+    ),
 )
 def graph_triangle_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DOULION edge-sampling triangle estimate (Tsourakakis 2009) —
@@ -488,34 +493,28 @@ def graph_triangle_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_clustering_coefficient",
-    oracle="""
-WITH pairs AS (
-  SELECT DISTINCT least(a.l_partkey, b.l_partkey) AS lo,
-         greatest(a.l_partkey, b.l_partkey) AS hi
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_partkey < 200 AND b.l_partkey < 200
-), tri AS (
-  SELECT ab.lo AS a, ab.hi AS b, bc.hi AS c
-  FROM pairs ab
-  JOIN pairs bc ON ab.hi = bc.lo
-  JOIN pairs ac ON ac.lo = ab.lo AND ac.hi = bc.hi
-), tri_per_v AS (
+    oracle=with_ctes(
+        [
+            ("pairs", _copurchase_pairs(200)),
+            ("tri", _TRIANGLES),
+            ("tri_per_v", """
   SELECT v, count(*) AS n_tri FROM (
     SELECT a AS v FROM tri UNION ALL SELECT b FROM tri UNION ALL SELECT c FROM tri
   ) GROUP BY v
-), deg AS (
+"""),
+            ("deg", """
   SELECT v, count(*) AS degree FROM (
     SELECT lo AS v FROM pairs UNION ALL SELECT hi FROM pairs
   ) GROUP BY v
-)
-SELECT d.v AS part, d.degree,
+"""),
+        ],
+        """SELECT d.v AS part, d.degree,
        coalesce(t.n_tri, 0) AS n_triangles,
        floor(coalesce(t.n_tri, 0) * 2.0 / (d.degree * (d.degree - 1)) * 1000000 + 0.5)
          / 1000000 AS clustering
 FROM deg d LEFT JOIN tri_per_v t ON d.v = t.v
-WHERE d.degree >= 2
-""",
+WHERE d.degree >= 2""",
+    ),
 )
 def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Local clustering coefficient per vertex — triangles(v) /
@@ -575,33 +574,29 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_link_prediction",
-    oracle="""
-WITH pairs AS (
-  SELECT DISTINCT least(a.l_partkey, b.l_partkey) AS lo,
-         greatest(a.l_partkey, b.l_partkey) AS hi
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_partkey < 200 AND b.l_partkey < 200
-), adj AS (
-  SELECT lo AS z, hi AS n FROM pairs UNION ALL SELECT hi, lo FROM pairs
-), deg AS (
-  SELECT z, count(*) AS deg FROM adj GROUP BY z
-), wedges AS (
+    oracle=with_ctes(
+        [
+            ("pairs", _copurchase_pairs(200)),
+            ("adj", "SELECT lo AS z, hi AS n FROM pairs UNION ALL SELECT hi, lo FROM pairs"),
+            ("deg", "SELECT z, count(*) AS deg FROM adj GROUP BY z"),
+            ("wedges", """
   SELECT a.n AS u, b.n AS w, d.deg
   FROM adj a JOIN adj b ON a.z = b.z AND a.n < b.n
   JOIN deg d ON d.z = a.z
   WHERE d.deg <= 64
-), scored AS (
+"""),
+            ("scored", """
   SELECT u, w, CAST(count(*) AS BIGINT) AS common_neighbors,
          CAST(sum(CAST(floor(1000000.0 / ln(CAST(deg AS DOUBLE)) + 0.5) AS BIGINT)) AS BIGINT) AS aa6
   FROM wedges GROUP BY u, w
-)
-SELECT u, w, common_neighbors,
+"""),
+        ],
+        """SELECT u, w, common_neighbors,
        CAST(aa6 AS DOUBLE) / 1000000.0 AS adamic_adar
 FROM scored s
 WHERE NOT EXISTS (SELECT 1 FROM pairs p WHERE p.lo = s.u AND p.hi = s.w)
-ORDER BY aa6 DESC, u ASC, w ASC LIMIT 20
-""",
+ORDER BY aa6 DESC, u ASC, w ASC LIMIT 20""",
+    ),
 )
 def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Link prediction over the co-purchase graph: common-neighbor
@@ -637,46 +632,49 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ppr_oracle(damping: float = 0.85, iters: int = 8, top: int = 20) -> str:
-    """Unrolled personalized-PageRank replay (same superstep-per-CTE
-    scheme as _pagerank_oracle) with the teleport vector restricted to
-    the source set — expression structure mirrors the engine exactly:
-    (1−d)·tp + d·(recv + dang·tp)."""
-    edges = (
-        "SELECT concat('C', c_custkey) AS src, concat('N', c_nationkey) AS dst FROM customer "
-        "UNION ALL SELECT concat('S', s_suppkey), concat('N', s_nationkey) FROM supplier "
-        "UNION ALL SELECT concat('N', n_nationkey), concat('R', n_regionkey) FROM nation"
-    )
-    tp = "(CASE WHEN v.id IN ('N0', 'N5') THEN 0.5 ELSE 0.0 END)"
-    parts = [
-        f"dedges AS ({edges})",
-        "verts AS (SELECT DISTINCT id FROM (SELECT src AS id FROM dedges UNION ALL SELECT dst FROM dedges))",
-        "deg AS (SELECT src, count(*) AS deg FROM dedges GROUP BY src)",
-        f"pr0 AS (SELECT v.id, {tp} AS rank FROM verts v)",
+def _ppr_ctes(tp: str, damping: float, iters: int) -> list[tuple[str, str]]:
+    """Unrolled personalized-PageRank supersteps (one CTE per
+    superstep, as in _pagerank_oracle) over `dedges`, its vertex set
+    `verts` and out-degrees `deg`, with teleport weight `tp` on the
+    source set; the final rank is `pr{iters}`. The expression
+    structure mirrors the engine exactly: (1−d)·tp + d·(recv + dang·tp)."""
+    ctes = [
+        ("verts", "SELECT DISTINCT id FROM (SELECT src AS id FROM dedges UNION ALL SELECT dst FROM dedges)"),
+        ("deg", "SELECT src, count(*) AS deg FROM dedges GROUP BY src"),
+        ("pr0", f"SELECT v.id, {tp} AS rank FROM verts v"),
     ]
     for i in range(iters):
         prev = f"pr{i}"
-        parts.append(
-            f"dang{i} AS (SELECT COALESCE(sum(p.rank), 0.0) AS d FROM {prev} p "
-            "LEFT JOIN deg ON p.id = deg.src WHERE deg.src IS NULL)"
-        )
-        parts.append(
-            f"recv{i} AS (SELECT e.dst AS id, sum(p.rank / e.odeg) AS r "
+        ctes.append((
+            f"dang{i}",
+            f"SELECT COALESCE(sum(p.rank), 0.0) AS d FROM {prev} p "
+            "LEFT JOIN deg ON p.id = deg.src WHERE deg.src IS NULL",
+        ))
+        ctes.append((
+            f"recv{i}",
+            "SELECT e.dst AS id, sum(p.rank / e.odeg) AS r "
             "FROM (SELECT d.src, d.dst, g.deg AS odeg FROM dedges d JOIN deg g ON d.src = g.src) e "
-            f"JOIN {prev} p ON e.src = p.id GROUP BY e.dst)"
-        )
-        parts.append(
-            f"pr{i + 1} AS (SELECT v.id, "
+            f"JOIN {prev} p ON e.src = p.id GROUP BY e.dst",
+        ))
+        ctes.append((
+            f"pr{i + 1}",
+            f"SELECT v.id, "
             f"(1.0 - {damping}) * {tp} + {damping} * "
             f"(COALESCE(r.r, 0.0) + (SELECT d FROM dang{i}) * {tp}) AS rank "
-            f"FROM verts v LEFT JOIN recv{i} r ON v.id = r.id)"
-        )
-    sep = ",\n"
-    return (
-        f"WITH {sep.join(parts)}\n"
+            f"FROM verts v LEFT JOIN recv{i} r ON v.id = r.id",
+        ))
+    return ctes
+
+
+def _ppr_oracle(damping: float = 0.85, iters: int = 8, top: int = 20) -> str:
+    """Personalized-PageRank replay with the teleport vector on the
+    source set N0/N5."""
+    tp = "(CASE WHEN v.id IN ('N0', 'N5') THEN 0.5 ELSE 0.0 END)"
+    return with_ctes(
+        [("dedges", _TPCH_EDGES), *_ppr_ctes(tp, damping, iters)],
         f"SELECT id, floor((rank * 1000) * 10000 + 0.5)/10000 AS rank_permille\n"
         f"FROM pr{iters}\nWHERE rank > 0\n"
-        f"ORDER BY rank_permille DESC, id ASC LIMIT {top}"
+        f"ORDER BY rank_permille DESC, id ASC LIMIT {top}",
     )
 
 
@@ -700,13 +698,8 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _local_search_oracle(damping: float = 0.85, iters: int = 4, top: int = 15) -> str:
     """GraphRAG local-search context replay: single-seed personalized
-    PageRank (unrolled CTEs, tp = 1 on the seed) joined with vertex
-    metadata and degrees, top-N by relevance."""
-    edges = (
-        "SELECT concat('C', c_custkey) AS src, concat('N', c_nationkey) AS dst FROM customer "
-        "UNION ALL SELECT concat('S', s_suppkey), concat('N', s_nationkey) FROM supplier "
-        "UNION ALL SELECT concat('N', n_nationkey), concat('R', n_regionkey) FROM nation"
-    )
+    PageRank (tp = 1 on the seed) joined with vertex metadata and
+    degrees, top-N by relevance."""
     verts = (
         "SELECT concat('C', c_custkey) AS id, 'Customer' AS label, c_name AS name FROM customer "
         "UNION ALL SELECT concat('S', s_suppkey), 'Supplier', s_name FROM supplier "
@@ -714,44 +707,24 @@ def _local_search_oracle(damping: float = 0.85, iters: int = 4, top: int = 15) -
         "UNION ALL SELECT concat('R', r_regionkey), 'Region', r_name FROM region"
     )
     tp = "(CASE WHEN v.id = 'N0' THEN 1.0 ELSE 0.0 END)"
-    parts = [
-        f"raw AS ({edges})",
-        # local search expands the UNDIRECTED neighborhood: walks must
-        # reach the seed's customers/suppliers, not only its region
-        "dedges AS (SELECT src, dst FROM raw UNION ALL SELECT dst, src FROM raw)",
-        f"vmeta AS ({verts})",
-        "verts AS (SELECT DISTINCT id FROM (SELECT src AS id FROM dedges UNION ALL SELECT dst FROM dedges))",
-        "deg AS (SELECT src, count(*) AS deg FROM dedges GROUP BY src)",
-        "degree AS (SELECT id, count(*) AS degree FROM ("
-        "SELECT src AS id FROM raw UNION ALL SELECT dst FROM raw) GROUP BY id)",
-        f"pr0 AS (SELECT v.id, {tp} AS rank FROM verts v)",
-    ]
-    for i in range(iters):
-        prev = f"pr{i}"
-        parts.append(
-            f"dang{i} AS (SELECT COALESCE(sum(p.rank), 0.0) AS d FROM {prev} p "
-            "LEFT JOIN deg ON p.id = deg.src WHERE deg.src IS NULL)"
-        )
-        parts.append(
-            f"recv{i} AS (SELECT e.dst AS id, sum(p.rank / e.odeg) AS r "
-            "FROM (SELECT d.src, d.dst, g.deg AS odeg FROM dedges d JOIN deg g ON d.src = g.src) e "
-            f"JOIN {prev} p ON e.src = p.id GROUP BY e.dst)"
-        )
-        parts.append(
-            f"pr{i + 1} AS (SELECT v.id, "
-            f"(1.0 - {damping}) * {tp} + {damping} * "
-            f"(COALESCE(r.r, 0.0) + (SELECT d FROM dang{i}) * {tp}) AS rank "
-            f"FROM verts v LEFT JOIN recv{i} r ON v.id = r.id)"
-        )
-    sep = ",\n"
-    return (
-        f"WITH {sep.join(parts)},\n"
-        f"scored AS (SELECT p.id, floor((p.rank * 1000) * 10000 + 0.5)/10000 AS rank_permille "
-        f"FROM pr{iters} p WHERE p.rank > 0)\n"
-        f"SELECT s.id, m.label, m.name, d.degree, s.rank_permille,\n"
-        f"       CAST(row_number() OVER (ORDER BY s.rank_permille DESC, s.id ASC) AS INT) AS position\n"
-        f"FROM scored s JOIN vmeta m ON s.id = m.id JOIN degree d ON s.id = d.id\n"
-        f"ORDER BY s.rank_permille DESC, s.id ASC LIMIT {top}"
+    return with_ctes(
+        [
+            ("raw", _TPCH_EDGES),
+            # local search expands the UNDIRECTED neighborhood: walks
+            # must reach the seed's customers/suppliers, not only its
+            # region
+            ("dedges", "SELECT src, dst FROM raw UNION ALL SELECT dst, src FROM raw"),
+            ("vmeta", verts),
+            ("degree", "SELECT id, count(*) AS degree FROM ("
+             "SELECT src AS id FROM raw UNION ALL SELECT dst FROM raw) GROUP BY id"),
+            *_ppr_ctes(tp, damping, iters),
+            ("scored", f"SELECT p.id, floor((p.rank * 1000) * 10000 + 0.5)/10000 AS rank_permille "
+             f"FROM pr{iters} p WHERE p.rank > 0"),
+        ],
+        "SELECT s.id, m.label, m.name, d.degree, s.rank_permille,\n"
+        "       CAST(row_number() OVER (ORDER BY s.rank_permille DESC, s.id ASC) AS INT) AS position\n"
+        "FROM scored s JOIN vmeta m ON s.id = m.id JOIN degree d ON s.id = d.id\n"
+        f"ORDER BY s.rank_permille DESC, s.id ASC LIMIT {top}",
     )
 
 
@@ -1062,28 +1035,18 @@ def _kcore_oracle(k: int = 16, rounds: int = 10) -> str:
     the exact core — extra rounds are no-ops, matching the engine's
     run-to-fixpoint loop."""
     parts = [
-        """pairs AS MATERIALIZED (
-  SELECT DISTINCT least(a.l_partkey, b.l_partkey) AS lo,
-         greatest(a.l_partkey, b.l_partkey) AS hi
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_partkey < 400 AND b.l_partkey < 400
-)""",
-        "e0 AS MATERIALIZED (SELECT lo AS src, hi AS dst FROM pairs "
-        "UNION ALL SELECT hi AS src, lo AS dst FROM pairs)",
+        ("pairs", _copurchase_pairs(400)),
+        ("e0", "SELECT lo AS src, hi AS dst FROM pairs UNION ALL SELECT hi AS src, lo AS dst FROM pairs"),
     ]
     for i in range(rounds):
-        parts.append(
-            f"k{i} AS MATERIALIZED (SELECT src FROM e{i} GROUP BY src HAVING count(*) >= {k})"
-        )
-        parts.append(
-            f"e{i + 1} AS MATERIALIZED (SELECT e.src, e.dst FROM e{i} e "
-            f"JOIN k{i} a ON e.src = a.src JOIN k{i} b ON e.dst = b.src)"
-        )
-    sep = ",\n"
-    return (
-        f"WITH {sep.join(parts)}\n"
-        f"SELECT src AS id, count(*) AS core_degree FROM e{rounds} GROUP BY src"
+        parts.append((f"k{i}", f"SELECT src FROM e{i} GROUP BY src HAVING count(*) >= {k}"))
+        parts.append((
+            f"e{i + 1}",
+            f"SELECT e.src, e.dst FROM e{i} e "
+            f"JOIN k{i} a ON e.src = a.src JOIN k{i} b ON e.dst = b.src",
+        ))
+    return with_ctes(
+        parts, f"SELECT src AS id, count(*) AS core_degree FROM e{rounds} GROUP BY src"
     )
 
 
@@ -1110,44 +1073,54 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ga.kcore(edges, k=16)
 
 
-@register(
-    "graph_entity_resolution",
-    oracle="""
-WITH RECURSIVE recs AS (
-  SELECT p_partkey, p_brand, p_size, p_name,
-         list_distinct(list_filter(string_split_regex(lower(p_name), '\\s+'),
-                                   x -> x <> '')) AS ts
-  FROM part
-), kept_blocks AS (
-  SELECT p_brand FROM part GROUP BY p_brand HAVING count(*) <= 2048
-), matched AS (
+def _entity_resolution_ctes(max_block: int | None = None) -> list[tuple[str, str]]:
+    """Entity resolution over the part catalog: blocking on p_brand
+    (blocks above `max_block` records dropped), integer Jaccard of the
+    p_name token sets >= 0.5 and size gap <= 1, closed transitively by
+    the min-label walk. `allc`(p_partkey, canonical_id) gives every
+    part its cluster's min id; `csize` the cluster sizes."""
+    ctes = [(
+        "recs",
+        f"SELECT p_partkey, p_brand, p_size, p_name,\n"
+        f"         list_distinct({ws_tokens('p_name')}) AS ts\n  FROM part",
+    )]
+    block = ""
+    if max_block is not None:
+        ctes.append((
+            "kept_blocks",
+            f"SELECT p_brand FROM part GROUP BY p_brand HAVING count(*) <= {max_block}",
+        ))
+        block = "a.p_brand IN (SELECT p_brand FROM kept_blocks)\n    AND "
+    return ctes + [
+        ("matched", f"""
   SELECT a.p_partkey AS a, b.p_partkey AS b
   FROM recs a JOIN recs b
     ON a.p_brand = b.p_brand AND a.p_partkey < b.p_partkey
-  WHERE a.p_brand IN (SELECT p_brand FROM kept_blocks)
-    AND len(list_intersect(a.ts, b.ts)) * 1000000
+  WHERE {block}len(list_intersect(a.ts, b.ts)) * 1000000
           >= 500000 * len(list_distinct(list_concat(a.ts, b.ts)))
     AND abs(a.p_size - b.p_size) <= 1
-), uedges AS (
-  SELECT a AS src, b AS dst FROM matched UNION SELECT b, a FROM matched
-), walk(id, label) AS (
-  SELECT src, src FROM uedges
-  UNION
-  SELECT e.dst, w.label FROM walk w JOIN uedges e ON e.src = w.id
-), comp AS (
-  SELECT id, min(label) AS cluster_id FROM walk GROUP BY id
-), allc AS (
+"""),
+        *_components_ctes("matched", "a", "b", "cluster_id"),
+        ("allc", """
   SELECT p.p_partkey, coalesce(c.cluster_id, p.p_partkey) AS canonical_id
   FROM part p LEFT JOIN comp c ON p.p_partkey = c.id
-), csize AS (
+"""),
+        ("csize", """
   SELECT canonical_id, CAST(count(*) AS BIGINT) AS cluster_size
   FROM allc GROUP BY canonical_id
-)
-SELECT a.p_partkey, a.canonical_id, s.cluster_size, cn.p_name AS canonical_name
+"""),
+    ]
+
+
+@register(
+    "graph_entity_resolution",
+    oracle=with_ctes(
+        _entity_resolution_ctes(max_block=2048),
+        """SELECT a.p_partkey, a.canonical_id, s.cluster_size, cn.p_name AS canonical_name
 FROM allc a
 JOIN csize s USING (canonical_id)
-JOIN part cn ON cn.p_partkey = a.canonical_id
-""",
+JOIN part cn ON cn.p_partkey = a.canonical_id""",
+    ),
 )
 def graph_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity resolution over the part catalog — the canonical-entity
@@ -1202,33 +1175,27 @@ def graph_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_text_cooccurrence",
-    oracle=r"""
-WITH terms AS (
-  SELECT doc_id AS d,
-         unnest(list_distinct(list_filter(string_split_regex(lower(text), '\s+'),
-                                          x -> x <> ''))) AS term
-  FROM documents
-), nd AS (
-  SELECT count(DISTINCT doc_id) AS n FROM documents
-), tf AS (
-  SELECT term, count(*) AS df FROM terms GROUP BY term
-), kept AS (
-  SELECT d FROM terms GROUP BY d HAVING count(*) <= 64
-), tk AS (
-  SELECT t.d, t.term FROM terms t JOIN kept USING (d)
-), pairs AS (
+    oracle=with_ctes(
+        [
+            ("terms", f"SELECT doc_id AS d, unnest(list_distinct({ws_tokens()})) AS term\n  FROM documents"),
+            ("nd", "SELECT count(DISTINCT doc_id) AS n FROM documents"),
+            ("tf", "SELECT term, count(*) AS df FROM terms GROUP BY term"),
+            ("kept", "SELECT d FROM terms GROUP BY d HAVING count(*) <= 64"),
+            ("tk", "SELECT t.d, t.term FROM terms t JOIN kept USING (d)"),
+            ("pairs", """
   SELECT a.term AS src, b.term AS dst, count(*) AS cooccur
   FROM tk a JOIN tk b USING (d)
   WHERE a.term < b.term
   GROUP BY 1, 2 HAVING count(*) >= 5
-)
-SELECT p.src, p.dst, p.cooccur,
+"""),
+        ],
+        """SELECT p.src, p.dst, p.cooccur,
        floor(ln(n.n * p.cooccur / (fa.df * fb.df)) * 1000000 + 0.5) / 1000000 AS pmi
 FROM pairs p
 JOIN tf fa ON p.src = fa.term
 JOIN tf fb ON p.dst = fb.term
-CROSS JOIN nd n
-""",
+CROSS JOIN nd n""",
+    ),
 )
 def graph_text_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Term co-occurrence graph extracted FROM TEXT with PMI weights —

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from graphragdatapipeline_spark import checks as ck
 from graphragdatapipeline_spark.io import read_table
 from graphragdatapipeline_spark.multimodal.blob import blob_table_from_documents
-from graphragdatapipeline_spark.registry import register
+from graphragdatapipeline_spark.registry import register, with_ctes
 
 
 @register(
@@ -157,20 +157,22 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "source_cache_diff",
-    oracle="""
-WITH requested AS (
-  SELECT DISTINCT vec_id AS key FROM embeddings
-), cache AS (
+    oracle=with_ctes(
+        [
+            ("requested", "SELECT DISTINCT vec_id AS key FROM embeddings"),
+            ("cache", """
   SELECT vec_id AS key, concat('cached:', vec_id) AS payload
   FROM embeddings WHERE vec_id % 2 = 0
-), fetched AS (
+"""),
+            ("fetched", """
   SELECT r.key, concat('fetched:', r.key) AS payload
   FROM requested r WHERE NOT EXISTS (SELECT 1 FROM cache c WHERE c.key = r.key)
-)
-SELECT key, payload FROM cache
+"""),
+        ],
+        """SELECT key, payload FROM cache
 UNION ALL
-SELECT key, payload FROM fetched
-""",
+SELECT key, payload FROM fetched""",
+    ),
 )
 def source_cache_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S8–S12 cache-first incremental fetch: pending keys = left-anti

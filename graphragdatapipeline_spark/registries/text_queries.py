@@ -7,7 +7,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graphragdatapipeline_spark.io import read_table
-from graphragdatapipeline_spark.registry import dround, register
+from graphragdatapipeline_spark.registry import dround, register, with_ctes
+from graphragdatapipeline_spark.registries.dedup_oracles import _unigram_lm_ctes, ws_tokens
 from graphragdatapipeline_spark.text import analysis as ta
 from graphragdatapipeline_spark.text import chunking as tc
 
@@ -45,10 +46,9 @@ def text_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_stats",
-    oracle=r"""
+    oracle=rf"""
 WITH t AS (
-  SELECT doc_id, text,
-         list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS toks
+  SELECT doc_id, text, {ws_tokens()} AS toks
   FROM documents
 )
 SELECT doc_id,
@@ -83,10 +83,9 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_language_id",
-    oracle=r"""
+    oracle=rf"""
 WITH t AS (
-  SELECT doc_id, lang,
-         list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS toks
+  SELECT doc_id, lang, {ws_tokens()} AS toks
   FROM documents
 )
 SELECT doc_id, lang,
@@ -113,10 +112,9 @@ def text_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_inverted_index_search",
-    oracle=r"""
+    oracle=rf"""
 WITH idx AS (
-  SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS token
-  FROM documents
+  SELECT doc_id, unnest({ws_tokens()}) AS token FROM documents
 )
 SELECT doc_id FROM idx
 WHERE token IN ('spark', 'join')
@@ -151,12 +149,12 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_section_parse",
-    oracle="""
-WITH base AS (SELECT doc_id, trim(text) AS body FROM documents)
-SELECT doc_id, 'Introduction' AS section_name, body AS section_content FROM base
+    oracle=with_ctes(
+        [("base", "SELECT doc_id, trim(text) AS body FROM documents")],
+        """SELECT doc_id, 'Introduction' AS section_name, body AS section_content FROM base
 UNION ALL
-SELECT doc_id, 'Details', body FROM base
-""",
+SELECT doc_id, 'Details', body FROM base""",
+    ),
 )
 def text_section_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T1 — MediaWiki section parser (reference
@@ -291,26 +289,25 @@ def text_chunking_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TFIDF_ORACLE = r"""
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS w
-  FROM documents
-), tf AS (
+_TFIDF_ORACLE = with_ctes(
+    [
+        ("toks", f"SELECT doc_id, {ws_tokens()} AS w FROM documents"),
+        ("tf", """
   SELECT doc_id, t AS term, count(*) AS tf
   FROM (SELECT doc_id, unnest(w) AS t FROM toks) GROUP BY 1, 2
-), dfreq AS (
-  SELECT term, count(*) AS df FROM tf GROUP BY 1
-), ranked AS (
+"""),
+        ("dfreq", "SELECT term, count(*) AS df FROM tf GROUP BY 1"),
+        ("ranked", """
   SELECT tf.doc_id, tf.term, tf.tf, dfreq.df,
          row_number() OVER (PARTITION BY tf.doc_id
                             ORDER BY tf.tf / dfreq.df DESC, tf.term ASC) AS rank
   FROM tf JOIN dfreq USING (term)
-)
-SELECT doc_id, term, CAST(tf AS BIGINT) AS tf, CAST(df AS BIGINT) AS df,
+"""),
+    ],
+    """SELECT doc_id, term, CAST(tf AS BIGINT) AS tf, CAST(df AS BIGINT) AS df,
        CAST(rank AS BIGINT) AS rank
-FROM ranked WHERE rank <= 3
-"""
+FROM ranked WHERE rank <= 3""",
+)
 
 
 @register("text_tfidf_top_terms", oracle=_TFIDF_ORACLE)
@@ -324,20 +321,19 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "fulltext_bm25_topk",
-    oracle=r"""
-WITH toks AS (
-  SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS token
-  FROM documents
-), dl AS (
-  SELECT doc_id, count(*) AS dl FROM toks GROUP BY doc_id
-), stats AS (
-  SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl
-), postings AS (
+    oracle=with_ctes(
+        [
+            ("toks", f"SELECT doc_id, unnest({ws_tokens()}) AS token FROM documents"),
+            ("dl", "SELECT doc_id, count(*) AS dl FROM toks GROUP BY doc_id"),
+            ("stats", "SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl"),
+            ("postings", """
   SELECT doc_id, token, count(*) AS tf FROM toks
   WHERE token IN ('spark', 'join', 'stream') GROUP BY doc_id, token
-), dfreq AS (
+"""),
+            ("dfreq", """
   SELECT token, count(DISTINCT doc_id) AS df FROM postings GROUP BY token
-), scored AS (
+"""),
+            ("scored", """
   SELECT p.doc_id,
          sum(ln(1.0 + (s.n_docs - f.df + 0.5) / (f.df + 0.5))
              * (p.tf * 2.2) / (p.tf + 1.2 * (1 - 0.75 + 0.75 * d.dl / s.avgdl))) AS bm25
@@ -346,10 +342,11 @@ WITH toks AS (
   JOIN dl d USING (doc_id)
   CROSS JOIN stats s
   GROUP BY p.doc_id
-)
-SELECT doc_id, floor(bm25 * 1000000 + 0.5) / 1000000 AS bm25
-FROM scored ORDER BY bm25 DESC, doc_id ASC LIMIT 10
-""",
+"""),
+        ],
+        """SELECT doc_id, floor(bm25 * 1000000 + 0.5) / 1000000 AS bm25
+FROM scored ORDER BY bm25 DESC, doc_id ASC LIMIT 10""",
+    ),
 )
 def fulltext_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Okapi BM25 top-10 for the fixed query terms — the standard IR
@@ -367,35 +364,18 @@ def fulltext_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_lm_quality_score",
-    oracle=r"""
-WITH toks AS (
-  SELECT doc_id,
-         unnest(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS tok
-  FROM documents
-), cnt AS (
-  SELECT tok, count(*) AS c FROM toks GROUP BY tok
-), corpus AS (
-  SELECT CAST(sum(c) AS BIGINT) AS N, CAST(count(*) AS BIGINT) AS V FROM cnt
-), tl AS (
-  SELECT t.doc_id,
-         CAST(floor((ln(2 * c.c + 1) - ln(2 * corpus.N + corpus.V)) * 1000000 + 0.5)
-              AS BIGINT) AS lq
-  FROM toks t JOIN cnt c USING (tok) CROSS JOIN corpus
-), per AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-         CAST(sum(lq) AS BIGINT) AS sum_lq
-  FROM tl GROUP BY doc_id
-), tot AS (
-  SELECT CAST(sum(n_tokens) AS BIGINT) AS nt, CAST(sum(sum_lq) AS BIGINT) AS slq
-  FROM per
-)
-SELECT p.doc_id, p.n_tokens,
+    oracle=with_ctes(
+        _unigram_lm_ctes() + [(
+            "tot",
+            "SELECT CAST(sum(n_tokens) AS BIGINT) AS nt, CAST(sum(sum_lq) AS BIGINT) AS slq\n  FROM per",
+        )],
+        """SELECT p.doc_id, p.n_tokens,
        floor((-p.sum_lq / (p.n_tokens * 1000000.0)) * 1000000 + 0.5) / 1000000.0
          AS cross_entropy,
        (CAST(-p.sum_lq AS DOUBLE) * t.nt <= CAST(-t.slq AS DOUBLE) * p.n_tokens)
          AS below_corpus_mean
-FROM per p CROSS JOIN tot t
-""",
+FROM per p CROSS JOIN tot t""",
+    ),
 )
 def text_lm_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style LM perplexity gate (the KenLM quality filter of the
@@ -410,26 +390,28 @@ def text_lm_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_lm_bigram_score",
-    oracle=r"""
-WITH toksarr AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS w
-  FROM documents
-), stream AS (
+    oracle=with_ctes(
+        [
+            ("toksarr", f"SELECT doc_id, {ws_tokens()} AS w FROM documents"),
+            ("stream", """
   SELECT doc_id, CAST(NULL AS VARCHAR) AS prev, w[1] AS cur
   FROM toksarr WHERE len(w) >= 1
   UNION ALL
   SELECT t.doc_id, t.w[i] AS prev, t.w[i + 1] AS cur
   FROM toksarr t, LATERAL unnest(generate_series(1, len(t.w) - 1)) AS s(i)
-), ucnt AS (
+"""),
+            ("ucnt", """
   SELECT tok, count(*) AS c
   FROM (SELECT unnest(w) AS tok FROM toksarr) GROUP BY tok
-), bcnt AS (
+"""),
+            ("bcnt", """
   SELECT prev, cur, count(*) AS cb FROM stream WHERE prev IS NOT NULL
   GROUP BY prev, cur
-), corpus AS (
+"""),
+            ("corpus", """
   SELECT CAST(sum(c) AS BIGINT) AS N, CAST(count(*) AS BIGINT) AS V FROM ucnt
-), scored AS (
+"""),
+            ("scored", """
   SELECT s.doc_id,
          CAST(floor(ln(
            CASE WHEN s.prev IS NULL
@@ -442,12 +424,13 @@ WITH toksarr AS (
   LEFT JOIN ucnt cup ON cup.tok = s.prev
   LEFT JOIN bcnt b ON b.prev = s.prev AND b.cur = s.cur
   CROSS JOIN corpus
-)
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
+"""),
+        ],
+        """SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
        floor((-CAST(sum(lq) AS BIGINT) / (count(*) * 1000000.0)) * 1000000 + 0.5)
          / 1000000.0 AS cross_entropy
-FROM scored GROUP BY doc_id
-""",
+FROM scored GROUP BY doc_id""",
+    ),
 )
 def text_lm_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interpolated-bigram LM cross-entropy per document (λ=0.75

@@ -7,7 +7,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graphragdatapipeline_spark.io import read_table
-from graphragdatapipeline_spark.registry import dround, register
+from graphragdatapipeline_spark.registry import dround, register, with_ctes
 from graphragdatapipeline_spark.vector import similarity as vs
 
 
@@ -170,19 +170,20 @@ def vector_embed_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "vector_upsert_dedup",
-    oracle="""
-WITH new_docs AS (
+    oracle=with_ctes(
+        [
+            ("new_docs", """
   SELECT vec_id, label FROM embeddings WHERE vec_id < 50
   UNION ALL
   SELECT vec_id + 100000 AS vec_id, label FROM embeddings WHERE vec_id < 50
-), existing AS (
-  SELECT vec_id, label FROM embeddings
-)
-SELECT vec_id, label FROM existing
+"""),
+            ("existing", "SELECT vec_id, label FROM embeddings"),
+        ],
+        """SELECT vec_id, label FROM existing
 UNION ALL
 SELECT n.vec_id, n.label FROM new_docs n
-WHERE NOT EXISTS (SELECT 1 FROM existing e WHERE e.vec_id = n.vec_id)
-""",
+WHERE NOT EXISTS (SELECT 1 FROM existing e WHERE e.vec_id = n.vec_id)""",
+    ),
 )
 def vector_upsert_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V4/J8 — vector-collection upsert with id-dedup: a re-ingest
@@ -240,34 +241,35 @@ def vector_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "vector_lsh_probe_topk",
-    oracle="""
-WITH h AS (
-  SELECT vec_id AS h_id, embedding FROM embeddings WHERE vec_id BETWEEN 1 AND 8
-), sig AS (
+    oracle=with_ctes(
+        [
+            ("h", "SELECT vec_id AS h_id, embedding FROM embeddings WHERE vec_id BETWEEN 1 AND 8"),
+            ("sig", """
   SELECT e.vec_id,
          CAST(sum(CASE WHEN list_dot_product(e.embedding::DOUBLE[], h.embedding::DOUBLE[]) > 0
                   THEN CAST(power(2, h.h_id - 1) AS BIGINT) ELSE 0 END) AS BIGINT) AS bucket
   FROM embeddings e CROSS JOIN h
   GROUP BY e.vec_id
-), qb AS (
-  SELECT bucket FROM sig WHERE vec_id = 0
-), probe AS (
+"""),
+            ("qb", "SELECT bucket FROM sig WHERE vec_id = 0"),
+            ("probe", """
   SELECT bucket FROM qb
   UNION ALL
   SELECT xor(qb.bucket, CAST(power(2, t.i) AS BIGINT)) AS bucket FROM qb, range(8) t(i)
-), q AS (
-  SELECT embedding::DOUBLE[] AS qe FROM embeddings WHERE vec_id = 0
-), scored AS (
+"""),
+            ("q", "SELECT embedding::DOUBLE[] AS qe FROM embeddings WHERE vec_id = 0"),
+            ("scored", """
   SELECT s.vec_id,
          list_dot_product(e.embedding::DOUBLE[], q.qe)
            / (sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[]))
               * sqrt(list_dot_product(q.qe, q.qe))) AS sim
   FROM sig s JOIN embeddings e ON s.vec_id = e.vec_id, q
   WHERE s.bucket IN (SELECT bucket FROM probe) AND s.vec_id <> 0
-)
-SELECT vec_id, floor(sim * 1000000 + 0.5) / 1000000 AS sim
-FROM scored ORDER BY sim DESC, vec_id ASC LIMIT 8
-""",
+"""),
+        ],
+        """SELECT vec_id, floor(sim * 1000000 + 0.5) / 1000000 AS sim
+FROM scored ORDER BY sim DESC, vec_id ASC LIMIT 8""",
+    ),
 )
 def vector_lsh_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end ANN read path: LSH bucket probe (query bucket +
@@ -288,24 +290,26 @@ def vector_lsh_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "vector_near_dup_keep",
-    oracle="""
-WITH bsz AS (
-  SELECT label, count(*) AS bn FROM embeddings GROUP BY label
-), eligible AS (
+    oracle=with_ctes(
+        [
+            ("bsz", "SELECT label, count(*) AS bn FROM embeddings GROUP BY label"),
+            ("eligible", """
   SELECT e.vec_id, e.label, e.embedding
   FROM embeddings e JOIN bsz USING (label) WHERE bn <= 2048
-), pairs AS (
+"""),
+            ("pairs", """
   SELECT a.vec_id AS a, b.vec_id AS b
   FROM eligible a JOIN eligible b ON a.label = b.label AND a.vec_id < b.vec_id
   WHERE list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[])
           / (sqrt(list_dot_product(a.embedding::DOUBLE[], a.embedding::DOUBLE[]))
              * sqrt(list_dot_product(b.embedding::DOUBLE[], b.embedding::DOUBLE[]))) >= 0.3
-)
-SELECT e.vec_id, e.label
+"""),
+        ],
+        """SELECT e.vec_id, e.label
 FROM embeddings e
 LEFT JOIN (SELECT DISTINCT b FROM pairs) d ON e.vec_id = d.b
-WHERE d.b IS NULL
-""",
+WHERE d.b IS NULL""",
+    ),
 )
 def vector_near_dup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end embedding dedup at id granularity: label-blocked
@@ -336,13 +340,14 @@ def vector_near_dup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "hybrid_search_rrf",
-    oracle="""
-WITH corpus AS (
+    oracle=with_ctes(
+        [
+            ("corpus", """
   SELECT d.doc_id, d.text, e.embedding
   FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id
-), q AS (
-  SELECT embedding::DOUBLE[] AS qe FROM embeddings WHERE vec_id = 0
-), ft AS (
+"""),
+            ("q", "SELECT embedding::DOUBLE[] AS qe FROM embeddings WHERE vec_id = 0"),
+            ("ft", """
   SELECT doc_id,
          row_number() OVER (
            ORDER BY (CASE WHEN text LIKE '%spark%' THEN 1 ELSE 0 END
@@ -351,7 +356,8 @@ WITH corpus AS (
                     doc_id ASC) AS r
   FROM corpus
   WHERE text LIKE '%spark%' OR text LIKE '%join%' OR text LIKE '%stream%'
-), vec AS (
+"""),
+            ("vec", """
   SELECT doc_id,
          row_number() OVER (ORDER BY sim DESC, doc_id ASC) AS r
   FROM (
@@ -361,15 +367,17 @@ WITH corpus AS (
                 * sqrt(list_dot_product(q.qe, q.qe))) AS sim
     FROM corpus c, q WHERE c.doc_id <> 0
   )
-), fused AS (
+"""),
+            ("fused", """
   SELECT coalesce(ft.doc_id, vec.doc_id) AS doc_id,
          coalesce(1.0 / (60 + ft.r), 0) + coalesce(1.0 / (60 + vec.r), 0) AS rrf
   FROM (SELECT * FROM ft WHERE r <= 50) ft
   FULL OUTER JOIN (SELECT * FROM vec WHERE r <= 50) vec ON ft.doc_id = vec.doc_id
-)
-SELECT doc_id, floor(rrf * 1000000 + 0.5) / 1000000 AS rrf_score
-FROM fused ORDER BY rrf DESC, doc_id ASC LIMIT 10
-""",
+"""),
+        ],
+        """SELECT doc_id, floor(rrf * 1000000 + 0.5) / 1000000 AS rrf_score
+FROM fused ORDER BY rrf DESC, doc_id ASC LIMIT 10""",
+    ),
 )
 def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid retrieval with reciprocal-rank fusion — the RAG read
@@ -435,9 +443,30 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# The embeddings as DOUBLE lists: the input of every k-means replay.
+_EMB = ("emb", "SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings")
+
+
+def _q6(e: str) -> str:
+    return f"floor(({e}) * 1000000 + 0.5) / 1000000"
+
+
+def _sqdist(a: str, b: str) -> str:
+    """Squared L2 distance as the engine folds it: the same
+    fold-of-squared-diffs, so both engines run one IEEE sequence."""
+    return f"list_sum(list_transform(list_zip({a}, {b}), p -> (p[1] - p[2]) * (p[1] - p[2])))"
+
+
+def _cosine(a: str, b: str) -> str:
+    return (
+        f"list_dot_product({a}, {b})\n"
+        f"           / (sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b})))"
+    )
+
+
 def _kmeans_unroll_parts(
     prefix: str, emb_cte: str, k: int | str, iters: int, dim: int
-) -> list[str]:
+) -> list[tuple[str, str]]:
     """The reusable Lloyd's-replay CTE chain: per iteration one
     assignment CTE (fold-of-squared-diffs distance, ties to the lowest
     cell) and one quantized centroid update (exact int64 component
@@ -446,57 +475,72 @@ def _kmeans_unroll_parts(
     the CTEs so several independent trainings (PQ subspaces) can share
     one WITH clause. `k`, the seed count, is an int or a scalar SQL
     subquery."""
-    q6 = lambda e: f"floor(({e}) * 1000000 + 0.5) / 1000000"  # noqa: E731
-    parts = [
-        f"{prefix}c0 AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell, "
-        f"list_transform(v, x -> {q6('x')}) AS c FROM {emb_cte} ORDER BY vec_id LIMIT {k})",
-    ]
+    parts = [(
+        f"{prefix}c0",
+        f"SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell, "
+        f"list_transform(v, x -> {_q6('x')}) AS c FROM {emb_cte} ORDER BY vec_id LIMIT {k}",
+    )]
     for i in range(iters + 1):
-        parts.append(
-            f"{prefix}a{i} AS (SELECT vec_id, cell FROM ("
-            f"SELECT e.vec_id, c.cell, "
-            f"list_sum(list_transform(list_zip(e.v, c.c), p -> (p[1] - p[2]) * (p[1] - p[2]))) AS dist "
+        parts.append((
+            f"{prefix}a{i}",
+            f"SELECT vec_id, cell FROM ("
+            f"SELECT e.vec_id, c.cell, {_sqdist('e.v', 'c.c')} AS dist "
             f"FROM {emb_cte} e CROSS JOIN {prefix}c{i} c) "
-            f"QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dist ASC, cell ASC) = 1)"
-        )
+            f"QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dist ASC, cell ASC) = 1",
+        ))
         if i == iters:
             break
-        parts.append(
-            f"{prefix}s{i} AS (SELECT a.cell, d.i AS dim, "
+        parts.append((
+            f"{prefix}s{i}",
+            f"SELECT a.cell, d.i AS dim, "
             f"sum(CAST(floor(e.v[d.i + 1] * 1000000 + 0.5) AS BIGINT)) AS s, count(*) AS n "
             f"FROM {prefix}a{i} a JOIN {emb_cte} e USING (vec_id) CROSS JOIN range({dim}) d(i) "
-            f"GROUP BY a.cell, d.i)"
-        )
-        parts.append(
-            f"{prefix}n{i} AS (SELECT cell, "
-            f"list({q6('CAST(s AS DOUBLE) / CAST(n * 1000000 AS DOUBLE)')} ORDER BY dim) AS c "
-            f"FROM {prefix}s{i} GROUP BY cell)"
-        )
-        parts.append(
-            f"{prefix}c{i + 1} AS (SELECT p.cell, COALESCE(u.c, p.c) AS c "
-            f"FROM {prefix}c{i} p LEFT JOIN {prefix}n{i} u USING (cell))"
-        )
+            f"GROUP BY a.cell, d.i",
+        ))
+        parts.append((
+            f"{prefix}n{i}",
+            f"SELECT cell, "
+            f"list({_q6('CAST(s AS DOUBLE) / CAST(n * 1000000 AS DOUBLE)')} ORDER BY dim) AS c "
+            f"FROM {prefix}s{i} GROUP BY cell",
+        ))
+        parts.append((
+            f"{prefix}c{i + 1}",
+            f"SELECT p.cell, COALESCE(u.c, p.c) AS c "
+            f"FROM {prefix}c{i} p LEFT JOIN {prefix}n{i} u USING (cell)",
+        ))
     return parts
 
 
-def _kmeans_oracle(k: int | str = 4, iters: int = 3, dim: int = 64) -> str:
+def _kmeans_ctes(k: int | str = 4, iters: int = 3, dim: int = 64) -> list[tuple[str, str]]:
     """Unrolled Lloyd's-iteration replay (same scheme as the pagerank
-    oracles) over the full embedding space."""
-    q6 = lambda e: f"floor(({e}) * 1000000 + 0.5) / 1000000"  # noqa: E731
-    parts = [
-        "emb AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings)",
-    ] + _kmeans_unroll_parts("", "emb", k, iters, dim)
-    sep = ",\n"
-    return (
-        f"WITH {sep.join(parts)}\n"
+    oracles) over the full embedding space: final assignment
+    a{iters}, final centroids c{iters}."""
+    return [_EMB] + _kmeans_unroll_parts("", "emb", k, iters, dim)
+
+
+def _qcell(iters: int) -> list[tuple[str, str]]:
+    """The query vector `qv` (vec_id 0) and `qcell`, its nearest final
+    centroid, ties to the lowest cell."""
+    return [
+        ("qv", "SELECT v FROM emb WHERE vec_id = 0"),
+        ("qcell", f"""
+  SELECT c.cell FROM c{iters} c CROSS JOIN qv q
+  ORDER BY {_sqdist('q.v', 'c.c')} ASC,
+           c.cell ASC LIMIT 1
+"""),
+    ]
+
+
+@register(
+    "vector_kmeans_train",
+    oracle=with_ctes(
+        _kmeans_ctes(),
         f"SELECT a.cell, count(*) AS n_members, min(a.vec_id) AS min_vec, max(a.vec_id) AS max_vec,\n"
-        f"       {q6('list_sum(any_value(c.c))')} AS centroid_sum\n"
-        f"FROM a{iters} a JOIN c{iters} c USING (cell)\n"
-        f"GROUP BY a.cell"
-    )
-
-
-@register("vector_kmeans_train", oracle=_kmeans_oracle())
+        f"       {_q6('list_sum(any_value(c.c))')} AS centroid_sum\n"
+        f"FROM a3 a JOIN c3 c USING (cell)\n"
+        f"GROUP BY a.cell",
+    ),
+)
 def vector_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL IVF training, no stand-in: 3 Lloyd iterations of k-means
     over the embedding corpus (deterministic seeded init = the k
@@ -531,27 +575,17 @@ def _ivf_probe_oracle(k: int = 4, iters: int = 3, dim: int = 64, topk: int = 5) 
     vector to its nearest final centroid (same fold distance, ties to
     the lowest cell), then exact cosine top-k restricted to that
     cell's members."""
-    base = _kmeans_oracle(k, iters, dim)
-    with_body = base[: base.index("\nSELECT a.cell")]
-    return (
-        with_body
-        + f""",
-qv AS (SELECT v FROM emb WHERE vec_id = 0),
-qcell AS (
-  SELECT c.cell FROM c{iters} c CROSS JOIN qv q
-  ORDER BY list_sum(list_transform(list_zip(q.v, c.c), p -> (p[1] - p[2]) * (p[1] - p[2]))) ASC,
-           c.cell ASC LIMIT 1
-), scored AS (
+    return with_ctes(
+        _kmeans_ctes(k, iters, dim) + _qcell(iters) + [("scored", f"""
   SELECT e.vec_id,
-         list_dot_product(e.v, q.v)
-           / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(q.v, q.v))) AS sim
+         {_cosine('e.v', 'q.v')} AS sim
   FROM emb e
   JOIN a{iters} a USING (vec_id)
   CROSS JOIN qv q
   WHERE a.cell = (SELECT cell FROM qcell) AND e.vec_id <> 0
-)
-SELECT vec_id, floor(sim * 1000000 + 0.5) / 1000000 AS sim
-FROM scored ORDER BY sim DESC, vec_id ASC LIMIT {topk}"""
+""")],
+        f"""SELECT vec_id, floor(sim * 1000000 + 0.5) / 1000000 AS sim
+FROM scored ORDER BY sim DESC, vec_id ASC LIMIT {topk}""",
     )
 
 
@@ -588,47 +622,67 @@ def vector_ivf_probe_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("vec_id", dround(F.col("sim"), 6).alias("sim"))
 
 
-def _pq_oracle(
-    m: int = 2, k: int = 4, iters: int = 2, dim: int = 64, topk: int = 8
-) -> str:
+def _pq_ctes(
+    m: int = 2, k: int = 4, iters: int = 2, dim: int = 64
+) -> list[tuple[str, str]]:
     """PQ replay: per subspace the full quantized-k-means unroll
     (shared _kmeans_unroll_parts, prefixed CTEs), then the query's
-    per-subspace distance tables (same fold), then ADC scoring =
-    sum of per-subspace table lookups at each vector's final code."""
+    per-subspace distance tables (same fold), then ADC scoring
+    (`scored`) = sum of per-subspace table lookups at each vector's
+    final code."""
     subdim = dim // m
-    parts = [
-        "emb AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings)",
-    ]
+    parts = [_EMB]
     for mi in range(m):
         lo, hi = mi * subdim + 1, (mi + 1) * subdim
-        parts.append(f"emb{mi} AS (SELECT vec_id, v[{lo}:{hi}] AS v FROM emb)")
+        parts.append((f"emb{mi}", f"SELECT vec_id, v[{lo}:{hi}] AS v FROM emb"))
         parts += _kmeans_unroll_parts(f"p{mi}_", f"emb{mi}", k, iters, subdim)
-        parts.append(f"qv{mi} AS (SELECT v FROM emb{mi} WHERE vec_id = 0)")
-        parts.append(
-            f"dt{mi} AS (SELECT c.cell, "
-            f"list_sum(list_transform(list_zip(q.v, c.c), p -> (p[1] - p[2]) * (p[1] - p[2]))) AS d "
-            f"FROM p{mi}_c{iters} c CROSS JOIN qv{mi} q)"
-        )
+        parts.append((f"qv{mi}", f"SELECT v FROM emb{mi} WHERE vec_id = 0"))
+        parts.append((
+            f"dt{mi}",
+            f"SELECT c.cell, {_sqdist('q.v', 'c.c')} AS d "
+            f"FROM p{mi}_c{iters} c CROSS JOIN qv{mi} q",
+        ))
     joins = " ".join(
         f"JOIN p{mi}_a{iters} a{mi} ON a{mi}.vec_id = a0.vec_id "
         f"JOIN dt{mi} d{mi} ON d{mi}.cell = a{mi}.cell"
         for mi in range(1, m)
     )
     dsum = " + ".join(f"d{mi}.d" for mi in range(m))
-    sep = ",\n"
-    return (
-        f"WITH {sep.join(parts)},\n"
-        f"scored AS (\n"
-        f"  SELECT a0.vec_id, {dsum} AS dist\n"
+    parts.append((
+        "scored",
+        f"\n  SELECT a0.vec_id, {dsum} AS dist\n"
         f"  FROM p0_a{iters} a0 JOIN dt0 d0 ON d0.cell = a0.cell {joins}\n"
-        f"  WHERE a0.vec_id <> 0\n"
-        f")\n"
-        f"SELECT vec_id, floor(dist * 1000000 + 0.5) / 1000000 AS adc_dist\n"
-        f"FROM scored ORDER BY dist ASC, vec_id ASC LIMIT {topk}"
+        f"  WHERE a0.vec_id <> 0\n",
+    ))
+    return parts
+
+
+def _rerank(shortlist: int, topk: int) -> tuple[list[tuple[str, str]], str]:
+    """The CTEs and SELECT of an exact cosine rerank, against the
+    query vector, of the `shortlist` vectors nearest by `scored`.dist."""
+    ctes = [
+        ("shortlist", f"SELECT vec_id FROM scored ORDER BY dist ASC, vec_id ASC LIMIT {shortlist}"),
+        ("q", "SELECT v FROM emb WHERE vec_id = 0"),
+        ("rr", f"""
+  SELECT e.vec_id,
+         {_cosine('e.v', 'q.v')} AS sim
+  FROM emb e JOIN shortlist s USING (vec_id) CROSS JOIN q
+"""),
+    ]
+    return ctes, (
+        "SELECT vec_id, floor(sim * 1000000 + 0.5) / 1000000 AS sim\n"
+        f"FROM rr ORDER BY sim DESC, vec_id ASC LIMIT {topk}"
     )
 
 
-@register("vector_pq_adc_topk", oracle=_pq_oracle(k=16))
+@register(
+    "vector_pq_adc_topk",
+    oracle=with_ctes(
+        _pq_ctes(k=16),
+        "SELECT vec_id, floor(dist * 1000000 + 0.5) / 1000000 AS adc_dist\n"
+        "FROM scored ORDER BY dist ASC, vec_id ASC LIMIT 8",
+    ),
+)
 def vector_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN (Jégou et al. 2011), end-to-end: train
     m=2 per-subspace codebooks with the deterministic quantized
@@ -676,22 +730,8 @@ def _pq_rerank_oracle(
 ) -> str:
     """IVFPQ-style read-path replay: the full PQ unroll, then the ADC
     shortlist, then exact cosine rerank of the survivors."""
-    base = _pq_oracle(m, k, iters, dim, shortlist)
-    cut = base.rindex("SELECT vec_id, floor")
-    return (
-        base[:cut]
-        + f""", shortlist AS (
-  SELECT vec_id FROM scored ORDER BY dist ASC, vec_id ASC LIMIT {shortlist}
-), q AS (SELECT v FROM emb WHERE vec_id = 0),
-rr AS (
-  SELECT e.vec_id,
-         list_dot_product(e.v, q.v)
-           / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(q.v, q.v))) AS sim
-  FROM emb e JOIN shortlist s USING (vec_id) CROSS JOIN q
-)
-SELECT vec_id, floor(sim * 1000000 + 0.5) / 1000000 AS sim
-FROM rr ORDER BY sim DESC, vec_id ASC LIMIT {topk}"""
-    )
+    ctes, select = _rerank(shortlist, topk)
+    return with_ctes(_pq_ctes(m, k, iters, dim) + ctes, select)
 
 
 @register(
@@ -736,57 +776,41 @@ def _ivfpq_residual_oracle(
     per-vector RESIDUAL against the final coarse centroid, the m
     per-subspace PQ trainings over the residuals, the query's
     residual distance tables, ADC over the query-cell members,
-    shortlist, exact rerank on the ORIGINAL vectors. ``res`` is
-    MATERIALIZED — it is referenced by every CTE of both PQ unrolls,
-    and non-materialized inlining would re-expand the coarse chain
-    exponentially (the round-10 'Too many open files' lesson)."""
+    shortlist, exact rerank on the ORIGINAL vectors."""
     subdim = dim // m
-    parts = [
-        "emb AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings)",
-    ]
-    parts += _kmeans_unroll_parts("", "emb", kc, ic, dim)
-    parts.append(
-        f"res AS MATERIALIZED (SELECT e.vec_id, "
+    parts = _kmeans_ctes(kc, ic, dim)
+    parts.append((
+        "res",
+        f"SELECT e.vec_id, "
         f"list_transform(list_zip(e.v, c.c), p -> p[1] - p[2]) AS v "
-        f"FROM emb e JOIN a{ic} a USING (vec_id) JOIN c{ic} c USING (cell))"
-    )
+        f"FROM emb e JOIN a{ic} a USING (vec_id) JOIN c{ic} c USING (cell)",
+    ))
     for mi in range(m):
         lo, hi = mi * subdim + 1, (mi + 1) * subdim
-        parts.append(f"res{mi} AS (SELECT vec_id, v[{lo}:{hi}] AS v FROM res)")
+        parts.append((f"res{mi}", f"SELECT vec_id, v[{lo}:{hi}] AS v FROM res"))
         parts += _kmeans_unroll_parts(f"p{mi}_", f"res{mi}", kpq, ipq, subdim)
-        parts.append(f"qres{mi} AS (SELECT v FROM res{mi} WHERE vec_id = 0)")
-        parts.append(
-            f"dt{mi} AS (SELECT c.cell, "
-            f"list_sum(list_transform(list_zip(q.v, c.c), p -> (p[1] - p[2]) * (p[1] - p[2]))) AS d "
-            f"FROM p{mi}_c{ipq} c CROSS JOIN qres{mi} q)"
-        )
+        parts.append((f"qres{mi}", f"SELECT v FROM res{mi} WHERE vec_id = 0"))
+        parts.append((
+            f"dt{mi}",
+            f"SELECT c.cell, {_sqdist('q.v', 'c.c')} AS d "
+            f"FROM p{mi}_c{ipq} c CROSS JOIN qres{mi} q",
+        ))
     joins = " ".join(
         f"JOIN p{mi}_a{ipq} r{mi} ON r{mi}.vec_id = r0.vec_id "
         f"JOIN dt{mi} d{mi} ON d{mi}.cell = r{mi}.cell"
         for mi in range(1, m)
     )
     dsum = " + ".join(f"d{mi}.d" for mi in range(m))
-    sep = ",\n"
-    return (
-        f"WITH {sep.join(parts)},\n"
-        f"qcell AS (SELECT cell FROM a{ic} WHERE vec_id = 0),\n"
-        f"scored AS (\n"
-        f"  SELECT r0.vec_id, {dsum} AS dist\n"
+    parts.append(("qcell", f"SELECT cell FROM a{ic} WHERE vec_id = 0"))
+    parts.append((
+        "scored",
+        f"\n  SELECT r0.vec_id, {dsum} AS dist\n"
         f"  FROM p0_a{ipq} r0 JOIN dt0 d0 ON d0.cell = r0.cell {joins}\n"
         f"  JOIN a{ic} iv ON iv.vec_id = r0.vec_id\n"
-        f"  WHERE iv.cell = (SELECT cell FROM qcell) AND r0.vec_id <> 0\n"
-        f"), shortlist AS (\n"
-        f"  SELECT vec_id FROM scored ORDER BY dist ASC, vec_id ASC LIMIT {shortlist}\n"
-        f"), q AS (SELECT v FROM emb WHERE vec_id = 0),\n"
-        f"rr AS (\n"
-        f"  SELECT e.vec_id,\n"
-        f"         list_dot_product(e.v, q.v)\n"
-        f"           / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(q.v, q.v))) AS sim\n"
-        f"  FROM emb e JOIN shortlist s USING (vec_id) CROSS JOIN q\n"
-        f")\n"
-        f"SELECT vec_id, floor(sim * 1000000 + 0.5) / 1000000 AS sim\n"
-        f"FROM rr ORDER BY sim DESC, vec_id ASC LIMIT {topk}"
-    )
+        f"  WHERE iv.cell = (SELECT cell FROM qcell) AND r0.vec_id <> 0\n",
+    ))
+    ctes, select = _rerank(shortlist, topk)
+    return with_ctes(parts + ctes, select)
 
 
 @register("vector_ivfpq_residual_rerank", oracle=_ivfpq_residual_oracle())
@@ -823,27 +847,22 @@ def vector_ivfpq_residual_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _semantic_dedup_oracle(iters: int = 3, tau: float = 0.3) -> str:
-    """SemDeDup replay: the full k-means training unroll (shared with
-    _kmeans_oracle) seeded with the query's k = max(4, n // 128) cells,
+    """SemDeDup replay: the full k-means training unroll (shared
+    _kmeans_ctes) seeded with the query's k = max(4, n // 128) cells,
     then intra-cell cosine pairs over the FINAL assignment, then the
     min-id-survivor anti-join."""
-    base = _kmeans_oracle("(SELECT greatest(4, count(*) // 128) FROM emb)", iters)
-    with_body = base[: base.index("\nSELECT a.cell")]
-    return (
-        with_body
-        + f""",
-pairs AS (
+    k = "(SELECT greatest(4, count(*) // 128) FROM emb)"
+    return with_ctes(
+        _kmeans_ctes(k, iters) + [("pairs", f"""
   SELECT aa.vec_id AS a, ab.vec_id AS b
   FROM a{iters} aa JOIN a{iters} ab ON aa.cell = ab.cell AND aa.vec_id < ab.vec_id
   JOIN emb ea ON ea.vec_id = aa.vec_id
   JOIN emb eb ON eb.vec_id = ab.vec_id
-  WHERE list_dot_product(ea.v, eb.v)
-          / (sqrt(list_dot_product(ea.v, ea.v)) * sqrt(list_dot_product(eb.v, eb.v)))
+  WHERE {_cosine('ea.v', 'eb.v')}
         >= {tau}
-)
-SELECT e.vec_id, e.label FROM embeddings e
-WHERE NOT EXISTS (SELECT 1 FROM pairs p WHERE p.b = e.vec_id)
-"""
+""")],
+        """SELECT e.vec_id, e.label FROM embeddings e
+WHERE NOT EXISTS (SELECT 1 FROM pairs p WHERE p.b = e.vec_id)""",
     )
 
 
@@ -931,43 +950,38 @@ def _ivf_sq8_oracle(
     (shared k-means unroll), SQ8 dequantized cosine inside the cell,
     top-`shortlist` survivors rescored with exact full-precision
     cosine."""
-    base = _kmeans_oracle(k, iters, dim)
-    with_body = base[: base.index("\nSELECT a.cell")]
-    return (
-        with_body
-        + f""",
-qv AS (SELECT v FROM emb WHERE vec_id = 0),
-qcell AS (
-  SELECT c.cell FROM c{iters} c CROSS JOIN qv q
-  ORDER BY list_sum(list_transform(list_zip(q.v, c.c), p -> (p[1] - p[2]) * (p[1] - p[2]))) ASC,
-           c.cell ASC LIMIT 1
-), members AS (
+    return with_ctes(
+        _kmeans_ctes(k, iters, dim) + _qcell(iters) + [
+            ("members", f"""
   SELECT e.vec_id, e.v FROM emb e JOIN a{iters} a USING (vec_id)
   WHERE a.cell = (SELECT cell FROM qcell) AND e.vec_id <> 0
-), params AS (
+"""),
+            ("params", """
   SELECT vec_id, v, list_min(v) AS mn,
          CASE WHEN list_max(v) > list_min(v)
               THEN (list_max(v) - list_min(v)) / 255.0 ELSE 1.0 END AS scale
   FROM members
-), deq AS (
+"""),
+            ("deq", """
   SELECT vec_id, v,
          list_transform(v, x -> mn + floor((x - mn) / scale + 0.5) * scale) AS dv
   FROM params
-), short AS (
+"""),
+            ("short", f"""
   SELECT vec_id, v FROM (
     SELECT d.vec_id, d.v,
-           list_dot_product(d.dv, q.v)
-             / (sqrt(list_dot_product(d.dv, d.dv)) * sqrt(list_dot_product(q.v, q.v))) AS qsim
+           {_cosine('d.dv', 'q.v')} AS qsim
     FROM deq d CROSS JOIN qv q
     QUALIFY row_number() OVER (ORDER BY qsim DESC, d.vec_id ASC) <= {shortlist})
-), exact AS (
+"""),
+            ("exact", f"""
   SELECT s.vec_id,
-         list_dot_product(s.v, q.v)
-           / (sqrt(list_dot_product(s.v, s.v)) * sqrt(list_dot_product(q.v, q.v))) AS sim
+         {_cosine('s.v', 'q.v')} AS sim
   FROM short s CROSS JOIN qv q
-)
-SELECT vec_id, floor(sim * 1000000 + 0.5) / 1000000 AS sim
-FROM exact ORDER BY sim DESC, vec_id ASC LIMIT {topk}"""
+"""),
+        ],
+        f"""SELECT vec_id, floor(sim * 1000000 + 0.5) / 1000000 AS sim
+FROM exact ORDER BY sim DESC, vec_id ASC LIMIT {topk}""",
     )
 
 
@@ -1064,44 +1078,54 @@ def vector_index_latest_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "vector_index_tail_read",
-    oracle="""
-WITH comp AS (
+    oracle=with_ctes(
+        [
+            ("comp", """
   SELECT vec_id, embedding, CAST(0 AS BIGINT) AS _epoch FROM embeddings
-), t1 AS (
+"""),
+            ("t1", """
   SELECT vec_id,
          list_transform(embedding, x -> CAST(CAST(x AS DOUBLE) + 0.25 AS FLOAT))
            AS embedding,
          CAST(1 AS BIGINT) AS _epoch
   FROM embeddings WHERE vec_id % 7 = 0
-), t2 AS (
+"""),
+            ("t2", """
   SELECT vec_id, CAST(NULL AS FLOAT[]) AS embedding,
          CAST(2 AS BIGINT) AS _epoch
   FROM embeddings WHERE vec_id % 11 = 0
-), t3 AS (
+"""),
+            ("t3", """
   SELECT vec_id,
          list_transform(embedding, x -> CAST(CAST(x AS DOUBLE) - 0.5 AS FLOAT))
            AS embedding,
          CAST(3 AS BIGINT) AS _epoch
   FROM embeddings WHERE vec_id % 33 = 0
-), tail AS (
+"""),
+            ("tail", """
   SELECT * FROM t1 UNION ALL SELECT * FROM t2 UNION ALL SELECT * FROM t3
-), tw AS (
+"""),
+            ("tw", """
   SELECT vec_id, embedding, _epoch,
          row_number() OVER (PARTITION BY vec_id ORDER BY _epoch DESC) AS rn
   FROM tail
-), live_tail AS (
+"""),
+            ("live_tail", """
   SELECT vec_id, embedding, _epoch FROM tw WHERE rn = 1 AND embedding IS NOT NULL
-), kept AS (
+"""),
+            ("kept", """
   SELECT c.vec_id, c.embedding, c._epoch FROM comp c
   WHERE NOT EXISTS (SELECT 1 FROM tail t WHERE t.vec_id = c.vec_id)
-), v AS (
+"""),
+            ("v", """
   SELECT * FROM kept UNION ALL SELECT * FROM live_tail
-)
-SELECT vec_id, _epoch AS epoch_kept,
+"""),
+        ],
+        """SELECT vec_id, _epoch AS epoch_kept,
        floor(sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
              * 1000000 + 0.5) / 1000000 AS norm
-FROM v
-""",
+FROM v""",
+    ),
 )
 def vector_index_tail_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TAIL-BOUNDED view resolution of the streaming vector index (the

@@ -14,6 +14,8 @@ Determinism rules (the driver hash-compares values):
 
 from __future__ import annotations
 
+import re
+from collections import Counter
 from dataclasses import dataclass
 from typing import Callable
 
@@ -85,6 +87,60 @@ def dround(col, digits: int = 2):
 def osql_round(expr: str, digits: int = 2) -> str:
     f = 10**digits
     return f"floor(({expr}) * {f} + 0.5) / {f}"
+
+
+# String literals and comments are skipped; everything else is one
+# identifier or one punctuation character.
+_SQL_TOKEN = re.compile(r"'(?:[^']|'')*'|--[^\n]*|\w+|\S")
+_FROM_LIST_END = frozenset(
+    "WHERE GROUP HAVING QUALIFY WINDOW ORDER LIMIT UNION EXCEPT INTERSECT SELECT".split()
+)
+
+
+def _table_reads(sql: str) -> Counter:
+    """How often `sql` reads each name as a table: an identifier right
+    after FROM or JOIN, or after a comma of a FROM list."""
+    reads: Counter = Counter()
+    in_from = [False]  # per parenthesis depth
+    prev = ""
+    for tok in _SQL_TOKEN.findall(sql):
+        if tok.startswith(("'", "--")):
+            continue
+        up = tok.upper()
+        if tok == "(":
+            in_from.append(False)
+        elif tok == ")":
+            if len(in_from) > 1:
+                in_from.pop()
+        elif up == "FROM":
+            in_from[-1] = True
+        elif up in _FROM_LIST_END:
+            in_from[-1] = False
+        elif prev in ("FROM", "JOIN") or (prev == "," and in_from[-1]):
+            reads[tok] += 1
+        prev = up
+    return reads
+
+
+def with_ctes(ctes: list[tuple[str, str]], select: str) -> str:
+    """The oracle statement `WITH <ctes> <select>` from (name, body)
+    pairs; a name may carry a column list, as in "walk(id, label)".
+
+    A CTE that the later bodies and `select` read more than once is
+    written AS MATERIALIZED: DuckDB 1.0 otherwise inlines it at every
+    read, so an unrolled loop whose round i reads round i−1 twice grows
+    exponentially with the number of rounds. A body that reads its own
+    name makes the clause RECURSIVE."""
+    names = [head.split("(")[0].strip() for head, _ in ctes]
+    if len(set(names)) != len(names):
+        raise ValueError(f"duplicate CTE name in {names}")
+    reads = [_table_reads(body) for _, body in ctes] + [_table_reads(select)]
+    defs = []
+    for i, ((head, body), name) in enumerate(zip(ctes, names)):
+        n = sum(r[name] for r in reads[i + 1:])
+        defs.append(f"{head} AS{' MATERIALIZED' if n > 1 else ''} ({body})")
+    recursive = any(reads[i][name] for i, name in enumerate(names))
+    return f"WITH {'RECURSIVE ' if recursive else ''}" + ",\n".join(defs) + f"\n{select}"
 
 
 def _micros(col):

@@ -29,6 +29,9 @@ _BPE_ISH_RE = r"[a-zA-Z]+|[0-9]|[^a-zA-Z0-9\s]"
 
 
 def tokens_ws(text: Column) -> Column:
+    """Lower-cased whitespace tokens, empty ones dropped: the one
+    tokenizer of the text, dedup and graph layers (SQL twin:
+    registries.dedup_oracles.ws_tokens)."""
     return F.filter(F.split(F.lower(text), r"\s+"), lambda t: t != "")
 
 

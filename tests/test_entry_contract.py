@@ -150,6 +150,22 @@ def test_cli_profile_records_match_status_tracker(spark, sf_dir, capsys):
     assert main(["profile", "no_such_query"]) == 2
 
 
+def test_profile_counts_only_stages_that_ran(spark):
+    """A job that reuses another job's shuffle output lists the map
+    stage again as SKIPPED; `profile`'s stage count leaves it out."""
+    from graphragdatapipeline_spark.__main__ import _spark_work
+
+    sc = spark.sparkContext
+    _, since = _spark_work(sc, (-1, -1))
+    sums = sc.parallelize(range(8), 2).map(lambda x: (x % 2, 1)).reduceByKey(
+        lambda a, b: a + b
+    )
+    assert sums.count() == 2 and sums.count() == 2  # map stage skipped once
+    work, _ = _spark_work(sc, since)
+    assert (work["jobs"], work["stages"]) == (2, 3)
+    assert work["tasks"] == 2 + 2 + 2
+
+
 def test_driver_sim_named_oracle_check(spark, sf_dir, capsys, monkeypatch):
     """`scripts/driver_sim.py --sf DIR NAME...` checks the named registry
     queries against their oracles: 0 when green, 1 when an oracle
@@ -201,3 +217,75 @@ def test_registry_submodules_import_directly():
             timeout=120,
         )
         assert r.returncode == 0, f"{mod}: {r.stderr[-500:]}"
+
+
+def _table_reads(node, reads: dict[str, int]) -> None:
+    if isinstance(node, dict):
+        if node.get("type") == "BASE_TABLE" and not node.get("schema_name"):
+            reads[node["table_name"]] = reads.get(node["table_name"], 0) + 1
+        for v in node.values():
+            _table_reads(v, reads)
+    elif isinstance(node, list):
+        for v in node:
+            _table_reads(v, reads)
+
+
+def _cte_read_counts(node, out: list[tuple[str, int]]) -> None:
+    """(name, reads by the later CTEs and the statement) for every CTE
+    of every WITH clause in a DuckDB parse tree."""
+    if isinstance(node, dict):
+        ctes = (node.get("cte_map") or {}).get("map") or []
+        rest = {k: v for k, v in node.items() if k != "cte_map"}
+        for i, e in enumerate(ctes):
+            reads: dict[str, int] = {}
+            for later in ctes[i + 1:]:
+                _table_reads(later["value"]["query"], reads)
+            _table_reads(rest, reads)
+            out.append((e["key"], reads.get(e["key"], 0)))
+        for e in ctes:
+            _cte_read_counts(e["value"]["query"], out)
+        for v in rest.values():
+            _cte_read_counts(v, out)
+    elif isinstance(node, list):
+        for v in node:
+            _cte_read_counts(v, out)
+
+
+def test_oracle_ctes_read_twice_are_materialized():
+    """Every oracle CTE read more than once is AS MATERIALIZED. DuckDB
+    1.0 inlines any other CTE at each place it is read, so an unrolled
+    loop whose round i reads round i−1 twice grows exponentially with
+    its rounds. Reads are counted on DuckDB's own parse tree. The tree
+    is taken with MATERIALIZED removed, because DuckDB serializes each
+    materialized CTE with a copy of the whole WITH clause.
+
+    graph_pagerank is the one exception. perfbench commits its oracle
+    digest keyed on a hash of this exact SQL, so its text waits for a
+    benchmark change that regenerates that digest."""
+    import re
+
+    import duckdb
+
+    con = duckdb.connect()
+    missing = {}
+    for name, q in sorted(REGISTRY.items()):
+        if q.oracle is None or name == "graph_pagerank":
+            continue
+        sql = re.sub(r"\bAS MATERIALIZED \(", "AS (", q.oracle)
+        tree = json.loads(
+            con.execute("SELECT json_serialize_sql(?::VARCHAR)", [sql]).fetchone()[0]
+        )
+        assert not tree["error"], f"{name}: {tree.get('error_message')}"
+        counts: list[tuple[str, int]] = []
+        _cte_read_counts(tree["statements"][0]["node"], counts)
+        bad = sorted(
+            cte
+            for cte, n in counts
+            if n > 1
+            and not re.search(
+                rf"\b{cte}(\([^)]*\))? AS MATERIALIZED \(", q.oracle
+            )
+        )
+        if bad:
+            missing[name] = bad
+    assert not missing, missing
