@@ -4,7 +4,9 @@ Everything here is a pure Column→Column expression built from
 pyspark.sql.functions — JVM-side, whole-stage-codegen friendly. The
 only Python kernel in the reference's function layer is ftfy+NFKC
 normalization (F1); we keep the regex chain native and gate the
-unicode-repair step behind an optional pandas UDF.
+unicode-repair step behind an optional pandas UDF. The one-call
+expressions (year parsing F3/F4, URI suffixes F5/F6, list join F8,
+prefixes F12) are written inline by the registry queries that use them.
 """
 
 from __future__ import annotations
@@ -214,43 +216,9 @@ def format_list_natural_language(col: Column) -> Column:
     )
 
 
-# ---------------------------------------------------------------------------
-# F3/F4 — year parsing (musicbrainz_helpers.py:260-277; extract_genres_articles.py:48-66)
-# ---------------------------------------------------------------------------
-
-
-def parse_release_year(col: Column) -> Column:
-    """'YYYY[-MM[-DD]]' → int year, NULL on garbage (try_cast semantics)."""
-    return F.split(col, "-").getItem(0).try_cast("int")
-
-
-def wikidata_time_to_year(col: Column) -> Column:
-    """'+1988-00-00T00:00:00Z' → 1988."""
-    return F.substring(col, 2, 4).try_cast("int")
-
-
-# ---------------------------------------------------------------------------
-# F5/F6 — URI/URL suffix extraction (extract_artists.py:123-126)
-# ---------------------------------------------------------------------------
-
-
-def qid_from_uri(col: Column) -> Column:
-    return F.element_at(F.split(col, "/"), -1)
-
-
-def title_from_url(col: Column) -> Column:
-    return F.regexp_replace(F.element_at(F.split(col, "/"), -1), "_", " ")
-
-
 # F7 — positioned entry string (ingest_graph_db.py:100-102)
 def positioned_entry(pos: Column, title: Column) -> Column:
     return F.format_string("%d. %s", pos.cast("int"), title)
-
-
-# F8 — list → CSV string with optional cap (ingest_vector_db.py:56-72)
-def list_to_csv(col: Column, max_items: int | None = None) -> Column:
-    c = F.slice(col, 1, max_items) if max_items is not None else col
-    return F.array_join(c, ", ")
 
 
 # F9 — hashing (io_helpers.py:105-115; chroma_helpers.py:111-124)
@@ -265,11 +233,6 @@ def doc_id_hash(article: Column, entity_id: Column) -> Column:
 
 def md5_hex(col: Column) -> Column:
     return F.md5(col)
-
-
-# F12/F13 — embedding prefixes and context headers
-def with_prefix(col: Column, prefix: str) -> Column:
-    return F.concat(F.lit(prefix), col)
 
 
 # F15 — null-safe list length. Spark gotcha: size(NULL) is -1 under

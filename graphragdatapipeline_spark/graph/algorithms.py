@@ -735,83 +735,57 @@ def louvain_multilevel(
     cycle costs one contraction plus `rounds` move rounds ON THE
     CONTRACTED graph, which shrinks geometrically, so the loop is
     front-loaded: cycle 1 dominates. Per-cycle convergence check is a
-    distinct-count (driver scalar, like the kcore fixpoint test).
+    distinct-count (driver scalar, like the kcore fixpoint test), run
+    in line: once before the first cycle, then once after each move.
+    Overlapping the counts with the composition checkpoint on driver
+    threads did not pay in `profile` A/Bs of graph_louvain_ladder at
+    sf0.01 (4-vCPU host), so the loop starts no thread.
     Measured at reference scale (99k/124k, γ=2.0): RB quality 51k
     after one phase → 83k at the default budget (125 s) → plateau
     ~87k ≈ 0.76× exact Leiden at rounds=8/20 cycles — the damped
     synchronous argmax trades the last fraction of sequential-Leiden
     quality for never collecting the graph (full table and the
     three-rung quality ladder in SCALE.md)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.util import inheritable_thread_target
-
     memb = louvain_move(
         edges, gamma, rounds, vertices, weight_col, n_edges_hint=n_edges_hint
     )
     mapping = memb
     cur_edges, cur_w, level_memb = edges, weight_col, memb
-    # The convergence scalars and the level-composition checkpoint are
-    # INDEPENDENT consumers of the same frames — overlap them from a
-    # 2-thread pool so their jobs back-fill each other's stage tails
-    # instead of serializing on the driver. Each count is a pure
-    # aggregate, so every label and every break decision is unchanged.
-    # Every submitted count binds its frame at submit time: the loop
-    # rebinds `mapping` while a worker may not have started yet. Each
-    # task also carries the caller's job group and local properties,
-    # which pinned-thread mode does not pass to a new Python thread.
-    with ThreadPoolExecutor(max_workers=2) as pool:
-
-        def n_communities(frame: DataFrame):
-            return pool.submit(
-                inheritable_thread_target(frame.sparkSession)(
-                    lambda: frame.select("community").distinct().count()
-                )
+    prev_n = mapping.select("community").distinct().count()
+    for cycle in range(max_cycles - 1):
+        g = _contract_weighted(cur_edges, level_memb, cur_w).persist()
+        # materialize WITH stats (see detect_communities_louvain);
+        # the count doubles as the next move's edge-sizing hint,
+        # skipping its per-call sizing job
+        gn = g.count()
+        sup = louvain_move(g, gamma, rounds, weight_col="weight", n_edges_hint=gn)
+        n = sup.select("community").distinct().count()
+        new_mapping = (
+            mapping.withColumnRenamed("community", "_lvl")
+            .join(
+                sup.select(
+                    F.col("id").alias("_lvl"),
+                    F.col("community").alias("community"),
+                ),
+                "_lvl",
             )
-
-        # prev_n isn't consulted until the first cycle's break check —
-        # let it run while the first contraction materializes.
-        f_prev_n = n_communities(mapping)
-        prev_n = None
-        for cycle in range(max_cycles - 1):
-            g = _contract_weighted(cur_edges, level_memb, cur_w).persist()
-            # materialize WITH stats (see detect_communities_louvain);
-            # the count doubles as the next move's edge-sizing hint,
-            # skipping its per-call sizing job
-            gn = g.count()
-            sup = louvain_move(
-                g, gamma, rounds, weight_col="weight", n_edges_hint=gn
-            )
-            f_n = n_communities(sup)
-            new_mapping = (
-                mapping.withColumnRenamed("community", "_lvl")
-                .join(
-                    sup.select(
-                        F.col("id").alias("_lvl"),
-                        F.col("community").alias("community"),
-                    ),
-                    "_lvl",
-                )
-                .select("id", "community")
-                .localCheckpoint(eager=True)
-            )
-            n = f_n.result()
-            if prev_n is None:
-                prev_n = f_prev_n.result()
-            done = n >= prev_n * (1.0 - min_shrink) or cycle == max_cycles - 2
-            # Superseded now that new_mapping and g are materialized:
-            # the previous composition, the level below's labels and its
-            # contracted graph. On the last cycle this level's are too.
-            for df in [mapping, level_memb] + ([sup] if done else []):
-                _free_checkpoint(df, reads=True)
-            for graph in [cur_edges] + ([g] if done else []):
-                if graph is not edges:
-                    graph.unpersist()
-            mapping = new_mapping
-            cur_edges, cur_w, level_memb = g, "weight", sup
-            if done:
-                break
-            prev_n = n
+            .select("id", "community")
+            .localCheckpoint(eager=True)
+        )
+        done = n >= prev_n * (1.0 - min_shrink) or cycle == max_cycles - 2
+        # Superseded now that new_mapping and g are materialized:
+        # the previous composition, the level below's labels and its
+        # contracted graph. On the last cycle this level's are too.
+        for df in [mapping, level_memb] + ([sup] if done else []):
+            _free_checkpoint(df, reads=True)
+        for graph in [cur_edges] + ([g] if done else []):
+            if graph is not edges:
+                graph.unpersist()
+        mapping = new_mapping
+        cur_edges, cur_w, level_memb = g, "weight", sup
+        if done:
+            break
+        prev_n = n
     return mapping
 
 

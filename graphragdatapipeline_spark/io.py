@@ -14,19 +14,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-DRIVER_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """S1/S2: lazy parquet scan of one fixture table.
@@ -57,17 +44,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = DRIVER_TABLES
-) -> dict[str, DataFrame]:
-    return {n: read_table(spark, sf_dir, n) for n in names}
-
-
-def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    for n in DRIVER_TABLES:
-        read_table(spark, sf_dir, n).createOrReplaceTempView(n)
-
-
 def write_parquet(
     df: DataFrame,
     path: str,
@@ -81,13 +57,6 @@ def write_parquet(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
-
-
-def rows_to_table(spark: SparkSession, rows: list[dict], schema: StructType) -> DataFrame:
-    """S4: list-of-structs → DataFrame with an explicit schema. Empty
-    inputs yield an empty-but-schemaed frame (never schema-less —
-    reference edge case at io_managers.py:137-140)."""
-    return spark.createDataFrame(rows, schema)
 
 
 def read_jsonl(spark: SparkSession, path: str, schema: StructType) -> DataFrame:

