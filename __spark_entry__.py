@@ -68,11 +68,7 @@ _FORCE_REVERIFY: dict[str, int] = {
 
 
 def _last_green_round() -> dict[str, int]:
-    """name -> latest round number with a green value-hash row.
-
-    A ``no_oracle`` row only counts for queries that STILL have no
-    oracle (rows-only contract); if an oracle has since been added the
-    query needs a real hash pass."""
+    """name -> latest round number with a green value-hash row."""
     here = os.path.dirname(os.path.abspath(__file__))
     last: dict[str, int] = {}
     for path in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
@@ -88,12 +84,7 @@ def _last_green_round() -> dict[str, int]:
         for name, row in rows.items():
             if name not in REGISTRY or not isinstance(row, dict):
                 continue
-            green = row.get("hash_match") is True or (
-                row.get("err") == "no_oracle"
-                and REGISTRY[name].oracle is None
-                and row.get("spark_rows") is not None
-            )
-            if green:
+            if row.get("hash_match") is True:
                 last[name] = max(last.get(name, rnd), rnd)
     return last
 
@@ -127,8 +118,4 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        name: REGISTRY[name].oracle
-        for name in _ordered_names()
-        if REGISTRY[name].oracle is not None
-    }
+    return {name: REGISTRY[name].oracle for name in _ordered_names()}

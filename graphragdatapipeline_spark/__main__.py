@@ -216,9 +216,7 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.cmd == "list":
         for name, qd in sorted(REGISTRY.items()):
-            kind = "oracle" if qd.oracle else "rows-only"
-            star = " *" if qd.headline else ""
-            print(f"{name}  [{kind}]{star}")
+            print(f"{name} *" if qd.headline else name)
         return 0
 
     if args.cmd == "profile":

@@ -3,8 +3,8 @@
 Everything here is a pure Column→Column expression built from
 pyspark.sql.functions — JVM-side, whole-stage-codegen friendly. The
 only Python kernel in the reference's function layer is ftfy+NFKC
-normalization (F1); we keep the regex chain native and gate the
-unicode-repair step behind an optional pandas UDF. The one-call
+normalization (F1); we keep the regex chain native and run the
+vendored unicode repair plus NFKC in one pandas UDF. The one-call
 expressions (year parsing F3/F4, URI suffixes F5/F6, list join F8,
 prefixes F12) are written inline by the registry queries that use them.
 """
@@ -76,9 +76,8 @@ def fix_mojibake(text: str | None) -> str | None:
     transform (encode cp1252→fall back Latin-1, decode UTF-8) is
     applied while the text still shows mojibake bigrams and the
     round-trip is byte-clean; anything ambiguous is returned untouched.
-    Pure stdlib, so the DEFAULT normalize chain repairs corrupted
-    corpora even where ftfy is not installed; ftfy proper remains the
-    higher-fidelity rung via mojibake_repair_default()."""
+    Pure stdlib; a caller that wants ftfy proper passes it as
+    normalize_text_full's ``repair_fn``."""
     import re
 
     if text is None:
@@ -154,27 +153,11 @@ def fix_text_vendored(text: str | None) -> str | None:
     """Vendored ftfy.fix_text pipeline over the three corruption
     classes a web/log corpus actually hits (same order ftfy applies
     them): terminal escapes → HTML entities → mojibake. Pure stdlib;
-    ftfy proper remains the higher-fidelity rung via
-    mojibake_repair_default()."""
+    it is normalize_text_full's default repairer, and the one the
+    oracles replay."""
     if text is None:
         return None
     return fix_mojibake(unescape_html_entities(remove_terminal_escapes(text)))
-
-
-def mojibake_repair_default():
-    """ftfy.fix_text when the library is importable, else the vendored
-    fix_text_vendored pipeline (terminal escapes + HTML entities +
-    mojibake — the same classes ftfy.fix_text covers by default).
-    Import-gated the same way as exact Leiden (graph/algorithms.py):
-    the engine upgrades in-place when ftfy is installed, and the
-    default chain still repairs the common corruption classes without
-    it."""
-    try:
-        import ftfy
-
-        return ftfy.fix_text
-    except ImportError:
-        return fix_text_vendored
 
 
 def normalize_text_full(col: Column, repair_fn=None) -> Column:
@@ -183,17 +166,13 @@ def normalize_text_full(col: Column, repair_fn=None) -> Column:
     (ftfy) → NFKC → native regex chain.
 
     ``repair_fn`` is an injectable str→str mojibake repairer (same
-    injection seam as llm.py's generator): default is ftfy.fix_text
-    when importable, else the vendored fix_mojibake — so the DEFAULT
-    chain repairs the common UTF-8/Latin-1 double-encode corruption
-    even without ftfy installed.
-    The repair runs inside ONE Arrow-batched pandas UDF together with
-    NFKC (one Python boundary crossing, not two); the regex chain
-    stays JVM-native. With no repairer available the chain is
-    NFKC-only."""
-    if repair_fn is None:
-        repair_fn = mojibake_repair_default()
-    return _normalize_nfkc(col, repair_fn)
+    injection seam as llm.py's generator; pass ftfy.fix_text to use
+    ftfy). None means fix_text_vendored, the repairer the oracles
+    replay. The repair runs inside ONE Arrow-batched pandas UDF
+    together with NFKC (one Python boundary crossing, not two); the
+    regex chain stays JVM-native. normalize_text_nfkc is the
+    NFKC-only chain."""
+    return _normalize_nfkc(col, fix_text_vendored if repair_fn is None else repair_fn)
 
 
 # ---------------------------------------------------------------------------

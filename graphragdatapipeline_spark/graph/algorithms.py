@@ -32,6 +32,7 @@ from collections.abc import Callable, Iterable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from graphragdatapipeline_spark.graph.leiden import leiden_membership
 from graphragdatapipeline_spark.session import _free_checkpoint
 
 # Fixed-count loops materialize every _MATERIALIZE_EVERY rounds: the
@@ -444,11 +445,10 @@ def detect_communities_leiden_exact(
     """G3 exact rung: Leiden on the collected edge list — algorithm
     parity with the reference (neo4j_helpers.py:237-268,
     RBConfigurationVertexPartition at resolutions 2.0/0.5/0.1,
-    seed 42). When igraph+leidenalg are installed they run verbatim;
-    otherwise the vendored pure-Python Leiden (graph/leiden.py — same
-    RB-configuration objective, Louvain move-and-aggregate plus the
-    connected-communities guarantee, deterministic under the seed)
-    takes over, so this rung always executes.
+    seed 42), run by the vendored pure-Python Leiden (graph/leiden.py —
+    same RB-configuration objective, Louvain move-and-aggregate plus
+    the connected-communities guarantee, deterministic under the seed),
+    which is the one the oracle replays.
 
     Only valid when |V|+|E| fits on the driver (the reference's scale,
     ~99k nodes / ~124k edges, trivially does). The distributed default
@@ -457,37 +457,15 @@ def detect_communities_leiden_exact(
     spark = vertices.sparkSession
     ids = sorted(r[0] for r in vertices.select("id").distinct().collect())
     idx = {v: i for i, v in enumerate(ids)}
-    e_pairs = [
-        (idx[r[0]], idx[r[1]])
+    weighted = [
+        (idx[r[0]], idx[r[1]], 1.0)
         for r in edges.select("src", "dst").collect()
         if r[0] in idx and r[1] in idx
     ]
-    memberships = []
-    try:
-        import igraph
-        import leidenalg
-    except ImportError:
-        from graphragdatapipeline_spark.graph.leiden import leiden_membership
-
-        for res in resolutions:
-            memberships.append(
-                leiden_membership(
-                    len(ids),
-                    [(u, v, 1.0) for u, v in e_pairs],
-                    gamma=float(res),
-                    seed=seed,
-                )
-            )
-    else:  # pragma: no cover - env-dependent
-        g = igraph.Graph(n=len(ids), edges=e_pairs, directed=False)
-        for res in resolutions:
-            part = leidenalg.find_partition(
-                g,
-                leidenalg.RBConfigurationVertexPartition,
-                resolution_parameter=res,
-                seed=seed,
-            )
-            memberships.append(part.membership)
+    memberships = [
+        leiden_membership(len(ids), weighted, gamma=float(res), seed=seed)
+        for res in resolutions
+    ]
     rows = [
         (v, int(memberships[0][i]), int(memberships[1][i]), int(memberships[2][i]))
         for v, i in idx.items()

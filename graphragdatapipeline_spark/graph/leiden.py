@@ -1,8 +1,8 @@
 """Pure-Python Leiden-style community detection (driver-side).
 
-Vendored fallback for the igraph/leidenalg exact rung, closing the
-reference's algorithmic-parity gap without optional native deps
-(reference utils/neo4j_helpers.py:237-268: leidenalg
+The engine's one Leiden implementation, closing the reference's
+algorithmic-parity gap with no native dependency (reference
+utils/neo4j_helpers.py:237-268: leidenalg
 ``RBConfigurationVertexPartition`` at resolutions 2.0/0.5/0.1,
 seed 42). Same quality objective — the Reichardt–Bornholdt
 configuration-null model
@@ -19,9 +19,9 @@ strict improvement on a disconnected community (no cross-component
 edges means e_c is unchanged while K_a^2 + K_b^2 < (K_a+K_b)^2), so
 the pass never trades quality for the guarantee.
 
-Driver-side by design, like the leidenalg rung it substitutes for:
-valid when |V|+|E| fits on one machine (the reference's scale, ~99k
-nodes / ~124k edges, trivially does). The DISTRIBUTED default for
+Driver-side by design, like the reference's leidenalg call: valid
+when |V|+|E| fits on one machine (the reference's scale, ~99k nodes /
+~124k edges, trivially does). The DISTRIBUTED default for
 100 TB graphs remains ``algorithms.detect_communities`` (multilevel
 label propagation, same per-vertex output contract).
 

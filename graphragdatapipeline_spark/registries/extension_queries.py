@@ -128,10 +128,10 @@ def text_mojibake_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     gets a deterministic non-ASCII suffix, the whole string is
     CORRUPTED by round-tripping its UTF-8 bytes through a Latin-1
     mis-decode (the classic mojibake), and the DEFAULT
-    normalize_text_full chain — vendored fix_mojibake (ftfy when
-    installed) + NFKC + native regex chain — must recover it. The
-    oracle is the CLEAN text through the same native chain: the query
-    is green iff repair(corrupt(x)) == x for every document."""
+    normalize_text_full chain — vendored fix_text_vendored repair +
+    NFKC + native regex chain — must recover it. The oracle is the
+    CLEAN text through the same native chain: the query is green iff
+    repair(corrupt(x)) == x for every document."""
     from graphragdatapipeline_spark.functions import normalize_text_full
 
     d = read_table(spark, sf_dir, "documents")

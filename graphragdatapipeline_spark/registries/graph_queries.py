@@ -784,10 +784,9 @@ SELECT CAST((SELECT count(*) FROM customer) + (SELECT count(*) FROM supplier)
 """,
 )
 def graph_leiden_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G3 exact rung, now executable without native deps: Leiden
-    (vendored pure-Python RB-configuration Louvain+refinement,
-    graph/leiden.py; leidenalg verbatim when installed) at the
-    reference's resolutions 2.0/0.5/0.1, seed 42
+    """G3 exact rung: Leiden (vendored pure-Python RB-configuration
+    Louvain+refinement, graph/leiden.py — the engine's only Leiden) at
+    the reference's resolutions 2.0/0.5/0.1, seed 42
     (neo4j_helpers.py:237-268). A heuristic's labels aren't
     SQL-replayable, so the oracle pins the CONTRACT, computed honestly
     from two independent runs (contract-query pattern, like the sketch

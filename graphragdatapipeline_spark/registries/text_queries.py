@@ -269,12 +269,12 @@ FROM sized, unnest(generate_series(1, n_chunks)) AS t(i)
 def text_chunking_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T2 tokenizer-exact mode through the REAL merge-table BPE path
     (chunk_text_tokenizer: encode → sliding id-windows → decode inside
-    one Arrow kernel — the same code path an HF tokenizer plugs into,
-    reference data_transformation_helpers.py:161-183). The vendored
-    suffix-cascade merge table merges every fixture-vocabulary word to
-    exactly one token, so the SQL oracle replays the chunking as word
-    windows — green only if the min-rank merge loop, id assignment and
-    decode are all exact."""
+    one Arrow kernel — the tokenizer_factory seam a library tokenizer
+    plugs into, reference data_transformation_helpers.py:161-183). The
+    vendored suffix-cascade merge table merges every fixture-vocabulary
+    word to exactly one token, so the SQL oracle replays the chunking as
+    word windows — green only if the min-rank merge loop, id assignment
+    and decode are all exact."""
     from graphragdatapipeline_spark.text.chunking import (
         chunk_text_tokenizer,
         fixture_bpe_factory,

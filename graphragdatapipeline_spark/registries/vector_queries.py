@@ -146,14 +146,13 @@ FROM documents GROUP BY lang
 )
 def vector_embed_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V1 — batch embedding of documents via the deterministic
-    hash-projection pandas UDF (Arrow-batched; the production encoder
-    swaps in behind the same seam — set $SPARK_GRAFT_EMBED_MODEL to a
-    SentenceTransformer name, vs.embedder_from_env). Emits per-lang counts of
-    embedded docs with unit-norm check; the oracle pins the contract
-    (every document embedded, every embedding unit-norm) — the hash
-    values themselves are the stub's choice, not the contract."""
+    hash-projection pandas UDF (Arrow-batched, vs.embed_text_udf).
+    Emits per-lang counts of embedded docs with unit-norm check; the
+    oracle pins the contract (every document embedded, every embedding
+    unit-norm) — the hash values themselves are the stub's choice, not
+    the contract."""
     d = read_table(spark, sf_dir, "documents")
-    embed = vs.embedder_from_env(dim=64)
+    embed = vs.embed_text_udf(dim=64)
     emb = d.select("doc_id", "lang", embed(F.col("text")).alias("embedding"))
     ed = F.transform("embedding", lambda x: x.cast("double"))
     return (

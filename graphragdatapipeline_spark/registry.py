@@ -30,14 +30,14 @@ from graphragdatapipeline_spark.operators import relational as rel
 @dataclass(frozen=True)
 class QueryDef:
     fn: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None  # None → non-SQL-expressible, rows-only check
+    oracle: str  # DuckDB SQL the driver hash-compares against
     headline: bool = False  # included in bench.py
 
 
 REGISTRY: dict[str, QueryDef] = {}
 
 
-def register(name: str, oracle: str | None, headline: bool = False):
+def register(name: str, oracle: str, headline: bool = False):
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         import functools
 
@@ -62,6 +62,9 @@ def register(name: str, oracle: str | None, headline: bool = False):
             # correctness window (the old one vanishes, the count
             # stays plausible) — fail loudly at import time instead.
             raise ValueError(f"duplicate query registration: {name!r}")
+        if not (isinstance(oracle, str) and oracle.strip()):
+            # Every query carries the DuckDB oracle the driver checks.
+            raise ValueError(f"query {name!r} registered without an oracle")
         REGISTRY[name] = QueryDef(fn=wrapped, oracle=oracle, headline=headline)
         return fn
 

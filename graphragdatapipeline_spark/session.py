@@ -63,7 +63,7 @@ _DEFAULTS = {
     # per-key stateful ops) lives off-heap and spills to disk — the
     # in-memory HDFS-backed default OOMs once stateful-operator
     # cardinality outgrows executor heap, which a 100 TB stream does on
-    # day one. Also required by transformWithStateInPandas.
+    # day one.
     "spark.sql.streaming.stateStore.providerClass": (
         "org.apache.spark.sql.execution.streaming.state."
         "RocksDBStateStoreProvider"

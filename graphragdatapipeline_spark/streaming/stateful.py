@@ -73,63 +73,6 @@ def user_lifetime_agg_batch(events: DataFrame) -> DataFrame:
     )
 
 
-class DistinctTypesProcessor:
-    """transformWithStateInPandas processor (Spark 4 arbitrary-state
-    API): per-user set of distinct event types, kept in ListState.
-    Demonstrates the modern successor of applyInPandasWithState —
-    typed state handles (value/list/map) + timers — on the same
-    batch-twin contract as user_lifetime_agg.
-
-    Runtime requirement: the transformWithState state-server protocol
-    speaks protobuf; environments without google.protobuf (this
-    container) get a clean failure at stream start, and the
-    applyInPandasWithState operator above is the drop-in fallback."""
-
-    def init(self, handle) -> None:
-        from pyspark.sql.types import StringType, StructField, StructType
-
-        self._types = handle.getListState(
-            "types", StructType([StructField("t", StringType())])
-        )
-
-    def handleInputRows(self, key, rows, timerValues):
-        import pandas as pd
-
-        seen = {r[0] for r in self._types.get()}
-        for pdf in rows:
-            seen.update(pdf["event_type"].dropna().unique().tolist())
-        self._types.put([(t,) for t in sorted(seen)])
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_distinct_types": [len(seen)]}
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def user_distinct_types_stream(events_stream: DataFrame) -> DataFrame:
-    """groupBy(user).transformWithStateInPandas with ListState."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    # Subclass lazily so importing this module never requires the API.
-    proc = type(
-        "_Proc", (DistinctTypesProcessor, StatefulProcessor), {}
-    )()
-    return events_stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=proc,
-        outputStructType="user_id BIGINT, n_distinct_types INT",
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def user_distinct_types_batch(events: DataFrame) -> DataFrame:
-    """Batch twin: distinct event types per user."""
-    return events.groupBy("user_id").agg(
-        F.countDistinct("event_type").cast("int").alias("n_distinct_types")
-    )
-
-
 HISTORY_STATE_DDL = "cur_state STRING, valid_from_us BIGINT, n_events BIGINT"
 HISTORY_OUTPUT_DDL = (
     "user_id BIGINT, state STRING, valid_from TIMESTAMP, "

@@ -6,8 +6,8 @@ settings.py:126-127). Tokenizers are heavy, version-sensitive
 executor state, so the engine's default is a deterministic
 char-window splitter with identical overlap semantics (4 chars ≈ 1
 token), fully expressible as native Spark SQL — no Python in the hot
-path. The token-aware mode is available behind a pandas UDF for
-parity-minded deployments.
+path. The token-aware mode is a pandas UDF over a caller-supplied
+tokenizer factory.
 """
 
 from __future__ import annotations
@@ -108,50 +108,11 @@ def chunk_text_tokens(tokens: Column, chunk_tokens: int = 2048, overlap_tokens: 
     )
 
 
-def hf_tokenizer_default(model: str = "nomic-ai/nomic-embed-text-v1"):
-    """Zero-arg tokenizer factory using HuggingFace libs when
-    importable, else None — the same import gate as ftfy repair
-    (functions.py) and exact Leiden (graph/algorithms.py). The factory
-    (not the tokenizer) is shipped to executors; each Python worker
-    constructs and caches its own tokenizer instance."""
-    try:
-        from tokenizers import Tokenizer  # noqa: F401
-
-        def factory():
-            from tokenizers import Tokenizer
-
-            tok = Tokenizer.from_pretrained(model)
-
-            class _Wrap:
-                def encode(self, text: str) -> list[int]:
-                    return tok.encode(text).ids
-
-                def decode(self, ids: list[int]) -> str:
-                    return tok.decode(ids)
-
-            return _Wrap()
-
-        return factory
-    except ImportError:
-        pass
-    try:
-        from transformers import AutoTokenizer  # noqa: F401
-
-        def factory():
-            from transformers import AutoTokenizer
-
-            return AutoTokenizer.from_pretrained(model)
-
-        return factory
-    except ImportError:
-        return None
-
-
 class WhitespaceTokenizer:
     """Dependency-free tokenizer honoring the encode/decode contract
-    (ids index a per-instance vocab built on the fly). The default
-    stand-in for HF tokenizers in tests and HF-less deployments —
-    token-mode chunking through the exact same windowing code path."""
+    (ids index a per-instance vocab built on the fly). A stand-in for
+    a library tokenizer in tests — token-mode chunking through the
+    exact same windowing code path."""
 
     def __init__(self) -> None:
         self.vocab: dict[str, int] = {}
@@ -249,9 +210,8 @@ def suffix_merge_table(words: tuple[str, ...] = FIXTURE_WORD_VOCAB) -> list[tupl
 
 def fixture_bpe_factory():
     """Zero-arg tokenizer factory over the vendored fixture merge
-    table — drop-in for hf_tokenizer_default where HF libs are absent,
-    exercising the full encode → id-window → decode path with a real
-    merge-table BPE."""
+    table — the registry's tokenizer, exercising the full encode →
+    id-window → decode path with a real merge-table BPE."""
     return BpeTokenizer(suffix_merge_table())
 
 
@@ -259,28 +219,21 @@ def chunk_text_tokenizer(
     text: Column,
     chunk_tokens: int = 2048,
     overlap_tokens: int = 512,
-    tokenizer_factory=None,
+    *,
+    tokenizer_factory,
 ) -> Column:
     """T2 (tokenizer mode) — the reference's HF-token-exact chunking
     (data_transformation_helpers.py:161-183; 2048 tokens / 512 overlap
     from settings.py:126-127): encode → sliding id-windows → decode,
     inside ONE Arrow-batched pandas UDF.
 
-    ``tokenizer_factory`` is a zero-arg callable returning an object
-    with ``encode(str) -> list[int]`` / ``decode(list[int]) -> str``
-    (injectable for tests; default = HF when importable). Raises
-    ImportError when neither is available — the char/word-window modes
-    above are the no-dependency paths with identical overlap
-    semantics."""
-    if tokenizer_factory is None:
-        tokenizer_factory = hf_tokenizer_default()
-    if tokenizer_factory is None:
-        raise ImportError(
-            "token-exact chunking needs `tokenizers` or `transformers` "
-            "(or an injected tokenizer_factory); use chunk_text_chars / "
-            "chunk_text_tokens for the dependency-free modes"
-        )
-
+    ``tokenizer_factory`` is a required zero-arg callable returning an
+    object with ``encode(str) -> list[int]`` / ``decode(list[int]) ->
+    str``; it is how a caller brings a library tokenizer (e.g. a
+    HuggingFace one). The factory, not the tokenizer, is shipped to
+    executors, and each Python worker builds and caches its own
+    instance. The char/word-window modes above need no tokenizer and
+    have identical overlap semantics."""
     from pyspark.sql.functions import pandas_udf
 
     step = chunk_tokens - overlap_tokens

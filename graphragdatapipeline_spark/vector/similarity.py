@@ -13,8 +13,8 @@ JVM fold, no UDF), top-k is orderBy+limit, and the scale paths are:
   O(n²) never materializes.
 
 Embedding generation (V1/V2) ships as a deterministic hash-projection
-pandas UDF — the reference's SentenceTransformer is swappable in
-production, but correctness gates need determinism (SURVEY §7.3).
+pandas UDF — the one embedder every vector query and its oracle use,
+because correctness gates need determinism (SURVEY §7.3).
 """
 
 from __future__ import annotations
@@ -406,7 +406,8 @@ def embed_text_udf(dim: int = 64):
     (string → array<float>, L2-normalized). Stands in for the
     reference's SentenceTransformer batch encoder
     (chroma_helpers.py:36-81): same dataflow (Arrow-batched, executor-
-    local state, normalized output), deterministic output for tests."""
+    local state, normalized output; None rows pass through as None),
+    deterministic output for tests and oracles."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("array<float>")
@@ -427,72 +428,6 @@ def embed_text_udf(dim: int = 64):
         return texts.map(one)
 
     return _embed
-
-
-def embed_text_udf_real(
-    model_name: str = "sentence-transformers/all-MiniLM-L6-v2",
-    batch_size: int = 32,
-):
-    """V1/V2 real-model rung: SentenceTransformer batch encoding as an
-    Arrow-batched pandas UDF — the exact dataflow of the reference's
-    encoder (chroma_helpers.py:36-81: batched encode, normalized
-    output), with the real model instead of the hash projection.
-    Import-gated like exact Leiden / ftfy: sentence-transformers is an
-    optional dep, and wiring it must not be an untested code path
-    (the contract test runs either way — see tests/test_vector.py).
-
-    Scale shape: the model loads ONCE per Python worker (module-level
-    cache keyed by model name — executor-local state, never shipped
-    through the closure) and encodes whole Arrow batches, so per-row
-    cost is the matmul, not model init. Output is L2-normalized
-    array<float>, None rows pass through as None — identical contract
-    to embed_text_udf, so the two are drop-in interchangeable."""
-    try:
-        import sentence_transformers  # noqa: F401
-    except ImportError as exc:
-        raise NotImplementedError(
-            "embed_text_udf_real needs sentence-transformers installed; "
-            "use embed_text_udf (deterministic hash projection) otherwise"
-        ) from exc
-
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<float>")
-    def _embed(texts):  # type: ignore[no-untyped-def]
-        from sentence_transformers import SentenceTransformer
-
-        cache = globals().setdefault("_ST_MODEL_CACHE", {})
-        if model_name not in cache:
-            cache[model_name] = SentenceTransformer(model_name)
-        model = cache[model_name]
-        mask = texts.notna()
-        out = [None] * len(texts)
-        todo = texts[mask].tolist()
-        if todo:
-            vecs = model.encode(
-                todo, batch_size=batch_size, normalize_embeddings=True
-            )
-            for pos, vec in zip([i for i, m in enumerate(mask) if m], vecs):
-                out[pos] = [float(x) for x in vec]
-        return type(texts)(out)
-
-    return _embed
-
-
-def embedder_from_env(dim: int = 64):
-    """The embedding seam every vector query goes through: the
-    deterministic hash projection by DEFAULT (oracle-able, no deps),
-    upgraded in place to the real SentenceTransformer encoder when the
-    user opts in via $SPARK_GRAFT_EMBED_MODEL — same env-gated upgrade
-    pattern as mojibake_repair_default()/ftfy. Opting in intentionally
-    changes embeddings (that is the point), so the DuckDB value oracles
-    only hold with the variable unset."""
-    import os
-
-    model = os.environ.get("SPARK_GRAFT_EMBED_MODEL")
-    if model:
-        return embed_text_udf_real(model)
-    return embed_text_udf(dim)
 
 
 def upsert_dedup(new: DataFrame, existing: DataFrame, id_col: str) -> DataFrame:

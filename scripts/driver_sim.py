@@ -6,8 +6,7 @@ Usage: python scripts/driver_sim.py [--sf DIR] [NAME ...]
 
 With no NAME it replays the driver: the entry() smoke check, then every
 queries()[name] against oracle_sql()[name]. With names it checks those
-registry queries. --sf sets the fixture (default sf0.01). A query with
-no oracle (rows-only contract) must run; its row count is printed.
+registry queries. --sf sets the fixture (default sf0.01).
 Prints TOTAL_MISMATCHES: N and exits 1 if N > 0; an unknown name exits 2.
 """
 import os
@@ -38,15 +37,11 @@ def main(argv=None):
     else:
         assert len(e.entry(spark).collect()) > 0
         osql = e.oracle_sql()
-        checks = [(n, fn, osql.get(n)) for n, fn in sorted(e.queries().items())]
+        checks = [(n, fn, osql[n]) for n, fn in sorted(e.queries().items())]
     con = duckdb_conn(sf_dir)
     bad = 0
     for name, fn, oracle in checks:
-        sdf = fn(spark, sf_dir)
-        if oracle is None:
-            print(f"{name}: no oracle, rows={sdf.count()}", flush=True)
-            continue
-        p = compare(sdf, con.sql(oracle))
+        p = compare(fn(spark, sf_dir), con.sql(oracle))
         if p:
             bad += 1
             print(f"{name}: MISMATCH {p[:3]}", flush=True)

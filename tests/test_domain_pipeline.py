@@ -193,16 +193,11 @@ def test_full_normalize_repair_rung_injected(spark):
 
 
 def test_full_normalize_default_repairs_mojibake(spark):
-    """The DEFAULT chain (no injection, no ftfy needed) must repair the
-    classic UTF-8/Latin-1 mojibake — the vendored fix_mojibake rung
-    matches reference behavior on corrupted fixtures; ftfy upgrades
-    the rung in-place when installed."""
-    from graphragdatapipeline_spark.functions import (
-        mojibake_repair_default,
-        normalize_text_full,
-    )
+    """The DEFAULT chain (no injection) must repair the classic
+    UTF-8/Latin-1 mojibake — the vendored fix_text_vendored repairer
+    matches reference behavior on corrupted fixtures."""
+    from graphragdatapipeline_spark.functions import normalize_text_full
 
-    assert mojibake_repair_default() is not None
     # cp1252-style, latin-1-style (curly quotes), and clean rows
     latin1_bad = "“naïve”".encode("utf-8").decode("latin-1")
     dbl_bad = "café".encode("utf-8").decode("latin-1").encode("utf-8").decode("latin-1")
@@ -229,17 +224,6 @@ def test_fix_mojibake_pure_function():
     assert fix_mojibake("Ã") == "Ã"  # lone lead byte, no continuation
     assert fix_mojibake("ASCII only") == "ASCII only"
     assert fix_mojibake(None) is None
-
-
-def test_full_normalize_fallback_without_repair(spark, monkeypatch):
-    """With no repairer importable the full chain degrades to the
-    NFKC-only path (documented partial, SURVEY §7.3)."""
-    from graphragdatapipeline_spark import functions as ef
-
-    monkeypatch.setattr(ef, "mojibake_repair_default", lambda: None)
-    df = spark.createDataFrame([("ﬁne  \n text",)], ["t"])
-    out = df.select(ef.normalize_text_full(F.col("t")).alias("n")).first().n
-    assert out == "fine text"  # NFKC + chain still applied
 
 
 def test_generate_summaries_custom_generator(spark):

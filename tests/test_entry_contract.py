@@ -41,6 +41,21 @@ def test_queries_cover_registry_exactly():
     assert all(isinstance(s, str) and s.strip() for s in osql.values())
 
 
+def test_register_requires_an_oracle():
+    """Every query carries its DuckDB oracle: registering one without
+    SQL fails at import time, like a duplicate name, and leaves the
+    registry as it was."""
+    import pytest
+
+    from graphragdatapipeline_spark.registry import register
+
+    before = dict(REGISTRY)
+    for oracle in ("", "  \n", None):
+        with pytest.raises(ValueError, match="without an oracle"):
+            register("no_oracle_query", oracle)(lambda spark, sf_dir: None)
+    assert REGISTRY == before
+
+
 def test_unverified_queries_sort_into_driver_window():
     """Every never-green query must sit inside the driver's checked
     window, ahead of already-green ones."""
@@ -74,9 +89,7 @@ def test_force_reverify_in_window_when_room():
 
 def test_ordering_is_deterministic():
     assert list(entry_mod.queries()) == list(entry_mod.queries())
-    assert list(entry_mod.oracle_sql()) == [
-        n for n in entry_mod.queries() if REGISTRY[n].oracle is not None
-    ]
+    assert list(entry_mod.oracle_sql()) == list(entry_mod.queries())
 
 
 def test_cli_list_query_skew_compact(spark, sf_dir, tmp_path, capsys):
@@ -89,7 +102,7 @@ def test_cli_list_query_skew_compact(spark, sf_dir, tmp_path, capsys):
 
     assert main(["list"]) == 0
     out = capsys.readouterr().out
-    assert "flagship_order_rollup" in out and "[oracle]" in out
+    assert [line.split()[0] for line in out.splitlines()] == sorted(REGISTRY)
 
     assert main(["query", "pricing_summary", "--sf-dir", sf_dir, "-n", "3"]) == 0
     assert main(["query", "no_such_query"]) == 2
@@ -269,7 +282,7 @@ def test_oracle_ctes_read_twice_are_materialized():
     con = duckdb.connect()
     missing = {}
     for name, q in sorted(REGISTRY.items()):
-        if q.oracle is None or name == "graph_pagerank":
+        if name == "graph_pagerank":
             continue
         sql = re.sub(r"\bAS MATERIALIZED \(", "AS (", q.oracle)
         tree = json.loads(
@@ -371,3 +384,45 @@ def test_only_session_starts_threads():
             ):
                 offenders.add(rel)
     assert not offenders, sorted(offenders)
+
+
+def test_package_has_one_implementation_per_default():
+    """Each default has one implementation, the one its oracle replays:
+    every absolute import of the package resolves where it runs, no
+    handler catches ImportError/ModuleNotFoundError to switch paths,
+    and no module names the transformWithState API or an env var that
+    swaps the embedder. A caller brings a library through an injection
+    seam (`normalize_text_full(repair_fn=)`,
+    `chunk_text_tokenizer(tokenizer_factory=)`), never by installing
+    it."""
+    import ast
+    import importlib.util
+
+    gated = {"ImportError", "ModuleNotFoundError"}
+    banned = ("transformWithStateInPandas", "StatefulProcessor", "SPARK_GRAFT_EMBED_MODEL")
+    pkg = os.path.join(REPO, "graphragdatapipeline_spark")
+    unresolved, catches, names = set(), set(), set()
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        rel = os.path.relpath(path, pkg)
+        with open(path) as f:
+            src = f.read()
+        names.update(f"{rel}: {word}" for word in banned if word in src)
+        for node in ast.walk(ast.parse(src, path)):
+            if isinstance(node, ast.Import):
+                modules = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom) and node.level == 0:
+                modules = [node.module]
+            elif isinstance(node, ast.ExceptHandler) and node.type is not None:
+                caught = node.type.elts if isinstance(node.type, ast.Tuple) else [node.type]
+                if gated & {c.id for c in caught if isinstance(c, ast.Name)}:
+                    catches.add(rel)
+                continue
+            else:
+                continue
+            unresolved.update(
+                f"{rel}: {m}" for m in modules
+                if importlib.util.find_spec(m.split(".")[0]) is None
+            )
+    assert not unresolved, sorted(unresolved)
+    assert not catches, sorted(catches)
+    assert not names, sorted(names)

@@ -149,10 +149,9 @@ def test_degrees(spark):
 
 
 def test_leiden_exact_runs_without_optional_deps(spark):
-    """The exact-Leiden rung always executes: leidenalg verbatim when
-    installed, else the vendored pure-Python Leiden (graph/leiden.py)
-    — same output contract either way (round-7 parity close-out; it
-    used to raise NotImplementedError without igraph)."""
+    """The exact-Leiden rung runs the vendored pure-Python Leiden
+    (graph/leiden.py) with no optional library, and emits one row per
+    vertex with the three level columns."""
     from graphragdatapipeline_spark.graph import algorithms as ga
 
     v = spark.createDataFrame([("a",), ("b",), ("c",)], "id STRING")
@@ -800,11 +799,10 @@ def test_louvain_ladder_releases_levels(spark):
     assert _persistent_rdds(spark) - before <= 2
 
 
-def test_louvain_multilevel_pool_jobs_keep_job_group(spark):
-    """The jobs louvain_multilevel submits from its thread pool run
-    under the caller's job group. Pinned-thread mode does not pass
-    local properties to a new Python thread, so an unwrapped pool
-    task's jobs would carry no group at all."""
+def test_louvain_multilevel_jobs_keep_job_group(spark):
+    """Every job louvain_multilevel submits runs under the caller's job
+    group: it starts no thread of its own (driver threads come only
+    from session.run_concurrently), so no job is left ungrouped."""
     cl = [[f"t{j}_{i}" for i in range(3)] for j in range(3)]
     rows = [(u, v) for nodes in cl for i, u in enumerate(nodes) for v in nodes[i + 1:]]
     rows += [(cl[j][0], cl[(j + 1) % 3][1]) for j in range(3)]

@@ -154,34 +154,6 @@ def test_stateful_lifetime_agg_stream_equals_batch(spark, sf_dir, events_stream_
     assert a == b and len(a) > 0
 
 
-def test_transform_with_state_distinct_types(spark, sf_dir, events_stream_dir, tmp_path):
-    """transformWithStateInPandas (Spark 4 arbitrary-state API) over
-    real micro-batches: final per-user distinct-type counts must match
-    the batch twin. The state-server protocol needs protobuf — skip
-    where it's absent (applyInPandasWithState covers stateful parity
-    there)."""
-    import pytest
-
-    pytest.importorskip("google.protobuf.descriptor")
-    from graphragdatapipeline_spark.streaming import stateful as st
-
-    stream = so.read_events_stream(spark, events_stream_dir)
-    agg = st.user_distinct_types_stream(stream)
-    got = _run_stream_to_memory(
-        spark, agg, "tws_mem", str(tmp_path), output_mode="update"
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_distinct_types"))
-    final = (
-        got.withColumn("_rn", F.row_number().over(w)).filter("_rn = 1").drop("_rn")
-    )
-    batch = st.user_distinct_types_batch(read_table(spark, sf_dir, "events"))
-    a = {(r.user_id, r.n_distinct_types) for r in final.collect()}
-    b = {(r.user_id, r.n_distinct_types) for r in batch.collect()}
-    assert a == b and len(a) > 0
-
-
 def test_stream_stream_join_equals_batch(spark, sf_dir, events_stream_dir, tmp_path):
     """Two readStreams, watermarked, interval-joined — output must
     equal the batch twin once all files are processed."""

@@ -119,21 +119,6 @@ def test_tokenizer_chunking_injected(spark):
     assert by_id[3] is None
 
 
-def test_tokenizer_chunking_import_gate():
-    """Without HF libs (and no injected factory) the mode refuses with
-    a clear error instead of failing on executors mid-job."""
-    import pytest
-
-    from graphragdatapipeline_spark.text.chunking import hf_tokenizer_default
-
-    if hf_tokenizer_default() is not None:
-        pytest.skip("HF tokenizers present; gate not reachable")
-    import pyspark.sql.functions as F
-
-    with pytest.raises(ImportError, match="chunk_text_chars"):
-        tc.chunk_text_tokenizer(F.lit("x"))
-
-
 def test_bpe_tokenizer_merge_loop():
     """The vendored merge-table BPE runs the real min-rank greedy:
     vocabulary words merge to one token, unknown words fall back to

@@ -213,27 +213,15 @@ def test_kmeans_cells_corpus_smaller_than_k(spark):
 
 
 def test_real_embedder_rung_contract(spark):
-    """The SentenceTransformer rung is never an untested path (gated
-    like exact Leiden): with the lib installed, the UDF must satisfy
-    the embed contract (array<float>, unit L2 norm, None passthrough);
-    without it, embed_text_udf_real raises the honest gate and
-    embedder_from_env falls back to the hash projection with the SAME
-    contract — checked here either way."""
+    """The embedder every vector query uses satisfies the embed
+    contract a library encoder would (array<float>, unit L2 norm,
+    None passthrough)."""
     import math
-
-    import pytest
 
     from pyspark.sql import functions as F
     from graphragdatapipeline_spark.vector import similarity as vs
 
-    try:
-        import sentence_transformers  # noqa: F401
-
-        udf = vs.embed_text_udf_real()
-    except ImportError:
-        with pytest.raises(NotImplementedError, match="sentence-transformers"):
-            vs.embed_text_udf_real()
-        udf = vs.embedder_from_env(dim=16)
+    udf = vs.embed_text_udf(dim=16)
 
     df = spark.createDataFrame(
         [(0, "hello world"), (1, None), (2, "grete palucca")],
@@ -246,25 +234,6 @@ def test_real_embedder_rung_contract(spark):
         vec = rows[k]
         assert vec is not None and len(vec) >= 16
         assert abs(math.sqrt(sum(x * x for x in vec)) - 1.0) < 1e-5
-
-
-def test_embedder_from_env_gates_on_variable(spark, monkeypatch):
-    """Unset → hash projection (the oracle-able default). Set without
-    the lib installed → the honest NotImplementedError, never a silent
-    fallback that would mask a misconfigured production job."""
-    import pytest
-
-    from graphragdatapipeline_spark.vector import similarity as vs
-
-    monkeypatch.delenv("SPARK_GRAFT_EMBED_MODEL", raising=False)
-    assert vs.embedder_from_env(dim=8) is not None  # hash path builds
-
-    monkeypatch.setenv("SPARK_GRAFT_EMBED_MODEL", "some/model")
-    try:
-        import sentence_transformers  # noqa: F401
-    except ImportError:
-        with pytest.raises(NotImplementedError):
-            vs.embedder_from_env()
 
 
 def test_pq_train_encode_adc_contract(spark):
