@@ -80,23 +80,18 @@ def top_n_frequency(
     group_col: str,
     item_col: str,
     n: int,
-    explode_list: bool = False,
 ) -> DataFrame:
     """A10/A11 — top-N most frequent items per group (reference:
     detect_communities.py:100-135 Counter.most_common over flattened
     tag/genre lists). Returns (group, items: array<string> sorted by
     desc count, then item asc for determinism).
 
-    Plan shape: optional explode → partial-agg count on (group, item)
-    → window rank → collect_list of struct → sorted projection. The
-    (group, item) pre-aggregation keeps the window input small — at
-    100 TB the explode output never reaches the window shuffle raw.
+    Plan shape: partial-agg count on (group, item) → window rank →
+    collect_list of struct → sorted projection. The (group, item)
+    pre-aggregation keeps the window input small: the window shuffle
+    never sees raw rows. A list column is exploded by the caller.
     """
-    items = (
-        df.select(F.col(group_col), F.explode(item_col).alias("_item"))
-        if explode_list
-        else df.select(F.col(group_col), F.col(item_col).alias("_item"))
-    )
+    items = df.select(F.col(group_col), F.col(item_col).alias("_item"))
     counts = items.filter(F.col("_item").isNotNull()).groupBy(group_col, "_item").count()
     w = Window.partitionBy(group_col).orderBy(F.desc("count"), F.asc("_item"))
     ranked = counts.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= n)

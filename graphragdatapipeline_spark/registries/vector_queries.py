@@ -1207,12 +1207,9 @@ def vector_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch k-NN (cosine_topk_batch): exact cosine top-5 for a TABLE
     of queries (every 50th id) against the rest of the collection in
     ONE corpus pass — the retrieval-eval / reference-corpus-dedup
-    shape, vs vector_knn_bruteforce's single query vector. Registered
-    on the fold path (bit-compatible with the DuckDB cross-join +
-    row_number replay); the mapInPandas matmul scale path — shuffle
-    bounded by queries × k × partitions instead of queries × corpus —
-    is pinned fold≡arrow in test_cosine_topk_batch_arrow_matches_fold
-    and measured in SCALE.md."""
+    shape, vs vector_knn_bruteforce's single query vector. The fold
+    scorer is bit-compatible with the DuckDB cross-join + row_number
+    replay."""
     e = read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     queries = e.filter(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")

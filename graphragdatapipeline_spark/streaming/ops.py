@@ -651,7 +651,6 @@ def vector_index_sink(
     vec_col: str = "embedding",
     auto_compact_every: int | None = None,
     pq_books: list[list[list[float]]] | None = None,
-    encode_path: str = "fold",
 ):
     """Streaming ANN index maintenance — the vector twin of the
     substring / co-occurrence / near-dup sinks, closing the
@@ -667,11 +666,11 @@ def vector_index_sink(
        several times; ONE row is kept deterministically (highest
        xxhash64 of the vector, so foreachBatch retries pick the same
        row),
-    2. nearest-centroid cell assignment against the TRAINED broadcast
-       centroid literals (vector.similarity.nearest_centroid_col —
-       zero shuffle; centroids are index metadata trained once by
-       kmeans_cells and passed in: a production IVF index encodes at
-       ingest, it never re-clusters per batch),
+    2. nearest-centroid cell assignment against the TRAINED centroids
+       (vector.similarity._encode_cells — zero shuffle; centroids are
+       index metadata trained once by kmeans_cells and passed in: a
+       production IVF index encodes at ingest, it never re-clusters
+       per batch),
     3. rows (id, vec, cell, _epoch) land in ``index_dir/epoch=N``,
        cell-SORTED within files (sortWithinPartitions — parquet
        min/max row-group stats let a probe's cell filter skip
@@ -708,29 +707,16 @@ def vector_index_sink(
     row instead of the 4·dim-byte vectors. Tombstones carry NULL
     codes like they carry NULL cell/vector.
 
-    ``encode_path`` picks how the per-row (cell, codes) encode
-    executes — the kmeans_cells assign_path split applied at ingest:
-    "fold" (default) is the interpreted SQL-expression path,
-    bit-compatible with the batch re-encode expressions the pytests
-    pin; "arrow" is one numpy matmul per Arrow batch
-    (ivfpq_encode_udf), the 100 TB ingest shape (measured at the
-    2 M-vector drain: fold encode multiplies the ingest wall ~6×).
-    Arrow may tie-break EQUIDISTANT boundary vectors differently by
-    ulps — recall-neutral for an index; keep "fold" where downstream
-    tests compare against the fold expressions."""
-    from graphragdatapipeline_spark.vector.similarity import (
-        ivfpq_encode_udf,
-        nearest_centroid_col,
-        pq_encode_cols,
-        residual_col,
-    )
+    The encode (cell and codes) is vector.similarity._encode_cells,
+    which picks its kernel by centroid count: the fold expressions up
+    to 8 centroids, the Arrow-batched numpy kernel above (the ingest
+    shape SCALE.md measured 93× faster at k=16). With more than 8
+    centroids an EQUIDISTANT boundary vector may land in the other,
+    equally near cell."""
+    from graphragdatapipeline_spark.vector.similarity import _encode_cells
 
     index = _vector_index(index_dir, id_col, vec_col)
-    if encode_path not in ("fold", "arrow"):
-        raise ValueError(f"encode_path must be fold|arrow, got {encode_path!r}")
-    arrow_enc = (
-        ivfpq_encode_udf(centroids, pq_books) if encode_path == "arrow" else None
-    )
+    code_cols = [f"pq_{i}" for i in range(len(pq_books or []))]
 
     def compute(df: DataFrame, epoch_id: int) -> dict[str, DataFrame]:
         # deterministic within-batch pick; desc puts NULL keys last, so
@@ -743,28 +729,19 @@ def vector_index_sink(
                 )
             )
         )
-        live = F.col(vec_col).isNotNull()
-        picked = df.withColumn("_rn", F.row_number().over(w)).filter(
-            F.col("_rn") == 1
+        # one encode per row: the struct is a single column, and the
+        # field extraction below reads it, not re-runs it
+        picked = (
+            df.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .withColumn("_enc", _encode_cells(centroids, F.col(vec_col), pq_books))
         )
-        if arrow_enc is not None:
-            # one UDF evaluation per row (the struct is a single
-            # column; field extraction below reads it, not re-runs it)
-            picked = picked.withColumn("_enc", arrow_enc(F.col(vec_col)))
-            cell = F.col("_enc.cell")
-            codes = [F.col(f"_enc.pq_{i}") for i in range(len(pq_books or []))]
-        else:
-            cell = F.when(live, nearest_centroid_col(centroids, F.col(vec_col)))
-            codes = []
-            if pq_books is not None:
-                res = residual_col(centroids, F.col(vec_col), cell)
-                codes = [F.when(live, c) for c in pq_encode_cols(pq_books, res)]
         batch = picked.select(
             F.col(id_col),
             F.col(vec_col),
-            cell.alias("cell"),
+            F.col("_enc.cell").alias("cell"),
             F.lit(epoch_id).cast("bigint").alias("_epoch"),
-            *[c.alias(f"pq_{i}") for i, c in enumerate(codes)],
+            *[F.col(f"_enc.{c}").alias(c) for c in code_cols],
         )
         return {"vectors": batch.sortWithinPartitions("cell")}
 
@@ -886,7 +863,6 @@ def vector_index_probe(
     nprobe: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    score_path: str = "fold",
 ) -> DataFrame:
     """IVF probe over a streamed index: the query's ``nprobe`` nearest
     cells are ranked DRIVER-SIDE over the k-row centroid metadata (no
@@ -943,12 +919,8 @@ def vector_index_probe(
     # A directory-pruned 1-cell scan is often ONE file locally, so the
     # interpreted cosine fold runs on one core; fan out first (no-op at
     # cluster scale, where a cell spans many row groups — measured at
-    # the 2 M decade: 3.7 → 1.3 s/query). score_path="arrow" swaps the
-    # fold for the numpy matmul kernel (~1.8× per probe — serving
-    # knob; see cosine_topk).
-    return cosine_topk(
-        ensure_parallelism(cand), query_vec, k, id_col, vec_col, score_path
-    )
+    # the 2 M decade: 3.7 → 1.3 s/query).
+    return cosine_topk(ensure_parallelism(cand), query_vec, k, id_col, vec_col)
 
 
 def _probe_candidates(

@@ -70,98 +70,23 @@ def cosine_topk(
     k: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    score_path: str = "fold",
 ) -> DataFrame:
     """V3 — brute-force cosine top-k (the exact baseline; Chroma
     n_results=8 default per README.md:459). One scan, one narrow
     TopK sort — Spark's TakeOrderedAndProject keeps only k rows per
     partition, so this scales linearly with no full sort.
 
-    ``score_path`` picks the scoring kernel (the ingest-encode
-    fold/arrow split of kmeans_cells and ivfpq_encode_udf applied to
-    the query side):
-
-    - ``"fold"`` (default) — the interpreted zip_with + aggregate
-      column expression, bit-compatible with the DuckDB oracles
-      (list_dot_product is the same sequential left-fold); every
-      registered query scores this way.
-    - ``"arrow"`` — one numpy matmul per Arrow batch
-      (cosine_score_udf): ~1.8× faster per probe on a 123 k-vector
-      cell (1.33 → 0.74 s measured, dim=64). Same divergence class as
-      the encode kernel: numpy's pairwise summation may differ from
-      the sequential fold by ulps, so rows with EQUAL-to-the-ulp sims
-      can swap ranks at the k boundary — recall-neutral for ANN
-      serving, which is why the fold stays the value-oracle surface
-      and arrow is the serving-path knob (vector_index_probe
-      score_path)."""
-    if score_path == "arrow":
-        sim = cosine_score_udf(query_vec)(F.col(vec_col))
-    elif score_path == "fold":
-        q = F.array(*[F.lit(float(x)) for x in query_vec])
-        sim = cosine_similarity(F.col(vec_col), q)
-    else:
-        raise ValueError(f"unknown score_path {score_path!r}")
+    Scores with the zip_with + aggregate fold, bit-compatible with the
+    DuckDB oracles (list_dot_product is the same sequential left
+    fold). A NULL embedding scores NULL and sorts last; a zero-norm
+    one raises DIVIDE_BY_ZERO under ANSI (the Spark 4 default)."""
+    q = F.array(*[F.lit(float(x)) for x in query_vec])
+    sim = cosine_similarity(F.col(vec_col), q)
     return (
         embeddings.select(F.col(id_col), sim.alias("sim"))
         .orderBy(F.desc("sim"), F.asc(id_col))
         .limit(k)
     )
-
-
-def cosine_score_udf(query_vec: list[float]):
-    """Arrow-batched cosine scorer against a fixed query vector: one
-    float64 numpy matmul per batch instead of a per-row interpreted
-    fold. NULL embeddings score NULL (matching the fold — sorts last
-    under desc), and zero-norm vectors ALSO score NULL, never NaN
-    (which would sort FIRST in Spark's double ordering and corrupt
-    top-k). The zero-norm case is the one deliberate divergence from
-    the fold, which raises DIVIDE_BY_ZERO under ANSI (the Spark 4
-    default): on the serving path a degenerate vector should read as
-    no-match, not fail the query — pinned both ways in
-    test_cosine_topk_arrow_matches_fold. A degenerate QUERY vector is
-    a caller error on either path (the fold raises in-flight) and
-    raises ValueError here at construction — silently scoring NaN
-    against every corpus row would return k arbitrary ids."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    qa = np.asarray([float(x) for x in query_vec], dtype=np.float64)
-    qnorm = np.linalg.norm(qa)
-    if qnorm == 0.0 or not np.isfinite(qnorm):
-        raise ValueError("zero-norm or non-finite query vector")
-    qn = qa / qnorm
-
-    @pandas_udf("double")
-    def _cos(s):
-        arrs = s.to_numpy()
-        valid, m, norms = _valid_vector_rows(np, arrs)
-        out = np.zeros(len(arrs), dtype=np.float64)
-        if len(valid):
-            out[valid] = (m @ qn) / norms
-        ser = pd.Series(out, dtype="Float64")
-        keep = np.zeros(len(arrs), dtype=bool)
-        keep[valid] = True
-        ser[~keep] = pd.NA
-        return ser
-
-    return _cos
-
-
-def _valid_vector_rows(np, arrs):
-    """Shared degenerate-row filter of the arrow scoring kernels:
-    positions of non-NULL, nonzero-norm vectors in an Arrow column
-    chunk, plus the stacked float64 matrix and its norms for exactly
-    those positions."""
-    mask = np.fromiter(
-        (a is not None for a in arrs), dtype=bool, count=len(arrs)
-    )
-    if not mask.any():
-        return np.empty(0, dtype=np.int64), None, None
-    m = np.vstack(arrs[mask]).astype(np.float64)
-    norms = np.linalg.norm(m, axis=1)
-    nz = norms != 0.0
-    return np.flatnonzero(mask)[nz], m[nz], norms[nz]
 
 
 def cosine_topk_batch(
@@ -172,7 +97,6 @@ def cosine_topk_batch(
     vec_col: str = "embedding",
     q_id_col: str = "q_id",
     q_vec_col: str = "q_vec",
-    score_path: str = "fold",
 ) -> DataFrame:
     """Batch k-NN: exact cosine top-k for a whole TABLE of queries in
     one corpus pass — the retrieval-eval / reference-dedup shape where
@@ -180,116 +104,18 @@ def cosine_topk_batch(
     Output: (q_id, vec_id, sim, rank), rank 1..k per query, ordered by
     (sim desc, id asc) — the cosine_topk total order.
 
-    - ``score_path="fold"`` (default): broadcast the query table into
-      a cross join, score with the interpreted fold, rank with one
-      window shuffle on q_id. Bit-compatible with the DuckDB replay
-      (the `vector_knn_batch` oracle) — the value-oracle surface. The
-      cross join materializes |corpus| × |queries| scored rows, so
-      this path is for oracle-sized batches.
-    - ``score_path="arrow"``: the scale path. The query matrix ships
-      to executors once (task closure); each corpus Arrow batch is
-      scored with ONE float64 numpy matmul and reduced to its
-      per-query local top-k INSIDE the kernel, so the shuffle carries
-      ≤ |queries| × k × partitions candidate rows instead of
-      |queries| × |corpus| — per-partition top-k under a total order
-      is a superset of the global top-k, so the final window returns
-      exactly the fold ranking (pinned in
-      test_cosine_topk_batch_arrow_matches_fold; divergence class =
-      the kernel ulp ties, as cosine_topk). Queries are collected to
-      the driver first — the batch must fit in driver/executor memory
-      (10³–10⁵ ids + vectors; shard a bigger batch outside); the
-      kernel scores queries in chunks of 1024, so its working set is
-      O(chunk × batch) regardless of the query count. A NULL or
-      zero-norm QUERY vector raises ValueError up front, naming the
-      offending ids (the NaN sims it would produce sort FIRST in
-      Spark's double ordering — k arbitrary rows per poisoned query).
-
-    Degenerate CORPUS rows follow the paths' documented contracts:
-    NULL/zero vectors are excluded from arrow results; the fold
-    scores NULL (null sims rank last) or raises on zero-norm under
-    ANSI."""
-    if score_path == "arrow":
-        import numpy as np
-        import pandas as pd
-        from pyspark.sql.types import DoubleType, StructField, StructType
-
-        q_rows = queries.select(q_id_col, q_vec_col).collect()
-        if not q_rows:
-            # empty query table: the fold path's empty cross join
-            # already returns the right (empty) shape
-            return cosine_topk_batch(
-                corpus, queries, k, id_col, vec_col, q_id_col, q_vec_col
-            )
-        bad = [r[0] for r in q_rows if r[1] is None]
-        if bad:
-            raise ValueError(f"NULL query vectors for ids {bad[:5]}")
-        q_ids = np.asarray([r[0] for r in q_rows])
-        qm = np.asarray(
-            [[float(x) for x in r[1]] for r in q_rows], dtype=np.float64
-        )
-        qnorms = np.linalg.norm(qm, axis=1)
-        degenerate = ~np.isfinite(qnorms) | (qnorms == 0.0)
-        if degenerate.any():
-            raise ValueError(
-                "zero-norm or non-finite query vectors for ids "
-                f"{q_ids[degenerate][:5].tolist()}"
-            )
-        qm = qm / qnorms[:, None]
-        kk, chunk = k, 1024
-
-        def gen(batches):
-            for pdf in batches:
-                valid, m, norms = _valid_vector_rows(
-                    np, pdf[vec_col].to_numpy()
-                )
-                if len(valid) == 0:
-                    continue
-                ids = pdf[id_col].to_numpy()[valid]
-                # sort the batch by id ONCE so a kind="stable" argsort
-                # on -sims breaks equal-sim ties in id-asc order — the
-                # global (sim desc, id asc) total order, without
-                # materializing an n_q × batch id matrix for lexsort
-                bo = np.argsort(ids, kind="stable")
-                ids = ids[bo]
-                mn = m[bo] / norms[bo, None]
-                take = min(kk, len(ids))
-                for lo in range(0, len(qm), chunk):
-                    sims = qm[lo : lo + chunk] @ mn.T  # chunk × batch
-                    top = np.argsort(-sims, axis=1, kind="stable")[:, :take]
-                    yield pd.DataFrame(
-                        {
-                            "q_id": np.repeat(q_ids[lo : lo + chunk], take),
-                            "vec_id": ids[top].ravel(),
-                            "sim": np.take_along_axis(
-                                sims, top, axis=1
-                            ).ravel(),
-                        }
-                    )
-
-        out_schema = StructType(
-            [
-                StructField("q_id", queries.schema[q_id_col].dataType),
-                StructField("vec_id", corpus.schema[id_col].dataType),
-                StructField("sim", DoubleType()),
-            ]
-        )
-        cand = corpus.select(
-            F.col(id_col), F.col(vec_col)
-        ).mapInPandas(gen, out_schema)
-        scored = cand.select(
-            F.col("q_id").alias(q_id_col),
-            F.col("vec_id").alias(id_col),
-            "sim",
-        )
-    elif score_path == "fold":
-        q = F.broadcast(queries.select(q_id_col, q_vec_col))
-        scored = corpus.select(id_col, vec_col).crossJoin(q).select(
-            q_id_col,
-            id_col,
-            cosine_similarity(F.col(vec_col), F.col(q_vec_col)).alias("sim"),
-        )
-    else:
-        raise ValueError(f"unknown score_path {score_path!r}")
+    The query table is broadcast into a cross join, scored with the
+    cosine_topk fold and ranked with one window shuffle on q_id —
+    bit-compatible with the DuckDB replay (the `vector_knn_batch`
+    oracle). The cross join materializes |corpus| × |queries| scored
+    rows. Degenerate rows follow the fold: NULL vectors score NULL
+    (ranked last), zero-norm ones raise under ANSI."""
+    q = F.broadcast(queries.select(q_id_col, q_vec_col))
+    scored = corpus.select(id_col, vec_col).crossJoin(q).select(
+        q_id_col,
+        id_col,
+        cosine_similarity(F.col(vec_col), F.col(q_vec_col)).alias("sim"),
+    )
     w = Window.partitionBy(q_id_col).orderBy(F.desc("sim"), F.asc(id_col))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -561,31 +387,6 @@ def nearest_centroid_col(cents: list[list[float]], vec_col: Column) -> Column:
         dists.append(F.aggregate(diff, F.lit(0.0), lambda acc, x: acc + x))
     darr = F.array(*dists)
     return (F.array_position(darr, F.array_min(darr)) - 1).cast("int")
-
-
-def _argmin_l2(x, cmat, cnorm):
-    """Nearest row of ``cmat`` for each row of ``x`` in numpy: argmin
-    over ||x−c||² = ||x||² − 2·x·c + ||c||² (``cnorm`` = ||c||²; the
-    ||x||² term is constant per row and dropped). np.argmin takes the
-    first minimum, so ties go to the lowest id like the fold's
-    array_position."""
-    import numpy as np
-
-    return np.argmin(cnorm[None, :] - 2.0 * (x @ cmat.T), axis=1)
-
-
-def _nearest_centroid_rows(vecs, cmat, cnorm):
-    """The arrow paths' NULL-aware nearest-centroid kernel over a
-    pandas Series of vectors: (positions of the non-NULL rows, their
-    float64 matrix, each one's nearest centroid). NULL rows get no
-    cell, as the fold gives them a NULL one."""
-    import numpy as np
-
-    pos = np.flatnonzero(vecs.notna().to_numpy())
-    if not len(pos):
-        return pos, None, pos
-    x = np.vstack(vecs.iloc[pos].to_numpy()).astype(np.float64)
-    return pos, x, _argmin_l2(x, cmat, cnorm)
 
 
 def _ranked_cells(
@@ -921,58 +722,73 @@ def ivfpq_adc_score_col(
     return score
 
 
-def ivfpq_encode_udf(
-    cents: list[list[float]], books: list[list[list[float]]] | None = None
-):
-    """Arrow-batched IVF(+PQ) ingest encoder — the 100 TB encode
-    kernel: one numpy matmul per Arrow batch computes the
-    nearest-centroid cell and (when ``books`` is given) the m
-    residual-PQ codes, returned as ONE struct column
-    (cell, pq_0..pq_{m-1}). The fold expressions
-    (nearest_centroid_col / pq_encode_cols over residual_col) are the
-    value-oracle surface — bit-compatible with the DuckDB replay —
-    but they are interpreted higher-order functions whose cost is
-    k·dim PER ROW; at ingest volume that is the wrong shape (measured
-    at the 2 M-vector drain: fold encode ~6× the ingest wall). This
-    kernel is the assign_path="arrow" of kmeans_cells applied to the
-    sink: distances use numpy's summation order, so EQUIDISTANT
-    boundary vectors may tie-break differently from the fold by ulps —
-    recall-neutral for an index (either cell is equally near), not
-    oracle material. NULL vectors (tombstones) encode as an all-NULL
-    struct row."""
+def _encode_cells(
+    cents: list[list[float]],
+    vec_col: Column,
+    books: list[list[list[float]]] | None = None,
+) -> Column:
+    """Nearest-centroid encode as ONE struct column (cell, pq_0 ..
+    pq_{m-1}): each row's cell and, given the residual codebooks
+    ``books``, its m residual-PQ codes. NULL vectors (tombstones) get
+    NULL fields. The one owner of the encode kernel choice, made by
+    centroid count as kmeans_cells and vector_index_sink both need it:
+
+    - up to 8 centroids: the fold expressions (nearest_centroid_col,
+      residual_col → pq_encode_cols), bit-compatible with the DuckDB
+      replay — the registered k=4 trainings take this path;
+    - above 8: one float64 numpy matmul per Arrow batch, argmin over
+      ||c||² − 2·x·c (np.argmin keeps the first minimum, so ties go
+      to the lowest id like the fold). The fold costs k·dim
+      interpreted work per row and its literal-array expression grows
+      with k: at the 202 k-vector drain with k=16 the fold encode was
+      93× slower (SCALE.md). numpy sums in another order, so an
+      EQUIDISTANT boundary vector may take the other, equally near
+      cell.
+
+    Callers read the fields off the struct, so the kernel runs once
+    per row."""
+    if len(cents) <= 8:
+        cell = nearest_centroid_col(cents, vec_col)
+        codes = (
+            []
+            if books is None
+            else pq_encode_cols(books, residual_col(cents, vec_col, cell))
+        )
+        return F.struct(
+            cell.alias("cell"), *[c.alias(f"pq_{i}") for i, c in enumerate(codes)]
+        )
+
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    cmat = np.asarray(cents, dtype=np.float64)  # k_c × dim
-    cnorm = (cmat * cmat).sum(axis=1)
-    bmats = None
-    if books is not None:
-        bmats = [np.asarray(b, dtype=np.float64) for b in books]  # m × (k × subdim)
-        bnorms = [(b * b).sum(axis=1) for b in bmats]
-        subdim = bmats[0].shape[1]
-    fields = ["cell INT"] + (
-        [f"pq_{i} INT" for i in range(len(books))] if books is not None else []
-    )
-    ddl = ", ".join(fields)
+    def argmin_l2(x, mat):
+        # ||x||² is constant per row and dropped
+        dist = (mat * mat).sum(axis=1)[None, :] - 2.0 * (x @ mat.T)
+        return np.argmin(dist, axis=1)
 
-    @pandas_udf(ddl)
+    cmat = np.asarray(cents, dtype=np.float64)  # k × dim
+    bmats = [np.asarray(b, dtype=np.float64) for b in books or []]  # k × subdim each
+    fields = ["cell"] + [f"pq_{i}" for i in range(len(bmats))]
+
+    @pandas_udf(", ".join(f"{f} INT" for f in fields))
     def _enc(vecs):  # type: ignore[no-untyped-def]
-        import pandas as _pd
+        import pandas as pd
 
-        n = len(vecs)
-        out = {f.split()[0]: [None] * n for f in fields}
-        idxs, x, cells = _nearest_centroid_rows(vecs, cmat, cnorm)
-        for pos, c in zip(idxs, cells):
-            out["cell"][pos] = int(c)
-        if bmats is not None and len(idxs):
+        out = pd.DataFrame(
+            {f: pd.Series([None] * len(vecs), dtype="Int32") for f in fields}
+        )
+        pos = np.flatnonzero(vecs.notna().to_numpy())
+        if len(pos):
+            x = np.vstack(vecs.iloc[pos].to_numpy()).astype(np.float64)
+            cells = argmin_l2(x, cmat)
+            out.iloc[pos, 0] = cells
             r = x - cmat[cells]
-            for mi, (bm, bn) in enumerate(zip(bmats, bnorms)):
-                rs = r[:, mi * subdim : (mi + 1) * subdim]
-                for pos, cd in zip(idxs, _argmin_l2(rs, bm, bn)):
-                    out[f"pq_{mi}"][pos] = int(cd)
-        return _pd.DataFrame(out)
+            for mi, bm in enumerate(bmats):
+                sd = bm.shape[1]
+                out.iloc[pos, mi + 1] = argmin_l2(r[:, mi * sd : (mi + 1) * sd], bm)
+        return out
 
-    return _enc
+    return _enc(vec_col)
 
 
 def sq8_encode(
@@ -1042,7 +858,6 @@ def kmeans_cells(
     iters: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assign_path: str = "auto",
     init_centroids: list[list[float]] | None = None,
 ) -> tuple[DataFrame, list[list[float]]]:
     """Deterministic distributed k-means (Lloyd's algorithm) — the
@@ -1066,26 +881,11 @@ def kmeans_cells(
     (cell, dim) partial-agg whose row count is k·dim, independent of
     corpus size. Empty clusters keep their previous centroid.
 
-    ``assign_path`` picks how nearest-centroid assignment executes:
-
-    - ``"fold"`` — the per-centroid left-fold SQL expression,
-      bit-compatible with the DuckDB oracle's unrolled replay. O(k·dim)
-      interpreted higher-order-function work per row, so it is the
-      right path only while k is small (the oracle fixture trains
-      k=4).
-    - ``"arrow"`` — Arrow-batched pandas UDF: one numpy
-      (batch × dim)·(dim × k) matmul per batch, argmin with
-      ties-to-lowest (np.argmin takes the first minimum). This is the
-      100 TB IVF-training shape — centroids broadcast as a k·dim
-      closure array, assignment cost amortized across the whole Arrow
-      batch. Distances use numpy's summation order, which can differ
-      from the fold by ulps AT CELL BOUNDARIES — equidistant-boundary
-      vectors are the only divergence risk, so the exact fold remains
-      the oracle surface.
-    - ``"auto"`` (default) — ``"fold"`` for k ≤ 8 (covers every
-      oracle-checked registration, which all train k=4), ``"arrow"``
-      above: the interpreted cost and the literal-array expression
-      size both grow linearly in k."""
+    Assignment runs through _encode_cells, which picks the kernel by
+    the centroid count: the oracle-exact fold for k ≤ 8 (the
+    registered k=4 trainings), the Arrow-batched numpy kernel above
+    (pq_train's k=16 codebooks). A NULL embedding gets a NULL cell
+    either way."""
     ed = F.transform(F.col(vec_col), lambda x: x.cast("double"))
 
     if init_centroids is not None:
@@ -1113,32 +913,11 @@ def kmeans_cells(
     # len(cents), not the requested count).
     k = len(cents)
 
-    if assign_path == "auto":
-        assign_path = "fold" if k <= 8 else "arrow"
-
-    def assign_col(cents_now: list[list[float]]) -> Column:
-        if assign_path == "arrow":
-            import numpy as np
-            from pyspark.sql.functions import pandas_udf
-
-            cmat = np.asarray(cents_now, dtype=np.float64)  # k × dim
-            cnorm = (cmat * cmat).sum(axis=1)  # ||c||² per centroid
-
-            @pandas_udf("int")
-            def _nearest(vecs):  # type: ignore[no-untyped-def]
-                import pandas as _pd
-
-                out = _pd.Series([None] * len(vecs), dtype="Int32")
-                pos, _, cells = _nearest_centroid_rows(vecs, cmat, cnorm)
-                out.iloc[pos] = cells
-                return out
-
-            return _nearest(F.col(vec_col))
-        return nearest_centroid_col(cents_now, F.col(vec_col))
-
     for _ in range(iters):
         assigned = embeddings.select(
-            F.col(id_col), assign_col(cents).alias("cell"), ed.alias("_v")
+            F.col(id_col),
+            _encode_cells(cents, F.col(vec_col))["cell"].alias("cell"),
+            ed.alias("_v"),
         )
         sums = (
             assigned.select("cell", F.posexplode("_v").alias("dim", "x"))
@@ -1171,5 +950,7 @@ def kmeans_cells(
                 new_cents.append(cents[ci])  # empty cluster: keep centroid
         cents = new_cents
 
-    final = embeddings.select(F.col(id_col), assign_col(cents).alias("cell"))
+    final = embeddings.select(
+        F.col(id_col), _encode_cells(cents, F.col(vec_col))["cell"].alias("cell")
+    )
     return final, cents

@@ -33,9 +33,9 @@ trained on a 10% sample) are passed to the sink as pq_books so codes
 are encoded AT INGEST, and the probe section additionally reports the
 vector_index_probe_adc wall + recall (shortlist=128).
 
---encode fold|arrow picks the sink's ingest encode kernel (default
-fold — the oracle-exact expressions; arrow is the matmul kernel, the
-100 TB shape).
+The k=16 centroids make the sink encode with the Arrow-batched numpy
+kernel: the encode picks its kernel by centroid count (the fold
+expressions up to 8 centroids), and so does the k-means training.
 """
 
 from __future__ import annotations
@@ -76,9 +76,6 @@ def main() -> None:
     if "--sample-train" in sys.argv:
         sample_frac = float(sys.argv[sys.argv.index("--sample-train") + 1])
     use_pq = "--pq" in sys.argv
-    encode_path = "fold"
-    if "--encode" in sys.argv:
-        encode_path = sys.argv[sys.argv.index("--encode") + 1]
     base = "/tmp/vecsink_bench"
     shutil.rmtree(base, ignore_errors=True)
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -111,7 +108,7 @@ def main() -> None:
     total = factor * n0 + n0
 
     cents_t0 = time.time()
-    _, cents = kmeans_cells(whole, k=16, iters=3, assign_path="arrow")
+    _, cents = kmeans_cells(whole, k=16, iters=3)
     cents_wall = time.time() - cents_t0
 
     books = None
@@ -160,7 +157,6 @@ def main() -> None:
         os.path.join(base, "ckpt"),
         auto_compact_every=AUTO,
         pq_books=books,
-        encode_path=encode_path,
     )
     q.awaitTermination(3600)
     drain = time.time() - t0
@@ -193,7 +189,7 @@ def main() -> None:
     )
     print(
         f"vectors={total} (incl {n0} upserts) slices={len(staged)} "
-        f"encode={encode_path}{'+pq' if use_pq else ''} "
+        f"{'pq ' if use_pq else ''}"
         f"train_k16={cents_wall:.1f}s drain={drain:.1f}s "
         f"rate={total / drain:.0f} vec/s auto_compact_every={AUTO}"
     )
@@ -210,12 +206,11 @@ def main() -> None:
         for r in emb.orderBy("vec_id").limit(N_QUERIES).collect()
     ]
 
-    def probe_wall(nprobe: int, score_path: str = "fold") -> float:
+    def probe_wall(nprobe: int) -> float:
         t = time.time()
         for qv in qvecs:
             so.vector_index_probe(
-                spark, index_dir, cents, qv, k=8, nprobe=nprobe,
-                score_path=score_path,
+                spark, index_dir, cents, qv, k=8, nprobe=nprobe
             ).collect()
         return (time.time() - t) / len(qvecs)
 
@@ -236,12 +231,10 @@ def main() -> None:
         return hit / tot
 
     p1, pf = probe_wall(1), probe_wall(len(cents))
-    p1_arrow = probe_wall(1, score_path="arrow")
     rec1 = probe_recall(cents, nprobe=1)
     print(
         f"probe top-8 over the compacted index (avg of {len(qvecs)} queries, "
         f"tail-bounded winners): nprobe=1 {p1:.2f}s (recall@8 {rec1:.3f}), "
-        f"nprobe=1 arrow-score {p1_arrow:.2f}s, "
         f"nprobe={len(cents)} (exact) {pf:.2f}s"
     )
 
@@ -268,10 +261,7 @@ def main() -> None:
     if sample_frac is not None:
         t = time.time()
         _, s_cents = kmeans_cells(
-            whole.sample(fraction=sample_frac, seed=13),
-            k=16,
-            iters=3,
-            assign_path="arrow",
+            whole.sample(fraction=sample_frac, seed=13), k=16, iters=3
         )
         s_wall = time.time() - t
         # recall with sample-trained cells probing the SAME index: the

@@ -83,7 +83,6 @@ SLOW_TESTS = {
     "test_vector_index_custom_columns_auto_compact",              # 17.0 s
     "test_vector_index_adc_probe_with_stored_codes",              # 14.8 s
     "test_vector_index_auto_compact_mid_stream_equals_one_shot",  # 13.2 s
-    "test_vector_index_probe_arrow_score_path",                   # 12.5 s
     "test_read_vector_index_tail_bounded_equals_full_window",     # 11.3 s
     "test_substring_index_compaction_equals_streamed",            # 11.0 s
     "test_vector_index_gc_reclaims_commit_markers",               # 10.2 s

@@ -390,8 +390,9 @@ def test_package_has_one_implementation_per_default():
     """Each default has one implementation, the one its oracle replays:
     every absolute import of the package resolves where it runs, no
     handler catches ImportError/ModuleNotFoundError to switch paths,
-    and no module names the transformWithState API or an env var that
-    swaps the embedder. A caller brings a library through an injection
+    and no module names the transformWithState API, an env var that
+    swaps the embedder, or a caller-set vector kernel selector (the
+    encode kernel is picked by centroid count). A caller brings a library through an injection
     seam (`normalize_text_full(repair_fn=)`,
     `chunk_text_tokenizer(tokenizer_factory=)`), never by installing
     it."""
@@ -399,7 +400,14 @@ def test_package_has_one_implementation_per_default():
     import importlib.util
 
     gated = {"ImportError", "ModuleNotFoundError"}
-    banned = ("transformWithStateInPandas", "StatefulProcessor", "SPARK_GRAFT_EMBED_MODEL")
+    banned = (
+        "transformWithStateInPandas",
+        "StatefulProcessor",
+        "SPARK_GRAFT_EMBED_MODEL",
+        "score_path",
+        "encode_path",
+        "assign_path",
+    )
     pkg = os.path.join(REPO, "graphragdatapipeline_spark")
     unresolved, catches, names = set(), set(), set()
     for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):

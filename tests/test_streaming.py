@@ -2138,21 +2138,26 @@ def test_vector_index_adc_probe_with_stored_codes(spark, tmp_path):
 
 
 def test_vector_index_arrow_encode_matches_fold(spark, tmp_path):
-    """encode_path="arrow" (the matmul ingest kernel) must produce the
-    SAME index as the fold expressions on a boundary-free fixture —
-    identical cells, codes, tombstone handling — and the ADC probe
-    over it must match. (Equidistant boundary vectors are the only
-    documented divergence; this fixture has none.)"""
+    """With more than 8 centroids the sink encodes with the Arrow-batched
+    numpy kernel (the encode rule). On a boundary-free fixture of 9
+    centroids its cells and residual-PQ codes must equal the batch
+    fold expressions over the latest-wins input, its tombstone must
+    carry NULL cell and codes, and the ADC probe over it must match
+    the batch IVFADC path that re-derives codes with the fold.
+    (Equidistant boundary vectors are the only documented divergence;
+    this fixture has none: every vector lies within 1.5 of its
+    centroid on a grid of pitch 10.)"""
+    import math
     import time
 
     from graphragdatapipeline_spark.vector import similarity as vs
 
-    cents = [[0.0, 0.0], [10.0, 10.0]]
+    cents = [[10.0 * a, 10.0 * b] for a in range(3) for b in range(3)]
     ddl = "vec_id bigint, embedding array<float>"
     rows0 = [
-        (i, [float(i % 3) * 0.3 + 0.05, float((i * 7) % 5) * 0.2 + 0.05])
-        for i in range(1, 31)
-    ] + [(100, [9.0, 9.0]), (101, [9.5, 9.2])]
+        (i, [cents[i % 9][0] + math.sin(i), cents[i % 9][1] + math.cos(1.7 * i)])
+        for i in range(1, 46)
+    ]
     s0 = spark.createDataFrame(rows0, ddl)
     books = vs.pq_train(
         s0.selectExpr(
@@ -2160,49 +2165,43 @@ def test_vector_index_arrow_encode_matches_fold(spark, tmp_path):
         ),
         m=2, k=4, iters=2, centroids=cents,
     )
-    s1 = spark.createDataFrame([(5, [0.5, 0.5]), (9, None)], ddl)
+    # id 5 moves to another cell, id 9 is deleted
+    s1 = spark.createDataFrame([(5, [20.3, 0.4]), (9, None)], ddl)
     in_dir = str(tmp_path / "input")
     os.makedirs(in_dir)
     for i, sl in enumerate([s0, s1]):
         sl.coalesce(1).write.parquet(os.path.join(in_dir, f"slice={i}"))
         time.sleep(1.1)
+    idx = str(tmp_path / "index")
+    stream = (
+        spark.readStream.schema(ddl)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(in_dir + "/slice=*")
+    )
+    so.vector_index_sink(
+        stream, cents, idx, str(tmp_path / "ckpt"), pq_books=books
+    ).awaitTermination(120)
 
-    def build(name, encode_path):
-        idx = str(tmp_path / name)
-        stream = (
-            spark.readStream.schema(ddl)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir + "/slice=*")
-        )
-        so.vector_index_sink(
-            stream, cents, idx, str(tmp_path / f"ckpt_{name}"),
-            pq_books=books, encode_path=encode_path,
-        ).awaitTermination(120)
-        return idx
-
-    fold_idx = build("fold", "fold")
-    arrow_idx = build("arrow", "arrow")
-
-    def snap(idx):
-        return {
-            (r.vec_id, r.cell, r.pq_0, r.pq_1)
-            for r in so.read_vector_index(spark, idx).collect()
-        }
-
-    assert snap(arrow_idx) == snap(fold_idx)
-    for qvec in ([0.3, 0.3], [9.4, 9.4]):
-        want = [
-            tuple(r)
-            for r in so.vector_index_probe_adc(
-                spark, fold_idx, cents, books, qvec, k=5, nprobe=2,
-                shortlist=1000,
-            ).collect()
-        ]
-        got = [
-            tuple(r)
-            for r in so.vector_index_probe_adc(
-                spark, arrow_idx, cents, books, qvec, k=5, nprobe=2,
-                shortlist=1000,
-            ).collect()
-        ]
-        assert got == want
+    live = s0.filter(~F.col("vec_id").isin(5, 9)).unionByName(
+        s1.filter(F.col("vec_id") == 5)
+    )
+    cell = vs.nearest_centroid_col(cents, F.col("embedding"))
+    codes = vs.pq_encode_cols(books, vs.residual_col(cents, F.col("embedding"), cell))
+    want = {tuple(r) for r in live.select("vec_id", cell, *codes).collect()}
+    got = {
+        (r.vec_id, r.cell, r.pq_0, r.pq_1)
+        for r in so.read_vector_index(spark, idx).collect()
+    }
+    assert got == want and len({c for _, c, _, _ in got}) == 9
+    tomb = spark.read.parquet(idx).filter(F.col("vec_id") == 9).collect()
+    assert [(r.cell, r.pq_0, r.pq_1) for r in tomb if r.embedding is None] == [
+        (None, None, None)
+    ]
+    for qvec in ([0.3, 0.3], [19.4, 0.6]):
+        want = vs.ivfpq_residual_topk(
+            live, cents, books, qvec, k=3, nprobe=2, shortlist=4
+        ).collect()
+        got = so.vector_index_probe_adc(
+            spark, idx, cents, books, qvec, k=3, nprobe=2, shortlist=4
+        ).collect()
+        assert [tuple(r) for r in got] == [tuple(r) for r in want]

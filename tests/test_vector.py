@@ -129,13 +129,13 @@ def test_kmeans_cells_deterministic_and_separates(spark):
 
 
 def test_kmeans_arrow_assignment_matches_fold(spark, sf_dir):
-    """The Arrow-vectorized nearest-centroid path (the 100 TB shape,
-    auto-selected for k > 8) must produce the same training run as
-    the oracle-exact fold expression on real fixture embeddings —
-    same assignments AND same final centroids. Continuous embeddings
-    have no equidistant boundary ties, so ulp-level distance
-    differences cannot flip an argmin here. A NULL embedding gets a
-    NULL cell on both paths."""
+    """Above 8 centroids the encode rule picks the Arrow-batched numpy
+    kernel (the 100 TB shape) and at 8 or fewer the fold. A k=9
+    training must assign every row, a NULL embedding included, to the
+    cell the oracle-exact fold (nearest_centroid_col) gives it under
+    the returned centroids. Continuous embeddings have no equidistant
+    boundary ties, so ulp-level distance differences cannot flip an
+    argmin here. A NULL embedding gets a NULL cell on both paths."""
     from pyspark.sql import functions as F
 
     from graphragdatapipeline_spark.io import read_table
@@ -150,12 +150,20 @@ def test_kmeans_arrow_assignment_matches_fold(spark, sf_dir):
             "label",
         )
     )
-    a_fold, c_fold = vs.kmeans_cells(e, k=8, iters=3, assign_path="fold")
-    a_arrow, c_arrow = vs.kmeans_cells(e, k=8, iters=3, assign_path="arrow")
-    assert c_fold == c_arrow
-    fold_rows = sorted(map(tuple, a_fold.collect()))
-    assert fold_rows == sorted(map(tuple, a_arrow.collect()))
-    assert (null_id, None) in fold_rows
+
+    def runs_kernel(df):
+        return "ArrowEvalPython" in df._jdf.queryExecution().executedPlan().toString()
+
+    assigned, cents = vs.kmeans_cells(e, k=9, iters=3)
+    assert len(cents) == 9 and runs_kernel(assigned)
+    enc8 = e.select(vs._encode_cells(cents[:8], F.col("embedding"))["cell"])
+    assert not runs_kernel(enc8)
+    fold = e.select(
+        "vec_id", vs.nearest_centroid_col(cents, F.col("embedding")).alias("cell")
+    )
+    rows = sorted(map(tuple, assigned.collect()))
+    assert rows == sorted(map(tuple, fold.collect()))
+    assert (null_id, None) in rows
 
 
 def test_lsh_probe_topk_gapped_hyperplane_ids(spark):
@@ -445,7 +453,14 @@ def test_sq8_reconstruction_error_bound(spark):
 
 def test_sq8_topk_recall_vs_exact(spark, sf_dir):
     """SQ8 top-8 vs exact top-8 on the fixture corpus: quantization at
-    8 bits barely moves cosine, so overlap must stay high (≥ 6/8)."""
+    8 bits barely moves cosine, so overlap must stay high (≥ 6/8). The
+    exact top-8 is the same from the batch scorer with string ids on
+    both sides (cosine_topk_batch keeps non-bigint id columns). The
+    exact fold scores a NULL embedding NULL (ranked last) and raises
+    on a zero-norm one under ANSI, the Spark 4 default."""
+    import pytest
+    from pyspark.errors.exceptions.captured import ArithmeticException
+
     from graphragdatapipeline_spark.io import read_table
     from graphragdatapipeline_spark.vector import similarity as vs
 
@@ -457,6 +472,24 @@ def test_sq8_topk_recall_vs_exact(spark, sf_dir):
     exact = {r.vec_id for r in vs.cosine_topk(emb, q, k=8).collect()}
     sq8 = {r.vec_id for r in vs.sq8_topk(vs.sq8_encode(emb), q, k=8).collect()}
     assert len(exact & sq8) >= 6
+
+    docs = emb.select(
+        F.concat(F.lit("d-"), F.col("vec_id")).alias("doc"), "embedding"
+    )
+    queries = spark.createDataFrame([("q-0", q)], "q_id string, q_vec array<double>")
+    batch = vs.cosine_topk_batch(docs, queries, k=8, id_col="doc").collect()
+    assert {r.q_id for r in batch} == {"q-0"}
+    assert sorted(r.rank for r in batch) == list(range(1, 9))
+    assert {r.doc for r in batch} == {f"d-{i}" for i in exact}
+
+    dim = len(q)
+    ddl = "vec_id long, embedding array<float>"
+    deg = spark.createDataFrame([(2, None), (1, [1.0] * dim)], ddl)
+    scored = [(r.vec_id, r.sim is None) for r in vs.cosine_topk(deg, q).collect()]
+    assert scored == [(1, False), (2, True)]
+    zero = spark.createDataFrame([(3, [0.0] * dim)], ddl)
+    with pytest.raises(ArithmeticException):
+        vs.cosine_topk(zero, q).collect()
 
 
 def test_ivf_sq8_full_shortlist_matches_ivf_probe(spark, sf_dir):
@@ -617,205 +650,6 @@ def test_ivfpq_residual_stored_codes_match_inline(spark):
             ).collect()
         ]
         assert stored == inline
-
-
-def test_cosine_topk_arrow_matches_fold(spark, sf_dir):
-    """score_path="arrow" (numpy matmul kernel) must rank exactly like
-    the default interpreted fold on distinct-sim data, agree that a
-    NULL embedding scores NULL (desc-sorts to the back), and score a
-    zero-norm vector NULL — never NaN (which would sort to the FRONT
-    of Spark's double ordering and corrupt top-k), and unlike the
-    fold, which raises DIVIDE_BY_ZERO under ANSI (Spark 4 default)."""
-    from pyspark.sql import functions as F
-    from graphragdatapipeline_spark.io import read_table
-    from graphragdatapipeline_spark.vector import similarity as vs
-
-    e = read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    q = [float(x) for x in e.filter(F.col("vec_id") == 0).first().embedding]
-    fold = vs.cosine_topk(e, q, k=10).collect()
-    arrow = vs.cosine_topk(e, q, k=10, score_path="arrow").collect()
-    assert [r.vec_id for r in arrow] == [r.vec_id for r in fold]
-    for fa, ar in zip(fold, arrow):
-        assert abs(fa.sim - ar.sim) < 1e-9
-
-    dim = len(q)
-    deg = spark.createDataFrame(
-        [
-            (1, [1.0] * dim),
-            (2, None),
-            (3, [0.0] * dim),
-            (4, [float(i) for i in range(dim)]),
-        ],
-        "vec_id long, embedding array<float>",
-    )
-    import pytest
-    from pyspark.errors.exceptions.captured import ArithmeticException
-
-    a = {
-        r.vec_id: r.sim
-        for r in vs.cosine_topk(deg, q, k=10, score_path="arrow").collect()
-    }
-    assert set(a) == {1, 2, 3, 4}
-    assert a[2] is None and a[3] is None
-    nondeg = deg.filter(F.col("vec_id") != 3)
-    f = {r.vec_id: r.sim for r in vs.cosine_topk(nondeg, q, k=10).collect()}
-    assert f[2] is None
-    for i in (1, 4):
-        assert abs(f[i] - a[i]) < 1e-9
-    # the fold's zero-norm behavior under ANSI (Spark 4 default) is an
-    # error — the arrow path's NULL is the deliberate serving-side
-    # divergence the docstring records
-    with pytest.raises(ArithmeticException):
-        vs.cosine_topk(deg, q, k=10).collect()
-
-
-def test_vector_index_probe_arrow_score_path(spark, tmp_path):
-    """The probe's score_path="arrow" must return the same top-k as
-    the default fold over a maintained index (upserts + a tombstone in
-    the tail, both compaction states)."""
-    import os
-    import time
-
-    import graphragdatapipeline_spark.streaming.ops as so
-
-    cents = [[0.0, 0.0], [10.0, 10.0]]
-    ddl = "vec_id bigint, embedding array<float>"
-    in_dir = str(tmp_path / "input")
-    os.makedirs(in_dir)
-    s0 = spark.createDataFrame(
-        [(i, [float(i % 7) + 0.1, float((i * 3) % 5) + 0.2]) for i in range(1, 31)]
-        + [(100, [9.0, 9.1]), (101, [9.5, 9.0])],
-        ddl,
-    )
-    s1 = spark.createDataFrame([(5, [0.4, 0.6]), (9, None)], ddl)
-    for i, sl in enumerate([s0, s1]):
-        sl.coalesce(1).write.parquet(os.path.join(in_dir, f"slice={i}"))
-        time.sleep(1.1)
-    index_dir = str(tmp_path / "index")
-    stream = (
-        spark.readStream.schema(ddl)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir + "/slice=*")
-    )
-    so.vector_index_sink(
-        stream, cents, index_dir, str(tmp_path / "ckpt")
-    ).awaitTermination(120)
-
-    def both(qvec, nprobe):
-        fold = so.vector_index_probe(
-            spark, index_dir, cents, qvec, k=8, nprobe=nprobe
-        ).collect()
-        arrow = so.vector_index_probe(
-            spark, index_dir, cents, qvec, k=8, nprobe=nprobe,
-            score_path="arrow",
-        ).collect()
-        assert [r.vec_id for r in arrow] == [r.vec_id for r in fold]
-        for fa, ar in zip(fold, arrow):
-            assert abs(fa.sim - ar.sim) < 1e-9
-
-    for qvec in ([0.3, 0.4], [9.2, 9.3]):
-        for nprobe in (1, 2):
-            both(qvec, nprobe)
-    so.compact_vector_index(spark, index_dir, gc=True)
-    for qvec in ([0.3, 0.4], [9.2, 9.3]):
-        for nprobe in (1, 2):
-            both(qvec, nprobe)
-
-
-def test_cosine_topk_batch_arrow_matches_fold(spark, sf_dir):
-    """The batch k-NN scale path (mapInPandas matmul + per-batch local
-    top-k + global window) must return exactly the fold cross-join
-    ranking — including across partition boundaries, where a wrong
-    local-top-k order (e.g. ties broken by position instead of id)
-    would surface as a different global top-k."""
-    from pyspark.sql import functions as F
-    from graphragdatapipeline_spark.io import read_table
-    from graphragdatapipeline_spark.vector import similarity as vs
-
-    e = read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    queries = e.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    # repartition so every query's top-k spans several corpus partitions
-    corpus = e.filter(F.col("vec_id") % 50 != 0).repartition(7)
-    fold = vs.cosine_topk_batch(corpus, queries, k=6).collect()
-    arrow = vs.cosine_topk_batch(
-        corpus, queries, k=6, score_path="arrow"
-    ).collect()
-    fkey = sorted((r.q_id, r.rank, r.vec_id) for r in fold)
-    akey = sorted((r.q_id, r.rank, r.vec_id) for r in arrow)
-    assert akey == fkey
-    fsim = {(r.q_id, r.vec_id): r.sim for r in fold}
-    for r in arrow:
-        assert abs(fsim[(r.q_id, r.vec_id)] - r.sim) < 1e-9
-    n_q = queries.count()
-    assert len(arrow) == n_q * 6
-    # NULL corpus rows are excluded by the arrow kernel, not crashed on
-    corpus2 = corpus.unionByName(
-        spark.createDataFrame(
-            [(999999, None)], "vec_id long, embedding array<float>"
-        )
-    )
-    arrow2 = vs.cosine_topk_batch(
-        corpus2, queries, k=6, score_path="arrow"
-    ).collect()
-    assert sorted((r.q_id, r.rank, r.vec_id) for r in arrow2) == fkey
-
-
-def test_cosine_topk_score_path_guards(spark, sf_dir):
-    """The arrow knobs fail LOUD: unknown score_path raises (a typo
-    must not silently measure the slow fold), a zero-norm/NULL QUERY
-    vector raises up front (its NaN sims would rank k arbitrary rows
-    first), an empty query table returns an empty result, and the
-    derived kernel schema carries non-bigint id columns."""
-    import pytest
-
-    from pyspark.sql import functions as F
-    from graphragdatapipeline_spark.io import read_table
-    from graphragdatapipeline_spark.vector import similarity as vs
-
-    e = read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    q = [float(x) for x in e.first().embedding]
-    dim = len(q)
-    with pytest.raises(ValueError, match="score_path"):
-        vs.cosine_topk(e, q, k=3, score_path="Arrow")
-    with pytest.raises(ValueError, match="query vector"):
-        vs.cosine_score_udf([0.0] * dim)
-
-    queries = e.limit(3).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    with pytest.raises(ValueError, match="score_path"):
-        vs.cosine_topk_batch(e, queries, k=3, score_path="numpy")
-    zq = spark.createDataFrame(
-        [(1, [0.0] * dim), (2, q)], "q_id long, q_vec array<float>"
-    )
-    with pytest.raises(ValueError, match="query vectors"):
-        vs.cosine_topk_batch(e, zq, k=3, score_path="arrow")
-    nq = spark.createDataFrame(
-        [(1, None), (2, q)], "q_id long, q_vec array<float>"
-    )
-    with pytest.raises(ValueError, match="NULL query vectors"):
-        vs.cosine_topk_batch(e, nq, k=3, score_path="arrow")
-    empty = queries.filter(F.col("q_id") < 0)
-    assert vs.cosine_topk_batch(e, empty, k=3, score_path="arrow").count() == 0
-
-    # string ids survive the arrow kernel's derived schema on both sides
-    sc = e.limit(40).select(
-        F.concat(F.lit("d-"), F.col("vec_id")).alias("doc"), "embedding"
-    )
-    sq = queries.select(
-        F.concat(F.lit("q-"), F.col("q_id")).alias("q_id"), "q_vec"
-    )
-    fold = vs.cosine_topk_batch(
-        sc, sq, k=4, id_col="doc"
-    ).collect()
-    arrow = vs.cosine_topk_batch(
-        sc, sq, k=4, id_col="doc", score_path="arrow"
-    ).collect()
-    assert sorted((r.q_id, r.rank, r.doc) for r in arrow) == sorted(
-        (r.q_id, r.rank, r.doc) for r in fold
-    )
 
 
 def test_semantic_dedup_matches_oracle_at_sf01(spark, sf_dir):
