@@ -17,12 +17,19 @@ self-loop weight (as vertex strength). ``_canonical_pairs`` is the one
 place that applies this contract; ``_loop_edges`` is the one place
 that builds and sizes a loop's edge table from it.
 
-The community-detection contract replaces the reference's driver-local
-Leiden (utils/neo4j_helpers.py:237-268, single-threaded C core over
-~99k nodes) with a distributed, deterministic label-propagation
-hierarchy: same consumer contract — per-vertex community ids at three
+Community hierarchies replace the reference's driver-local Leiden
+(utils/neo4j_helpers.py:237-268, single-threaded C core over ~99k
+nodes) with distributed, deterministic multilevel schemes under the
+same consumer contract — per-vertex community ids at three
 granularities under a fixed seed (detect_communities.py:218-246) —
-but it scales to edge lists that never fit one machine.
+that scale to edge lists that never fit one machine: the
+label-propagation ladder (detect_communities), the Louvain ladder
+(detect_communities_louvain), and full Louvain at one resolution
+(louvain_multilevel), whose cycles make up each Louvain ladder level.
+All three are one loop, ``_coarsen``, the one place that runs a level,
+contracts the graph by its labels, composes the labels and frees what
+is spent (rules in its docstring). detect_communities_leiden_exact is
+the driver-side exact rung for graphs that fit one machine.
 """
 
 from __future__ import annotations
@@ -40,6 +47,10 @@ from graphragdatapipeline_spark.session import _free_checkpoint
 # enough that the ladders' 2-5-round LPA and Louvain levels still run
 # their whole chain in one materializing job.
 _MATERIALIZE_EVERY = 5
+
+# louvain_multilevel stops after a cycle that shrinks the community
+# count by less than this share.
+_MIN_SHRINK = 0.01
 
 
 def _iterate(
@@ -382,58 +393,24 @@ def detect_communities(
     iters_per_level: tuple[int, int, int] = (2, 3, 4),
 ) -> DataFrame:
     """G3 — three-granularity community hierarchy → (id, community_L0,
-    community_L1, community_L2).
+    community_L1, community_L2), materialized.
 
     Contract parity with the reference (detect_communities.py:218-246):
     per-vertex community ids at 3 granularities, deterministic under a
     fixed seed, L0 finest → L2 coarsest (resolutions 2.0/0.5/0.1).
     Construction guarantees the hierarchy is nested: each level runs
-    label propagation on the previous level's contracted graph, so an
-    L2 community is a union of L1 communities, as in Leiden's
-    multilevel scheme."""
-    base = edges.select("src", "dst")
-    l0 = label_propagation(base, vertices=vertices, max_iter=iters_per_level[0], seed=seed)
-
-    g1 = _contract_weighted(base, l0)
-    l1_super = label_propagation(g1, max_iter=iters_per_level[1], seed=seed + 1)
-    l1 = (
-        l0.alias("a")
-        .join(
-            l1_super.select(
-                F.col("id").alias("community"), F.col("community").alias("cl1")
-            ).alias("b"),
-            "community",
-            "left",
-        )
-        .select(
-            F.col("a.id").alias("id"),
-            F.col("community").alias("community_L0"),
-            F.coalesce("cl1", F.col("community")).alias("community_L1"),
-        )
+    label propagation (seed + level, ``iters_per_level`` rounds) on the
+    previous level's contracted graph, read unweighted, so an L2
+    community is a union of L1 communities, as in Leiden's multilevel
+    scheme. Only level 0 sees ``vertices``: a coarser level would give
+    an edgeless super-vertex a fresh seeded label, while ``_coarsen``
+    lets it keep the one from the level below."""
+    return _coarsen(
+        edges,
+        vertices,
+        len(iters_per_level),
+        lambda i, g, _w, v, _n: label_propagation(g, v, iters_per_level[i], seed + i),
     )
-
-    g2 = _contract_weighted(
-        base,
-        l1.select("id", F.col("community_L1").alias("community")),
-    )
-    l2_super = label_propagation(g2, max_iter=iters_per_level[2], seed=seed + 2)
-    out = (
-        l1.alias("a")
-        .join(
-            l2_super.select(
-                F.col("id").alias("community_L1"), F.col("community").alias("cl2")
-            ).alias("b"),
-            "community_L1",
-            "left",
-        )
-        .select(
-            "id",
-            "community_L0",
-            "community_L1",
-            F.coalesce("cl2", F.col("community_L1")).alias("community_L2"),
-        )
-    )
-    return out
 
 
 def detect_communities_leiden_exact(
@@ -510,8 +487,8 @@ def louvain_move(
     contract query MEASURES the resulting RB quality against both the
     singleton partition and the LPA ladder instead of assuming it.
     Output labels are canonicalized to the minimum member vertex id.
-    Feed the result to ``_contract_weighted`` and re-run for the full
-    multi-level move-AND-AGGREGATE scheme (detect_communities_louvain).
+    louvain_multilevel runs it as ``_coarsen`` levels for the full
+    move-AND-AGGREGATE scheme.
 
     ``weight_col`` turns on weighted semantics — required for running
     on a CONTRACTED graph, where parallel-edge multiplicities become
@@ -519,8 +496,8 @@ def louvain_move(
     edge contributes 2·w to its vertex's strength (it moves with the
     vertex, so it never enters a gain term — exactly graph/leiden.py's
     treatment) while staying out of the neighbor-community sums.
-    ``n_edges_hint`` (the row count of ``edges``, which the multilevel
-    loop knows from persisting each contracted graph) skips the edge
+    ``n_edges_hint`` (the row count of ``edges``, which ``_coarsen``
+    knows from persisting each contracted graph) skips the edge
     table's sizing job; every per-round aggregate is order-independent,
     so it moves no label.
     """
@@ -664,14 +641,14 @@ def louvain_move(
 def _contract_weighted(
     edges: DataFrame, assignment: DataFrame, weight_col: str | None = None
 ) -> DataFrame:
-    """Graph aggregation for both ladders → (src, dst, weight):
-    communities collapse to super-vertices, parallel inter-community
-    edges SUM, and intra-community weight lands on a self-loop row
-    (src = dst) — the strength bookkeeping louvain_move's weighted mode
-    expects. Total edge weight is conserved level-to-level, so 2m — and
-    therefore the meaning of γ — is identical at every level. The LPA
-    ladder reads the result unweighted, which keeps only the distinct
-    inter-community pairs."""
+    """Graph aggregation between ``_coarsen``'s levels → (src, dst,
+    weight): communities collapse to super-vertices, parallel
+    inter-community edges SUM, and intra-community weight lands on a
+    self-loop row (src = dst) — the strength bookkeeping louvain_move's
+    weighted mode expects. Total edge weight is conserved level-to-level,
+    so 2m — and therefore the meaning of γ — is identical at every
+    level. Label propagation reads the result unweighted, which keeps
+    only the distinct inter-community pairs."""
     w = (
         F.col(weight_col).cast("double")
         if weight_col is not None
@@ -692,6 +669,66 @@ def _contract_weighted(
     return joined.groupBy("src", "dst").agg(F.sum("_w").alias("weight"))
 
 
+def _coarsen(
+    edges: DataFrame,
+    vertices: DataFrame | None,
+    levels: int,
+    run: Callable[[int, DataFrame, str | None, DataFrame | None, int | None], DataFrame],
+    weight_col: str | None = None,
+    n_edges_hint: int | None = None,
+    until: Callable[[DataFrame], bool] | None = None,
+) -> DataFrame:
+    """The one multilevel loop of the community hierarchies → (id,
+    community_L0, …, community_Lk), materialized, one column per level
+    that ran. Level i is ``run(i, graph, weight_col, vertices,
+    n_edges_hint)`` → (id, community); the loop owns the rest:
+
+    - level 0 runs on ``edges`` with the caller's ``vertices``,
+      ``weight_col`` and ``n_edges_hint``. Each later level runs on the
+      graph below contracted by that graph's labels, weighted by
+      "weight", with no vertex set, and with the contracted row count as
+      its edge-sizing hint. Nothing is contracted after the last level;
+    - ``until(labels)``, asked after every level but the last, stops
+      the loop by returning True;
+    - a contracted graph is materialized with persist()+count(), not
+      localCheckpoint: a checkpoint is a stats-free LogicalRDD, and the
+      next level's join-heavy rounds planned against one ran 10× slower
+      (25 s vs 2.3 s for two rounds on a 41-edge graph, SCALE.md); an
+      InMemoryRelation keeps sizeInBytes. At deployment scale each
+      level would be written to the lake, the same fix with durability.
+      The graph below is freed once the next one is counted;
+    - one composition rule: a vertex that a coarser level does not
+      label keeps its label from the level below (an edgeless
+      super-vertex never reaches a contracted graph);
+    - the answer is materialized once; then every level's labels and
+      the last contracted graph are freed."""
+    labels: list[DataFrame] = []
+    graph, w, n = edges, weight_col, n_edges_hint
+    for i in range(levels):
+        if i:
+            coarser = _contract_weighted(graph, labels[-1], w).persist()
+            n = coarser.count()
+            if graph is not edges:
+                graph.unpersist()
+            graph, w, vertices = coarser, "weight", None
+        labels.append(run(i, graph, w, vertices, n))
+        if i < levels - 1 and until is not None and until(labels[-1]):
+            break
+    out = labels[0].select("id", F.col("community").alias("community_L0"))
+    for i, level in enumerate(labels[1:], 1):
+        below = f"community_L{i - 1}"
+        up = level.select(F.col("id").alias(below), F.col("community").alias("_up"))
+        out = out.join(up, below, "left").select(
+            *out.columns, F.coalesce("_up", F.col(below)).alias(f"community_L{i}")
+        )
+    out = out.localCheckpoint(eager=True)
+    for level in labels:
+        _free_checkpoint(level, reads=True)
+    if graph is not edges:
+        graph.unpersist()
+    return out
+
+
 def louvain_multilevel(
     edges: DataFrame,
     gamma: float = 1.0,
@@ -699,72 +736,46 @@ def louvain_multilevel(
     max_cycles: int = 10,
     vertices: DataFrame | None = None,
     weight_col: str | None = None,
-    min_shrink: float = 0.01,
     n_edges_hint: int | None = None,
 ) -> DataFrame:
-    """FULL Louvain at one resolution → (id, community): repeat
-    (parity-damped move phase → weighted contraction) until the
-    community count stops shrinking by more than ``min_shrink`` (or
-    ``max_cycles``). A single synchronous move phase from singletons
-    mostly forms PAIRS (measured at 99k vertices: 99k → 50.6k
-    communities after one phase, vs exact Leiden's 4.4k final) — the
-    aggregate-and-move-again loop is what lets communities grow past
-    the one-phase horizon, exactly as in sequential Louvain. Each
-    cycle costs one contraction plus `rounds` move rounds ON THE
-    CONTRACTED graph, which shrinks geometrically, so the loop is
-    front-loaded: cycle 1 dominates. Per-cycle convergence check is a
-    distinct-count (driver scalar, like the kcore fixpoint test), run
-    in line: once before the first cycle, then once after each move.
-    Overlapping the counts with the composition checkpoint on driver
-    threads did not pay in `profile` A/Bs of graph_louvain_ladder at
-    sf0.01 (4-vCPU host), so the loop starts no thread.
+    """FULL Louvain at one resolution → (id, community), materialized:
+    ``_coarsen`` over levels of the parity-damped move phase
+    (louvain_move, ``rounds`` rounds at γ), each on the graph the level
+    below contracts to, until a cycle shrinks the community count by
+    less than _MIN_SHRINK (or ``max_cycles``). A single synchronous
+    move phase from singletons mostly forms PAIRS (measured at 99k
+    vertices: 99k → 50.6k communities after one phase, vs exact
+    Leiden's 4.4k final) — the aggregate-and-move-again loop is what
+    lets communities grow past the one-phase horizon, exactly as in
+    sequential Louvain. Each cycle costs one contraction plus `rounds`
+    move rounds ON THE CONTRACTED graph, which shrinks geometrically,
+    so the loop is front-loaded: cycle 1 dominates. The convergence
+    check is a distinct count of the cycle's labels (a driver scalar,
+    like the kcore fixpoint test), run in line after every cycle but
+    the last; the cycles' labels compose once, when the answer is
+    materialized.
     Measured at reference scale (99k/124k, γ=2.0): RB quality 51k
     after one phase → 83k at the default budget (125 s) → plateau
     ~87k ≈ 0.76× exact Leiden at rounds=8/20 cycles — the damped
     synchronous argmax trades the last fraction of sequential-Leiden
     quality for never collecting the graph (full table and the
     three-rung quality ladder in SCALE.md)."""
-    memb = louvain_move(
-        edges, gamma, rounds, vertices, weight_col, n_edges_hint=n_edges_hint
+    counts: list[int] = []
+
+    def settled(labels: DataFrame) -> bool:
+        counts.append(labels.select("community").distinct().count())
+        return len(counts) > 1 and counts[-1] >= counts[-2] * (1.0 - _MIN_SHRINK)
+
+    out = _coarsen(
+        edges,
+        vertices,
+        max(max_cycles, 1),
+        lambda _, g, w, v, n: louvain_move(g, gamma, rounds, v, w, n),
+        weight_col,
+        n_edges_hint,
+        until=settled,
     )
-    mapping = memb
-    cur_edges, cur_w, level_memb = edges, weight_col, memb
-    prev_n = mapping.select("community").distinct().count()
-    for cycle in range(max_cycles - 1):
-        g = _contract_weighted(cur_edges, level_memb, cur_w).persist()
-        # materialize WITH stats (see detect_communities_louvain);
-        # the count doubles as the next move's edge-sizing hint,
-        # skipping its per-call sizing job
-        gn = g.count()
-        sup = louvain_move(g, gamma, rounds, weight_col="weight", n_edges_hint=gn)
-        n = sup.select("community").distinct().count()
-        new_mapping = (
-            mapping.withColumnRenamed("community", "_lvl")
-            .join(
-                sup.select(
-                    F.col("id").alias("_lvl"),
-                    F.col("community").alias("community"),
-                ),
-                "_lvl",
-            )
-            .select("id", "community")
-            .localCheckpoint(eager=True)
-        )
-        done = n >= prev_n * (1.0 - min_shrink) or cycle == max_cycles - 2
-        # Superseded now that new_mapping and g are materialized:
-        # the previous composition, the level below's labels and its
-        # contracted graph. On the last cycle this level's are too.
-        for df in [mapping, level_memb] + ([sup] if done else []):
-            _free_checkpoint(df, reads=True)
-        for graph in [cur_edges] + ([g] if done else []):
-            if graph is not edges:
-                graph.unpersist()
-        mapping = new_mapping
-        cur_edges, cur_w, level_memb = g, "weight", sup
-        if done:
-            break
-        prev_n = n
-    return mapping
+    return out.select("id", F.col(out.columns[-1]).alias("community"))
 
 
 def detect_communities_louvain(
@@ -774,95 +785,34 @@ def detect_communities_louvain(
     rounds_per_level: tuple[int, int, int] = (4, 4, 4),
 ) -> DataFrame:
     """G3, fully distributed Louvain ladder → (id, community_L0,
-    community_L1, community_L2): the complete move-AND-AGGREGATE
-    scheme — louvain_multilevel (up to 3 move→contract cycles) at
-    γ=2.0 on the input graph, then weighted contraction and
-    louvain_multilevel again at γ=0.5 and γ=0.1 on successively
-    coarser super-vertex graphs. Same consumer contract as
-    detect_communities (per-vertex ids at three granularities, nested
-    by construction, deterministic) and the same reference resolutions
-    as the exact Leiden rung — but optimizing actual RB modularity at
-    every level with nothing ever collected, which is the 100 TB
-    upgrade over the LPA ladder's propagation heuristic. Quality sits
-    between LPA and exact Leiden (three-rung table in SCALE.md); raise
-    max_cycles in louvain_multilevel when quality is worth more wall
-    time."""
-    base = edges.select("src", "dst")
-    l0 = louvain_multilevel(
-        base,
-        gamma=resolutions[0],
-        rounds=rounds_per_level[0],
-        max_cycles=3,
-        vertices=vertices,
+    community_L1, community_L2), materialized: the complete
+    move-AND-AGGREGATE scheme — ``_coarsen`` with one level per
+    resolution, each level louvain_multilevel (up to 3 move→contract
+    cycles, itself a ``_coarsen``) at γ=2.0 on the input graph, then at
+    γ=0.5 and γ=0.1 on successively coarser weighted super-vertex
+    graphs. Same consumer contract as detect_communities (per-vertex
+    ids at three granularities, nested by construction, deterministic,
+    every vertex labelled at every level) and the same reference
+    resolutions as the exact Leiden rung — but optimizing actual RB
+    modularity at every level with nothing ever collected, which is the
+    100 TB upgrade over the LPA ladder's propagation heuristic. Quality
+    sits between LPA and exact Leiden (three-rung table in SCALE.md);
+    raise max_cycles in louvain_multilevel when quality is worth more
+    wall time."""
+    return _coarsen(
+        edges,
+        vertices,
+        len(resolutions),
+        lambda i, g, w, v, n: louvain_multilevel(
+            g,
+            resolutions[i],
+            rounds_per_level[i],
+            max_cycles=3,
+            vertices=v,
+            weight_col=w,
+            n_edges_hint=n,
+        ),
     )
-    # Contracted levels are materialized with persist()+count(), NOT
-    # localCheckpoint: a checkpointed frame is a stats-free LogicalRDD,
-    # and feeding one into the next level's join-heavy rounds degrades
-    # every downstream plan (measured 10x: 25 s vs 2.3 s for two
-    # rounds on the same 41-edge contracted graph) — an
-    # InMemoryRelation keeps sizeInBytes, so join planning stays sane.
-    # At deployment scale each level would be written to the lake
-    # between runs, which is the same fix with durability.
-    g1 = _contract_weighted(base, l0).persist()
-    g1n = g1.count()
-    l1_super = louvain_multilevel(
-        g1,
-        gamma=resolutions[1],
-        rounds=rounds_per_level[1],
-        max_cycles=3,
-        weight_col="weight",
-        n_edges_hint=g1n,
-    )
-    l1 = (
-        l0.alias("a")
-        .join(
-            l1_super.select(
-                F.col("id").alias("community"), F.col("community").alias("_cl1")
-            ).alias("b"),
-            "community",
-            "left",
-        )
-        .select(
-            F.col("a.id").alias("id"),
-            F.col("community").alias("community_L0"),
-            F.coalesce("_cl1", F.col("community")).alias("community_L1"),
-        )
-    )
-    g2 = _contract_weighted(g1, l1_super, weight_col="weight").persist()
-    g2n = g2.count()
-    # Each contracted level is spent once the next one is cached and
-    # the level's labels are materialized checkpoints.
-    g1.unpersist()
-    l2_super = louvain_multilevel(
-        g2,
-        gamma=resolutions[2],
-        rounds=rounds_per_level[2],
-        max_cycles=3,
-        weight_col="weight",
-        n_edges_hint=g2n,
-    )
-    g2.unpersist()
-    # One materialized answer instead of three live level-label tables.
-    out = (
-        l1.alias("a")
-        .join(
-            l2_super.select(
-                F.col("id").alias("community_L1"), F.col("community").alias("_cl2")
-            ).alias("b"),
-            "community_L1",
-            "left",
-        )
-        .select(
-            "id",
-            "community_L0",
-            "community_L1",
-            F.coalesce("_cl2", F.col("community_L1")).alias("community_L2"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    for level in (l0, l1_super, l2_super):
-        _free_checkpoint(level, reads=True)
-    return out
 
 
 def rb_quality_agg(

@@ -968,12 +968,14 @@ SELECT CAST((SELECT count(*) FROM customer) + (SELECT count(*) FROM supplier)
 )
 def graph_louvain_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G3, the COMPLETE distributed move-AND-AGGREGATE scheme
-    (detect_communities_louvain): louvain_move at the reference's
-    γ=2.0, weighted contraction, louvain_move again at γ=0.5 and
-    γ=0.1 on the coarser super-vertex graphs — same 3-granularity
-    consumer contract as the LPA ladder and the exact-Leiden rung,
-    optimizing real RB modularity at every level with nothing ever
-    collected. Contract (computed distributed, like
+    (detect_communities_louvain): louvain_multilevel at the reference's
+    γ=2.0 on the input graph, then at γ=0.5 and γ=0.1 on the weighted
+    super-vertex graphs each level contracts to — one level each of
+    the coarsening loop the LPA ladder also runs, with
+    louvain_multilevel's own move→contract cycles run by that same
+    loop. Same 3-granularity consumer contract as the LPA ladder and
+    the exact-Leiden rung, optimizing real RB modularity at every level
+    with nothing ever collected. Contract (computed distributed, like
     graph_louvain_distributed): every vertex labeled at all 3 levels,
     the hierarchy NESTED by construction (no L0 community split
     across L1 parents, none of L1 across L2), and community counts

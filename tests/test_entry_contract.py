@@ -386,6 +386,40 @@ def test_only_session_starts_threads():
     assert not offenders, sorted(offenders)
 
 
+def test_one_coarsening_loop():
+    """The community hierarchies share one multilevel loop: exactly one
+    function of the package calls `_contract_weighted`, and in
+    graph/algorithms.py only that function persists or unpersists a
+    frame. The ladders and louvain_multilevel each used to contract,
+    persist, compose and free by hand, and one of those compositions
+    dropped edgeless vertices."""
+    import ast
+
+    pkg = os.path.join(REPO, "graphragdatapipeline_spark")
+    contract_callers, storage_callers = set(), set()
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        rel = os.path.relpath(path, pkg)
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for node in ast.walk(fn):
+                if not isinstance(node, ast.Call):
+                    continue
+                f = node.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                if name == "_contract_weighted":
+                    contract_callers.add(f"{rel}:{fn.name}")
+                if name in ("persist", "unpersist") and rel == os.path.join(
+                    "graph", "algorithms.py"
+                ):
+                    storage_callers.add(f"{rel}:{fn.name}")
+    loop = os.path.join("graph", "algorithms.py") + ":_coarsen"
+    assert contract_callers == {loop}, sorted(contract_callers)
+    assert storage_callers == {loop}, sorted(storage_callers)
+
+
 def test_package_has_one_implementation_per_default():
     """Each default has one implementation, the one its oracle replays:
     every absolute import of the package resolves where it runs, no

@@ -785,18 +785,31 @@ def test_undirected_ops_read_a_simple_graph(spark, op):
     assert sorted(map(tuple, noisy.collect())) == sorted(map(tuple, simple.collect()))
 
 
-def test_louvain_ladder_releases_levels(spark):
-    """The Louvain ladder unpersists its contracted graphs and frees
-    every move, composition and level-label checkpoint once its answer
-    is materialized (the registry's graph_louvain_ladder at sf0.001
-    used to leave 23 persistent RDDs behind)."""
+@pytest.mark.parametrize("ladder", ["detect_communities", "detect_communities_louvain"])
+def test_louvain_ladder_releases_levels(spark, ladder):
+    """Both ladders unpersist their contracted graphs and free every
+    move, composition and level-label checkpoint once their answer is
+    materialized, leaving only the answer (the registry's
+    graph_louvain_ladder at sf0.001 used to leave 23 persistent RDDs
+    behind, the LPA ladder its three level tables). Edgeless vertex 99
+    never reaches a contracted graph, so it keeps its L0 label at every
+    level (louvain_multilevel's inner-join composition used to drop
+    it); under Louvain that label is 99 itself."""
     rows = [(1, 2), (2, 3), (1, 3), (10, 11), (11, 12), (10, 12), (3, 10)]
     edges = spark.createDataFrame(rows, "src int, dst int")
-    verts = spark.createDataFrame([(i,) for i in (1, 2, 3, 10, 11, 12)], "id int")
+    verts = spark.createDataFrame([(i,) for i in (1, 2, 3, 10, 11, 12, 99)], "id int")
     before = _persistent_rdds(spark)
-    out = ga.detect_communities_louvain(verts, edges, rounds_per_level=(1, 1, 1))
-    assert len(out.collect()) == 6
-    assert _persistent_rdds(spark) - before <= 2
+    if ladder == "detect_communities":
+        out = ga.detect_communities(verts, edges, iters_per_level=(1, 1, 1))
+    else:
+        out = ga.detect_communities_louvain(verts, edges, rounds_per_level=(1, 1, 1))
+    got = {r.id: r for r in out.collect()}
+    assert len(got) == 7
+    r99 = got[99]
+    assert r99.community_L0 == r99.community_L1 == r99.community_L2
+    if ladder == "detect_communities_louvain":
+        assert r99.community_L0 == 99
+    assert _persistent_rdds(spark) - before <= 1
 
 
 def test_louvain_multilevel_jobs_keep_job_group(spark):
