@@ -41,30 +41,9 @@ from graphragdatapipeline_spark.registry import REGISTRY  # noqa: E402
 # rotation-hygiene item): the old plain set pinned re-greened entries
 # to the window front forever, burning slots other stale queries
 # needed; with {name: round_flagged} a green at round ≥ round_flagged
-# self-clears — no manual hygiene edit after each re-green.
-_FORCE_REVERIFY: dict[str, int] = {
-    # Round 11 semantics changes (all re-greened in CORRECTNESS_r11,
-    # so these now sort by their r11 green like any other entry):
-    # PQ knobs promoted to the r10 codebook-sweep evidence (codebook
-    # k=4→16, rerank shortlist 32→128) — new ADC ordering, new hash.
-    "vector_pq_adc_topk": 11,
-    "vector_pq_rerank_topk": 11,
-    # Re-composed to the production 7-stage order: substring span
-    # removal + trained-classifier gate spliced in; output adds
-    # clf_score and packs on cleaned length — new rows, new hash.
-    "curation_end_to_end": 11,
-    # Fingerprints widened 16→60 bits after the non-degenerate sf10
-    # fixture wedged the 4-bit pigeonhole segments (16 bucket values →
-    # quadratic in-bucket self-join). Same Hamming contract, new
-    # fingerprint space — new pair set, new hash.
-    "dedup_simhash_pairs": 11,
-    # Round 12: max_posting=32 stop-shingle cap promoted to the
-    # registered default (oracle-mirrored) after the r11 audit priced
-    # the unguarded inverted self-join at 736.9 s vs the capped
-    # sibling's 58.5 s at the 500 k-doc fixture. Value no-op at
-    # sf0.01 (max posting is 7) but the contract changed — reverify.
-    "dedup_ngram_jaccard": 12,
-}
+# self-clears — no manual hygiene edit after each re-green. Empty
+# while every flagged query has re-greened at or after its flag round.
+_FORCE_REVERIFY: dict[str, int] = {}
 
 
 def _last_green_round() -> dict[str, int]:

@@ -205,46 +205,12 @@ def cooccurrence_graph(
     mega-docs (a page with thousands of distinct terms contributes
     O(terms²) pairs of near-zero signal — the doc-level twin of the
     dedup layer's max_bucket) BEFORE the self-join; doc and term
-    frequencies stay pre-cap exact so PMI is unbiased."""
-    terms = docs.select(
-        F.col(id_col).alias("_d"),
-        F.explode(F.array_distinct(tokens_ws(F.col(text_col)))).alias("term"),
-    )
-    terms = terms.localCheckpoint(eager=False)
-    n_docs = docs.select(F.countDistinct(id_col).alias("n"))
-    tf = terms.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    joined = terms
-    if max_doc_terms is not None:
-        keep = (
-            terms.groupBy("_d")
-            .agg(F.count(F.lit(1)).alias("_nt"))
-            .filter(F.col("_nt") <= max_doc_terms)
-            .select("_d")
-        )
-        joined = terms.join(keep, "_d", "left_semi")
-    a = joined.select("_d", F.col("term").alias("src"))
-    b = joined.select("_d", F.col("term").alias("dst"))
-    pairs = (
-        a.join(b, "_d")
-        .filter(F.col("src") < F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("cooccur"))
-        .filter(F.col("cooccur") >= min_count)
-    )
-    fa = tf.select(F.col("term").alias("src"), F.col("df").alias("df_a"))
-    fb = tf.select(F.col("term").alias("dst"), F.col("df").alias("df_b"))
-    return (
-        pairs.join(fa, "src")
-        .join(fb, "dst")
-        .crossJoin(F.broadcast(n_docs))
-        .select(
-            "src",
-            "dst",
-            "cooccur",
-            F.log(
-                F.col("n") * F.col("cooccur") / (F.col("df_a") * F.col("df_b"))
-            ).alias("pmi"),
-        )
+    frequencies stay pre-cap exact so PMI is unbiased. It is the
+    index-building half (cooccurrence_index_delta) and the read half
+    (pmi_from_index) of incremental maintenance run over the whole
+    frame at once."""
+    return pmi_from_index(
+        *cooccurrence_index_delta(docs, id_col, text_col, max_doc_terms), min_count
     )
 
 
@@ -305,8 +271,8 @@ def pmi_from_index(
     edges: DataFrame, tf: DataFrame, n_docs: DataFrame, min_count: int = 2
 ) -> DataFrame:
     """PMI edge scoring from PERSISTED count state — the read half of
-    incremental co-occurrence maintenance, identical arithmetic to
-    cooccurrence_graph (one double division, one ln)."""
+    incremental co-occurrence maintenance (one double division, one
+    ln); cooccurrence_graph is it over one whole-frame delta."""
     fa = tf.select(F.col("term").alias("src"), F.col("df").alias("df_a"))
     fb = tf.select(F.col("term").alias("dst"), F.col("df").alias("df_b"))
     return (

@@ -29,16 +29,11 @@ def fingerprint(text: Column) -> Column:
 
 
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Exact dedup: keep the smallest id per fingerprint. One shuffle
-    on the 32-hex key; group sizes are tiny so no skew handling
-    needed."""
-    w = Window.partitionBy("fp").orderBy(F.asc(id_col))
-    return (
-        df.withColumn("fp", fingerprint(F.col(text_col)))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "fp")
-    )
+    """Exact dedup: keep the smallest id per fingerprint — the in-batch
+    half of exact_dedup_incremental run over the whole frame with no
+    index. One shuffle on the 32-hex key; group sizes are tiny so no
+    skew handling needed."""
+    return exact_dedup_incremental(df, None, id_col, text_col)[0]
 
 
 def word_shingles(tokens: Column, k: int = 3) -> Column:
@@ -219,6 +214,21 @@ def lsh_mega_bucket_drops(
     )
 
 
+def _band_table(
+    df: DataFrame, id_col: str, text_col: str, k: int, num_hashes: int, bands: int
+) -> DataFrame:
+    """sign → band under a lazy checkpoint: the band table every LSH
+    flow reads at least twice (both sides of the candidate self-join,
+    and the index semi-join or the mega-bucket drops). Lazy evaluation
+    would recompute the md5-per-permutation signature stage per
+    consumer; unlike a plain re-scan that recompute is CPU-bound, so
+    the checkpoint wins (measured sf0.1: 1.63 s → 1.21 s). It is
+    map-only output, so the block count stays at the input's
+    parallelism even under an untuned 200-shuffle-partition session."""
+    sig = minhash_signatures_rowwise(df, id_col, text_col, k, num_hashes)
+    return lsh_bands(sig, id_col, num_hashes, bands).localCheckpoint(eager=False)
+
+
 def minhash_dedup_pairs(
     df: DataFrame,
     id_col: str,
@@ -226,25 +236,14 @@ def minhash_dedup_pairs(
     k: int = 3,
     num_hashes: int = 16,
     bands: int = 4,
-    max_bucket: int | None = None,
 ) -> DataFrame:
     """Full MinHash-LSH pipeline: shingle → sign → band → bucket-join.
     Signatures come from the zero-shuffle row-wise path; the only
-    shuffles left are the band bucket-join and the pair distinct.
-
-    The band table feeds both sides of the candidate self-join; lazy
-    evaluation would recompute the md5-per-permutation signature stage
-    per side. Unlike a plain re-scan this recompute is CPU-bound, so
-    the lazy checkpoint wins (measured sf0.1: 1.63 s → 1.21 s); it is
-    map-only output, so the block count stays at scan parallelism even
-    under an untuned 200-shuffle-partition session."""
+    shuffles left are the band bucket-join and the pair distinct."""
     from graphragdatapipeline_spark.session import ensure_parallelism
 
-    sig = minhash_signatures_rowwise(
-        ensure_parallelism(df), id_col, text_col, k, num_hashes
-    )
-    b = lsh_bands(sig, id_col, num_hashes, bands).localCheckpoint(eager=False)
-    return lsh_candidate_pairs(b, id_col, max_bucket=max_bucket)
+    b = _band_table(ensure_parallelism(df), id_col, text_col, k, num_hashes, bands)
+    return lsh_candidate_pairs(b, id_col)
 
 
 def jaccard_pairs(
@@ -348,7 +347,7 @@ def jaccard_pairs(
     )
 
 
-def cap_postings(shingles: DataFrame, cap: int, key_col: str = "shingle") -> DataFrame:
+def cap_postings(shingles: DataFrame, cap: int) -> DataFrame:
     """Drop stop-shingles: remove every shingle whose posting list
     (doc count) exceeds ``cap`` BEFORE any self-join. A shingle shared
     by millions of boilerplate docs contributes O(posting²) candidate
@@ -363,12 +362,12 @@ def cap_postings(shingles: DataFrame, cap: int, key_col: str = "shingle") -> Dat
     sh⋈index OOM in remove_spans_against_index is the same table
     shape; see that operator's pin comment)."""
     keep = (
-        shingles.groupBy(key_col)
+        shingles.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("_posting"))
         .filter(F.col("_posting") <= cap)
-        .select(key_col)
+        .select("shingle")
     )
-    return shingles.join(keep.hint("merge"), key_col, "left_semi")
+    return shingles.join(keep.hint("merge"), "shingle", "left_semi")
 
 
 def containment_pairs(
@@ -601,13 +600,7 @@ def exact_dedup_incremental(
 
 
 def minhash_dedup_incremental(
-    new: DataFrame,
-    band_index: DataFrame | None,
-    id_col: str,
-    text_col: str,
-    k: int = 3,
-    num_hashes: int = 16,
-    bands: int = 4,
+    new: DataFrame, band_index: DataFrame | None, id_col: str, text_col: str
 ) -> tuple[DataFrame, DataFrame]:
     """Incremental MinHash-LSH near-dup — same maintenance shape as
     exact_dedup_incremental but for near-duplicates: the persisted
@@ -620,7 +613,9 @@ def minhash_dedup_incremental(
     signatures are map-side (zero shuffle), one semi-join of
     batch-bands against the index on (band_idx, band_hash), one
     in-batch bucket join — corpus text is never rescanned, and the
-    index grows by exactly `bands` rows per kept doc.
+    index grows by exactly 4 rows (bands) per kept doc. Shingles are
+    word 3-grams and signatures 16 minhashes in 4 bands, the one shape
+    every caller uses.
 
     Semantics note: newcomers are compared against KEPT docs
     (cluster representatives), not against every doc ever seen — a
@@ -631,8 +626,7 @@ def minhash_dedup_incremental(
     agree whenever each duplicate cluster is band-connected to its
     surviving representative, which holds for boilerplate/mirror-style
     duplication."""
-    sig = minhash_signatures_rowwise(new, id_col, text_col, k, num_hashes)
-    b_new = lsh_bands(sig, id_col, num_hashes, bands).localCheckpoint(eager=False)
+    b_new = _band_table(new, id_col, text_col, k=3, num_hashes=16, bands=4)
     survivors = new
     if band_index is not None:
         hit = (

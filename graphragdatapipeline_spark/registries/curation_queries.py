@@ -15,10 +15,7 @@ from graphragdatapipeline_spark.io import read_table
 from graphragdatapipeline_spark.operators import curation as cu
 from graphragdatapipeline_spark.registry import osql_round, register, with_ctes
 from graphragdatapipeline_spark.registries.dedup_oracles import (
-    BANDS,
-    MAX_BUCKET,
     MEGA_DROPS,
-    NUM_HASHES,
     SUBSTRING_SELECT,
     WORD_SHINGLES,
     _shingle_ctes,
@@ -750,23 +747,11 @@ def curation_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the final pack, and without the cut Catalyst re-derives the
     exact+neardup+substring subtree per consumer."""
     from graphragdatapipeline_spark.operators import dedup as dd
-    from graphragdatapipeline_spark.session import ensure_parallelism
+    from graphragdatapipeline_spark.registries.dedup_queries import _verified_flow
 
     d = read_table(spark, sf_dir, "documents")
     d1 = dd.exact_dedup(d, "doc_id", "text")
-    sig = dd.minhash_signatures_rowwise(
-        ensure_parallelism(d1), "doc_id", "text", k=3, num_hashes=NUM_HASHES
-    )
-    bands = dd.lsh_bands(sig, "doc_id", NUM_HASHES, BANDS).localCheckpoint(
-        eager=False
-    )
-    cands = dd.lsh_candidate_pairs(bands, "doc_id", max_bucket=MAX_BUCKET)
-    mega = dd.lsh_mega_bucket_drops(bands, "doc_id", MAX_BUCKET)
-    sh = dd.shingle_table(d1, "doc_id", "text", k=3)
-    pairs = dd.jaccard_pairs(sh, "doc_id", threshold=0.2, candidates=cands)
-    d2 = dd.dedup_corpus(d1, pairs.select("a", "b"), "doc_id").join(
-        mega, "doc_id", "left_anti"
-    )
+    d2 = _verified_flow(d1)[1]
     sub = dd.remove_duplicated_spans(d2, "doc_id", "text", k=3, min_df=2)
     d3 = (
         d2.select("doc_id", "lang")

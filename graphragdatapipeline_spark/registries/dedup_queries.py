@@ -247,29 +247,27 @@ def dedup_corpus_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified by dedup_ngram_jaccard (same jaccard_pairs code path with
     jaccard in the output)."""
     d = read_table(spark, sf_dir, "documents")
-    sig = dd.minhash_signatures_rowwise(
-        ensure_parallelism(d), "doc_id", "text", k=3, num_hashes=NUM_HASHES
+    return _verified_flow(d)[1].select("doc_id", "lang")
+
+
+def _verified_flow(d: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Engine twin of _verified_flow_ctes + MEGA_DROPS over the
+    documents frame `d` → (verified pairs (a, b), cleaned `d`): capped
+    LSH candidates and mega-bucket drops from ONE band table → shingles
+    → exact Jaccard ≥ 0.2 on the candidates → dedup_corpus → anti-join
+    the drops. dedup_corpus_verified, the cluster queries and
+    curation_end_to_end all read the flow from here."""
+    bands = dd._band_table(
+        ensure_parallelism(d), "doc_id", "text",
+        k=3, num_hashes=NUM_HASHES, bands=BANDS,
     )
-    # One band table feeds pairwise candidates AND mega-bucket drops.
-    bands = dd.lsh_bands(sig, "doc_id", NUM_HASHES, BANDS).localCheckpoint(eager=False)
     cands = dd.lsh_candidate_pairs(bands, "doc_id", max_bucket=MAX_BUCKET)
     mega = dd.lsh_mega_bucket_drops(bands, "doc_id", MAX_BUCKET)
     sh = dd.shingle_table(d, "doc_id", "text", k=3)
     pairs = dd.jaccard_pairs(sh, "doc_id", threshold=0.2, candidates=cands)
-    clean = dd.dedup_corpus(d.select("doc_id", "lang"), pairs.select("a", "b"), "doc_id")
-    return clean.join(mega, "doc_id", "left_anti")
-
-
-def _verified_pairs_df(spark: SparkSession, sf_dir: str):
-    """Engine side of _verified_flow_ctes: the capped-LSH → exact-
-    Jaccard verified pair set the cluster queries consume."""
-    d = read_table(spark, sf_dir, "documents")
-    cands = dd.minhash_dedup_pairs(
-        d, "doc_id", "text", k=3, num_hashes=NUM_HASHES, bands=BANDS,
-        max_bucket=MAX_BUCKET,
-    )
-    sh = dd.shingle_table(d, "doc_id", "text", k=3)
-    return d, dd.jaccard_pairs(sh, "doc_id", threshold=0.2, candidates=cands)
+    pairs = pairs.select("a", "b")
+    clean = dd.dedup_corpus(d, pairs, "doc_id").join(mega, "doc_id", "left_anti")
+    return pairs, clean
 
 
 _CLUSTER_CTES = _verified_flow_ctes() + [
@@ -304,8 +302,8 @@ def dedup_cluster_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-label walk (the graph_connected_components oracle pattern) —
     the whole flow shingle → LSH → verify → components replayed at id
     granularity."""
-    d, pairs = _verified_pairs_df(spark, sf_dir)
-    return dd.dup_cluster_assignments(d, pairs, "doc_id")
+    d = read_table(spark, sf_dir, "documents")
+    return dd.dup_cluster_assignments(d, _verified_flow(d)[0], "doc_id")
 
 
 @register(
@@ -346,8 +344,8 @@ def dedup_keep_best_by_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         lm_token_index_delta,
     )
 
-    d, pairs = _verified_pairs_df(spark, sf_dir)
-    clusters = dd.dup_cluster_assignments(d, pairs, "doc_id")
+    d = read_table(spark, sf_dir, "documents")
+    clusters = dd.dup_cluster_assignments(d, _verified_flow(d)[0], "doc_id")
     scores = lm_score_against_index(d, lm_token_index_delta(d))
     ranked = (
         clusters.join(scores, "doc_id", "left")

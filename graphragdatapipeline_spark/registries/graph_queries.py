@@ -43,6 +43,31 @@ def _copurchase_pairs(max_part: int | None = None) -> str:
 """
 
 
+def _copurchase_edges(
+    spark: SparkSession, sf_dir: str, max_part: int | None = None
+) -> DataFrame:
+    """Engine twin of _copurchase_pairs → (src < dst) parts that share
+    an order, one row per shared order (the graph operators
+    canonicalize), over the parts below `max_part` if given. The
+    triangle, clustering and link-prediction queries read the table
+    more than once (the wedge join three times, then degrees and the
+    adjacency anti-join), and the self-join that derives it is itself
+    a shuffle, so it sits under a lazy checkpoint — the SCALE.md
+    branch-reuse rule, measured at sf1.0: graph_triangle_count 46.0 ->
+    35.0 s, the clustering coefficient 0.89 -> 0.72 s, link prediction
+    0.63 -> 0.60 s, values identical. kcore reads it once, into its
+    own checkpointed survivor table."""
+    li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    if max_part is not None:
+        li = li.filter(F.col("l_partkey") < max_part)
+    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("src"))
+    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("dst"))
+    return (
+        a.join(b, "ok").filter(F.col("src") < F.col("dst")).select("src", "dst")
+        .localCheckpoint(eager=False)
+    )
+
+
 # Each triangle of the canonical `pairs` once, as a < b < c.
 _TRIANGLES = """
   SELECT ab.lo AS a, ab.hi AS b, bc.hi AS c
@@ -414,17 +439,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     (temp-storage exhaustion). Wedge volume IS the cost of exact
     triangle enumeration; below-quadratic alternatives change the
     contract (sampling/sketches), not the plan."""
-    li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("src"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("dst"))
-    # The wedge join consumes edges 3x (and the co-purchase self-join
-    # that derives them is itself a shuffle): lazy-checkpoint the edge
-    # table so it materializes once — the SCALE.md branch-reuse rule,
-    # measured 46.0 -> 35.0 s at sf1.0, values identical.
-    edges = (
-        a.join(b, "ok").filter(F.col("src") < F.col("dst")).select("src", "dst")
-        .localCheckpoint(eager=False)
-    )
+    edges = _copurchase_edges(spark, sf_dir)
     tri = ga.triangle_count(edges, max_forward_degree=160)
     # Two-level aggregation instead of count+countDistinct in one agg:
     # the single-agg form plans an Expand that doubles every triangle
@@ -472,13 +487,7 @@ def graph_triangle_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured seed and over the DOULION variance bound at this count.
     Estimate targets the SAME guarded triangle set (cap applied
     before sampling), so the two columns state one contract."""
-    li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("src"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("dst"))
-    edges = (
-        a.join(b, "ok").filter(F.col("src") < F.col("dst")).select("src", "dst")
-        .localCheckpoint(eager=False)
-    )
+    edges = _copurchase_edges(spark, sf_dir)
     exact = ga.triangle_count(edges, max_forward_degree=160).agg(
         F.count(F.lit(1)).alias("exact_triangles")
     )
@@ -526,19 +535,7 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation (restricted to a 200-part sub-graph so the fixture
     check stays light; the composition is scale-free). The oracle
     replays the full composition."""
-    li = (
-        read_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .filter(F.col("l_partkey") < 200)
-    )
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("src"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("dst"))
-    # Same 3-consumer wedge-join reuse point as graph_triangle_count
-    # (measured there; 0.89 -> 0.72 s at sf1.0 for this composition).
-    edges = (
-        a.join(b, "ok").filter(F.col("src") < F.col("dst")).select("src", "dst")
-        .localCheckpoint(eager=False)
-    )
+    edges = _copurchase_edges(spark, sf_dir, max_part=200)
     tri = ga.triangle_count(edges)
     # explode(array(a,b,c)), not a 3-branch union: column pruning
     # specializes each union branch's projection below the join, so
@@ -614,19 +611,7 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-independent, so the oracle replays the whole flow
     (canonicalization, degrees-on-full-graph, capped wedge join,
     quantized sum, non-adjacency anti-join, top-20)."""
-    li = (
-        read_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .filter(F.col("l_partkey") < 200)
-    )
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("src"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("dst"))
-    # Same multi-consumer edge-table reuse point (wedges + degrees +
-    # adjacency anti-join); measured 0.63 -> 0.60 s at sf1.0.
-    edges = (
-        a.join(b, "ok").filter(F.col("src") < F.col("dst")).select("src", "dst")
-        .localCheckpoint(eager=False)
-    )
+    edges = _copurchase_edges(spark, sf_dir, max_part=200)
     out = ga.link_prediction_scores(edges, max_center_degree=64)
     return (
         out.orderBy(F.desc("aa6"), F.asc("u"), F.asc("w"))
@@ -1058,14 +1043,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     peel takes 7 real rounds (9330 -> 7028 symmetric edges, 400 -> 314
     vertices), so this exercises genuine multi-round erosion, not a
     one-shot degree filter."""
-    li = (
-        read_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .filter(F.col("l_partkey") < 400)
-    )
-    a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("src"))
-    b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("dst"))
-    edges = a.join(b, "ok").filter(F.col("src") < F.col("dst")).select("src", "dst")
+    edges = _copurchase_edges(spark, sf_dir, max_part=400)
     return ga.kcore(edges, k=16)
 
 

@@ -420,6 +420,52 @@ def test_one_coarsening_loop():
     assert storage_callers == {loop}, sorted(storage_callers)
 
 
+def test_dedup_and_cooccurrence_pipelines_written_once():
+    """Each dedup and co-occurrence pipeline is written once: exactly
+    one package function bands signatures (`lsh_bands`), exactly one
+    resolves mega buckets (`lsh_mega_bucket_drops`, the verified
+    near-dup flow), exactly one writes the exact-dedup "fp" window,
+    and cooccurrence_graph is built from cooccurrence_index_delta.
+    exact_dedup, cooccurrence_graph and three verified-flow copies
+    used to repeat their incremental halves by hand."""
+    import ast
+
+    pkg = os.path.join(REPO, "graphragdatapipeline_spark")
+    callers: dict[str, set[str]] = {
+        "lsh_bands": set(),
+        "lsh_mega_bucket_drops": set(),
+        "cooccurrence_index_delta": set(),
+    }
+    fp_window = set()
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        rel = os.path.relpath(path, pkg)
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for node in ast.walk(fn):
+                if not isinstance(node, ast.Call):
+                    continue
+                f = node.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                if name in callers:
+                    callers[name].add(f"{rel}:{fn.name}")
+                if name == "partitionBy" and any(
+                    isinstance(a, ast.Constant) and a.value == "fp" for a in node.args
+                ):
+                    fp_window.add(f"{rel}:{fn.name}")
+    dedup = os.path.join("operators", "dedup.py")
+    assert callers["lsh_bands"] == {f"{dedup}:_band_table"}
+    assert callers["lsh_mega_bucket_drops"] == {
+        os.path.join("registries", "dedup_queries.py") + ":_verified_flow"
+    }
+    assert fp_window == {f"{dedup}:exact_dedup_incremental"}
+    assert os.path.join("graph", "build.py") + ":cooccurrence_graph" in (
+        callers["cooccurrence_index_delta"]
+    )
+
+
 def test_package_has_one_implementation_per_default():
     """Each default has one implementation, the one its oracle replays:
     every absolute import of the package resolves where it runs, no

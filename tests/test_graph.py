@@ -812,6 +812,39 @@ def test_louvain_ladder_releases_levels(spark, ladder):
     assert _persistent_rdds(spark) - before <= 1
 
 
+def test_louvain_multilevel_cycles_ignore_edgeless_vertices(spark, monkeypatch):
+    """louvain_multilevel's convergence count covers the same vertices
+    every cycle. Level 0 used to count each edgeless vertex as its own
+    community, which no later cycle sees, so 20 edgeless vertices
+    overstated the first shrink and bought the bridge graph a third
+    cycle. Now it runs as many cycles with them as without, the 6 keep
+    their labels, and each edgeless vertex stays its own community."""
+    rows = [(1, 2), (2, 3), (1, 3), (10, 11), (11, 12), (10, 12), (3, 10)]
+    edges = spark.createDataFrame(rows, "src int, dst int")
+    six = [1, 2, 3, 10, 11, 12]
+    move = ga.louvain_move
+
+    def run(ids):
+        cycles = []
+
+        def counted(*args, **kwargs):
+            cycles.append(1)
+            return move(*args, **kwargs)
+
+        monkeypatch.setattr(ga, "louvain_move", counted)
+        verts = spark.createDataFrame([(i,) for i in ids], "id int")
+        out = ga.louvain_multilevel(
+            edges, gamma=1.0, rounds=1, max_cycles=10, vertices=verts
+        )
+        return len(cycles), {r.id: r.community for r in out.collect()}
+
+    cycles, labels = run(six)
+    cycles_e, labels_e = run(six + list(range(100, 120)))
+    assert cycles_e == cycles == 2
+    assert {i: labels_e[i] for i in six} == labels
+    assert all(labels_e[i] == i for i in range(100, 120))
+
+
 def test_louvain_multilevel_jobs_keep_job_group(spark):
     """Every job louvain_multilevel submits runs under the caller's job
     group: it starts no thread of its own (driver threads come only
